@@ -32,6 +32,11 @@ answers the next cross-vintage drift scare — raw-ratio comparisons are
 only meaningful between two "steady" vintages. A non-steady phase
 annotates and warns; it does not fail the gate (the normalized ratio
 already divides the host factor out for the CEILING check).
+
+The compare (<sfDir> <verifyOutDir>) exits nonzero when any query fails,
+when it compared zero queries (an empty oracle_sql.json, or a name
+filter matching nothing), and when a query named on the command line is
+not in oracle_sql.json — a gate that checked nothing must not pass.
 """
 import sys, json, glob, os
 
@@ -159,25 +164,40 @@ def selftest() -> int:
             fails.append("snapshot: a source file in the diff must fail")
     finally:
         shutil.rmtree(repo, ignore_errors=True)
+    # compare fixtures: an empty oracle map and a named query missing
+    # from the map fail; one real DuckDB-vs-parquet match passes
+    import duckdb
+    tmp = tempfile.mkdtemp(prefix="cmpcheck-")
+    try:
+        sf, out = os.path.join(tmp, "sf"), os.path.join(tmp, "out")
+        os.makedirs(sf); os.makedirs(os.path.join(out, "q1"))
+        con = duckdb.connect()
+        for t in TABLES:
+            con.execute(f"COPY (SELECT 1 AS x) TO '{sf}/{t}.parquet' (FORMAT parquet)")
+        con.execute(f"COPY (SELECT 1 AS x) TO '{out}/q1/part-0.parquet' (FORMAT parquet)")
+        def oracle(m):
+            json.dump(m, open(os.path.join(out, "oracle_sql.json"), "w"))
+        for tag, m, only, want in [
+                ("empty map", {}, [], 1),
+                ("one match", {"q1": "SELECT 1 AS x"}, [], 0),
+                ("named, not in map", {"q1": "SELECT 1 AS x"}, ["q1", "nope"], 1),
+                ("filter matches nothing", {"q1": "SELECT 1 AS x"}, ["nope"], 1)]:
+            oracle(m)
+            got = compare(sf, out, only)
+            if got != want:
+                fails.append(f"compare {tag}: exit {got} != {want}")
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     if fails:
         print("SELFTEST FAIL: " + "; ".join(fails))
         return 1
-    print("SELFTEST PASS: 5 gate + 2 snapshot fixtures")
+    print("SELFTEST PASS: 5 gate + 2 snapshot + 4 compare fixtures")
     return 0
-
-if len(sys.argv) > 1 and sys.argv[1] == "--gate":
-    sys.exit(gate(sys.argv[2] if len(sys.argv) > 2 else "bench_out.json"))
-if len(sys.argv) > 1 and sys.argv[1] == "--snapshot-check":
-    sys.exit(snapshot_check(sys.argv[2] if len(sys.argv) > 2 else "."))
-if len(sys.argv) > 1 and sys.argv[1] == "--selftest":
-    sys.exit(selftest())
-
-import duckdb
-import pandas as pd
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
-def norm(df: pd.DataFrame) -> pd.DataFrame:
+def norm(df):
+    import pandas as pd
     df = df.reindex(sorted(df.columns), axis=1)
     # canonical value form: everything to string (exact), floats via repr
     def cell(v):
@@ -190,17 +210,22 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
     out = out.sort_values(by=list(out.columns), kind="mergesort").reset_index(drop=True)
     return out
 
-def main():
-    sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    only = set(sys.argv[3:])
+def compare(sf_dir: str, out_dir: str, only=()) -> int:
+    oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
+    missing = sorted(set(only) - set(oracle))
+    for name in missing:
+        print(f"FAIL {name}: not in oracle_sql.json")
+    todo = sorted((n, q) for n, q in oracle.items() if not only or n in only)
+    if not todo:
+        print(f"== 0 pass, {len(missing)} fail: compared zero queries")
+        return 1
+    import duckdb
+    import pandas as pd
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
-    n_pass = n_fail = 0
-    for name, sql in sorted(oracle.items()):
-        if only and name not in only:
-            continue
+    n_pass, n_fail = 0, len(missing)
+    for name, sql in todo:
         pq = os.path.join(out_dir, name)
         files = glob.glob(os.path.join(pq, "*.parquet"))
         if not files:
@@ -228,7 +253,13 @@ def main():
                         print(f"    row {i} col {c}: spark={g.at[i,c]!r} duck={e.at[i,c]!r}")
             n_fail += 1
     print(f"== {n_pass} pass, {n_fail} fail")
-    sys.exit(1 if n_fail else 0)
+    return 1 if n_fail else 0
 
 if __name__ == "__main__":
-    main()
+    if len(sys.argv) > 1 and sys.argv[1] == "--gate":
+        sys.exit(gate(sys.argv[2] if len(sys.argv) > 2 else "bench_out.json"))
+    if len(sys.argv) > 1 and sys.argv[1] == "--snapshot-check":
+        sys.exit(snapshot_check(sys.argv[2] if len(sys.argv) > 2 else "."))
+    if len(sys.argv) > 1 and sys.argv[1] == "--selftest":
+        sys.exit(selftest())
+    sys.exit(compare(sys.argv[1], sys.argv[2], sys.argv[3:]))

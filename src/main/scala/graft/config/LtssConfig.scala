@@ -59,14 +59,6 @@ final case class LtssConfig(
       * implicitly, so ingest startup only LOGS pending steps unless
       * this is set. */
     autoMigrate: Boolean = false,
-    /** Route the PostgreSQL ingest through the COPY protocol
-      * ([[graft.sources.LtssSink.writeJdbc]]'s `bulkCopy` branch —
-      * measured 3.8× over batched INSERT on live PG 15; PK-conflicted
-      * chunks fall back to the same ON CONFLICT machinery, so replay
-      * semantics are unchanged). Off by default: COPY needs a driver
-      * exposing the copy surface (pgjdbc, or any [[graft.sources.PgCopy]]
-      * implementor), and the generic-dialect path ignores the flag. */
-    bulkCopy: Boolean = false,
     /** S1 source selection; None = the caller wires its own events
       * frame (the library-API path every existing test uses). */
     eventSource: Option[EventSource] = None,
@@ -84,7 +76,7 @@ object LtssConfig {
     * reference's PostGIS auto-detection (__init__.py:303-328). */
   def fromMap(conf: Map[String, Any]): LtssConfig = {
     val allowed = Set("db_url", "chunk_time_interval", "include", "exclude",
-      "enable_location", "event_source", "auto_migrate", "bulk_copy")
+      "enable_location", "event_source", "auto_migrate")
     val unknown = conf.keySet -- allowed
     require(unknown.isEmpty, s"unknown config keys: ${unknown.mkString(", ")}")
 
@@ -163,14 +155,9 @@ object LtssConfig {
       case Some(b: Boolean) => b
       case Some(x) => throw new IllegalArgumentException(s"auto_migrate must be boolean, got $x")
     }
-    val bulkCopy = conf.get("bulk_copy") match {
-      case None => false
-      case Some(b: Boolean) => b
-      case Some(x) => throw new IllegalArgumentException(s"bulk_copy must be boolean, got $x")
-    }
 
     LtssConfig(dbUrl, chunk, filterSpec("include"), filterSpec("exclude"),
-      enableLocation, autoMigrate, bulkCopy, eventSource)
+      enableLocation, autoMigrate, eventSource)
   }
 }
 

@@ -64,9 +64,6 @@ object DetMath {
   def cosineCol(a: Column, b: Column, dim: Int): Column =
     dotCol(a, b, dim) / (sqrt(dotCol(a, a, dim)) * sqrt(dotCol(b, b, dim)))
 
-  def cosineSql(a: String, b: String, dim: Int): String =
-    s"(${dotSql(a, b, dim)}) / (sqrt(${dotSql(a, a, dim)}) * sqrt(${dotSql(b, b, dim)}))"
-
   /** Precomputed L2 norm — compute once per VECTOR, not once per PAIR:
     * `dot/(na*nb)` is the same expression tree as [[cosineCol]] (sqrt of
     * the self-dot, then one multiply), so values stay bit-identical while

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -261,16 +261,6 @@ object Multimodal {
           Array(dims._1.toFloat, dims._2.toFloat, len.toFloat, 0f))
       case None => StubDecoder.decode(r)
     }
-  }
-
-  /** documents.text reinterpreted as an opaque binary payload — the
-    * binary-column ingestion path. */
-  def asMedia(spark: SparkSession, dir: String): Dataset[MediaRecord] = {
-    import spark.implicits._
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), encode(col("text"), "UTF-8").as("content"),
-        lit("text/plain").as("media_type"))
-      .as[MediaRecord]
   }
 
   /** Decode / feature-extract over partitions (the mapInPandas analog:

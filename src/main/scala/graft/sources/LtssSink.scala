@@ -1593,16 +1593,22 @@ object LtssSink {
     * true` opts into the reference's log-and-drop behavior
     * (__init__.py:229-235) for callers that prefer availability.
     *
-    * INTEGRITY violations (SQLState 23xxx — duplicate PK) are the
-    * expected face of at-least-once + the `(time, entity_id)` PK: a
-    * replayed batch re-inserting committed rows (reference
-    * drop-on-PK-conflict, __init__.py:229-231). A conflict does NOT mean
-    * the whole batch is committed — Spark's JDBC writer commits per
-    * PARTITION, so an earlier attempt may have committed only some
-    * partitions. On conflict the batch is ANTI-JOINED against the rows
-    * already in the table for its (time) key range and the remainder is
-    * retried — the checkpoint advances only once every partition's rows
-    * are durable, never past lost data. */
+    * On a `jdbc:postgresql:` URL every batch goes through [[copyIntoPg]]:
+    * COPY where the connection offers it, the conflict-tolerant insert
+    * where it does not. It lands a replayed batch's PK conflicts itself,
+    * so only transient and fatal errors reach the envelope.
+    *
+    * Any other dialect uses Spark's JDBC writer. INTEGRITY violations
+    * (SQLState 23xxx — duplicate PK) are the expected face of
+    * at-least-once + the `(time, entity_id)` PK: a replayed batch
+    * re-inserting committed rows (reference drop-on-PK-conflict,
+    * __init__.py:229-231). A conflict does NOT mean the whole batch is
+    * committed — Spark's JDBC writer commits per PARTITION, so an
+    * earlier attempt may have committed only some partitions. On
+    * conflict the batch is ANTI-JOINED against the rows already in the
+    * table for its (time) key range and the remainder is retried — the
+    * checkpoint advances only once every partition's rows are durable,
+    * never past lost data. */
   def writeJdbc(
       ltss: DataFrame,
       cfg: LtssConfig,
@@ -1611,45 +1617,20 @@ object LtssSink {
       retryWaitMs: Long = 3000L,
       sleep: Long => Unit = Thread.sleep,
       dropOnFailure: Boolean = false,
-      maxConflictRounds: Int = 3,
-      bulkCopy: Boolean = false,
-      copyFormat: String = "text"): Unit = {
+      maxConflictRounds: Int = 3): Unit = {
     var attempt = 0
     var conflictRounds = 0
     var batch = ltss
     var done = false
     while (!done) {
       try {
-        // bulkCopy (PostgreSQL only): the COPY protocol per partition —
-        // the production bulk path ([[copyIntoPg]]); it handles PK
-        // replays internally via the same ON CONFLICT machinery, so
-        // only transient/fatal errors reach the envelope below.
-        // Semantics (at-least-once, conflict-skip, retry classes) are
-        // identical to the INSERT path — measured vs it on live PG 15.
-        if (bulkCopy && postgresDialect(cfg.dbUrl))
-          copyIntoPg(batch, cfg.dbUrl, table, format = copyFormat)
+        if (postgresDialect(cfg.dbUrl)) copyIntoPg(batch, cfg.dbUrl, table)
         else batch.write
           .mode(SaveMode.Append)
           .option("batchsize", 1000)
           .jdbc(cfg.dbUrl, table, new java.util.Properties())
         done = true
       } catch {
-        case e: Exception if isConflict(e) && postgresDialect(cfg.dbUrl) =>
-          // Postgres fast path (the reference's actual target,
-          // __init__.py:229-231): one batched
-          // `INSERT ... ON CONFLICT DO NOTHING` statement lands the
-          // not-yet-committed remainder — the database skips committed
-          // PKs itself, so there is no key read-back and no
-          // key-comparability trap (timestamp precision, collation).
-          // A batch that duplicates its OWN PK keeps its first row and
-          // silently skips the rest — exactly the reference's
-          // drop-on-conflict. The anti-join replay below remains the
-          // generic-dialect fallback.
-          System.err.println(
-            s"[ltss-sink] PK conflict (replayed batch) — landing the remainder via " +
-              s"ON CONFLICT DO NOTHING: ${e.getMessage}")
-          insertIgnoreConflicts(batch, cfg.dbUrl, table, " ON CONFLICT DO NOTHING")
-          done = true
         case e: Exception if isConflict(e) =>
           if (conflictRounds >= maxConflictRounds) {
             // exhausted rounds mean the anti-join keeps failing to match
@@ -1848,175 +1829,10 @@ object LtssSink {
         } catch { case _: Exception => None }
     }
 
-  /** The BINARY COPY surface of a connection: a [[PgCopy]] driver's
-    * `copyInBinary`, or pgjdbc's `CopyManager.copyIn(sql, InputStream)`
-    * reached reflectively with the same InvocationTargetException
-    * unwrapping as [[copyApiOf]]. `None` = text tier only. */
-  private[graft] def copyBinaryApiOf(
-      conn: Connection): Option[(String, java.io.InputStream) => Long] =
-    conn match {
-      case c: PgCopy => Some((sql, in) => c.copyInBinary(sql, in))
-      case _ =>
-        try {
-          val pgIface = Class.forName(
-            "org.postgresql.PGConnection", false, conn.getClass.getClassLoader)
-          if (conn.isWrapperFor(pgIface)) {
-            val pg = conn.unwrap(pgIface)
-            val mgr = pgIface.getMethod("getCopyAPI").invoke(pg)
-            val m = mgr.getClass.getMethod(
-              "copyIn", classOf[String], classOf[java.io.InputStream])
-            Some { (sql, in) =>
-              try m.invoke(mgr, sql, in).asInstanceOf[java.lang.Long].longValue()
-              catch {
-                case e: java.lang.reflect.InvocationTargetException =>
-                  throw Option(e.getCause).getOrElse(e)
-              }
-            }
-          } else None
-        } catch { case _: Exception => None }
-    }
-
-  /** Per-column BINARY field encoders for `cols` of the LIVE table,
-    * derived from the server's own catalog (binary COPY field bytes
-    * feed each column TYPE's `recv` function, so the encoding must
-    * match the column as CREATED, not as this writer guesses — a
-    * JSONB column needs its version byte, a VARCHAR must not get one).
-    * `None` when any column's type has no encoder here — the caller
-    * degrades to the text tier, which is escape-complete for
-    * everything. Timestamps: PG binary timestamps are µs since
-    * 2000-01-01; `timestamp` (no tz) takes the WALL CLOCK in the JVM
-    * default zone — the same rendering `Timestamp.toString` feeds the
-    * text tier — and `timestamptz` takes UTC instant µs. */
-  private[graft] def pgBinaryEncoders(
-      conn: Connection, table: String, cols: Seq[String])
-      : Option[IndexedSeq[(Any, java.io.DataOutputStream) => Unit]] = {
-    // the lookup must name ONE relation: without a schema filter a
-    // same-named table in another schema makes the types map
-    // last-row-wins per column, and a wrong encoder corrupts stored
-    // bytes (e.g. a jsonb version byte prepended into a text column).
-    // A qualified "schema.table" argument filters on its own schema;
-    // a bare name filters on current_schema() — the relation COPY will
-    // actually hit via the search path. Any column still seen twice
-    // with conflicting types is ambiguous → None (text tier, which is
-    // catalog-independent).
-    val (schemaFilter, rel) = table.split("\\.") match {
-      case Array(sch, t) => ("table_schema = ?", t)
-      case _ => ("table_schema = current_schema()", table)
-    }
-    val types = scala.collection.mutable.Map.empty[String, String]
-    var ambiguous = false
-    val ps = conn.prepareStatement(
-      "SELECT column_name, data_type FROM information_schema.columns " +
-        s"WHERE table_name = ? AND $schemaFilter")
-    try {
-      ps.setString(1, rel.stripPrefix("\"").stripSuffix("\"").toLowerCase)
-      if (schemaFilter.endsWith("?")) {
-        val sch = table.split("\\.")(0)
-        // strip quoting if the caller wrote "sch"."t"
-        ps.setString(2, sch.stripPrefix("\"").stripSuffix("\"").toLowerCase)
-      }
-      val rs = ps.executeQuery()
-      while (rs.next()) {
-        val c = rs.getString(1).toLowerCase
-        val t = rs.getString(2)
-        if (types.get(c).exists(_ != t)) ambiguous = true
-        types(c) = t
-      }
-      rs.close()
-    } finally ps.close()
-    if (ambiguous) return None
-    val PgEpochUs = 946684800000000L // 2000-01-01T00:00:00Z in epoch µs
-    def utf8(v: Any, out: java.io.DataOutputStream): Unit = {
-      val b = v.toString.getBytes("UTF-8")
-      out.writeInt(b.length); out.write(b)
-    }
-    def micros(v: Any, utc: Boolean): Long = {
-      val ts = v.asInstanceOf[java.sql.Timestamp]
-      val us =
-        if (utc)
-          Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
-        else {
-          val ldt = ts.toLocalDateTime
-          ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L +
-            ldt.getNano / 1000L
-        }
-      us - PgEpochUs
-    }
-    val encs = cols.map { c =>
-      types.get(c.toLowerCase).flatMap {
-        case "character varying" | "text" | "character" =>
-          Some(utf8 _)
-        case "json" =>
-          Some(utf8 _)
-        case "jsonb" =>
-          Some { (v: Any, out: java.io.DataOutputStream) =>
-            val b = v.toString.getBytes("UTF-8")
-            out.writeInt(b.length + 1); out.writeByte(1); out.write(b)
-          }
-        case "timestamp without time zone" =>
-          Some { (v: Any, out: java.io.DataOutputStream) =>
-            out.writeInt(8); out.writeLong(micros(v, utc = false))
-          }
-        case "timestamp with time zone" =>
-          Some { (v: Any, out: java.io.DataOutputStream) =>
-            out.writeInt(8); out.writeLong(micros(v, utc = true))
-          }
-        case "bigint" =>
-          Some { (v: Any, out: java.io.DataOutputStream) =>
-            out.writeInt(8); out.writeLong(v.asInstanceOf[Number].longValue())
-          }
-        case "integer" =>
-          Some { (v: Any, out: java.io.DataOutputStream) =>
-            out.writeInt(4); out.writeInt(v.asInstanceOf[Number].intValue())
-          }
-        case "double precision" =>
-          Some { (v: Any, out: java.io.DataOutputStream) =>
-            out.writeInt(8); out.writeDouble(v.asInstanceOf[Number].doubleValue())
-          }
-        case "boolean" =>
-          Some { (v: Any, out: java.io.DataOutputStream) =>
-            out.writeInt(1); out.writeByte(if (v.asInstanceOf[Boolean]) 1 else 0)
-          }
-        case _ => None
-      }
-    }
-    if (encs.exists(_.isEmpty)) None else Some(encs.map(_.get).toIndexedSeq)
-  }
-
-  /** One COPY binary payload for a chunk of rows: the PGCOPY header
-    * (signature, flags 0, no extension), per tuple an int16 field
-    * count then length-prefixed fields (−1 = NULL), and the int16 −1
-    * trailer — one complete payload per `COPY … (FORMAT binary)`
-    * statement. */
-  private[graft] def copyBinaryChunk(
-      rows: Seq[org.apache.spark.sql.Row],
-      encs: IndexedSeq[(Any, java.io.DataOutputStream) => Unit]): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream(rows.length * 64 + 32)
-    val out = new java.io.DataOutputStream(bos)
-    out.write(Array[Byte]('P', 'G', 'C', 'O', 'P', 'Y', '\n',
-      0xFF.toByte, '\r', '\n', 0x00))
-    out.writeInt(0) // flags
-    out.writeInt(0) // header extension length
-    val n = encs.length
-    rows.foreach { r =>
-      out.writeShort(n)
-      var i = 0
-      while (i < n) {
-        val v = r.get(i)
-        if (v == null) out.writeInt(-1) else encs(i)(v, out)
-        i += 1
-      }
-    }
-    out.writeShort(-1) // trailer
-    out.flush()
-    bos.toByteArray
-  }
-
   /** One row as a COPY text-format line: tab-separated fields, `\N`
     * for SQL NULL, the four text-format escapes (backslash, tab,
     * newline, carriage return) applied to string renderings.
-    * Timestamps render through `toString` (µs survive — the same
-    * round-trip the wire client's literal uses). */
+    * Timestamps render as [[copyTimestamp]]. */
   private[graft] def copyTextLine(
       r: org.apache.spark.sql.Row, nCols: Int, sb: java.lang.StringBuilder): Unit = {
     var i = 0
@@ -2025,7 +1841,10 @@ object LtssSink {
       val v = r.get(i)
       if (v == null) sb.append("\\N")
       else {
-        val s = v.toString
+        val s = v match {
+          case t: java.sql.Timestamp => copyTimestamp(t)
+          case other => other.toString
+        }
         var j = 0
         while (j < s.length) {
           s.charAt(j) match {
@@ -2043,90 +1862,59 @@ object LtssSink {
     sb.append('\n')
   }
 
-  /** PostgreSQL COPY bulk load — the production ingest path on a real
-    * cluster (the reference commits one row per INSERT transaction,
-    * `__init__.py:207-218`; batched INSERT beats that ~50×, COPY beats
-    * batched INSERT again by skipping per-row statement overhead —
-    * both measured on live PG 15 in `PostgresE2ESpec`). Per partition:
-    * one connection, the partition streamed in bounded CHUNKS of COPY
-    * text (memory = one chunk, never the partition), each chunk one
-    * `COPY … FROM STDIN` statement. COPY cannot express ON CONFLICT,
-    * so a chunk whose load hits the `(time, entity_id)` PK (a replayed
-    * batch — the expected face of at-least-once) falls back to the
-    * SAME conflict-tolerant insert machinery the vanilla path uses
-    * (`ON CONFLICT DO NOTHING` + savepoint replay), preserving
-    * exactly-once lands chunk by chunk; semantics are identical to the
-    * INSERT path, only the happy-path syscall count changes. A
-    * connection with no COPY surface degrades to that machinery for
-    * the whole partition. */
+  /** A timestamp as COPY text: the JVM wall clock `Timestamp.toString`
+    * renders (µs survive), followed by that zone's UTC offset at the
+    * instant. A `timestamptz` column reads the offset and stores the
+    * exact instant whatever the server session's zone; a `timestamp`
+    * column ignores it and stores the wall clock, as before. */
+  private[graft] def copyTimestamp(t: java.sql.Timestamp): String = {
+    val off = java.util.TimeZone.getDefault.getOffset(t.getTime) / 1000
+    val a = math.abs(off)
+    val hm = f"${if (off < 0) '-' else '+'}${a / 3600}%02d:${a / 60 % 60}%02d"
+    t.toString + (if (a % 60 == 0) hm else f"$hm:${a % 60}%02d")
+  }
+
+  /** The PostgreSQL write path of [[writeJdbc]] (the reference commits
+    * one row per INSERT transaction, `__init__.py:207-218`; batched
+    * INSERT beats that ~50×, COPY beats batched INSERT again by
+    * skipping per-row statement overhead — both measured on live PG 15
+    * in `PostgresE2ESpec`). Per partition: one connection, the
+    * partition streamed in bounded CHUNKS of COPY text (memory = one
+    * chunk, never the partition), each chunk one `COPY … FROM STDIN`
+    * statement. COPY cannot express ON CONFLICT, so a chunk whose load
+    * hits the `(time, entity_id)` PK (a replayed batch — the expected
+    * face of at-least-once) falls back to the conflict-tolerant insert
+    * (`ON CONFLICT DO NOTHING` + savepoint replay), landing each chunk
+    * exactly once. A connection with no COPY surface ([[copyApiOf]])
+    * lands the whole partition through that insert. */
   private[graft] def copyIntoPg(
-      batch: DataFrame, url: String, table: String, chunkRows: Int = 10000,
-      format: String = "text"): Unit = {
-    require(format == "text" || format == "binary",
-      s"copyIntoPg format must be 'text' or 'binary', got '$format'")
+      batch: DataFrame, url: String, table: String, chunkRows: Int = 10000): Unit = {
     val cols = batch.columns.toIndexedSeq
     val copySql = s"COPY $table (${cols.mkString(", ")}) FROM STDIN"
-    val copyBinSql = s"$copySql WITH (FORMAT binary)"
     val fallbackSql = insertSql(table, cols, " ON CONFLICT DO NOTHING")
     batch.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
       val conn = DriverManager.getConnection(url)
-      try {
-        // binary tier: needs BOTH a byte-stream COPY surface and a
-        // full set of catalog-derived field encoders; anything missing
-        // degrades to the text tier below (escape-complete, portable)
-        val binary: Option[((String, java.io.InputStream) => Long,
-          IndexedSeq[(Any, java.io.DataOutputStream) => Unit])] =
-          if (format != "binary") None
-          else for {
-            api <- copyBinaryApiOf(conn)
-            encs <- pgBinaryEncoders(conn, table, cols)
-          } yield (api, encs)
-        (copyApiOf(conn), binary) match {
-          case (None, None) =>
-            // no COPY on this connection: the whole partition lands
-            // through the conflict-tolerant insert machinery
-            insertRowsIgnoreConflicts(conn, fallbackSql, cols.length, rows)
-          case (text, bin) =>
-            val chunk = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-            // the binary tier can be refused AT CALL TIME: PgCopy's
-            // default copyInBinary throws 0A000 (feature not supported),
-            // as would a server without binary COPY — the documented
-            // contract is DEGRADE to the text tier, not fail the write,
-            // so the first 0A000 turns binary off for this partition
-            // and replays the chunk through text (nothing landed: the
-            // refused COPY statement never consumed rows)
-            var binTier = bin
-            def copyChunk(): Unit = binTier match {
-              case Some((copyB, encs)) =>
-                try copyB(copyBinSql,
-                  new java.io.ByteArrayInputStream(copyBinaryChunk(chunk.toSeq, encs)))
-                catch {
-                  case e: SQLException if e.getSQLState == "0A000" && text.isDefined =>
-                    binTier = None
-                    copyChunk()
-                }
-              case None =>
-                val sb = new java.lang.StringBuilder(chunk.length * 64)
-                chunk.foreach(copyTextLine(_, cols.length, sb))
-                text.get(copySql, new java.io.StringReader(sb.toString))
+      try copyApiOf(conn) match {
+        case None => insertRowsIgnoreConflicts(conn, fallbackSql, cols.length, rows)
+        case Some(copyIn) =>
+          val chunk = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
+          def flush(): Unit = if (chunk.nonEmpty) {
+            val sb = new java.lang.StringBuilder(chunk.length * 64)
+            chunk.foreach(copyTextLine(_, cols.length, sb))
+            try copyIn(copySql, new java.io.StringReader(sb.toString))
+            catch {
+              case e: SQLException if isConflict(e) =>
+                // replayed rows in THIS chunk: the database skips
+                // committed PKs itself via the insert fallback
+                insertRowsIgnoreConflicts(conn, fallbackSql, cols.length, chunk.iterator)
             }
-            def flush(): Unit = if (chunk.nonEmpty) {
-              try copyChunk()
-              catch {
-                case e: SQLException if isConflict(e) =>
-                  // replayed rows in THIS chunk: the database skips
-                  // committed PKs itself via the insert fallback
-                  insertRowsIgnoreConflicts(
-                    conn, fallbackSql, cols.length, chunk.iterator)
-              }
-              chunk.clear()
-            }
-            rows.foreach { r =>
-              chunk += r
-              if (chunk.size >= chunkRows) flush()
-            }
-            flush()
-        }
+            chunk.clear()
+          }
+          rows.foreach { r =>
+            chunk += r
+            if (chunk.size >= chunkRows) flush()
+          }
+          flush()
       } finally conn.close()
     }
   }

@@ -24,14 +24,4 @@ trait PgCopy {
   // SQLSTATE classifiers never see it
   @throws[java.sql.SQLException]
   def copyIn(sql: String, data: java.io.Reader): Long
-
-  /** The BINARY-format tier (`COPY … WITH (FORMAT binary)`): the same
-    * statement fed the PGCOPY binary payload as raw bytes — pgjdbc's
-    * `CopyManager.copyIn(sql, InputStream)` twin. Optional: a driver
-    * that only speaks text throws `0A000` and the sink degrades to the
-    * text tier (which is the portable default anyway). */
-  @throws[java.sql.SQLException]
-  def copyInBinary(sql: String, data: java.io.InputStream): Long =
-    throw new java.sql.SQLException(
-      "binary COPY not supported by this driver", "0A000")
 }

@@ -144,16 +144,14 @@ object StreamingIngest {
           if (bad > 0)
             System.err.println(s"[ltss-ingest] dropping $bad row(s) with non-JSON attributes")
           val valid = batch.filter(ok)
-          // bulkCopy routes PostgreSQL batches through the COPY
-          // protocol (3.8× measured; same conflict semantics); upsert
-          // is the CUTOVER-WINDOW sink — re-read rows land ON CONFLICT
-          // DO UPDATE so the overlap converges to the recomputed state
-          // instead of tripping the conflict envelope (runbook step 6)
+          // upsert is the CUTOVER-WINDOW sink — re-read rows land
+          // ON CONFLICT DO UPDATE so the overlap converges to the
+          // recomputed state instead of tripping the conflict
+          // envelope (runbook step 6)
           if (cfg.dbUrl.startsWith("jdbc:")) {
             if (upsert)
               LtssSink.upsertJdbc(LtssSink.locationToWkt(valid), cfg)
-            else LtssSink.writeJdbc(LtssSink.locationToWkt(valid), cfg,
-              bulkCopy = cfg.bulkCopy)
+            else LtssSink.writeJdbc(LtssSink.locationToWkt(valid), cfg)
           }
           // attrKeys: the materialized-key layout (GIN-expression-index
           // analog) is produced BY INGEST — the sink extracts the typed

@@ -1704,13 +1704,6 @@ object StreamingOps {
     geoZonesStream(pts, zones, v)
   }
 
-  /** Bootstrap [[zonesDwellStream]] from the stored zone layout (see
-    * [[geoZonesStreamFromLayout]]). */
-  def zonesDwellStreamFromLayout(pts: DataFrame, path: String): Dataset[ZonesDwellRow] = {
-    val (zones, v) = graft.sources.LtssSink.readZones(pts.sparkSession, path)
-    zonesDwellStream(pts, zones, v)
-  }
-
   final case class StayState(
       chunkUs: Long, alat: Double, alon: Double,
       t0Us: Long, t1Us: Long, seq: Long, n: Long)

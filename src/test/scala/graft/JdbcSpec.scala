@@ -187,41 +187,24 @@ class JdbcSpec extends SparkSpec {
       .asInstanceOf[java.sql.Connection]
   }
 
-  test("copyBinaryChunk emits the PGCOPY framing byte-for-byte") {
-    // hand-built expectation from the published binary-format spec:
-    // 11-byte signature, flags 0, extension 0; per tuple int16 field
-    // count then (int32 len, bytes | -1 for NULL); int16 -1 trailer
-    val encs = IndexedSeq[(Any, java.io.DataOutputStream) => Unit](
-      (v, out) => { val b = v.toString.getBytes("UTF-8"); out.writeInt(b.length); out.write(b) },
-      (v, out) => { out.writeInt(8); out.writeLong(v.asInstanceOf[Long]) })
-    val rows = Seq(
-      org.apache.spark.sql.Row("ab", 258L),
-      org.apache.spark.sql.Row(null, 1L))
-    val got = LtssSink.copyBinaryChunk(rows, encs)
-    val expected =
-      Array[Byte]('P', 'G', 'C', 'O', 'P', 'Y', '\n', 0xFF.toByte, '\r', '\n', 0) ++
-        Array[Byte](0, 0, 0, 0, /*flags*/ 0, 0, 0, 0 /*ext len*/) ++
-        Array[Byte](0, 2, /*ncols*/
-          0, 0, 0, 2, 'a', 'b',
-          0, 0, 0, 8, 0, 0, 0, 0, 0, 0, 1, 2 /*258*/) ++
-        Array[Byte](0, 2,
-          -1, -1, -1, -1, /*NULL*/
-          0, 0, 0, 8, 0, 0, 0, 0, 0, 0, 0, 1) ++
-        Array[Byte](-1, -1) // trailer
-    assert(java.util.Arrays.equals(got, expected),
-      s"payload diverged: ${got.map(b => f"$b%02x").mkString(" ")}")
-  }
-
-  test("pgBinaryEncoders: timestamp wall-clock µs matches the text tier's rendering epoch") {
-    // timestamp WITHOUT time zone binary = µs since 2000-01-01 of the
-    // WALL CLOCK — the same calendar rendering Timestamp.toString feeds
-    // the text tier, whatever the JVM zone. 2000-01-01 00:00:00.000001
-    // wall clock must encode as exactly 1
-    val ts = java.sql.Timestamp.valueOf("2000-01-01 00:00:00.000001")
-    val ldt = ts.toLocalDateTime
-    val us = ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L +
-      ldt.getNano / 1000L - 946684800000000L
-    assert(us == 1L, s"wall-clock µs anchor diverged: $us")
+  test("copyTimestamp: the JVM wall clock plus its UTC offset names the exact instant") {
+    // COPY text feeds timestamptz columns too: the offset pins the
+    // stored instant whatever the server session's zone, and the
+    // wall-clock prefix is what a timestamp column keeps. Zones cover a
+    // half-hour offset, a negative DST offset and a seconds-precision
+    // LMT offset (Amsterdam 1900: +00:19:32).
+    val saved = java.util.TimeZone.getDefault
+    try for ((zone, wall) <- Seq(
+        "Asia/Kolkata" -> "2024-01-01 00:00:00.000001",
+        "America/St_Johns" -> "2024-07-01 12:34:56.5",
+        "Europe/Amsterdam" -> "1900-06-01 00:00:00.0")) {
+      java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone(zone))
+      val t = java.sql.Timestamp.valueOf(wall)
+      val txt = LtssSink.copyTimestamp(t)
+      assert(txt.startsWith(wall), s"$zone: wall clock changed: $txt")
+      assert(java.time.OffsetDateTime.parse(txt.replace(' ', 'T')).toInstant == t.toInstant,
+        s"$zone: $txt does not name the source instant")
+    } finally java.util.TimeZone.setDefault(saved)
   }
 
   test("reflective pgjdbc COPY surface: conflict SQLException reaches the caller unwrapped") {

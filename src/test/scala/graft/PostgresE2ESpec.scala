@@ -160,9 +160,9 @@ class PostgresE2ESpec extends SparkSpec with BeforeAndAfterAll {
       }
     }
     val batch = rows.toDF("time", "entity_id", "state", "attributes").repartition(2)
-    // the sink's real entry: Spark's JDBC writer attempt → duplicate-PK
-    // conflict from the real server → the Postgres fast path lands the
-    // remainder in ONE ON CONFLICT DO NOTHING statement
+    // the sink's real entry: each partition's COPY chunk hits the
+    // duplicate PK on the real server → that chunk lands through
+    // ON CONFLICT DO NOTHING, skipping the committed rows
     LtssSink.writeJdbc(batch, LtssConfig(dbUrl = server.url), table = "ltss_fast",
       retryWaitMs = 1, sleep = _ => ())
     withWire { w =>
@@ -174,7 +174,7 @@ class PostgresE2ESpec extends SparkSpec with BeforeAndAfterAll {
     }
   }
 
-  test("writeJdbc bulkCopy: the COPY protocol lands and escapes rows; a replay lands exactly-once") {
+  test("writeJdbc COPY: text escaping and NULL land; a replay lands exactly-once") {
     LtssSink.bootstrapJdbc(cfg, table = "ltss_copy", locationType = "VARCHAR(255)")
     // state carries every COPY-text special character (tab, newline,
     // CR, backslash) — they must round-trip through the escaper, and a
@@ -184,8 +184,7 @@ class PostgresE2ESpec extends SparkSpec with BeforeAndAfterAll {
       (ts("2024-01-01 00:00:02.000002"), "sensor.2", "c\nd\\e\rf", null),
       (ts("2024-01-01 00:00:03.000003"), "sensor.3", "plain", """{"i":3}"""))
     val batch = rows.toDF("time", "entity_id", "state", "attributes")
-    LtssSink.writeJdbc(batch, cfg, table = "ltss_copy",
-      retryWaitMs = 1, sleep = _ => (), bulkCopy = true)
+    LtssSink.writeJdbc(batch, cfg, table = "ltss_copy", retryWaitMs = 1, sleep = _ => ())
     withWire { w =>
       val got = w.query(
         "SELECT entity_id, state, attributes FROM ltss_copy ORDER BY time").rows
@@ -199,8 +198,7 @@ class PostgresE2ESpec extends SparkSpec with BeforeAndAfterAll {
     val replay = (rows :+
       ((ts("2024-01-01 00:00:04.000004"), "sensor.4", "late", """{"i":4}""")))
       .toDF("time", "entity_id", "state", "attributes")
-    LtssSink.writeJdbc(replay, cfg, table = "ltss_copy",
-      retryWaitMs = 1, sleep = _ => (), bulkCopy = true)
+    LtssSink.writeJdbc(replay, cfg, table = "ltss_copy", retryWaitMs = 1, sleep = _ => ())
     withWire { w =>
       val got = w.query(
         "SELECT entity_id FROM ltss_copy ORDER BY time").rows.map(_(0))
@@ -226,108 +224,48 @@ class PostgresE2ESpec extends SparkSpec with BeforeAndAfterAll {
     }
   }
 
-  test("writeJdbc bulkCopy binary: catalog-typed PGCOPY payload lands; replay exactly-once; text parity") {
-    LtssSink.bootstrapJdbc(cfg, table = "ltss_copyb", locationType = "VARCHAR(255)")
-    // µs-precision timestamps, text-escape characters (no escaping
-    // exists in binary — they must land verbatim), NULL, non-ASCII,
-    // and a JSONB value (needs the version byte the catalog probe adds)
+  test("writeJdbc into timestamptz stores the source instant when the session zone differs") {
+    // the reference's own column type (models.py:31, DateTime(timezone=
+    // True)): COPY text without an offset is read in the server
+    // session's zone, so the stored instant would shift by the gap
+    // between that zone and the JVM's
     val rows = Seq(
-      (ts("2024-01-01 00:00:01.000001"), "sensor.1", "a\tb\\c", """{"i":1}"""),
-      (ts("2024-01-01 00:00:02.000002"), "sensor.2", "x\ny🙂", null),
-      (ts("2024-01-01 00:00:03.000003"), "sensor.3", "plain", """{"i":3}"""))
-    val batch = rows.toDF("time", "entity_id", "state", "attributes")
-    LtssSink.writeJdbc(batch, cfg, table = "ltss_copyb",
-      retryWaitMs = 1, sleep = _ => (), bulkCopy = true, copyFormat = "binary")
+      (ts("2024-01-01 00:00:00.000001"), "sensor.1"),
+      (ts("2024-07-01 12:34:56.5"), "sensor.2"))
+    val zone = Seq("Pacific/Kiritimati", "America/Adak").find { z =>
+      rows.forall { case (t, _) =>
+        java.util.TimeZone.getTimeZone(z).getOffset(t.getTime) !=
+          java.util.TimeZone.getDefault.getOffset(t.getTime)
+      }
+    }.get
     withWire { w =>
-      val got = w.query(
-        "SELECT entity_id, state, attributes, " +
-          "to_char(time, 'YYYY-MM-DD HH24:MI:SS.US') FROM ltss_copyb ORDER BY time").rows
-      assert(got.map(_(1)) == Vector("a\tb\\c", "x\ny🙂", "plain"),
-        s"binary COPY values diverged: $got")
-      assert(got(1)(2) == null, "NULL must land as SQL NULL (-1 length)")
-      assert(got(0)(2) == """{"i": 1}""", "jsonb must accept the versioned payload")
-      assert(got.map(_(3)) == Vector(
-        "2024-01-01 00:00:01.000001",
-        "2024-01-01 00:00:02.000002",
-        "2024-01-01 00:00:03.000003"),
-        s"binary timestamp µs diverged: ${got.map(_(3))}")
+      w.query("CREATE DATABASE ltss_tz")
+      w.query(s"ALTER DATABASE ltss_tz SET timezone TO '$zone'")
     }
-    // full replay + one new row: the conflict fallback still lands
-    // exactly the remainder through the same machinery as text
-    val replay = (rows :+
-      ((ts("2024-01-01 00:00:04.000004"), "sensor.4", "late", """{"i":4}""")))
-      .toDF("time", "entity_id", "state", "attributes")
-    LtssSink.writeJdbc(replay, cfg, table = "ltss_copyb",
-      retryWaitMs = 1, sleep = _ => (), bulkCopy = true, copyFormat = "binary")
-    withWire { w =>
-      val got = w.query(
-        "SELECT entity_id FROM ltss_copyb ORDER BY time").rows.map(_(0))
-      assert(got == Vector("sensor.1", "sensor.2", "sensor.3", "sensor.4"),
-        s"binary replay must land exactly-once: $got")
-    }
-    // parity: the same batch through the TEXT tier reads back identical
-    LtssSink.bootstrapJdbc(cfg, table = "ltss_copyb_t", locationType = "VARCHAR(255)")
-    LtssSink.writeJdbc(replay, cfg, table = "ltss_copyb_t",
-      retryWaitMs = 1, sleep = _ => (), bulkCopy = true)
-    withWire { w =>
-      val q = "SELECT entity_id, state, attributes, " +
-        "to_char(time, 'YYYY-MM-DD HH24:MI:SS.US') FROM %s ORDER BY time"
-      assert(w.query(q.format("ltss_copyb")).rows ==
-        w.query(q.format("ltss_copyb_t")).rows,
-        "binary and text tiers must land byte-identical tables")
-    }
-  }
-
-  test("copyFormat=binary on a text-only COPY driver degrades to the text tier (0A000), never fails the write") {
-    // PgCopy.scala documents: a driver that only speaks text throws
-    // 0A000 from copyInBinary and the sink DEGRADES to the text tier.
-    // The ?binarycopy=off wire connection exposes exactly that face —
-    // copyBinaryApiOf still detects a surface (the method exists), so
-    // the refusal arrives AT CALL TIME and must be caught in the chunk
-    // flush, not assumed away at tier selection.
-    LtssSink.bootstrapJdbc(cfg, table = "ltss_copyb_deg", locationType = "VARCHAR(255)")
-    val rows = Seq(
-      (ts("2024-01-01 00:00:01.000001"), "sensor.1", "a\tb\\c", """{"i":1}"""),
-      (ts("2024-01-01 00:00:02.000002"), "sensor.2", "x\ny🙂", null))
-    val batch = rows.toDF("time", "entity_id", "state", "attributes")
-    val degUrl = server.url + (if (server.url.contains("?")) "&" else "?") + "binarycopy=off"
-    LtssSink.writeJdbc(batch, LtssConfig(dbUrl = degUrl), table = "ltss_copyb_deg",
-      retryWaitMs = 1, sleep = _ => (), bulkCopy = true, copyFormat = "binary")
-    withWire { w =>
-      val got = w.query(
-        "SELECT entity_id, state, attributes, " +
-          "to_char(time, 'YYYY-MM-DD HH24:MI:SS.US') FROM ltss_copyb_deg ORDER BY time").rows
-      assert(got.map(_(1)) == Vector("a\tb\\c", "x\ny🙂"),
-        s"degraded text tier must land the full batch: $got")
-      assert(got.map(_(3)) == Vector(
-        "2024-01-01 00:00:01.000001", "2024-01-01 00:00:02.000002"),
-        s"degraded tier timestamps diverged: ${got.map(_(3))}")
-    }
-  }
-
-  test("COPY text vs binary throughput, measured on live PG 15") {
-    LtssSink.bootstrapJdbc(cfg, table = "ltss_tpf_txt", locationType = "VARCHAR(255)")
-    LtssSink.bootstrapJdbc(cfg, table = "ltss_tpf_bin", locationType = "VARCHAR(255)")
-    val n = 20000
-    val batch = spark.range(n.toLong).selectExpr(
-      "timestampadd(MICROSECOND, CAST(id AS INT), TIMESTAMP '2024-01-01 00:00:00') AS time",
-      "concat('sensor.', CAST(id % 50 AS STRING)) AS entity_id",
-      "CAST(id AS STRING) AS state",
-      """concat('{"i":', id, '}') AS attributes""").coalesce(2)
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    val tTxt = timed(LtssSink.writeJdbc(batch, cfg, table = "ltss_tpf_txt",
-      retryWaitMs = 1, sleep = _ => (), bulkCopy = true))
-    val tBin = timed(LtssSink.writeJdbc(batch, cfg, table = "ltss_tpf_bin",
-      retryWaitMs = 1, sleep = _ => (), bulkCopy = true, copyFormat = "binary"))
-    withWire { w =>
-      assert(w.query("SELECT count(*) FROM ltss_tpf_txt").rows.head.head == n.toString)
-      assert(w.query("SELECT count(*) FROM ltss_tpf_bin").rows.head.head == n.toString)
-    }
-    info(f"COPY text:   $n rows in $tTxt%.2f s = ${n / tTxt}%.0f rows/s")
-    info(f"COPY binary: $n rows in $tBin%.2f s = ${n / tBin}%.0f rows/s " +
-      f"(${tTxt / tBin}%.2fx vs text)")
+    val tzWire = new PgWire.Conn("127.0.0.1", server.port, "postgres", "ltss_tz")
+    try {
+      assert(tzWire.query("SHOW timezone").rows.head.head == zone)
+      tzWire.query("CREATE TABLE ltss_tstz (time TIMESTAMPTZ NOT NULL, " +
+        "entity_id VARCHAR(255) NOT NULL, state VARCHAR(255), attributes JSONB, " +
+        "PRIMARY KEY (time, entity_id))")
+      val tzCfg = LtssConfig(dbUrl = server.url.replaceFirst("/postgres$", "/ltss_tz"))
+      // the bootstrapJdbc table (timestamp without time zone) beside
+      // it: the offset must not move its stored wall clock
+      LtssSink.bootstrapJdbc(tzCfg, table = "ltss_wall", locationType = "VARCHAR(255)")
+      val batch = rows.map { case (t, e) => (t, e, "1", "{}") }
+        .toDF("time", "entity_id", "state", "attributes")
+      Seq("ltss_tstz", "ltss_wall").foreach(t =>
+        LtssSink.writeJdbc(batch, tzCfg, table = t, retryWaitMs = 1, sleep = _ => ()))
+      val epochs = tzWire.query("SELECT (extract(epoch FROM time) * 1000000)::bigint " +
+        "FROM ltss_tstz ORDER BY entity_id").rows.map(_.head.toLong)
+      assert(epochs == rows.map { case (t, _) =>
+        Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000 }.toVector,
+        s"timestamptz instants shifted under session zone $zone: $epochs")
+      val walls = tzWire.query("SELECT to_char(time, 'YYYY-MM-DD HH24:MI:SS.US') " +
+        "FROM ltss_wall ORDER BY entity_id").rows.map(_.head)
+      assert(walls == Vector("2024-01-01 00:00:00.000001", "2024-07-01 12:34:56.500000"),
+        s"timestamp wall clock moved: $walls")
+    } finally tzWire.close()
   }
 
   test("COPY vs batched INSERT throughput, measured on live PG 15") {
@@ -342,10 +280,12 @@ class PostgresE2ESpec extends SparkSpec with BeforeAndAfterAll {
     def timed(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
-    val tIns = timed(LtssSink.writeJdbc(batch, cfg, table = "ltss_tp_ins",
-      retryWaitMs = 1, sleep = _ => ()))
+    // the INSERT side is the fallback the PostgreSQL path keeps for a
+    // connection without COPY (and for a conflicting chunk)
+    val tIns = timed(LtssSink.insertIgnoreConflicts(batch, server.url, "ltss_tp_ins",
+      " ON CONFLICT DO NOTHING"))
     val tCp = timed(LtssSink.writeJdbc(batch, cfg, table = "ltss_tp_cp",
-      retryWaitMs = 1, sleep = _ => (), bulkCopy = true))
+      retryWaitMs = 1, sleep = _ => ()))
     withWire { w =>
       assert(w.query("SELECT count(*) FROM ltss_tp_ins").rows.head.head == n.toString)
       assert(w.query("SELECT count(*) FROM ltss_tp_cp").rows.head.head == n.toString)
@@ -446,6 +386,7 @@ class PostgresE2ESpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   test("streaming ingest lands in real PostgreSQL: queryable JSONB, WKT location, P4 drop") {
+    // the ingest's JDBC branch reaches writeJdbc, i.e. the COPY path
     import java.nio.file.{Files, Paths}
     val in = Files.createTempDirectory("pg-stream-in").toString
     val ckpt = Files.createTempDirectory("pg-stream-ckpt").toString
@@ -482,34 +423,6 @@ class PostgresE2ESpec extends SparkSpec with BeforeAndAfterAll {
     }
   }
 
-  test("streaming ingest with bulk_copy: the COPY path carries the ingest end-to-end") {
-    import java.nio.file.{Files, Paths}
-    val in = Files.createTempDirectory("pg-copy-in").toString
-    val ckpt = Files.createTempDirectory("pg-copy-ckpt").toString
-    Files.writeString(Paths.get(in, "b1.json"),
-      """{"event_id":11,"ts":"2024-02-01T00:00:00.000001Z","user_id":1,"event_type":"sensor","value":3.5,"props":"{\"latitude\": 1.5, \"longitude\": 2.5}"}
-        |{"event_id":12,"ts":"2024-02-01T00:00:01.000001Z","user_id":2,"event_type":"sensor","value":4.5,"props":"{\"k\": 9}"}
-        |""".stripMargin)
-    // the config-schema spelling of the COPY opt-in; lands in the
-    // default ltss table (February rows — disjoint from the sibling
-    // ingest test's January PKs)
-    val c = LtssConfig.fromMap(Map(
-      "db_url" -> server.url, "bulk_copy" -> true)).copy(enableLocation = true)
-    assert(c.bulkCopy)
-    val q = graft.streaming.StreamingIngest.start(
-      graft.streaming.StreamingIngest.readJsonEvents(spark, in), c, "", ckpt)
-    graft.streaming.StreamingIngest.drainAndStop(q)
-    withWire { w =>
-      val rows = w.query(
-        "SELECT entity_id, attributes ->> 'k' AS k, location FROM ltss " +
-          "WHERE time >= TIMESTAMP '2024-02-01 00:00:00' ORDER BY entity_id").rows
-      assert(rows.map(_(0)) == Vector("sensor.1", "sensor.2"),
-        s"COPY ingest diverged: $rows")
-      assert(rows(1)(1) == "9" && rows(0)(2) == "SRID=4326;POINT(2.5 1.5)",
-        s"COPY payload fidelity: $rows")
-    }
-  }
-
   test("drain-and-cutover runbook mechanized: rewound re-read lands via upsert, output equals the uninterrupted run") {
     import java.nio.file.{Files, Paths}
     // The full runbook as ONE callable chain (steps 1-6): ingest events
@@ -517,7 +430,7 @@ class PostgresE2ESpec extends SparkSpec with BeforeAndAfterAll {
     // REWOUND source (files covering events 2-5 — overlap {2, 3}
     // re-emits) with the upsert sink, and the stored table must equal
     // the uninterrupted run's rows exactly once each. March 2024 PKs —
-    // disjoint from the sibling ingest tests in the shared ltss table.
+    // disjoint from the sibling ingest test in the shared ltss table.
     def line(i: Int) =
       s"""{"event_id":$i,"ts":"2024-03-01T00:00:0$i.000001Z","user_id":$i,"event_type":"sensor","value":$i.5,"props":"{\\"k\\": $i}"}"""
     val in1 = Files.createTempDirectory("pg-cut-in1").toString

@@ -284,8 +284,10 @@ class EntityFilterSpec extends SparkSpec {
     assertThrows[IllegalArgumentException](LtssConfig.fromMap(Map()))
     assertThrows[IllegalArgumentException](
       LtssConfig.fromMap(Map("db_url" -> "x", "chunk_time_interval" -> -1)))
-    assertThrows[IllegalArgumentException](
-      LtssConfig.fromMap(Map("db_url" -> "x", "bogus" -> 1)))
+    // unknown keys, including the retired COPY switch
+    for (unknown <- Seq[(String, Any)]("bogus" -> 1, "bulk_copy" -> true))
+      assertThrows[IllegalArgumentException](
+        LtssConfig.fromMap(Map("db_url" -> "x", unknown)))
     assertThrows[IllegalArgumentException](
       LtssConfig.fromMap(Map("db_url" -> "x", "include" -> Map("bogus" -> Seq("a")))))
   }

@@ -120,23 +120,6 @@ object PgWire {
       Result(cols, oids, rows.result(), tags.result(), txnStatus)
     }
 
-    /** COPY-IN with a BINARY payload: identical protocol flow to
-      * [[copyIn]], but the stream's bytes frame verbatim as CopyData —
-      * no charset, no escaping (the PGCOPY binary header/trailer are
-      * the CALLER's payload responsibility). */
-    def copyInBinary(sql: String, data: java.io.InputStream): Long = synchronized {
-      copyInFrames(sql) { () =>
-        val buf = new Array[Byte](65536)
-        var n = data.read(buf)
-        while (n > 0) {
-          out.writeByte('d') // CopyData
-          out.writeInt(4 + n)
-          out.write(buf, 0, n)
-          n = data.read(buf)
-        }
-      }
-    }
-
     /** COPY-IN subprotocol: run a `COPY … FROM STDIN` statement and
       * stream the reader's text-format payload as CopyData messages.
       * The server answers the Query with CopyInResponse ('G'); data
@@ -174,8 +157,8 @@ object PgWire {
       }
     }
 
-    /** The COPY-IN protocol frame shared by the text and binary tiers:
-      * send the Query, await CopyInResponse, let `writeData` emit its
+    /** The COPY-IN protocol frame around [[copyIn]]'s payload: send the
+      * Query, await CopyInResponse, let `writeData` emit its
       * CopyData frames, close with CopyDone (or CopyFail on an IO
       * error), drain to ReadyForQuery collecting any ErrorResponse,
       * THEN throw with the server's SQLSTATE — connection stays
@@ -379,11 +362,7 @@ final class PgMiniDriver extends java.sql.Driver {
           throw new SQLException(s"could not connect to ${m.group(1)}:${m.group(2)}: " +
             e.getMessage, "08001", e)
       }
-    // ?binarycopy=off simulates a PgCopy driver that only speaks the
-    // text tier: copyInBinary falls back to the TRAIT DEFAULT (throws
-    // 0A000) — the face the sink's degrade contract is specified
-    // against (PgCopy.scala:24)
-    PgMiniDriver.connection(wire, binaryCopy = !url.contains("binarycopy=off"))
+    PgMiniDriver.connection(wire)
   }
 
   override def getMajorVersion: Int = 0
@@ -429,8 +408,7 @@ object PgMiniDriver {
     * commit()/rollback() close it — statement-level recovery inside an
     * aborted PostgreSQL transaction requires the SAVEPOINT surface,
     * which is wired through to the server verbatim. */
-  private[pg] def connection(
-      wire: PgWire.Conn, binaryCopy: Boolean = true): Connection = {
+  private[pg] def connection(wire: PgWire.Conn): Connection = {
     var autoCommit = true
     var spCounter = 0
 
@@ -447,12 +425,6 @@ object PgMiniDriver {
       case ("copyIn", Array(sql: String, data: java.io.Reader)) =>
         if (!autoCommit && wire.txnStatus == 'I') wire.query("BEGIN")
         Long.box(wire.copyIn(sql, data))
-      case ("copyInBinary", Array(sql: String, data: java.io.InputStream)) =>
-        if (!binaryCopy)
-          throw new SQLException(
-            "binary COPY not supported by this driver", "0A000")
-        if (!autoCommit && wire.txnStatus == 'I') wire.query("BEGIN")
-        Long.box(wire.copyInBinary(sql, data))
       case ("createStatement", _) => statement(exec)
       case ("prepareStatement", Array(sql: String)) => prepared(sql, exec)
       case ("prepareStatement", Array(sql: String, _: java.lang.Integer, _: java.lang.Integer)) =>
