@@ -36,7 +36,10 @@ already divides the host factor out for the CEILING check).
 The compare (<sfDir> <verifyOutDir>) exits nonzero when any query fails,
 when it compared zero queries (an empty oracle_sql.json, or a name
 filter matching nothing), and when a query named on the command line is
-not in oracle_sql.json — a gate that checked nothing must not pass.
+not in oracle_sql.json — a gate that checked nothing must not pass. A
+full compare (no names) also exits nonzero when it checked fewer queries
+than the count graft.Verify wrote to oracle_count.json, or when that
+file is missing: a gate that checked too few must not pass either.
 """
 import sys, json, glob, os
 
@@ -164,8 +167,9 @@ def selftest() -> int:
             fails.append("snapshot: a source file in the diff must fail")
     finally:
         shutil.rmtree(repo, ignore_errors=True)
-    # compare fixtures: an empty oracle map and a named query missing
-    # from the map fail; one real DuckDB-vs-parquet match passes
+    # compare fixtures: an empty oracle map, a named query missing from
+    # the map, and a full compare short of (or without) Verify's dumped
+    # count fail; one real DuckDB-vs-parquet match passes
     import duckdb
     tmp = tempfile.mkdtemp(prefix="cmpcheck-")
     try:
@@ -175,14 +179,25 @@ def selftest() -> int:
         for t in TABLES:
             con.execute(f"COPY (SELECT 1 AS x) TO '{sf}/{t}.parquet' (FORMAT parquet)")
         con.execute(f"COPY (SELECT 1 AS x) TO '{out}/q1/part-0.parquet' (FORMAT parquet)")
-        def oracle(m):
+        def oracle(m, dumped):
             json.dump(m, open(os.path.join(out, "oracle_sql.json"), "w"))
-        for tag, m, only, want in [
-                ("empty map", {}, [], 1),
-                ("one match", {"q1": "SELECT 1 AS x"}, [], 0),
-                ("named, not in map", {"q1": "SELECT 1 AS x"}, ["q1", "nope"], 1),
-                ("filter matches nothing", {"q1": "SELECT 1 AS x"}, ["nope"], 1)]:
-            oracle(m)
+            count = os.path.join(out, "oracle_count.json")
+            if dumped is not None:
+                json.dump({"dumped": dumped}, open(count, "w"))
+            elif os.path.exists(count):
+                os.unlink(count)
+        q1 = {"q1": "SELECT 1 AS x"}
+        for tag, m, dumped, only, want in [
+                ("empty map", {}, 0, [], 1),
+                ("one match", q1, 1, [], 0),
+                ("named, not in map", q1, 1, ["q1", "nope"], 1),
+                ("filter matches nothing", q1, 1, ["nope"], 1),
+                # the map lost an entry Verify dumped
+                ("fewer than dumped", q1, 2, [], 1),
+                ("no dumped count", q1, None, [], 1),
+                # a named subset is held to its names, not the full count
+                ("named subset of a full dump", q1, 2, ["q1"], 0)]:
+            oracle(m, dumped)
             got = compare(sf, out, only)
             if got != want:
                 fails.append(f"compare {tag}: exit {got} != {want}")
@@ -191,7 +206,7 @@ def selftest() -> int:
     if fails:
         print("SELFTEST FAIL: " + "; ".join(fails))
         return 1
-    print("SELFTEST PASS: 5 gate + 2 snapshot + 4 compare fixtures")
+    print("SELFTEST PASS: 5 gate + 2 snapshot + 7 compare fixtures")
     return 0
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -219,12 +234,25 @@ def compare(sf_dir: str, out_dir: str, only=()) -> int:
     if not todo:
         print(f"== 0 pass, {len(missing)} fail: compared zero queries")
         return 1
+    short = 0  # a full compare must check every query Verify dumped
+    if not only:
+        try:
+            dumped = json.load(open(os.path.join(out_dir, "oracle_count.json")))["dumped"]
+        except Exception as e:
+            print(f"FAIL oracle_count.json: {type(e).__name__}: {e} "
+                  "(rerun graft.Verify: it writes the dumped-query count)")
+            short = 1
+        else:
+            if len(todo) < dumped:
+                print(f"FAIL checking {len(todo)} queries, fewer than the "
+                      f"{dumped} graft.Verify dumped")
+                short = 1
     import duckdb
     import pandas as pd
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    n_pass, n_fail = 0, len(missing)
+    n_pass, n_fail = 0, len(missing) + short
     for name, sql in todo:
         pq = os.path.join(out_dir, name)
         files = glob.glob(os.path.join(pq, "*.parquet"))

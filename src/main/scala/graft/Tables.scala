@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver's parquet tables (TESTDATA.md). */
 object Tables {
@@ -23,7 +23,51 @@ object Tables {
   }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    normTs(spark.read.parquet(s"$dir/$name.parquet"))
+    normTs(parquet(spark, s"$dir/$name.parquet"))
+
+  /** Per path: the digest of the file set and the schema inferred from it. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
+
+  /** `spark.read.parquet(path)` without a schema-inference job per call.
+    * Inference reads parquet footers in a Spark job, and a dashboard
+    * panel re-reads the same table on every refresh, so unremembered
+    * that job is a fixed cost of every panel. The inferred schema is remembered per path and
+    * passed to `spark.read.schema(...)`, and it is trusted only while the
+    * read's own file index, which has already listed the path, holds the
+    * same files (paths, sizes, modification times) under the same
+    * schema-affecting confs. A changed file set (an appended chunk, a
+    * compaction, an overwrite) infers the schema again. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    Option(schemas.get(path)).flatMap { case (digest, schema) =>
+      val df = spark.read.schema(schema).parquet(path)
+      if (filesDigest(df).contains(digest)) Some(df) else None
+    }.getOrElse {
+      val df = spark.read.parquet(path)
+      filesDigest(df).foreach(d => schemas.put(path, (d, df.schema)))
+      df
+    }
+  }
+
+  /** Digest of the files a parquet read's index listed, plus the confs
+    * that change what inference makes of them; None when the read is
+    * not a file-index scan. */
+  private def filesDigest(df: DataFrame): Option[String] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }.collect {
+      case fs: HadoopFsRelation =>
+        val conf = df.sparkSession.sessionState.conf
+        val files = fs.location.listFiles(Nil, Nil).flatMap(_.files)
+          .map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}").sorted
+        val confs = Seq(conf.isParquetBinaryAsString, conf.isParquetINT96AsTimestamp,
+          conf.legacyParquetNanosAsLong, conf.parquetInferTimestampNTZEnabled,
+          conf.caseSensitiveAnalysis, conf.isParquetSchemaMergingEnabled,
+          conf.isParquetSchemaRespectSummaries).mkString(",")
+        val md = java.security.MessageDigest.getInstance("SHA-256")
+        (confs +: files).foreach(s => md.update((s + "\n").getBytes("UTF-8")))
+        md.digest().map("%02x".format(_)).mkString
+    }
+  }
 
   /** Local-mode parallelism fix for compute-heavy scans: the test tables
     * are single small parquet files, so Spark plans ONE scan task and a

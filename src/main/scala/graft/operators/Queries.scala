@@ -429,7 +429,7 @@ object Queries {
   val jsonAttrLayout = OracleQuery(
     "ltss_json_attr_layout",
     (s, d) =>
-      s.read.parquet(ltssAttrLayoutPath(s, d))
+      Tables.parquet(s, ltssAttrLayoutPath(s, d))
         .filter(col("attr_k") >= 90)
         .select(col("entity_id"), col("time"), col("state"), col("attr_k").as("k"))
         .orderBy(col("entity_id"), col("time"), col("state")),

@@ -320,7 +320,7 @@ object TimeSeries {
     * hierarchy, kept exact so re-aggregated day sums equal direct
     * sums. */
   private def caggHourlyPartials(s: SparkSession, d: String): DataFrame = {
-    val mat = s.read.parquet(caggLayoutPath(s, d))
+    val mat = graft.Tables.parquet(s, caggLayoutPath(s, d))
       .select(col("entity_id"), col("bus"), col("cnt"),
         col("ssum").cast("decimal(32,2)").as("ssum"))
     val live = graft.sources.LtssSink.chunkScan(s, Queries.ltssLayoutPath(s, d),
@@ -1357,7 +1357,7 @@ object TimeSeries {
   val caggReconcileQ = OracleQuery(
     "ltss_cagg_reconcile",
     (s, d) => {
-      val mat = s.read.parquet(caggLayoutPath(s, d))
+      val mat = graft.Tables.parquet(s, caggLayoutPath(s, d))
       reconcile(mat, lateArrivals(s, d))
         .orderBy(col("entity_id"), col("bucket"))
     },

@@ -15,6 +15,10 @@ import graft.functions.{DotF64, Gram2Stats, Haversine, IsValidJson, MinHash8, Mi
   *  - `haversine_km(lat1, lon1, lat2, lon2)` — geo distance over the
   *    extracted location points.
   *
+  * and two optimizer rules: [[HaversineBoxRule]] (sargable bounding box
+  * for radius predicates) and [[SmallSortRule]] (a final sort of a
+  * render-scale result runs in one task, with no range Exchange).
+  *
   * Usable two ways: `SparkSession.builder.withExtensions(new
   * GraftExtensions)` at session build, or [[GraftExtensions.install]] on
   * a live session.
@@ -22,6 +26,7 @@ import graft.functions.{DotF64, Gram2Stats, Haversine, IsValidJson, MinHash8, Mi
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => HaversineBoxRule)
+    ext.injectOptimizerRule(_ => SmallSortRule)
     ext.injectFunction(GraftExtensions.timeBucketFn)
     ext.injectFunction(GraftExtensions.haversineFn)
     ext.injectFunction(GraftExtensions.popLatLonFn)
@@ -130,14 +135,14 @@ object GraftExtensions {
     (args: Seq[Expression]) => graft.functions.Md5Prefix64(args.head))
 
   /** Idempotent registration on an already-built session. The optimizer
-    * rule goes through `experimental.extraOptimizations` (a live session
-    * cannot take extension injections); predicates it adds still reach
+    * rules go through `experimental.extraOptimizations` (a live session
+    * cannot take extension injections); predicates the box rule adds still reach
     * `PushedFilters` because data-source pushdown extracts sargable
     * conjuncts from the scan-adjacent Filter at PHYSICAL planning. */
   def install(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraOptimizations.contains(HaversineBoxRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ HaversineBoxRule
+    val rules = Seq(HaversineBoxRule, SmallSortRule)
+    spark.experimental.extraOptimizations = spark.experimental.extraOptimizations ++
+      rules.filterNot(spark.experimental.extraOptimizations.contains)
     val reg = spark.sessionState.functionRegistry
     reg.createOrReplaceTempFunction("time_bucket", timeBucketExpr, "built-in")
     reg.createOrReplaceTempFunction("haversine_km",

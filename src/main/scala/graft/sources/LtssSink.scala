@@ -623,7 +623,7 @@ object LtssSink {
       .getOrElse(cfg)
     val lo = java.sql.Date.valueOf(chunkDateOf(from, effective))
     val hi = java.sql.Date.valueOf(chunkDateOf(to, effective))
-    spark.read.parquet(path)
+    graft.Tables.parquet(spark, path)
       .filter(col("chunk").between(lit(lo), lit(hi)))
       .filter(col("time").between(lit(from), lit(to)))
   }

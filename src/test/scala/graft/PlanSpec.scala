@@ -540,15 +540,8 @@ class PlanSpec extends SparkSpec {
     * (graft.cc.localCapEdges=0) for the tests that pin the LOOP's
     * shape — the default cap routes fixture-sized graphs to the
     * single-task union-find (r20 cap-and-route). */
-  private def withCcDistributed[T](body: => T): T = {
-    val key = "graft.cc.localCapEdges"
-    val was = spark.conf.getOption(key)
-    spark.conf.set(key, "0")
-    try body finally was match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private def withCcDistributed[T](body: => T): T =
+    withConf("graft.cc.localCapEdges", "0")(body)
 
   test("connected components: ONE job per iteration, convergence folded into propagation") {
     import spark.implicits._
@@ -962,11 +955,16 @@ class PlanSpec extends SparkSpec {
     graft.plans.GraftExtensions.install(spark)
     val df = graft.operators.Queries.geoRadiusLayout.run(spark, "/root/testdata/sf0.001")
     val plan = df.queryExecution.executedPlan.toString
-    // (the PushedFilters list elides in toString — assert the lat bounds
-    // there and the lon bounds in the un-elided Filter condition)
-    assert(plan.contains("PushedFilters: [GreaterThanOrEqual(lat") &&
-      plan.contains("(lon#") && plan.contains("LessThanOrEqual(lat"),
-      s"expected the box bounds in PushedFilters; plan:\n${plan.take(3000)}")
+    // the scan's full PushedFilters list (toString elides it); with the
+    // rule planned at session build, inferred IsNotNull filters lead it
+    val pushed = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f.metadata("PushedFilters")
+      }.mkString
+    for (bound <- Seq("GreaterThanOrEqual(lat,", "LessThanOrEqual(lat,",
+        "GreaterThanOrEqual(lon,", "LessThanOrEqual(lon,"))
+      assert(pushed.contains(bound),
+        s"expected $bound in PushedFilters $pushed; plan:\n${plan.take(3000)}")
     // the rule must be result-invisible: same rows as the raw-scan query
     // over the same points with NO layout (rule fires there too, but on
     // derived columns it cannot prune — only the predicate is added)
@@ -1112,5 +1110,58 @@ class PlanSpec extends SparkSpec {
       s"convoy episodes must ride the bucketed equi-join; plan:\n$cp2")
     assert("WindowExec|Window\\b".r.findAllIn(cp2).nonEmpty,
       s"the episode rule is a keyed window; plan:\n$cp2")
+  }
+
+  /** A render-scale result with a two-key order (ties on `k` broken by
+    * `id`), spread over four scan partitions. */
+  private def smallSorted() =
+    spark.range(0, 2000, 1, 4)
+      .selectExpr("id", "(id * 7919) % 97 AS k")
+      .orderBy(org.apache.spark.sql.functions.col("k").desc,
+        org.apache.spark.sql.functions.col("id"))
+
+  test("small final sort runs in one task: no range exchange, one job, the range sort's rows") {
+    val df = smallSorted()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("rangepartitioning"), s"expected no range exchange; plan:\n$plan")
+    val (rows, jobs) = jobsOf(df.collect().toSeq)
+    assert(jobs == 1, s"expected one job (no sampling job), saw $jobs")
+    assert(rows.size == 2000)
+    // -1 disables the rule with the broadcast bound: Spark's range sort
+    // plans again and returns the same rows in the same order
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      val ranged = smallSorted()
+      val rangedPlan = ranged.queryExecution.executedPlan.toString
+      assert(rangedPlan.contains("rangepartitioning"),
+        s"threshold -1 must keep the range exchange; plan:\n$rangedPlan")
+      assert(ranged.collect().toSeq == rows)
+    }
+  }
+
+  test("small-sort rule leaves limited sorts and streaming plans to Spark") {
+    import org.apache.spark.sql.catalyst.plans.logical.Sort
+    val top = smallSorted().limit(5)
+    val plan = top.queryExecution.executedPlan.toString
+    assert(plan.contains("TakeOrderedAndProject"),
+      s"orderBy().limit(n) must stay a top-k; plan:\n$plan")
+    // a streaming query keeps its global sort: the rule skips every
+    // plan over a streaming source, though each micro-batch's file scan
+    // here is far under the size bound
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    val in = java.nio.file.Files.createTempDirectory("graft-sort-stream").toString
+    (1 to 20).toDF("value").write.mode("overwrite").parquet(s"$in/batch")
+    val q = spark.readStream.schema("value INT").parquet(s"$in/batch")
+      .groupBy(($"value" % 3).as("m")).count()
+      .orderBy("count", "m")
+      .writeStream.format("memory").queryName("small_sort_stream")
+      .outputMode("complete").start()
+    try {
+      q.processAllAvailable()
+      val exec = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution
+      assert(exec.optimizedPlan.collectFirst { case s: Sort if s.global => s }.isDefined,
+        s"streaming sort rewritten:\n${exec.optimizedPlan}")
+      assert(spark.table("small_sort_stream").collect().map(_.getLong(1)).toSeq == Seq(6L, 7L, 7L))
+    } finally q.stop()
   }
 }
