@@ -170,17 +170,6 @@ object Bench {
       graft.operators.TextOps.shinglePairs(spark, sfDir).count())
     warmed("pipeline_stage")(
       graft.operators.Pipeline.stageFrame(spark, sfDir).count())
-    // compile the label-propagation loop's codegen shapes on a 2-edge
-    // graph (generated classes are shape-keyed, so the real run hits the
-    // compiler cache) — under the SAME AQE-off setting the real loop
-    // uses, since AQE wrappers change the codegen boundaries
-    locally {
-      import spark.implicits._
-      graft.operators.Dedup.withAqeOff(spark)(
-        graft.operators.Dedup.connectedComponents(
-          Seq((1L, 2L), (2L, 3L)).toDF("a_id", "b_id"))._1.count())
-      ()
-    }
     // Per-query MEDIAN of 3 runs taken as INTERLEAVED full passes over
     // the suite (pass 1 of every query, then pass 2, then pass 3) —
     // not 3 back-to-back runs per query. Two noise regimes observed on

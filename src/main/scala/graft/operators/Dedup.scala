@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Routes, Tables}
 
 /** Deduplication operators for the LLM-data-pipeline surface: exact
   * (hash-groupBy), MinHash+LSH (shingle → minhash → band → bucket join),
@@ -282,12 +282,12 @@ object Dedup {
     })
 
   /** Connected components over an (a_id, b_id) pair frame → (id, label)
-    * plus the iteration count (0 on the single-task route). CAP-AND-
-    * ROUTE (r20): graphs at or under `graft.cc.localCapEdges` (default
-    * 4 M edges) are labeled by ONE task's min-root union-find — the
-    * fixpoint loop's per-iteration driver round-trips and shuffles are
-    * pure overhead at that size; bigger graphs run the distributed
-    * min-label propagation fixpoint below.
+    * plus the iteration count (0 on the single-task route). Routed by
+    * [[graft.Routes.Cc]]: graphs at or under its edge cap are labeled by
+    * ONE task's min-root union-find — the fixpoint loop's per-iteration
+    * driver round-trips and shuffles are pure overhead at that size;
+    * bigger graphs run the distributed min-label propagation fixpoint
+    * below.
     * The returned frame carries HONEST leaf statistics (row count from
     * the convergence job, size = rows × width), so dimension-sized
     * label frames auto-broadcast at consumers while corpus-sized ones
@@ -357,22 +357,11 @@ object Dedup {
       org.apache.spark.sql.GraftLineage.truncate(df, reliable)
     val edges = truncate(pairs.toDF("a_id", "b_id"))
     // one job: materializes the edge checkpoint (the union below would
-    // otherwise run the pair join twice) AND sizes the loop's parallelism
-    // — and, first, ROUTES (r20, guide §1.2; the exposureFrame /
-    // convoyHourLabels cap-and-route discipline): at or under
-    // `graft.cc.localCapEdges` (default 4 M edges ≈ 64 MB of id pairs,
-    // ~1 s of single-task union-find) the fixpoint loop is pure per-job
-    // overhead — every iteration costs a driver round-trip plus 3
-    // shuffles regardless of graph size (measured 0.7-0.9 s/round on a
-    // 37 k-edge graph) — so ONE task computes the identical labels
-    // (min-root union-find; min-label propagation converges to the same
-    // component minimum) in a single pass. Above the cap: the
-    // distributed loop below, unchanged. Both routes return honest
-    // row-count stats; route equality is spec-pinned (PlanSpec), and
-    // the loop-shape pins force `graft.cc.localCapEdges=0`.
+    // otherwise run the pair join twice), sizes the loop's parallelism,
+    // and measures the route: the edge count bounds one task's
+    // union-find, whose labels (component minima) equal the fixpoint's.
     val nEdges = edges.count()
-    val localCap = s.conf.get("graft.cc.localCapEdges", "4000000").toLong
-    if (nEdges <= localCap) {
+    if (Routes.local(Routes.Cc, nEdges)) {
       import s.implicits._
       val lab = truncate(edges.as[(Long, Long)].coalesce(1)
         .mapPartitions(it =>
@@ -849,31 +838,17 @@ object Dedup {
   private[graft] def exactJaccardPairs(sh: DataFrame, p: Int, q: Int): DataFrame = {
     val s = sh.sparkSession
     import s.implicits._
-    // CAP-AND-ROUTE (r21, the text_rank/MAD precedent, guide §1.2): the
-    // DIRECT all-pairs merge-count costs exactly (nDocs−1)·Σ|doc|
-    // element visits; when that fits one task
-    // (graft.allpairs.localCapWork, default 5·10⁸ visits ≈ 1-2 s of
-    // in-task merge) the whole prefix + candidate-join + verify
-    // pipeline — measured at ~10 small stages of mostly launch overhead
-    // over a 42 k-row cached frame (ProbeAllpairsPhases) — collapses
-    // into ONE pass over the element frame. Exact by the same theorem
-    // the prefix filter rests on: prefix filtering is a LOSSLESS cut of
-    // this very output (Bayardo), so the uncut form returns the
-    // identical pair set; PrefixFilterSpec pins both routes against
-    // brute force. Above the cap (any real corpus sample) the
-    // prefix-filtered join below runs unchanged.
-    locally {
-      val st = sh.agg(count(lit(1)), countDistinct(col("doc_id"))).head()
-      val nRows = st.getLong(0)
-      val nDocs = st.getLong(1)
-      val capWork =
-        s.conf.get("graft.allpairs.localCapWork", "500000000").toLong
-      if (nDocs <= capWork / math.max(nRows, 1L)) {
-        return sh.select(col("doc_id"), col("fp")).as[(Long, Long)]
-          .coalesce(1)
-          .mapPartitions(it => localAllPairs(it, p, q))
-          .toDF("a_id", "b_id", "inter", "na", "nb")
-      }
+    // route: the DIRECT all-pairs merge costs (docs−1)·Σ|doc| element
+    // visits, bounded by distinct docs × element rows. The uncut form
+    // returns the same pair set: prefix filtering is a LOSSLESS cut.
+    val st = sh.agg(count(lit(1)), countDistinct(col("doc_id"))).head()
+    val work = try Math.multiplyExact(st.getLong(1), st.getLong(0))
+      catch { case _: ArithmeticException => Long.MaxValue }
+    if (Routes.local(Routes.AllPairs, work)) {
+      return sh.select(col("doc_id"), col("fp")).as[(Long, Long)]
+        .coalesce(1)
+        .mapPartitions(it => localAllPairs(it, p, q))
+        .toDF("a_id", "b_id", "inter", "na", "nb")
     }
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("nsh"))
     val dfCnt = sh.groupBy(col("fp")).agg(count(lit(1)).as("dfc"))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Routes, Tables}
 import graft.config.{FilterSpec, LtssConfig}
 import graft.functions.DetMath
 
@@ -2318,29 +2318,14 @@ object Queries {
       val D2 = D * D
       val segs = s.read.parquet(trackLayout2dPath(s, d))
         .select(col("id"), col("chunk"), col("seg"))
-      // CAP-AND-ROUTE (r21, the exposureFrame/connectedComponents
-      // precedent, guide §1.2): pairs never cross chunks, so a chunk
-      // whose track count fits one task runs the WHOLE screen + top-k
-      // selection as one in-task pass ([[localHausdorffTopK]] — the
-      // identical start-bound admission, plus the running 20th-best as
-      // the DP abandon cut, which no precomputed threshold can beat;
-      // r20 measured the all-admitted-pair DP at ~3 s and the grid
-      // screen's small-shuffle stages at ~3.5 s of the query's 6.9 s,
-      // and a r21 probe of a precomputed start-bound threshold pruned
-      // only 9% — the bound is far below H on dispersed tracks).
-      // Chunks above the cap keep the r17–r20 distributed grid screen
-      // + broadcast-attach DP verbatim. The route reads a MEASURED
-      // per-chunk track count (one small agg on the layout — the
-      // nEdges precedent); the conf exists to size the single task
-      // (pairs grow as tracks², ~27 distinct points/track at sf0.1)
-      // and to force the distributed route in tests (cap 0, equality
-      // spec-pinned).
-      val capTracks =
-        s.conf.get("graft.hausdorff.localChunkCapTracks", "4000").toLong
+      // route: pairs never cross chunks and grow as a chunk's tracks²,
+      // so the largest chunk's track count bounds one task. In-task,
+      // [[localHausdorffTopK]] runs the same start-bound admission with
+      // the running 20th-best as the DP abandon cut.
       val maxPerChunk = segs.groupBy(col("chunk"))
         .agg(count(lit(1)).as("n"))
         .agg(coalesce(max(col("n")), lit(0L))).as[Long].head()
-      if (maxPerChunk <= capTracks) {
+      if (Routes.local(Routes.Hausdorff, maxPerChunk)) {
         segs.select(col("chunk"), col("id"),
             size(col("seg")).cast("long").as("n"),
             array_distinct(arrays_zip(
@@ -3097,25 +3082,13 @@ object Queries {
           .withColumn("sv", expr("try_cast(state as decimal(12,2))"))
           .groupBy(col("domain"), col("sv")).agg(count(lit(1)).as("cnt"))
       }
-      // CAP-AND-ROUTE (r21, the exposure/CC/hausdorff/text_rank
-      // precedent, guide §1.2): everything below the first aggregate
-      // runs on the value HISTOGRAM — ≤|distinct values|·|domains| rows,
-      // render-scale at any corpus size (49 k rows at sf0.1). The
-      // distributed form pays ~6 window/join/agg stages over that tiny
-      // frame (measured 1.2–1.6 s warm at 32 cores, ProbeMadPhases —
-      // pure per-stage overhead); when the measured histogram row count
-      // fits one task the medians, deviations, and the rollup run as a
-      // single in-task pass over integer CENTS ([[localMadRollup]] —
-      // DECIMAL(12,2) is exactly the unscaled-long cents value, so every
-      // comparison and the ceil(n/2) thresholds are the identical
-      // integers, and the final double casts go through the same
-      // BigDecimal.doubleValue both engines use). Above the cap the
-      // window form below is kept verbatim (forced in tests via cap 0,
-      // equality spec-pinned). The count doubles as the cached frame's
-      // warm materialization.
+      // route: everything below the first aggregate runs on the value
+      // HISTOGRAM (≤|distinct values|·|domains| rows, 49 k at sf0.1), so
+      // its row count bounds one task. In-task, [[localMadRollup]] works
+      // on integer cents, exactly DECIMAL(12,2)'s unscaled value. The
+      // count doubles as the cached frame's warm materialization.
       val nHist = counts.count()
-      val localCap = s.conf.get("graft.mad.localCapRows", "4000000").toLong
-      if (nHist <= localCap) {
+      if (Routes.local(Routes.Mad, nHist)) {
         import s.implicits._
         counts
           .select(col("domain"),
@@ -3852,45 +3825,6 @@ object Queries {
     }
   }
 
-  /** Per-(hour, member) contact-component labels — the per-hour
-    * partition both convoy-group variants ([[geoConvoyGroups]],
-    * [[geoConvoyGroupsCore]]) consume, shared per (session, dataset)
-    * like [[graft.operators.Dedup.ccLabels]] so the component pass runs
-    * once. `gid` is the component's min member id within its hour.
-    *
-    * r20 (r19 VERDICT finding #2): contact edges never span hours —
-    * the same fact that made r19's ONE global fixpoint correct also
-    * means the global fixpoint was pure overhead: ~20 driver
-    * round-trips, per-round checkpoint churn, and a corpus-scale sym
-    * frame that was the family's folded-30× heap bound. The labels are
-    * now computed with ONE shuffle: `groupByKey(hr)` feeding a
-    * per-task union-find (path halving + union-by-min-root, so the
-    * root IS the component's min member and `gid` semantics are
-    * bit-identical to the fixpoint's). Edges stream from the group
-    * iterator; per-task memory is O(distinct members that hour) —
-    * fleet-bounded, never contact-log-bounded (a 10 M-member hour is a
-    * ~0.5 GB map; hours are co-location clusters, so the task scales
-    * with the FLEET, and hour count drives parallelism). No composite
-    * encoding → pre-1970 hours and negative/snowflake member ids now
-    * label correctly on this path (spec-pinned); the asserted bound
-    * moves to the two places the encoding survives
-    * ([[assertConvoyEncodingBounds]]). One documented epoch quirk
-    * (review r20): the family's hour bucket is TRUNCATING `div`
-    * (matching the oracle's integer `//` — verified to truncate
-    * identically), so bucket 0 spans (−1 h, +1 h) around the 1970
-    * epoch — contacts in 1969-12-31 23:xx and 1970-01-01 00:xx share
-    * one double-width bucket on BOTH engines. Harmless for real data
-    * (no fleet telemetry straddles the epoch); a deployment that
-    * genuinely needs epoch-straddling hours should bucket by
-    * `floor(micros / 3.6e9)` across the whole family instead.
-    *
-    * `graft.convoy.globalCc=true` routes to the retained distributed
-    * fixpoint ([[globalCcHourLabels]]) — the documented fallback for a
-    * pathological hour whose MEMBER set exceeds task memory (the LSH
-    * cap-and-route discipline, in reverse: route the whole job, since
-    * per-hour labels can't split). The flag participates in the cache
-    * key so flipping it mid-session rebuilds rather than serving the
-    * other path's frame. */
   /** Min-root union-find (path halving; union-by-min, so every tree's
     * root IS its component's minimum member) over an edge stream —
     * returns the member → component-min map. ONE definition shared by
@@ -3938,14 +3872,44 @@ object Queries {
         s, e - s + 1, e))
     else None
 
+  /** Per-(hour, member) contact-component labels — the per-hour
+    * partition both convoy-group variants ([[geoConvoyGroups]],
+    * [[geoConvoyGroupsCore]]) consume, shared per (session, dataset)
+    * like [[graft.operators.Dedup.ccLabels]] so the component pass runs
+    * once. `gid` is the component's min member id within its hour.
+    *
+    * Contact edges never span hours, so the labels take ONE shuffle:
+    * `groupByKey(hr)` feeding a per-task union-find (path halving +
+    * union-by-min-root, so the root IS the component's min member).
+    * Edges stream from the group iterator; per-task memory is
+    * O(distinct members that hour) — fleet-bounded, never
+    * contact-log-bounded. With no composite encoding, pre-1970 hours and
+    * negative/snowflake member ids label correctly on this route; the
+    * global route asserts the encoding bounds
+    * ([[assertConvoyEncodingBounds]]). One documented epoch quirk
+    * (review r20): the family's hour bucket is TRUNCATING `div`
+    * (matching the oracle's integer `//` — verified to truncate
+    * identically), so bucket 0 spans (−1 h, +1 h) around the 1970
+    * epoch — contacts in 1969-12-31 23:xx and 1970-01-01 00:xx share
+    * one double-width bucket on BOTH engines. Harmless for real data
+    * (no fleet telemetry straddles the epoch); a deployment that
+    * genuinely needs epoch-straddling hours should bucket by
+    * `floor(micros / 3.6e9)` across the whole family instead.
+    *
+    * Routed by [[graft.Routes.Convoy]] on the busiest hour's edge count
+    * (one agg over the cached hourly frame), which bounds the members a
+    * per-hour task holds. An hour above the cap sends the whole job to
+    * the retained distributed fixpoint ([[globalCcHourLabels]]): per-hour
+    * labels can't split, so the fallback is global. */
   private[graft] def convoyHourLabels(
       s: SparkSession, d: String, reliable: Boolean = false): DataFrame = {
-    val viaGlobal = s.conf.get("graft.convoy.globalCc", "false").toBoolean
-    def build(): DataFrame =
-      if (viaGlobal) globalCcHourLabels(s, d, reliable)
-      else {
+    def build(): DataFrame = {
+      val hours = contactPairHourFrame(s, d)
+      val busiest = hours.groupBy(col("hr")).agg(count(lit(1)).as("n"))
+        .agg(coalesce(max(col("n")), lit(0L))).head().getLong(0)
+      if (Routes.local(Routes.Convoy, busiest)) {
         import s.implicits._
-        contactPairHourFrame(s, d)
+        hours
           .select(col("hr"), col("id_lo"), col("id_hi"))
           .as[(Long, Long, Long)]
           .groupByKey(_._1)
@@ -3954,7 +3918,8 @@ object Queries {
               .iterator.map { case (m, gid) => (hr, m, gid) }
           }
           .toDF("hr", "member", "gid")
-      }
+      } else globalCcHourLabels(s, d, reliable)
+    }
     // the RELIABLE tier (cluster availability: fixpoint truncations on
     // the fallback path write to the DFS instead of executor-local
     // storage — the exposureFrame contract) builds its own copy:
@@ -3962,12 +3927,11 @@ object Queries {
     // cluster run's labels
     if (reliable) build()
     else graft.CachedFrames.getOrBuild(
-      s"convoy_hour_labels|gcc=$viaGlobal|" +
-        s"${graft.CachedFrames.sessionKey(s)}|$d")(build())
+      s"convoy_hour_labels|${graft.CachedFrames.sessionKey(s)}|$d")(build())
   }
 
-  /** The r19 global-fixpoint construction, retained as the routed
-    * fallback behind `graft.convoy.globalCc`: composite-encode
+  /** The r19 global-fixpoint construction, retained as the above-cap
+    * route of [[convoyHourLabels]]: composite-encode
     * (hr, member) into one node space and run the distributed
     * [[graft.operators.Dedup.connectedComponents]] — ~log(diameter)
     * driver rounds over a sym frame proportional to ALL pair-hours,
@@ -4395,37 +4359,19 @@ object Queries {
     * go to reliable checkpoints via `sc.setCheckpointDir` instead of
     * executor-local blocks; 100 TB deployments pass true).
     *
-    * CAP-AND-ROUTE (r20, guide §1.2 "the distributed algorithm"; the
-    * [[convoyHourLabels]] union-find precedent). The r19 shape ran a
-    * distributed CC fixpoint plus a layered distributed BFS for EVERY
-    * input; measured at sf0.1 that was 3–4.5 s of CC rounds plus
-    * 13–17 s of BFS layer jobs (eccentricity 36–48 ÷ 6 layers/job,
-    * each layer a join+agg+anti-join with a driver round-trip) over a
-    * graph of 1,500 nodes / 37 k edges — pure per-job overhead, zero
-    * compute. Routing, decided by the MEASURED edge count the engine
-    * already takes (`nEdges`, the loop-width input):
-    *  - `nEdges ≤ graft.exposure.localGraphCapEdges` (default 4 M
-    *    edges ≈ 64 MB of (lo, hi) pairs, a comfortable single-task
-    *    graph — UF + BFS over 4 M edges is ~1 s of in-task compute):
-    *    ONE task computes labels and hops in one pass
+    * Routed by [[graft.Routes.Exposure]] on the edge count the engine
+    * already takes (`nEdges`, the loop-width input), which bounds one
+    * task's memory:
+    *  - at or under the cap: ONE task computes labels and hops
     *    ([[localGraphNodes]] — min-root union-find, then BFS per
-    *    component root), exactly the local algorithm the DuckDB
-    *    oracle's recursive CTEs run. No iteration jobs at all.
-    *  - above the cap: the distributed CC fixpoint labels the graph,
-    *    then components route INDIVIDUALLY — a component within the
-    *    cap gets an in-task BFS (`groupByKey(label)`, per-task memory
-    *    = that component's edges), and only OVERSIZED components (a
-    *    giant component is a real phenomenon in contact graphs) pay
-    *    the layered distributed BFS, restricted to their edges. The
-    *    long tail of small components — the vast majority by count —
-    *    never enters the loop.
-    * Both routes produce bit-identical rows: component labels are the
-    * min member id and hop counts are shortest paths — both unique,
-    * construction-independent (spec-pinned by a forced-route equality
-    * fixture). 100 TB deployments keep the default cap; the conf
-    * exists to size task memory (primitive edge arrays + CSR
-    * adjacency ≈ 32 B/edge + O(nodes) — ~128 MB at the 4 M default)
-    * and to force the distributed route in tests (cap 0). */
+    *    component root), the local algorithm the DuckDB oracle's
+    *    recursive CTEs run.
+    *  - above the cap: the distributed CC labels the graph, then each
+    *    component within the cap gets an in-task BFS
+    *    (`groupByKey(label)`) and only OVERSIZED components pay the
+    *    layered distributed BFS, restricted to their edges.
+    * Both routes produce bit-identical rows: labels are min member ids
+    * and hops shortest paths — both unique. */
   private[graft] def exposureFrame(
       s: SparkSession, d: String,
       edgeFilter: Option[Column] = None,
@@ -4467,10 +4413,8 @@ object Queries {
       // count inside withAqeOff made unwarmed callers pay the heaviest
       // join in the family without AQE). Also the ROUTE input.
       val nEdges = pairs.count()
-      val localCap =
-        s.conf.get("graft.exposure.localGraphCapEdges", "4000000").toLong
       val nodes =
-        if (nEdges <= localCap) {
+        if (Routes.local(Routes.Exposure, nEdges)) {
           // single-task route: labels + hops in ONE pass over the whole
           // graph. coalesce(1) merges the materialized pair blocks into
           // one task — no shuffle, no iteration jobs; the eager truncate
@@ -4479,7 +4423,7 @@ object Queries {
           truncE(edges.as[(Long, Long)].coalesce(1)
             .mapPartitions(localGraphNodes)
             .toDF("id", "label", "hops"))
-        } else distributedGraphNodes(s, edges, nEdges, localCap, reliable)
+        } else distributedGraphNodes(s, edges, nEdges, reliable)
       val comp = nodes.groupBy(col("label"))
         .agg(count(lit(1)).as("n_members"))
       val span = pairs
@@ -4502,8 +4446,8 @@ object Queries {
     * stream is decoded ONCE into two primitive Array[Long]s (no boxed
     * tuple array is retained — r21, the r20 ADVICE footprint item);
     * with the CSR adjacency below the retained task memory is
-    * ~32 B/edge + O(nodes), so the 4 M-edge default cap
-    * (`graft.exposure.localGraphCapEdges`) costs ~128 MB with margin. */
+    * ~32 B/edge + O(nodes), so the 4 M-edge cap
+    * ([[graft.Routes.Exposure]]) costs ~128 MB with margin. */
   private[graft] def localGraphNodes(
       es: Iterator[(Long, Long)]): Iterator[(Long, Long, Long)] = {
     val ab = new scala.collection.mutable.ArrayBuilder.ofLong
@@ -4607,9 +4551,10 @@ object Queries {
     * for oversized ones, restricted to their edges. Returns one
     * (id, label, hops) row per node. */
   private def distributedGraphNodes(
-      s: SparkSession, edges: DataFrame, nEdges: Long,
-      localCap: Long, reliable: Boolean): DataFrame = {
+      s: SparkSession, edges: DataFrame, nEdges: Long, reliable: Boolean)
+      : DataFrame = {
     import s.implicits._
+    val localCap = Routes.cap(Routes.Exposure)
     def trunc(df: DataFrame): DataFrame =
       if (reliable) df.checkpoint(eager = false)
       else df.localCheckpoint(eager = false)
@@ -4641,10 +4586,10 @@ object Queries {
           .select(col("label"), col("id_lo"), col("id_hi")))
         val routed =
           if (localCap <= 0) {
-            // the documented test escape (cap 0 forces this route):
-            // EVERY component is "oversized" by definition, so skip
+            // a cap of 0 or below (a route forced in tests): EVERY
+            // component is "oversized" by definition, so skip
             // the small/big split — collecting every component label
-            // to the driver at cap 0 would be unbounded on a real
+            // to the driver at cap <= 0 would be unbounded on a real
             // graph (r20 ADVICE)
             layeredBfsNodes(trunc(edgeComp), parts, trunc)
           } else {

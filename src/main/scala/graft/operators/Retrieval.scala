@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{CachedFrames, Tables}
+import graft.{CachedFrames, Routes, Tables}
 
 /** Ranked retrieval and corpus-vocabulary training operators — the
   * layer a training-data pipeline puts ON TOP of the inverted index and
@@ -299,23 +299,11 @@ object Retrieval {
           .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
         e.join(e.groupBy(col("src")).agg(sum(col("w")).as("wout")), "src")
       }
-      // CAP-AND-ROUTE (r21, the connectedComponents/exposure/hausdorff
-      // precedent, guide §1.2): the rank fixpoint runs over the
-      // vocab-bounded EDGE frame, orders of magnitude below the corpus;
-      // when the measured edge count fits one task, the 3 power
-      // iterations run as in-task integer array passes
-      // ([[localTextRank]] — the IDENTICAL integer recurrence, whose
-      // long sums are order-independent) instead of 3 rounds of
-      // join+agg jobs whose per-stage launch overhead dwarfs the
-      // arithmetic (measured at sf0.1: 2.5 s steady-state for a ~3 k
-      // token vocabulary). Above the cap the distributed fixpoint is
-      // kept verbatim (forced in tests via cap 0, equality
-      // spec-pinned). The count is the same planning artifact the
-      // route always took (the IVF probe argmax class).
+      // route: the rank fixpoint runs over the vocab-bounded EDGE frame,
+      // so its edge count bounds one task. In-task, [[localTextRank]]
+      // runs the IDENTICAL integer recurrence (order-independent sums).
       val nE = edges.count()
-      val localCap =
-        s.conf.get("graft.textrank.localCapEdges", "4000000").toLong
-      if (nE <= localCap) {
+      if (Routes.local(Routes.TextRank, nE)) {
         import s.implicits._
         val ranked = edges.select(col("src"), col("dst"), col("w"), col("wout"))
           .as[(String, String, Long, Long)]

@@ -292,27 +292,4 @@ class AnalyticsSpec extends SparkSpec {
         s"closed form diverges from bisection at ($lat, $lon)")
     }
   }
-
-  test("ltss_anomaly_mad: distributed window route matches the in-task route exactly") {
-    val capKey = "graft.mad.localCapRows"
-    val d = "/root/testdata/sf0.001"
-    def run(): Seq[Seq[Any]] =
-      SparkEntry.queries("ltss_anomaly_mad")(spark, d)
-        .collect().map(_.toSeq.toList).toSeq
-    val local = run() // default cap → in-task route at this SF
-    assert(local.nonEmpty)
-    val wasCap = spark.conf.getOption(capKey)
-    try {
-      spark.conf.set(capKey, "0")
-      val distributed = run()
-      assert(distributed == local,
-        s"window route diverged from the in-task route:\n" +
-          s"$distributed\nvs\n$local")
-    } finally {
-      wasCap match {
-        case Some(v) => spark.conf.set(capKey, v)
-        case None => spark.conf.unset(capKey)
-      }
-    }
-  }
 }

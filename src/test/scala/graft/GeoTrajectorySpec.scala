@@ -936,35 +936,6 @@ class GeoTrajectorySpec extends SparkSpec {
       s"the truncated cross pair diverged: ${rows.toSeq}")
   }
 
-  test("ltss_geo_hausdorff: forced distributed route returns the identical top 20 (r21 cap-and-route equality)") {
-    // the real sf0.001 fixture, both routes: default cap → single-task
-    // per-chunk top-k; cap 0 → every chunk oversized → the r17–r20
-    // distributed grid screen + attach DP. Same 20 rows, bit-identical
-    // (the local route's abandon cut only skips pairs that provably
-    // cannot enter the top 20; emitted values come from the same
-    // kernel at full precision).
-    val capKey = "graft.hausdorff.localChunkCapTracks"
-    val d = "/root/testdata/sf0.001"
-    def run(): Seq[Seq[Any]] =
-      SparkEntry.queries("ltss_geo_hausdorff")(spark, d)
-        .collect().map(_.toSeq.toList).toSeq
-    val local = run()
-    assert(local.size == 20, s"expected a full top 20, got ${local.size}")
-    val wasCap = spark.conf.getOption(capKey)
-    try {
-      spark.conf.set(capKey, "0")
-      val distributed = run()
-      assert(distributed == local,
-        s"distributed route diverged from the single-task route:\n" +
-          s"$distributed\nvs\n$local")
-    } finally {
-      wasCap match {
-        case Some(v) => spark.conf.set(capKey, v)
-        case None => spark.conf.unset(capKey)
-      }
-    }
-  }
-
   test("ltss_geo_exposure: A-B-C chains transitively without an A-C contact; hops count the intermediaries") {
     // contact lattice: lat = user%180−90+.5, lon = event%360−180+.5,
     // R = 8°, T = 2 h. A(10) meets B(12) at 10:00/11:00 (d² = 2²+1² = 5,
@@ -1416,52 +1387,6 @@ class GeoTrajectorySpec extends SparkSpec {
     assert(wrote != null && wrote.nonEmpty, "no reliable checkpoint was written")
   }
 
-  test("exposureFrame: every cap-and-route path returns the identical frame") {
-    // r20 route-equality pin: labels are min member ids and hops are
-    // shortest paths — unique regardless of construction — so the
-    // single-task route (default cap), the fully distributed route
-    // (cap 0: every component exceeds it → the r19 CC + layered BFS),
-    // and the MIXED route (cap 1: the 1-edge component goes in-task,
-    // the 2-edge chain rides the layered loop) must return the same
-    // rows. Fixture: chain A(10)-B(12)-C(14) (hops 0/1/2), pair
-    // D(60)-E(62), and one isolated fix (50, no rows).
-    val dir = java.nio.file.Files.createTempDirectory("graft-exposure-route").toString
-    val events = Seq(
-      (100L, ts("2024-01-01 10:00:00"), 10L),
-      (101L, ts("2024-01-01 11:00:00"), 12L),
-      (200L, ts("2024-01-01 20:00:00"), 12L),
-      (201L, ts("2024-01-01 20:30:00"), 14L),
-      (300L, ts("2024-01-05 09:00:00"), 50L),
-      (400L, ts("2024-01-06 09:00:00"), 60L),
-      (401L, ts("2024-01-06 09:30:00"), 62L))
-    events.toDF("event_id", "ts", "user_id")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val capKey = "graft.exposure.localGraphCapEdges"
-    def run(): Seq[(Long, Long, Long, Long)] =
-      graft.operators.Queries.exposureFrame(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    val local = run()
-    assert(local == Seq(
-      (10L, 10L, 3L, 0L), (12L, 10L, 3L, 1L), (14L, 10L, 3L, 2L),
-      (60L, 60L, 2L, 0L), (62L, 60L, 2L, 1L)),
-      s"single-task route rows: $local")
-    val wasCap = spark.conf.getOption(capKey)
-    try {
-      spark.conf.set(capKey, "0") // every component oversized → layered BFS
-      val distributed = run()
-      assert(distributed == local,
-        s"fully distributed route diverged: $distributed vs $local")
-      spark.conf.set(capKey, "1") // 1-edge component in-task, chain layered
-      val mixed = run()
-      assert(mixed == local, s"mixed route diverged: $mixed vs $local")
-    } finally {
-      wasCap match {
-        case Some(v) => spark.conf.set(capKey, v)
-        case None => spark.conf.unset(capKey)
-      }
-    }
-  }
-
   test("ltss_geo_exposure_filtered: a weak bridge splits the component; hops re-root in the fragments") {
     // A(10)-B(12) contact TWICE at close approach (qualifies);
     // B(12)-C(14) meet ONCE (n_contacts = 1 — filtered out): the
@@ -1522,12 +1447,13 @@ class GeoTrajectorySpec extends SparkSpec {
       s"the 3-core must persist through the hour-11 churn: ${core.toSeq}")
   }
 
-  test("convoy encoding bounds: union-find labels out-of-encoding ids correctly; core meta + fallback keep the loud guard") {
+  test("convoy encoding bounds: union-find labels out-of-encoding ids correctly; the core meta nodes keep the loud guard") {
     // r20: the hour-partitioned union-find needs no composite encoding,
     // so ids the r19 global fixpoint REJECTED (snowflake-sized, negative)
     // and pre-1970 hours now label CORRECTLY on the strict variant. The
     // guard survives where the hr·10⁹+id encoding does: the core
-    // variant's meta nodes and the global-CC fallback path.
+    // variant's meta nodes here, and the above-cap global path
+    // (RouteEquivalenceSpec).
     // (a) member ids >= 1e9 — a real 3-member, 3-hour convoy
     val dirBig = java.nio.file.Files.createTempDirectory("graft-convoy-bigid").toString
     val bigIds = Seq(2000000000L, 2000000002L, 2000000004L)
@@ -1552,16 +1478,6 @@ class GeoTrajectorySpec extends SparkSpec {
     }
     assert(eBig.getMessage.contains("dense_rank"),
       s"core guard must point at the remap: ${eBig.getMessage}")
-    // ... and so must the global-CC fallback for the strict variant
-    val gccWas = spark.conf.get("graft.convoy.globalCc", "false")
-    spark.conf.set("graft.convoy.globalCc", "true")
-    try {
-      val eFall = intercept[IllegalArgumentException] {
-        SparkEntry.queries("ltss_geo_convoy_groups")(spark, dirBig).collect()
-      }
-      assert(eFall.getMessage.contains("dense_rank"),
-        s"fallback guard must point at the remap: ${eFall.getMessage}")
-    } finally spark.conf.set("graft.convoy.globalCc", gccWas)
     // (b) pre-1970 event times: buckets come from TRUNCATING div (the
     // oracle's integer // truncates identically), so keep each hour's
     // fixes inside one truncated bucket — offsets past the exact hour
@@ -1607,40 +1523,6 @@ class GeoTrajectorySpec extends SparkSpec {
     }
     assert(eNegId.getMessage.contains("member id range"),
       s"core guard must catch a negative member id: ${eNegId.getMessage}")
-  }
-
-  test("convoyHourLabels: hour-partitioned union-find equals the global-CC fallback label-for-label") {
-    // the churn fixture (A,B,C hours 10-12, D only at 11): both paths
-    // must produce the identical (hr, member, gid) set — gid is the
-    // component's min member under either construction
-    val dir = java.nio.file.Files.createTempDirectory("graft-convoy-uf").toString
-    val events = (0 until 3).flatMap { h =>
-      Seq(
-        (30L + 20L * h, ts(s"2024-01-01 ${10 + h}:00:00"), 10L),
-        (35L + 20L * h, ts(s"2024-01-01 ${10 + h}:10:00"), 12L),
-        (40L + 20L * h, ts(s"2024-01-01 ${10 + h}:20:00"), 14L))
-    } :+ ((62L, ts("2024-01-01 11:25:00"), 16L))
-    events.toDF("event_id", "ts", "user_id")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    // reliable = true on BOTH calls: skips the shared cache (so the
-    // conf flip actually routes) and needs a checkpoint dir for the
-    // fallback's reliable fixpoint
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft-convoy-uf-ckpt").toString)
-    def labelSet(): Set[(Long, Long, Long)] =
-      graft.operators.Queries.convoyHourLabels(spark, dir, reliable = true)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val uf = labelSet()
-    val gccWas = spark.conf.get("graft.convoy.globalCc", "false")
-    spark.conf.set("graft.convoy.globalCc", "true")
-    val global = try labelSet()
-      finally spark.conf.set("graft.convoy.globalCc", gccWas)
-    assert(uf == global && uf.nonEmpty,
-      s"paths diverged: uf-only ${(uf -- global).take(5)}, " +
-        s"global-only ${(global -- uf).take(5)}")
-    val hr0 = ts("2024-01-01 10:00:00").getTime / 3600000L
-    assert(uf((hr0 + 1L, 16L, 10L)),
-      s"hour-11 churn member must join the min-10 component: $uf")
   }
 
   test("convoyGroupsCoreFrame: the reliable-checkpoint tier returns the identical episodes") {

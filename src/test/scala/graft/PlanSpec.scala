@@ -536,12 +536,12 @@ class PlanSpec extends SparkSpec {
       s"expected a window operator; plan:\n$plan")
   }
 
-  /** Forces the DISTRIBUTED fixpoint route of connectedComponents
-    * (graft.cc.localCapEdges=0) for the tests that pin the LOOP's
-    * shape — the default cap routes fixture-sized graphs to the
-    * single-task union-find (r20 cap-and-route). */
+  /** Forces the DISTRIBUTED fixpoint route of connectedComponents for
+    * the tests that pin the LOOP's shape — the default cap routes
+    * fixture-sized graphs to the single-task union-find
+    * ([[Routes.Cc]]). */
   private def withCcDistributed[T](body: => T): T =
-    withConf("graft.cc.localCapEdges", "0")(body)
+    Routes.withCaps(Routes.Cc -> -1L)(body)
 
   test("connected components: ONE job per iteration, convergence folded into propagation") {
     import spark.implicits._
@@ -605,7 +605,7 @@ class PlanSpec extends SparkSpec {
   test("connected components: the single-task route returns the distributed fixpoint's exact labels") {
     // r20 cap-and-route equality pin: component minima are unique, so
     // the union-find route (default cap) and the min-label-propagation
-    // fixpoint (cap 0) must label identically — on a graph that mixes
+    // fixpoint (forced) must label identically — on a graph that mixes
     // a chain, a cycle, a star, duplicate edges and reversed pairs.
     import spark.implicits._
     val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")

@@ -13,8 +13,7 @@ object ProbeExplain {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
-    // `--conf key=value` args seed session confs before planning — the
-    // r21 way to dump a forced-route "before" plan (e.g. a cap 0)
+    // `--conf key=value` args seed session confs before planning
     val (confArgs, queryArgs) = args.drop(2).partition(_.startsWith("--conf"))
     val confs = confArgs.map { a =>
       val kv = a.stripPrefix("--conf").stripPrefix("=")

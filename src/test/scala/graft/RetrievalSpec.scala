@@ -72,28 +72,6 @@ class RetrievalSpec extends SparkSpec {
       r > 0 && r < Retrieval.RankScale })
   }
 
-  test("textrank: distributed fixpoint route matches the in-task route exactly") {
-    val capKey = "graft.textrank.localCapEdges"
-    def run(): Seq[(String, Long)] =
-      Retrieval.textRank.run(spark, sf)
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val local = run() // default cap → in-task route at this SF
-    assert(local.size == 20)
-    val wasCap = spark.conf.getOption(capKey)
-    try {
-      spark.conf.set(capKey, "0")
-      val distributed = run()
-      assert(distributed == local,
-        s"distributed route diverged from the in-task route:\n" +
-          s"$distributed\nvs\n$local")
-    } finally {
-      wasCap match {
-        case Some(v) => spark.conf.set(capKey, v)
-        case None => spark.conf.unset(capKey)
-      }
-    }
-  }
-
   test("bpe merge fold is leftmost-non-overlapping greedy") {
     // 'aaab' under merge (a,a) must become [aa, a, b] — not [a, aa, b]
     // and not [aa, ab]; this is the exact fold both engines run
