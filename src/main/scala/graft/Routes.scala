@@ -46,8 +46,8 @@ object Routes {
     4000000L, "~32 B/edge + O(nodes) ≈ 128 MB (primitive edges + CSR)")
   val TextRank = Route("text_rank", "token co-occurrence edges", 4000000L,
     "3 integer power passes over ≤4 M primitive edges")
-  val Convoy = Route("convoy", "contact edges in the busiest hour", 4000000L,
-    "one hour's union-find: ≤8 M members ≈ 0.4 GB per task")
+  val Convoy = Route("convoy", "distinct members in the busiest hour", 4000000L,
+    "one hour's union-find, edges streamed: ~115 B/member ≈ 0.46 GB")
 
   val registry: Seq[Route] = Seq(Cc, AllPairs, Hausdorff, Mad, Exposure, TextRank, Convoy)
 

@@ -37,7 +37,7 @@ case class Haversine(
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (a, b, c, d) =>
-      s"${GeoMath.codegenName}.haversineKm($a, $b, $c, $d)")
+      s"graft.functions.GeoMath.haversineKm($a, $b, $c, $d)")
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression,
@@ -61,8 +61,6 @@ object Haversine {
 
 /** Static math target for both interpreted eval and generated code. */
 object GeoMath {
-  /** JVM class name of this object, for generated calls. */
-  private[functions] val codegenName = getClass.getName.stripSuffix("$")
   final val EarthRadiusKm = 6371.0088
 
   def haversineKm(lat1: Double, lon1: Double, lat2: Double, lon2: Double): Double = {

@@ -20,8 +20,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object JsonOps {
 
-  /** JVM class name of this object, for generated calls. */
-  private[functions] val codegenName = getClass.getName.stripSuffix("$")
   /** Entry point for the [[PopLatLon]] expression and its codegen. */
   def popLatLon(json: String): String = popTopLevel(json, "latitude", "longitude")
 
@@ -157,7 +155,7 @@ case class PopLatLon(child: Expression) extends UnaryExpression with Serializabl
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c =>
       s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"${JsonOps.codegenName}.popLatLon($c.toString()))")
+        s"graft.functions.JsonOps.popLatLon($c.toString()))")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -180,7 +178,7 @@ case class IsValidJson(child: Expression) extends UnaryExpression with Serializa
     JsonOps.isValidJson(input.asInstanceOf[UTF8String].toString)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"${JsonOps.codegenName}.isValidJson($c.toString())")
+    defineCodeGen(ctx, ev, c => s"graft.functions.JsonOps.isValidJson($c.toString())")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -25,8 +25,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * loop: no intermediate arrays, md5 via a thread-local MessageDigest. */
 object TextHash {
 
-  /** JVM class name of this object, for generated calls. */
-  private[functions] val codegenName = getClass.getName.stripSuffix("$")
   private val digest = ThreadLocal.withInitial[java.security.MessageDigest](() =>
     java.security.MessageDigest.getInstance("MD5"))
   private val HEX = "0123456789abcdef".toCharArray
@@ -391,7 +389,7 @@ case class MinHash8(child: Expression) extends UnaryExpression with Serializable
     TextHash.minhash8(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"${TextHash.codegenName}.minhash8($c)")
+    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.minhash8($c)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -414,7 +412,7 @@ case class SimHash16(child: Expression) extends UnaryExpression with Serializabl
     TextHash.simhash16(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"${TextHash.codegenName}.simhash16($c)")
+    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.simhash16($c)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -437,7 +435,7 @@ case class SimHash64(child: Expression) extends UnaryExpression with Serializabl
     TextHash.simhash64(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"${TextHash.codegenName}.simhash64($c)")
+    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.simhash64($c)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -462,7 +460,7 @@ case class Md5Prefix64(child: Expression) extends UnaryExpression with Serializa
     TextHash.md5Prefix64(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"${TextHash.codegenName}.md5Prefix64($c)")
+    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.md5Prefix64($c)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -486,7 +484,7 @@ case class Gram2Stats(child: Expression) extends UnaryExpression with Serializab
     TextHash.gram2Stats(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"${TextHash.codegenName}.gram2Stats($c)")
+    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.gram2Stats($c)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -516,7 +514,7 @@ case class TokenSetCount(child: Expression, words: Seq[String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val wordsRef = ctx.addReferenceObj("tscWords", wordBytes, "byte[][]")
-    defineCodeGen(ctx, ev, c => s"${TextHash.codegenName}.tokenSetCount($c, $wordsRef)")
+    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.tokenSetCount($c, $wordsRef)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -543,7 +541,7 @@ case class ShinglesK(child: Expression, k: Int)
     TextHash.shinglesK(input.asInstanceOf[UTF8String], k)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"${TextHash.codegenName}.shinglesK($c, $k)")
+    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.shinglesK($c, $k)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -570,7 +568,7 @@ case class MinShingleFp(child: Expression, k: Int)
     TextHash.minShingleFp(input.asInstanceOf[UTF8String], k)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"${TextHash.codegenName}.minShingleFp($c, $k)")
+    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.minShingleFp($c, $k)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -3784,9 +3784,10 @@ object Queries {
     * recursion key) over the same hourly contact edges. */
   /** Composite-encoding modulus for hour·id composite node ids — the
     * core variant's META nodes (hr·Enc + gid) and the global-CC
-    * fallback's per-hour nodes. Encoded ids must be in [0, Enc) and
+    * fallback's per-hour nodes (hour offset · Enc + member rank). The
+    * core variant encodes raw ids, which must be in [0, Enc) with
     * epoch-hours in [0, Long.Max/Enc); [[assertConvoyEncodingBounds]]
-    * enforces it loudly wherever the encoding survives. */
+    * enforces that loudly. */
   private[graft] val ConvoyEnc = 1000000000L
 
   /** Convoy thresholds: k = minimum core members, m = minimum
@@ -3805,10 +3806,10 @@ object Queries {
     * truncating div/% decode would mislabel) or an id outside [0, 10⁹)
     * (snowflake-style id spaces must remap through a dense_rank
     * dimension first), instead of silently producing wrong groups.
-    * Callers are the two places the encoding SURVIVES in r20: the core
-    * variant's meta-graph nodes (gid is a member id) and the global-CC
-    * fallback — the default hour-partitioned union-find needs no
-    * encoding at all. */
+    * The caller is the one place raw ids are encoded: the core
+    * variant's meta-graph nodes (gid is a member id). The hour-partitioned
+    * union-find needs no encoding, and the global-CC fallback encodes
+    * dense member ranks. */
   private def assertConvoyEncodingBounds(s: SparkSession, d: String): Unit = {
     val b = contactPairHourFrame(s, d)
       .agg(min(col("hr")), max(col("id_hi")), min(col("id_lo"))).head()
@@ -3879,33 +3880,27 @@ object Queries {
     * once. `gid` is the component's min member id within its hour.
     *
     * Contact edges never span hours, so the labels take ONE shuffle:
-    * `groupByKey(hr)` feeding a per-task union-find (path halving +
-    * union-by-min-root, so the root IS the component's min member).
-    * Edges stream from the group iterator; per-task memory is
-    * O(distinct members that hour) — fleet-bounded, never
-    * contact-log-bounded. With no composite encoding, pre-1970 hours and
-    * negative/snowflake member ids label correctly on this route; the
-    * global route asserts the encoding bounds
-    * ([[assertConvoyEncodingBounds]]). One documented epoch quirk
-    * (review r20): the family's hour bucket is TRUNCATING `div`
-    * (matching the oracle's integer `//` — verified to truncate
-    * identically), so bucket 0 spans (−1 h, +1 h) around the 1970
-    * epoch — contacts in 1969-12-31 23:xx and 1970-01-01 00:xx share
-    * one double-width bucket on BOTH engines. Harmless for real data
-    * (no fleet telemetry straddles the epoch); a deployment that
-    * genuinely needs epoch-straddling hours should bucket by
-    * `floor(micros / 3.6e9)` across the whole family instead.
+    * `groupByKey(hr)` feeding a per-task union-find
+    * ([[minRootComponents]]) whose edges stream from the group iterator
+    * and whose memory is one entry per member that hour. Routed by
+    * [[graft.Routes.Convoy]] on the busiest hour's distinct members
+    * (one agg over the cached hourly frame); an hour above the cap
+    * sends the whole job to the retained distributed fixpoint
+    * ([[globalCcHourLabels]]), since per-hour labels can't split.
+    * Both routes label pre-1970 hours and negative or snowflake ids.
     *
-    * Routed by [[graft.Routes.Convoy]] on the busiest hour's edge count
-    * (one agg over the cached hourly frame), which bounds the members a
-    * per-hour task holds. An hour above the cap sends the whole job to
-    * the retained distributed fixpoint ([[globalCcHourLabels]]): per-hour
-    * labels can't split, so the fallback is global. */
+    * Epoch quirk (review r20): the family's hour bucket is TRUNCATING
+    * `div`, matching the oracle's integer `//`, so bucket 0 spans
+    * (−1 h, +1 h) around the 1970 epoch on BOTH engines. Harmless for
+    * real fleet data; a deployment that needs epoch-straddling hours
+    * should bucket by `floor(micros / 3.6e9)` across the whole family. */
   private[graft] def convoyHourLabels(
       s: SparkSession, d: String, reliable: Boolean = false): DataFrame = {
     def build(): DataFrame = {
       val hours = contactPairHourFrame(s, d)
-      val busiest = hours.groupBy(col("hr")).agg(count(lit(1)).as("n"))
+      val busiest = hours
+        .select(col("hr"), explode(array(col("id_lo"), col("id_hi"))).as("m"))
+        .groupBy(col("hr")).agg(count_distinct(col("m")).as("n"))
         .agg(coalesce(max(col("n")), lit(0L))).head().getLong(0)
       if (Routes.local(Routes.Convoy, busiest)) {
         import s.implicits._
@@ -3931,25 +3926,36 @@ object Queries {
   }
 
   /** The r19 global-fixpoint construction, retained as the above-cap
-    * route of [[convoyHourLabels]]: composite-encode
-    * (hr, member) into one node space and run the distributed
+    * route of [[convoyHourLabels]]: composite-encode (hr, member) into
+    * one node space and run the distributed
     * [[graft.operators.Dedup.connectedComponents]] — ~log(diameter)
     * driver rounds over a sym frame proportional to ALL pair-hours,
     * but per-executor memory stays bounded regardless of the hottest
-    * hour's member count. Requires the asserted encoding bounds. */
+    * hour's member count. A node is (hr − first hour)·Enc + the
+    * member's dense rank (one ordered window over the fleet-sized
+    * distinct members), so any hour or id encodes, and the rank keeps
+    * member order: a component's min node decodes to its min member. */
   private def globalCcHourLabels(
       s: SparkSession, d: String, reliable: Boolean): DataFrame = {
     val Enc = ConvoyEnc
-    assertConvoyEncodingBounds(s, d)
-    val edges = contactPairHourFrame(s, d).select(
-      (col("hr") * Enc + col("id_lo")).as("a_id"),
-      (col("hr") * Enc + col("id_hi")).as("b_id"))
+    val pairs = contactPairHourFrame(s, d)
+    val h0 = pairs.agg(coalesce(min(col("hr")), lit(0L))).head().getLong(0)
+    val rank = pairs.select(col("id_lo").as("member"))
+      .union(pairs.select(col("id_hi"))).distinct()
+      .select(col("member"), (dense_rank().over(Window.orderBy("member")) - 1L).as("k"))
+    val nMembers = rank.count()
+    require(nMembers <= Enc, s"convoy global labels: $nMembers distinct " +
+      s"members exceed the $Enc-wide per-hour node band")
+    def ranked(id: String) = rank.select(col("member").as(id), col("k").as(s"k_$id"))
+    val edges = pairs.join(ranked("id_lo"), "id_lo").join(ranked("id_hi"), "id_hi")
+      .select(((col("hr") - h0) * Enc + col("k_id_lo")).as("a_id"),
+        ((col("hr") - h0) * Enc + col("k_id_hi")).as("b_id"))
     val labels =
       Dedup.withAqeOff(s)(Dedup.connectedComponents(edges, reliable)._1)
-    labels.select(
-      expr(s"id div $Enc").as("hr"),
-      expr(s"id % $Enc").as("member"),
-      expr(s"label % $Enc").as("gid"))
+    labels.select((expr(s"id div $Enc") + h0).as("hr"),
+        expr(s"id % $Enc").as("k"), expr(s"label % $Enc").as("k_gid"))
+      .join(rank, "k").join(ranked("gid"), "k_gid")
+      .select("hr", "member", "gid")
   }
 
   val geoConvoyGroups = OracleQuery(

@@ -1450,10 +1450,10 @@ class GeoTrajectorySpec extends SparkSpec {
   test("convoy encoding bounds: union-find labels out-of-encoding ids correctly; the core meta nodes keep the loud guard") {
     // r20: the hour-partitioned union-find needs no composite encoding,
     // so ids the r19 global fixpoint REJECTED (snowflake-sized, negative)
-    // and pre-1970 hours now label CORRECTLY on the strict variant. The
-    // guard survives where the hr·10⁹+id encoding does: the core
-    // variant's meta nodes here, and the above-cap global path
-    // (RouteEquivalenceSpec).
+    // and pre-1970 hours now label CORRECTLY on the strict variant (the
+    // above-cap global path encodes member ranks and agrees —
+    // RouteEquivalenceSpec). The guard survives where raw ids are
+    // hr·10⁹+id encoded: the core variant's meta nodes.
     // (a) member ids >= 1e9 — a real 3-member, 3-hour convoy
     val dirBig = java.nio.file.Files.createTempDirectory("graft-convoy-bigid").toString
     val bigIds = Seq(2000000000L, 2000000002L, 2000000004L)

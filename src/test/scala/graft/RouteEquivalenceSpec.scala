@@ -206,17 +206,18 @@ class RouteEquivalenceSpec extends SparkSpec {
     dir
   }
 
-  /** (hr, member, gid) labels of a new copy of the churn fixture, so the
-    * label cache cannot serve another route's frame. */
-  private def hourLabels(): (Set[(Long, Long, Long)], Seq[Decision]) =
+  /** (hr, member, gid) labels of fixture directory `dir`; pass a new
+    * directory per run so the label cache cannot serve another route's
+    * frame. */
+  private def hourLabels(dir: String): (Set[(Long, Long, Long)], Seq[Decision]) =
     Routes.recorded(
-      graft.operators.Queries.convoyHourLabels(spark, churnFixture())
+      graft.operators.Queries.convoyHourLabels(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet)
 
   test("convoy: the per-hour union-find equals the global fixpoint label-for-label") {
     // gid is the component's min member under either construction
-    val (uf, du) = hourLabels()
-    val (global, dg) = Routes.forcedDistributed(hourLabels())
+    val (uf, du) = hourLabels(churnFixture())
+    val (global, dg) = Routes.forcedDistributed(hourLabels(churnFixture()))
     assertRan(du, Routes.Convoy, "local")
     assertRan(dg, Routes.Convoy, "distributed")
     assertRan(dg, Routes.Cc, "distributed")
@@ -229,31 +230,56 @@ class RouteEquivalenceSpec extends SparkSpec {
   }
 
   test("convoy: an hour above a lowered cap routes to the global path with no conf set") {
-    val (uf, _) = hourLabels()
-    val (global, ds) = Routes.withCaps(Routes.Convoy -> 1L)(hourLabels())
-    assert(ds.exists(d => d.name == "convoy" && d.measured > 1L &&
+    val (uf, _) = hourLabels(churnFixture())
+    val (global, ds) = Routes.withCaps(Routes.Convoy -> 1L)(hourLabels(churnFixture()))
+    // the measure is the busiest hour's members: hour 11 holds A, B, C
+    // and D on three edges
+    assert(ds.exists(d => d.name == "convoy" && d.measured == 4L &&
       d.route == "distributed"), s"decisions: $ds")
     assert(spark.conf.getAll.keys.forall(!_.startsWith("graft.")))
     assert(global == uf)
   }
 
-  test("convoy: the global path keeps the loud dense_rank guard for ids outside the encoding") {
-    // member ids >= 1e9 label correctly on the union-find path
-    // (GeoTrajectorySpec) but cannot be hr·10⁹+id encoded
-    val dir = java.nio.file.Files.createTempDirectory("graft-convoy-route-bigid").toString
-    val ids = Seq(2000000000L, 2000000002L, 2000000004L)
-    (0 until 3).flatMap { h =>
-      Seq(
-        (30L + 20L * h, ts(s"2024-01-01 ${10 + h}:00:00"), ids(0)),
-        (35L + 20L * h, ts(s"2024-01-01 ${10 + h}:10:00"), ids(1)),
-        (40L + 20L * h, ts(s"2024-01-01 ${10 + h}:20:00"), ids(2)))
+  /** Three 3-member, 3-hour convoys the raw hr·10⁹+id encoding cannot
+    * hold: snowflake-sized ids, negative ids, and pre-1970 hours (fixes
+    * past the hour boundary, so each hour stays one truncated bucket).
+    * Returns (day, ids) per convoy. */
+  private val outOfEncoding = Seq(
+    ("2024-01-01", Seq(2000000000L, 2000000002L, 2000000004L)),
+    ("2024-01-02", Seq(-5L, -3L, -1L)),
+    ("1969-12-30", Seq(10L, 12L, 14L)))
+
+  private def outOfEncodingFixture(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-convoy-route-ids").toString
+    outOfEncoding.zipWithIndex.flatMap { case ((day, ids), g) =>
+      for (h <- 0 until 3; (id, i) <- ids.zipWithIndex)
+        yield (100L * g + 30L + 20L * h + 5L * i,
+          ts(s"$day ${10 + h}:${10 + 10 * i}:00"), id)
     }.toDF("event_id", "ts", "user_id")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val e = intercept[IllegalArgumentException] {
-      Routes.forcedDistributed(
-        SparkEntry.queries("ltss_geo_convoy_groups")(spark, dir).collect())
-    }
-    assert(e.getMessage.contains("dense_rank"),
-      s"global-path guard must point at the remap: ${e.getMessage}")
+    dir
+  }
+
+  test("convoy: snowflake, negative and pre-1970 ids label identically on both routes") {
+    // the global route ranks members and rebases hours before encoding,
+    // so crossing the cap never turns these answers into an exception
+    val expected = (for ((day, ids) <- outOfEncoding; h <- 0 until 3; id <- ids)
+      yield (ts(s"$day ${10 + h}:10:00").getTime / 3600000L, id, ids.head)).toSet
+    val (uf, du) = hourLabels(outOfEncodingFixture())
+    val (lowered, dl) =
+      Routes.withCaps(Routes.Convoy -> 1L)(hourLabels(outOfEncodingFixture()))
+    val (forced, df) = Routes.forcedDistributed(hourLabels(outOfEncodingFixture()))
+    assertRan(du, Routes.Convoy, "local")
+    assertRan(dl, Routes.Convoy, "distributed")
+    assertRan(df, Routes.Convoy, "distributed")
+    assertRan(df, Routes.Cc, "distributed")
+    assert(uf == expected, s"union-find labels: $uf")
+    assert(lowered == expected, s"global labels under a lowered cap: $lowered")
+    assert(forced == expected, s"fully distributed labels: $forced")
+    // the query itself answers above the cap
+    def groups(): Set[Seq[Any]] = rows(
+      SparkEntry.queries("ltss_geo_convoy_groups")(spark, outOfEncodingFixture())).toSet
+    val viaGlobal = Routes.withCaps(Routes.Convoy -> 1L)(groups())
+    assert(viaGlobal.size == 3 && viaGlobal == groups(), s"groups: $viaGlobal")
   }
 }
