@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftLineage, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Routes, Tables}
@@ -304,12 +304,9 @@ object Dedup {
     *  - the iterated subgraph is |docs with a near-dup| — orders of
     *    magnitude smaller than the corpus — so the loop's parallelism is
     *    sized to IT, not to the session default;
-    *  - lineage is truncated every round. `reliable = true` switches the
-    *    truncation to reliable checkpoints (requires
-    *    `sc.setCheckpointDir`) — on a real cluster `localCheckpoint`
-    *    blocks live only on their executor, and losing one mid-loop
-    *    would kill the only copy of the labels; 100 TB deployments pass
-    *    true.
+    *  - lineage is truncated every round ([[GraftLineage.truncate]]:
+    *    into the checkpoint directory when the deployment set one, else
+    *    executor-local blocks, whose loss mid-loop kills the job).
     * Iteration count is O(log diameter): each round combines min-label
     * propagation with a pointer-doubling jump (label ← label-of-label),
     * so even a pathological duplicate CHAIN (doc A≈B≈C≈…, common in
@@ -335,7 +332,7 @@ object Dedup {
     try body finally s.conf.set(key, was)
   }
 
-  def connectedComponents(pairs: DataFrame, reliable: Boolean = false): (DataFrame, Int) = {
+  def connectedComponents(pairs: DataFrame): (DataFrame, Int) = {
     val s = pairs.sparkSession
     // route selection depends on a RUNTIME edge count, so both routes
     // must emit one schema: the single-task Dataset decode below would
@@ -353,9 +350,7 @@ object Dedup {
     // the driver in megabit BigInteger products during planning — while
     // KEEPING the hand-set hash partitioning the built-in checkpoint
     // drops (see GraftLineage's scaladoc for both measured pathologies)
-    def truncate(df: DataFrame): DataFrame =
-      org.apache.spark.sql.GraftLineage.truncate(df, reliable)
-    val edges = truncate(pairs.toDF("a_id", "b_id"))
+    val edges = GraftLineage.truncate(pairs.toDF("a_id", "b_id"))
     // one job: materializes the edge checkpoint (the union below would
     // otherwise run the pair join twice), sizes the loop's parallelism,
     // and measures the route: the edge count bounds one task's
@@ -363,18 +358,18 @@ object Dedup {
     val nEdges = edges.count()
     if (Routes.local(Routes.Cc, nEdges)) {
       import s.implicits._
-      val lab = truncate(edges.as[(Long, Long)].coalesce(1)
+      val lab = GraftLineage.truncate(edges.as[(Long, Long)].coalesce(1)
         .mapPartitions(it =>
           graft.operators.Queries.minRootComponents(it).iterator)
         .toDF("id", "label"))
       // one job: materializes the label blocks AND counts the nodes for
       // the honest-stats re-attach (the convergence-job discipline)
       val nNodes = lab.count()
-      return (org.apache.spark.sql.GraftLineage.frameWithRowCount(lab, nNodes), 0)
+      return (GraftLineage.frameWithRowCount(lab, nNodes), 0)
     }
     val maxParts = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val parts = math.max(1L, math.min(maxParts.toLong, (2L * nEdges) / 100000L + 1L)).toInt
-    val sym = truncate(
+    val sym = GraftLineage.truncate(
       edges.union(edges.select(col("b_id"), col("a_id"))).toDF("src", "dst")
         .repartition(parts, col("dst"))) // materialized by iteration 1's job
     var labels = sym.groupBy(col("src")).agg(min(col("dst")).as("mn"))
@@ -390,7 +385,7 @@ object Dedup {
       // propagation (label ← min over neighbors), lazily truncated so the
       // pointer-doubling self-join below reads its blocks instead of
       // recomputing the neighbor join on both sides
-      val prop = truncate(
+      val prop = GraftLineage.truncate(
         labels.join(nbr, col("id") === col("src"), "left")
           .select(col("id"), newLabel.as("plabel"), col("label").as("old"))
           .repartition(parts, col("id")))
@@ -403,7 +398,7 @@ object Dedup {
       // so correctness is unchanged — only the fixpoint arrives sooner.
       val jump = prop.select(col("id").as("jid"), col("plabel").as("jlabel"))
       val doubled = coalesce(col("jlabel"), col("plabel"))
-      val next = truncate(
+      val next = GraftLineage.truncate(
         prop.join(jump, col("plabel") === col("jid"), "left")
           .select(col("id"), doubled.as("label"),
             (doubled < col("old")).cast("long").as("chg"))
@@ -424,7 +419,7 @@ object Dedup {
     // +60%). Re-attach the exact converged row count so Catalyst
     // auto-broadcasts a dimension-sized label frame — and, just as
     // honestly, shuffles a corpus-sized one at 100 TB.
-    (org.apache.spark.sql.GraftLineage.frameWithRowCount(labels, nNodes), iters)
+    (GraftLineage.frameWithRowCount(labels, nNodes), iters)
   }
 
   /** The CONVERGED near-dup component labels (id → min-label), shared
@@ -859,17 +854,15 @@ object Dedup {
     // plan carried 64 exchanges; checkpointing prefix and cand cuts it
     // to single digits). The frame is |docs| × prefix-length — the
     // same rows the self-join was already going to shuffle twice.
-    val prefix = sh.join(dfCnt, "fp").join(sizes, "doc_id")
+    val prefix = GraftLineage.cut(sh.join(dfCnt, "fp").join(sizes, "doc_id")
       .withColumn("rk", row_number().over(wDoc))
       .filter(col("rk") <= col("nsh") - expr(s"(nsh * $p + ${q - 1}) div $q") + 1)
-      .select(col("doc_id"), col("fp"), col("nsh"))
-      .localCheckpoint(true)
-    val cand = prefix.toDF("a_id", "fp", "na")
+      .select(col("doc_id"), col("fp"), col("nsh")), eager = true)
+    val cand = GraftLineage.cut(prefix.toDF("a_id", "fp", "na")
       .join(prefix.toDF("b_id", "fp", "nb"), "fp")
       .filter(col("a_id") < col("b_id") &&
         col("na") * q >= col("nb") * p && col("nb") * q >= col("na") * p)
-      .select(col("a_id"), col("b_id")).distinct()
-      .localCheckpoint(true)
+      .select(col("a_id"), col("b_id")).distinct(), eager = true)
     // VERIFY by sorted-array intersection (r21, guide §2.3): the
     // candidate set is UNCHANGED (prefix filter + length filter above —
     // the Bayardo identity of this operator); only the intersection
@@ -1348,10 +1341,10 @@ object Dedup {
     // size projection and BOTH intersection sides scan the stored
     // blocks) — the previous shape re-executed the scan + semi-join +
     // explode three times, which made this the #3 bench entry.
-    val hotToks = docs
+    val hotToks = GraftLineage.cut(docs
       .join(hot.select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), array_distinct(split(col("text"), " ")).as("ws"))
-      .localCheckpoint(eager = false)
+      .select(col("doc_id"), array_distinct(split(col("text"), " ")).as("ws")),
+      eager = false)
     // |tokens| is the array length — map-only, no explode + count-shuffle
     val sizes = hotToks.select(col("doc_id"), size(col("ws")).cast("long").as("sz"))
     val toks = hotToks.select(col("doc_id"), explode(col("ws")).as("w"))
@@ -1641,12 +1634,11 @@ object Dedup {
       // self-join legs) otherwise each re-plan the corpus-sized
       // explode+distinct; the deduped frame is |sources|·|distinct
       // shingles| — far below the corpus element stream
-      val srcSh = Tables.documents(s, d)
+      val srcSh = GraftLineage.cut(Tables.documents(s, d)
         .select(col("source"), explode(array_distinct(sh3)).as("sh"))
         .select(col("source"),
           columnOf(graft.functions.Md5Prefix64(expressionOf(col("sh")))).as("sh"))
-        .distinct()
-        .localCheckpoint(true)
+        .distinct(), eager = true)
       val counts = srcSh.groupBy(col("source")).agg(count(lit(1)).as("n"))
       srcSh.toDF("a_src", "sh").join(srcSh.toDF("b_src", "sh"), "sh")
         .filter(col("a_src") < col("b_src"))
@@ -2325,18 +2317,23 @@ object Dedup {
       // the candidate pair frame materializes once (r21): three
       // consumers below (the doc-id scope, the signature attach, the
       // exact leg) otherwise each re-plan the banded self-join
-      val pairs = lshPairFrame(s, d).select(col("a_id"), col("b_id"))
-        .localCheckpoint(true)
-      val pairDocs = pairs.select(col("a_id").as("doc_id"))
+      val pairs = GraftLineage.cut(
+        lshPairFrame(s, d).select(col("a_id"), col("b_id")), eager = true)
+      // the candidate doc ids, cut and counted in one job: their honest
+      // row count lets autoBroadcastJoinThreshold decide the two scoping
+      // joins below — a broadcast at fixture scale, a shuffle when the
+      // candidate set outgrows the threshold (no unconditional hint)
+      val pairDocsCut = GraftLineage.cut(pairs.select(col("a_id").as("doc_id"))
         .union(pairs.select(col("b_id").as("doc_id")))
-        .distinct()
+        .distinct(), eager = false)
+      val pairDocs = GraftLineage.frameWithRowCount(pairDocsCut, pairDocsCut.count())
       // signatures recompute the MinHash8 kernel over the docs frame —
       // restrict it to the CANDIDATE docs before the kernel runs (r21):
       // the attach joins only ever read pair docs' rows, and the two
       // sig copies below otherwise each re-ran the md5 kernel over the
       // whole corpus
       val sig = minhashFrame(
-        Tables.documents(s, d).join(broadcast(pairDocs), "doc_id"))
+        Tables.documents(s, d).join(pairDocs, "doc_id"))
       val aSig = sig.toDF(sig.columns.toIndexedSeq
         .map(c => if (c == "doc_id") "a_id" else s"a_$c"): _*)
       val bSig = sig.toDF(sig.columns.toIndexedSeq
@@ -2354,11 +2351,11 @@ object Dedup {
       // scope the exact leg to the CANDIDATE docs before any join or
       // size aggregate (r21, guide §3.2's semi-join idea): the audit
       // only reads sizes and intersections for docs that appear in a
-      // candidate pair — a broadcast-sized id set — so the corpus-wide
-      // shingle frame never enters the exact-leg shuffles. Values are
-      // unchanged: sz and inter are only ever consumed keyed by pair
-      // doc ids.
-      val cssh = ssh.join(broadcast(pairDocs), "doc_id")
+      // candidate pair — a broadcast-sized id set at fixture scale — so
+      // the corpus-wide shingle frame never enters the exact-leg
+      // shuffles. Values are unchanged: sz and inter are only ever
+      // consumed keyed by pair doc ids.
+      val cssh = ssh.join(pairDocs, "doc_id")
       val sz = cssh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
       val inter = pairs
         .join(cssh.toDF("a_id", "fp"), "a_id")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftLineage, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Routes, Tables}
@@ -222,20 +222,20 @@ object Queries {
     * partitionless `row_number().over(Window.orderBy(...))` funneled the
     * whole fleet through ONE task at write time (the bench log's "No
     * Partition Defined for Window operation" warning); this shape ranks
-    * a 10⁸-entity fleet at full parallelism. The EAGER localCheckpoint
-    * pins the range-partitioned frame by CUTTING LINEAGE — persist alone
-    * is a hint, and a recompute after cache loss would re-sample
+    * a 10⁸-entity fleet at full parallelism. The EAGER lineage cut
+    * pins the range-partitioned frame — persist alone is a hint, and a
+    * recompute after cache loss would re-sample
     * repartitionByRange's boundaries and shift pids relative to the
     * collected offset ledger, silently corrupting the dense ranks; with
-    * the lineage gone a lost block fails the job loudly instead. A
+    * the lineage gone a lost local block fails the job loudly instead
+    * (a deployment's checkpoint directory makes it survive). A
     * belt-and-braces invariant check (exactly the fleet's count of
     * ranks, spanning [0, n)) runs before the ranks are handed to any
     * write path. */
   private def entityRanks(l: DataFrame, parts: Int): (DataFrame, () => Unit) = {
-    val fleet = l.select(col("entity_id")).distinct()
+    val fleet = GraftLineage.cut(l.select(col("entity_id")).distinct()
       .repartitionByRange(parts, col("entity_id"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(true)
+      .withColumn("pid", spark_partition_id()), eager = true)
     val counts = fleet.groupBy(col("pid")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
     val offsets = counts.scanLeft(0L)(_ + _._2)
@@ -247,14 +247,13 @@ object Queries {
     // below and the caller's join then read one pinned materialization
     // instead of re-executing the ranking window per consumer (the
     // check would otherwise double the fleet-ranking work)
-    val ranks = fleet
+    val ranks = GraftLineage.cut(fleet
       .withColumn("ent_rank",
         element_at(offMap, col("pid")) +
           row_number().over(
             Window.partitionBy(col("pid")).orderBy(col("entity_id")))
             .cast("long") - 1L)
-      .drop("pid")
-      .localCheckpoint(true)
+      .drop("pid"), eager = true)
     val chk = ranks
       .agg(count(lit(1)).as("n"), countDistinct(col("ent_rank")).as("d"),
         coalesce(max(col("ent_rank")), lit(-1L)).as("mx"))
@@ -263,17 +262,14 @@ object Queries {
       s"entity rank corrupted: ${chk.getLong(0)} entities but " +
         s"${chk.getLong(1)} distinct ranks, max ${chk.getLong(2)} " +
         "(partition ids shifted against the offset ledger?)")
-    // release drops both checkpointed frames' storage eagerly (the
-    // caller invokes it after the layout write, when nothing can
-    // recompute them) — relying on a driver GC to let ContextCleaner
-    // reclaim them would let a repeated caller accumulate two
-    // fleet-sized frames per build invisibly. Dataset.unpersist is a
-    // NO-OP for localCheckpoint'd frames (their blocks live on the
-    // checkpointed RDD, not in the CacheManager), so the release goes
-    // through the RDD captured inside each frame's LogicalRDD plan
+    // release drops both cut frames' storage eagerly (the caller
+    // invokes it after the layout write, when nothing can recompute
+    // them) — relying on a driver GC to let ContextCleaner reclaim them
+    // would let a repeated caller accumulate two fleet-sized frames per
+    // build invisibly
     (ranks, () => {
-      org.apache.spark.sql.GraftColumns.freeLocalCheckpoint(ranks)
-      org.apache.spark.sql.GraftColumns.freeLocalCheckpoint(fleet)
+      GraftLineage.release(ranks)
+      GraftLineage.release(fleet)
       ()
     })
   }
@@ -968,9 +964,8 @@ object Queries {
     // min(id) doubles as the position's node id in the CC: labels are
     // min-propagated, so min-over-positions of min(id) IS the min core
     // id of the cluster — bit-identical labels to the id-level graph.
-    val pos = p.groupBy(col("x"), col("y"))
-      .agg(count(lit(1)).as("mult"), min(col("id")).as("pid"))
-      .localCheckpoint(false)
+    val pos = GraftLineage.cut(p.groupBy(col("x"), col("y"))
+      .agg(count(lit(1)).as("mult"), min(col("id")).as("pid")), eager = false)
     val a = pos.select(col("pid").as("a_pid"), col("mult").as("a_mult"),
       col("x").as("ax"), col("y").as("ay"),
       expr(s"x div $eps").as("cx"), expr(s"y div $eps").as("cy"))
@@ -984,12 +979,12 @@ object Queries {
     // the candidate join feeds THREE consumers (degree, core edges,
     // border attach) plus the CC loop's own checkpoint — truncate its
     // lineage once so the grid join runs once, not per consumer
-    val pairs = a.join(b, Seq("cx", "cy"))
+    val pairs = GraftLineage.cut(a.join(b, Seq("cx", "cy"))
       .filter(col("a_pid") < col("b_pid"))
       .filter((col("ax") - col("bx")) * (col("ax") - col("bx")) +
         (col("ay") - col("by")) * (col("ay") - col("by")) <= eps * eps)
-      .select(col("a_pid"), col("b_pid"), col("a_mult"), col("b_mult"))
-      .localCheckpoint(false)
+      .select(col("a_pid"), col("b_pid"), col("a_mult"), col("b_mult")),
+      eager = false)
     val sym = pairs.select(col("a_pid"), col("b_pid"), col("b_mult"))
       .union(pairs.select(col("b_pid"), col("a_pid"), col("a_mult")))
       .toDF("pid", "nbr", "w")
@@ -1000,8 +995,8 @@ object Queries {
       .select(col("pid"), col("x"), col("y"),
         (col("mult") - 1 + coalesce(col("w_nbrs"), lit(0L))).as("n_nbrs"))
     // tiny pid list, read three times (edge semi-joins + anti-join)
-    val core = deg.filter(col("n_nbrs") >= minPts - 1).select(col("pid"))
-      .localCheckpoint(false)
+    val core = GraftLineage.cut(
+      deg.filter(col("n_nbrs") >= minPts - 1).select(col("pid")), eager = false)
     val coreEdges = pairs
       .join(core.withColumnRenamed("pid", "a_pid"), Seq("a_pid"), "left_semi")
       .join(core.withColumnRenamed("pid", "b_pid"), Seq("b_pid"), "left_semi")
@@ -3894,9 +3889,9 @@ object Queries {
     * (−1 h, +1 h) around the 1970 epoch on BOTH engines. Harmless for
     * real fleet data; a deployment that needs epoch-straddling hours
     * should bucket by `floor(micros / 3.6e9)` across the whole family. */
-  private[graft] def convoyHourLabels(
-      s: SparkSession, d: String, reliable: Boolean = false): DataFrame = {
-    def build(): DataFrame = {
+  private[graft] def convoyHourLabels(s: SparkSession, d: String): DataFrame =
+    graft.CachedFrames.getOrBuild(
+      s"convoy_hour_labels|${graft.CachedFrames.sessionKey(s)}|$d") {
       val hours = contactPairHourFrame(s, d)
       val busiest = hours
         .select(col("hr"), explode(array(col("id_lo"), col("id_hi"))).as("m"))
@@ -3913,17 +3908,8 @@ object Queries {
               .iterator.map { case (m, gid) => (hr, m, gid) }
           }
           .toDF("hr", "member", "gid")
-      } else globalCcHourLabels(s, d, reliable)
+      } else globalCcHourLabels(s, d)
     }
-    // the RELIABLE tier (cluster availability: fixpoint truncations on
-    // the fallback path write to the DFS instead of executor-local
-    // storage — the exposureFrame contract) builds its own copy:
-    // executor-local persisted blocks must not be the only home of a
-    // cluster run's labels
-    if (reliable) build()
-    else graft.CachedFrames.getOrBuild(
-      s"convoy_hour_labels|${graft.CachedFrames.sessionKey(s)}|$d")(build())
-  }
 
   /** The r19 global-fixpoint construction, retained as the above-cap
     * route of [[convoyHourLabels]]: composite-encode (hr, member) into
@@ -3935,8 +3921,7 @@ object Queries {
     * member's dense rank (one ordered window over the fleet-sized
     * distinct members), so any hour or id encodes, and the rank keeps
     * member order: a component's min node decodes to its min member. */
-  private def globalCcHourLabels(
-      s: SparkSession, d: String, reliable: Boolean): DataFrame = {
+  private def globalCcHourLabels(s: SparkSession, d: String): DataFrame = {
     val Enc = ConvoyEnc
     val pairs = contactPairHourFrame(s, d)
     val h0 = pairs.agg(coalesce(min(col("hr")), lit(0L))).head().getLong(0)
@@ -3951,7 +3936,7 @@ object Queries {
       .select(((col("hr") - h0) * Enc + col("k_id_lo")).as("a_id"),
         ((col("hr") - h0) * Enc + col("k_id_hi")).as("b_id"))
     val labels =
-      Dedup.withAqeOff(s)(Dedup.connectedComponents(edges, reliable)._1)
+      Dedup.withAqeOff(s)(Dedup.connectedComponents(edges)._1)
     labels.select((expr(s"id div $Enc") + h0).as("hr"),
         expr(s"id % $Enc").as("k"), expr(s"label % $Enc").as("k_gid"))
       .join(rank, "k").join(ranked("gid"), "k_gid")
@@ -4241,22 +4226,14 @@ object Queries {
     * min-start fold per (core, close) — a genuinely different
     * construction from the Spark meta-partitioned machine (verified
     * equal row-for-row at sf0.01 during design, 34 episodes). */
-  /** The core-convoy engine with the availability knob: `reliable`
-    * routes BOTH fixpoints (the per-hour labels and the meta-graph CC)
-    * through reliable checkpoints and skips the executor-local cache —
-    * the [[exposureFrame]] contract, for cluster runs where a lost
-    * executor must not kill the only copy of a truncated frame
-    * mid-loop (requires `sc.setCheckpointDir`). The registered query
-    * is the local tier. */
-  private[graft] def convoyGroupsCoreFrame(
-      s: SparkSession, d: String, reliable: Boolean = false): DataFrame = {
+  private[graft] def convoyGroupsCoreFrame(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val Enc = ConvoyEnc
     // the META nodes composite-encode (hr, gid) and gid is a member
     // id, so the core variant keeps the asserted bound even though the
     // per-hour labels themselves no longer need the encoding (r20)
     assertConvoyEncodingBounds(s, d)
-    val perHr = convoyHourLabels(s, d, reliable)
+    val perHr = convoyHourLabels(s, d)
     val nxt = perHr.select((col("hr") - 1L).as("hr"),
       col("gid").as("gid_n"), col("member"))
     val metaEdges = perHr.select(col("hr"), col("gid"), col("member"))
@@ -4267,7 +4244,7 @@ object Queries {
       .select((col("hr") * Enc + col("gid")).as("a_id"),
         ((col("hr") + 1L) * Enc + col("gid_n")).as("b_id"))
     val metaLab =
-      Dedup.withAqeOff(s)(Dedup.connectedComponents(metaEdges, reliable)._1)
+      Dedup.withAqeOff(s)(Dedup.connectedComponents(metaEdges)._1)
         .withColumnRenamed("id", "node")
     perHr.join(metaLab, (col("hr") * Enc + col("gid")) === col("node"))
       .select(col("label").as("meta"), col("hr"), col("gid"), col("member"))
@@ -4360,10 +4337,7 @@ object Queries {
     * optional EDGE predicate (evaluated on the pair rollup's columns —
     * n_contacts, min_d2, first/last_contact — epidemiological practice
     * thresholds edges before tracing: repeated contact, close
-    * approach, time-boxed) and by the TRUNCATION TIER (`reliable` —
-    * the connectedComponents contract: on a cluster, loop truncations
-    * go to reliable checkpoints via `sc.setCheckpointDir` instead of
-    * executor-local blocks; 100 TB deployments pass true).
+    * approach, time-boxed).
     *
     * Routed by [[graft.Routes.Exposure]] on the edge count the engine
     * already takes (`nEdges`, the loop-width input), which bounds one
@@ -4380,37 +4354,21 @@ object Queries {
     * and hops shortest paths — both unique. */
   private[graft] def exposureFrame(
       s: SparkSession, d: String,
-      edgeFilter: Option[Column] = None,
-      reliable: Boolean = false): DataFrame = {
-      def truncE(df: DataFrame): DataFrame =
-        if (reliable) df.checkpoint(eager = true)
-        else df.localCheckpoint(eager = true)
-      def trunc(df: DataFrame): DataFrame =
-        if (reliable) df.checkpoint(eager = false)
-        else df.localCheckpoint(eager = false)
+      edgeFilter: Option[Column] = None): DataFrame = {
       // ONE contact-join compute: the pair rollup materializes once
       // and every consumer below — the CC edges, the BFS's sym frame,
       // the span join — reads its blocks instead of replaying the
-      // bucketed contact join per consumer. The local tier reads the
-      // SESSION-SHARED persisted frame ([[contactPairFrame]] — both
-      // exposure variants and the pair query serve from one build);
-      // the reliable tier builds its own copy under reliable
-      // checkpointing (a cluster must not hang the trace off
-      // executor-local persisted blocks).
-      // the non-reliable tier ALSO truncates (r21, r20 VERDICT item 8):
-      // the filtered projection of the session-shared MEMORY_ONLY
-      // contact cache is re-materialized into local checkpoint blocks
-      // (MEMORY_AND_DISK), so an eviction of the shared cache can no
-      // longer force the single-task coalesce(1) route below to replay
-      // the whole contact fold inside one task
-      val pairs = truncE(
-        (if (reliable)
-          edgeFilter.foldLeft(geoContactPairs.run(s, d))(
-            (f, c) => f.filter(c))
-        else
-          edgeFilter.foldLeft(contactPairFrame(s, d))((f, c) => f.filter(c)))
+      // bucketed contact join per consumer. It reads the SESSION-SHARED
+      // persisted frame ([[contactPairFrame]] — both exposure variants
+      // and the pair query serve from one build), and the filtered
+      // projection is cut eagerly (r21, r20 VERDICT item 8): an
+      // eviction of the shared MEMORY_ONLY cache can no longer force
+      // the single-task coalesce(1) route below to replay the whole
+      // contact fold inside one task
+      val pairs = GraftLineage.cut(
+        edgeFilter.foldLeft(contactPairFrame(s, d))((f, c) => f.filter(c))
           .select(col("id_lo"), col("id_hi"), col("first_contact"),
-            col("last_contact")))
+            col("last_contact")), eager = true)
       val edges = pairs.select(col("id_lo"), col("id_hi"))
       // Materialize the (filtered) pair frame — and, through it, the
       // session-shared contact-pair build — BEFORE any AQE toggle: on a
@@ -4423,13 +4381,13 @@ object Queries {
         if (Routes.local(Routes.Exposure, nEdges)) {
           // single-task route: labels + hops in ONE pass over the whole
           // graph. coalesce(1) merges the materialized pair blocks into
-          // one task — no shuffle, no iteration jobs; the eager truncate
+          // one task — no shuffle, no iteration jobs; the eager cut
           // materializes the pass once for the three consumers below.
           import s.implicits._
-          truncE(edges.as[(Long, Long)].coalesce(1)
+          GraftLineage.cut(edges.as[(Long, Long)].coalesce(1)
             .mapPartitions(localGraphNodes)
-            .toDF("id", "label", "hops"))
-        } else distributedGraphNodes(s, edges, nEdges, reliable)
+            .toDF("id", "label", "hops"), eager = true)
+        } else distributedGraphNodes(s, edges, nEdges)
       val comp = nodes.groupBy(col("label"))
         .agg(count(lit(1)).as("n_members"))
       val span = pairs
@@ -4557,16 +4515,9 @@ object Queries {
     * for oversized ones, restricted to their edges. Returns one
     * (id, label, hops) row per node. */
   private def distributedGraphNodes(
-      s: SparkSession, edges: DataFrame, nEdges: Long, reliable: Boolean)
-      : DataFrame = {
+      s: SparkSession, edges: DataFrame, nEdges: Long): DataFrame = {
     import s.implicits._
     val localCap = Routes.cap(Routes.Exposure)
-    def trunc(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = false)
-      else df.localCheckpoint(eager = false)
-    def truncEager(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
     val partsKey = "spark.sql.shuffle.partitions"
     val partsWas = s.conf.get(partsKey, "32")
     Dedup.withAqeOff(s) {
@@ -4583,13 +4534,13 @@ object Queries {
           math.min(maxParts.toLong, (2L * nEdges) / 100000L + 1L)).toInt
         s.conf.set(partsKey, parts.toString)
         val (lab, _) =
-          graft.operators.Dedup.connectedComponents(edges, reliable)
-        val labC = trunc(lab)
+          graft.operators.Dedup.connectedComponents(edges)
+        val labC = GraftLineage.cut(lab, eager = false)
         // attach each undirected edge to its component (edges never
         // cross components) — the per-component group key
-        val edgeComp = trunc(edges
+        val edgeComp = GraftLineage.cut(edges
           .join(labC.select(col("id").as("id_lo"), col("label")), "id_lo")
-          .select(col("label"), col("id_lo"), col("id_hi")))
+          .select(col("label"), col("id_lo"), col("id_hi")), eager = false)
         val routed =
           if (localCap <= 0) {
             // a cap of 0 or below (a route forced in tests): EVERY
@@ -4597,7 +4548,7 @@ object Queries {
             // the small/big split — collecting every component label
             // to the driver at cap <= 0 would be unbounded on a real
             // graph (r20 ADVICE)
-            layeredBfsNodes(trunc(edgeComp), parts, trunc)
+            layeredBfsNodes(GraftLineage.cut(edgeComp, eager = false), parts)
           } else {
             // oversized components: at most nEdges / cap labels exist,
             // so the collected set is driver-bounded by construction
@@ -4618,14 +4569,15 @@ object Queries {
               .toDF("id", "label", "hops")
             if (big.isEmpty) smallNodes
             else smallNodes.union(
-              layeredBfsNodes(trunc(
-                edgeComp.filter(col("label").isInCollection(big))), parts, trunc))
+              layeredBfsNodes(GraftLineage.cut(
+                edgeComp.filter(col("label").isInCollection(big)),
+                eager = false), parts))
           }
         // materialize INSIDE the conf scope (r20 ADVICE: the returned
         // plan used to execute lazily after the finally restored AQE
         // and the shuffle width, so the final group-BFS/union jobs ran
         // outside the scope the comments describe)
-        truncEager(routed)
+        GraftLineage.cut(routed, eager = true)
       } finally s.conf.set(partsKey, partsWas)
     }
   }
@@ -4642,21 +4594,19 @@ object Queries {
     * (label, id_lo, id_hi) edge frame of the routed components; the
     * label rides every frontier row, so the output is (id, label,
     * hops) like the in-task route. */
-  private def layeredBfsNodes(
-      edgeComp: DataFrame, parts: Int,
-      trunc: DataFrame => DataFrame): DataFrame = {
+  private def layeredBfsNodes(edgeComp: DataFrame, parts: Int): DataFrame = {
     // sym's columns are ALIASED (slabel/src/dst): the seed frame below
     // shares edgeComp's lineage, and dataset-qualified refs across two
     // frames with common attribute ids trip the ambiguous-self-join
     // detector — fresh names + name-based refs keep the join resolvable
-    val sym = trunc(
+    val sym = GraftLineage.cut(
       edgeComp.select(col("label").as("slabel"), col("id_lo").as("src"),
           col("id_hi").as("dst"))
         .union(edgeComp.select(col("label"), col("id_hi"), col("id_lo")))
-        .repartition(parts, col("src")))
-    var settled = trunc(edgeComp.select(col("label")).distinct()
+        .repartition(parts, col("src")), eager = false)
+    var settled = GraftLineage.cut(edgeComp.select(col("label")).distinct()
       .select(col("label").as("id"), col("label"), lit(0L).as("hops"))
-      .repartition(parts, col("id")))
+      .repartition(parts, col("id")), eager = false)
     var frontier = settled
     var more = settled.count() > 0
     val HopsPerJob = 6
@@ -4665,25 +4615,25 @@ object Queries {
       var cur = frontier
       val layers = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       for (_ <- 1 to HopsPerJob) {
-        val nxt = trunc(cur.join(sym, col("id") === col("src"))
+        val nxt = GraftLineage.cut(cur.join(sym, col("id") === col("src"))
           .select(col("dst").as("nid"), col("slabel").as("nlabel"),
             (col("hops") + 1L).as("nhops"))
           .groupBy(col("nid"), col("nlabel")).agg(min(col("nhops")).as("nhops"))
           .select(col("nid").as("id"), col("nlabel").as("label"),
             col("nhops").as("hops"))
-          .join(block, col("id") === col("seen"), "left_anti"))
+          .join(block, col("id") === col("seen"), "left_anti"), eager = false)
         layers += nxt
         block = block.union(nxt.select(col("id").as("seen")))
         cur = nxt
       }
-      val roundNew = trunc(layers.reduce(_ union _)
-        .repartition(parts, col("id")))
+      val roundNew = GraftLineage.cut(layers.reduce(_ union _)
+        .repartition(parts, col("id")), eager = false)
       // an empty TRAILING layer with earlier layers non-empty costs
       // exactly one extra (empty, cheap) round before the count reads
       // zero and the loop stops
       more = roundNew.count() > 0
       if (more) {
-        settled = trunc(settled.union(roundNew))
+        settled = GraftLineage.cut(settled.union(roundNew), eager = false)
         frontier = layers.last
       }
     }
@@ -5596,7 +5546,7 @@ object Queries {
       // below (the zone-hit leg and the anchor join) — the visit frame
       // is tiny (314 rows at sf0.1) while the fold it truncates is a
       // full track-layout pass
-      val visits = staypointVisits(s, d).localCheckpoint(true)
+      val visits = GraftLineage.cut(staypointVisits(s, d), eager = true)
       val zonesDim = s.read.parquet(zoneLayoutPath(s, d))
       val hit = visits.join(broadcast(zonesDim),
           col("lat") >= col("lat_min") && col("lat") <= col("lat_max") &&
@@ -6632,8 +6582,8 @@ object Queries {
       // frame, which is orders of magnitude below the corpus (distinct
       // entities × hours). One corpus distinct remains — the audit's
       // real intrinsic cost. Measured at sf0.1: 3.9 → ~1.3 s warm.
-      val dbh = base.select(col("day"), col("bus"), col("h")).distinct()
-        .localCheckpoint(true)
+      val dbh = GraftLineage.cut(
+        base.select(col("day"), col("bus"), col("h")).distinct(), eager = true)
       val hourSk = dbh
         .withColumn("rn", row_number().over(wHour)).filter(col("rn") <= KmvK)
       val wDay = Window.partitionBy(col("day")).orderBy(col("h"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.GraftLineage
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -318,12 +319,11 @@ object Sampling {
       // §2.4/§5): the target histogram and the scoring pass otherwise
       // each re-plan the md5+groupBy over the cached shingle pair
       // frame; the profile is ≤ |docs|·256 rows
-      val docBuckets = TextOps.shinglePairs(s, d)
+      val docBuckets = GraftLineage.cut(TextOps.shinglePairs(s, d)
         .select(col("doc_id"), col("source"),
           substring(md5(col("sh")), 1, 2).as("b"), col("k"))
         .groupBy(col("doc_id"), col("source"), col("b"))
-        .agg(sum(col("k")).as("c"))
-        .localCheckpoint(true)
+        .agg(sum(col("k")).as("c")), eager = true)
       val target = docBuckets.filter(col("source") === ImportanceTarget)
         .groupBy(col("b")).agg(sum(col("c")).as("t"))
       docBuckets

@@ -20,25 +20,4 @@ object GraftColumns {
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
   def expressionOf(c: Column): Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
-
-  /** Eagerly free the block storage behind a `localCheckpoint`'d frame.
-    * `Dataset.unpersist` is a NO-OP for these: the checkpoint blocks
-    * belong to the underlying RDD's `LocalRDDCheckpointData`, which is
-    * never registered with the CacheManager that `unpersist` consults.
-    * The checkpointed Dataset's plan is a [[execution.LogicalRDD]]
-    * wrapping exactly that RDD — unpersisting IT releases the blocks
-    * now instead of waiting for the driver GC + ContextCleaner to
-    * notice the RDD is unreachable. Returns true when a checkpointed
-    * RDD was found and released (false = not a checkpointed frame —
-    * caller's plan shape changed, worth an assertion in specs). */
-  def freeLocalCheckpoint(ds: Dataset[_]): Boolean = ds match {
-    case d: classic.Dataset[_] =>
-      d.queryExecution.analyzed match {
-        case l: execution.LogicalRDD =>
-          l.rdd.unpersist(blocking = false)
-          true
-        case _ => false
-      }
-    case _ => false
-  }
 }

@@ -68,24 +68,4 @@ class CachedFramesSpec extends SparkSpec {
       "the eldest entry must be unpersisted on evict")
     assert(frames.last.storageLevel != StorageLevel.NONE)
   }
-
-  test("freeLocalCheckpoint releases the blocks Dataset.unpersist cannot (ADVICE r14)") {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val df = spark.range(1000).toDF("x").localCheckpoint(true)
-    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(added.nonEmpty, "localCheckpoint must register its RDD as persisted")
-    // the documented no-op: the blocks belong to the checkpointed RDD,
-    // which the CacheManager-backed Dataset.unpersist never sees
-    df.unpersist(blocking = true)
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- before) == added,
-      "Dataset.unpersist must not have released the checkpoint blocks " +
-        "(if it did, entityRanks' release can go back to it)")
-    assert(org.apache.spark.sql.GraftColumns.freeLocalCheckpoint(df),
-      "the checkpointed frame must be recognized via its LogicalRDD plan")
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
-      "freeLocalCheckpoint must deregister the checkpointed RDD")
-    // a plain frame is reported unhandled rather than silently 'freed'
-    assert(!org.apache.spark.sql.GraftColumns.freeLocalCheckpoint(
-      spark.range(10).toDF("x")))
-  }
 }

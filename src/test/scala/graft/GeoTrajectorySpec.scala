@@ -1364,27 +1364,30 @@ class GeoTrajectorySpec extends SparkSpec {
   }
 
   test("exposureFrame: the reliable-checkpoint tier returns the identical frame") {
-    // the exposure fixture: A-B and B-C contacts chain A-C at hop 2
-    val dir = java.nio.file.Files.createTempDirectory("graft-exposure-rel").toString
+    // the exposure fixture: A-B and B-C contacts chain A-C at hop 2,
+    // written twice so each tier builds its own session-cached frames
     val events = Seq(
       (100L, ts("2024-01-01 10:00:00"), 10L),
       (101L, ts("2024-01-01 11:00:00"), 12L),
       (200L, ts("2024-01-01 20:00:00"), 12L),
       (201L, ts("2024-01-01 20:30:00"), 14L),
       (300L, ts("2024-01-05 09:00:00"), 50L))
-    events.toDF("event_id", "ts", "user_id")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    val Seq(dir, relDir) = Seq("graft-exposure", "graft-exposure-rel").map { t =>
+      val d = java.nio.file.Files.createTempDirectory(t).toString
+      events.toDF("event_id", "ts", "user_id")
+        .write.mode("overwrite").parquet(s"$d/events.parquet")
+      d
+    }
     val ckpt = java.nio.file.Files.createTempDirectory("graft-exposure-ckpt").toString
-    spark.sparkContext.setCheckpointDir(ckpt)
     val local = graft.operators.Queries.exposureFrame(spark, dir).collect().toSeq
-    val rel = graft.operators.Queries
-      .exposureFrame(spark, dir, reliable = true).collect().toSeq
+    val rel = withCheckpointDir(ckpt)(
+      graft.operators.Queries.exposureFrame(spark, relDir).collect().toSeq)
     assert(rel == local,
       s"reliable-checkpoint exposure diverged from the local tier: $rel vs $local")
     // the reliable tier actually wrote checkpoints (the availability
-    // contract: blocks on the DFS, not executor-local storage)
-    val wrote = new java.io.File(ckpt).listFiles()
-    assert(wrote != null && wrote.nonEmpty, "no reliable checkpoint was written")
+    // contract: files in the checkpoint directory, not executor-local
+    // blocks)
+    assert(filesUnder(ckpt) > 0, "no reliable checkpoint was written")
   }
 
   test("ltss_geo_exposure_filtered: a weak bridge splits the component; hops re-root in the fragments") {
@@ -1526,31 +1529,33 @@ class GeoTrajectorySpec extends SparkSpec {
   }
 
   test("convoyGroupsCoreFrame: the reliable-checkpoint tier returns the identical episodes") {
-    // the churn fixture again (A,B,C hours 10-12 with D only at 11):
-    // both fixpoints (hour labels + meta CC) run under reliable
-    // checkpoints and must reproduce the local tier bit-for-bit, with
-    // checkpoint files actually written to the DFS stand-in
-    val dir = java.nio.file.Files.createTempDirectory("graft-convoy-rel").toString
+    // the churn fixture again (A,B,C hours 10-12 with D only at 11),
+    // written twice so each tier builds its own cached hour labels: with
+    // a checkpoint directory set the meta-graph CC truncates into it and
+    // must reproduce the local tier bit-for-bit, with checkpoint files
+    // actually written to the DFS stand-in
     val events = (0 until 3).flatMap { h =>
       Seq(
         (30L + 20L * h, ts(s"2024-01-01 ${10 + h}:00:00"), 10L),
         (35L + 20L * h, ts(s"2024-01-01 ${10 + h}:10:00"), 12L),
         (40L + 20L * h, ts(s"2024-01-01 ${10 + h}:20:00"), 14L))
     } :+ ((62L, ts("2024-01-01 11:25:00"), 16L))
-    events.toDF("event_id", "ts", "user_id")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    val Seq(dir, relDir) = Seq("graft-convoy", "graft-convoy-rel").map { t =>
+      val d = java.nio.file.Files.createTempDirectory(t).toString
+      events.toDF("event_id", "ts", "user_id")
+        .write.mode("overwrite").parquet(s"$d/events.parquet")
+      d
+    }
     val ckpt = java.nio.file.Files.createTempDirectory("graft-convoy-ckpt").toString
-    spark.sparkContext.setCheckpointDir(ckpt)
     val order = Seq("group_id", "hr_start", "members").map(col)
     val local = graft.operators.Queries.convoyGroupsCoreFrame(spark, dir)
       .orderBy(order: _*).collect().toSeq
-    val rel = graft.operators.Queries
-      .convoyGroupsCoreFrame(spark, dir, reliable = true)
-      .orderBy(order: _*).collect().toSeq
+    val rel = withCheckpointDir(ckpt)(
+      graft.operators.Queries.convoyGroupsCoreFrame(spark, relDir)
+        .orderBy(order: _*).collect().toSeq)
     assert(rel == local && local.nonEmpty,
       s"reliable tier diverged from local: $rel vs $local")
-    val wrote = new java.io.File(ckpt).listFiles()
-    assert(wrote != null && wrote.nonEmpty, "no reliable checkpoint was written")
+    assert(filesUnder(ckpt) > 0, "no reliable checkpoint was written")
   }
 
   test("convoyCoreEpisodes kernel: hour gaps close episodes; min-start dedup survives a merge") {

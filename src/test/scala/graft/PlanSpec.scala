@@ -745,12 +745,45 @@ class PlanSpec extends SparkSpec {
 
   test("connected components: reliable checkpoint variant produces the same labels") {
     import spark.implicits._
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString)
-    val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("a_id", "b_id")
-    val (labels, _) = Dedup.connectedComponents(edges, reliable = true)
-    val out = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // a set checkpoint directory sends every truncation to files in it
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
+    val out = withCheckpointDir(ckpt) {
+      val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("a_id", "b_id")
+      Dedup.connectedComponents(edges)._1
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L))
+    assert(filesUnder(ckpt) > 0, "no reliable checkpoint was written")
+  }
+
+  test("bbit audit: the candidate-doc joins broadcast by size, not by hint") {
+    import org.apache.spark.sql.catalyst.plans.QueryPlan
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    // the joins that scope the audit to candidate docs (two in the
+    // query, one per consumer in the physical plan): their right side
+    // is the distinct candidate doc-id frame
+    def isDocs(p: QueryPlan[_]): Boolean = p.output.map(_.name) == Seq("doc_id")
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    def run(): (Seq[String], Seq[Boolean], BigInt) = {
+      val df = SparkEntry.queries("dedup_bbit_minhash")(spark, "/root/testdata/sf0.01")
+      val rows = df.collect().map(_.toString).toSeq
+      val size = df.queryExecution.optimizedPlan.collect {
+        case j: Join if isDocs(j.right) => j.right.stats.sizeInBytes
+      }.max
+      val broadcast = helper.collect(df.queryExecution.executedPlan) {
+        case j: BaseJoinExec if isDocs(j.right) => j.isInstanceOf[BroadcastHashJoinExec]
+      }
+      (rows, broadcast, size)
+    }
+    val (rows, broadcast, size) = run()
+    assert(broadcast.nonEmpty && broadcast.forall(identity),
+      s"the $size-byte candidate-doc frame must broadcast at sf0.01: $broadcast")
+    val (lowRows, lowBroadcast, _) =
+      withConf("spark.sql.autoBroadcastJoinThreshold", (size / 2).toString)(run())
+    assert(lowBroadcast.nonEmpty && !lowBroadcast.exists(identity),
+      s"a threshold below the frame's $size bytes must not broadcast it: $lowBroadcast")
+    assert(lowRows == rows, "the shuffled joins changed the audit's rows")
   }
 
   test("bucketed tables co-locate the fact join: no shuffle exchange on either side") {

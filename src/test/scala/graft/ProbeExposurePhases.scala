@@ -65,7 +65,7 @@ object ProbeExposurePhases {
           spark.conf.set(partsKey, parts.toString)
           val lab = t(s"$tag cc") {
             val (l, it) =
-              graft.operators.Dedup.connectedComponents(edges, reliable = false)
+              graft.operators.Dedup.connectedComponents(edges)
             println(s"  cc iterations=$it")
             l.localCheckpoint(eager = true)
           }

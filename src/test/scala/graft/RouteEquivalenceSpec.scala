@@ -2,8 +2,6 @@ package graft
 
 import scala.util.Random
 
-import java.nio.file.{Files, Paths}
-
 import graft.Routes.{Decision, Route}
 import org.apache.spark.sql.DataFrame
 
@@ -31,27 +29,12 @@ class RouteEquivalenceSpec extends SparkSpec {
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().map(_.toSeq.toList).toSeq
 
-  /** A private copy of fixture directory `d`. `CachedFrames` keys on the
-    * dataset path, so a run on a copy computes its route instead of
-    * reading a frame an earlier run cached (a second session would share
-    * Spark's cache of identical plans, and evicting its entries would
-    * drop the main session's). */
-  private def copyOf(d: String): String = {
-    val src = Paths.get(d)
-    val dst = Files.createTempDirectory("graft-route-fixture")
-    Files.walk(src).forEach { p =>
-      val t = dst.resolve(src.relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
-    }
-    dst.toString
-  }
-
   /** Runs `query` on copies of `d` with the default caps and forced
     * distributed, asserts equal rows and that `r` ran local then
     * distributed, and returns the rows. */
   private def assertRoutesAgree(r: Route, query: String, d: String): Seq[Seq[Any]] = {
     def run(): (Seq[Seq[Any]], Seq[Decision]) =
-      Routes.recorded(rows(SparkEntry.queries(query)(spark, copyOf(d))))
+      Routes.recorded(rows(SparkEntry.queries(query)(spark, fixtureCopy(d))))
     val (local, dl) = run()
     val (dist, dd) = Routes.forcedDistributed(run())
     assertRan(dl, r, "local")

@@ -37,6 +37,39 @@ trait SparkSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** `body` with the SparkContext's checkpoint directory set to `dir`,
+    * restoring the previous value (usually none) after. Every lineage
+    * cut writes files under a set directory, so one left set would
+    * switch every later suite in the JVM to them. */
+  def withCheckpointDir[T](dir: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val was = sc.getCheckpointDir
+    sc.setCheckpointDir(dir)
+    try body finally org.apache.spark.CheckpointDirs.restore(sc, was)
+  }
+
+  /** The number of regular files under `dir`, recursively. */
+  def filesUnder(dir: String): Long = {
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try s.filter(java.nio.file.Files.isRegularFile(_)).count() finally s.close()
+  }
+
+  /** A private copy of fixture directory `d`. `CachedFrames` and the
+    * materialized layouts key on the dataset path, so a run on a copy
+    * computes its frames instead of reading what an earlier run built
+    * (a second session would share Spark's cache of identical plans,
+    * and evicting its entries would drop the main session's). */
+  def fixtureCopy(d: String): String = {
+    import java.nio.file.{Files, Paths}
+    val src = Paths.get(d)
+    val dst = Files.createTempDirectory("graft-fixture")
+    Files.walk(src).forEach { p =>
+      val t = dst.resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+    }
+    dst.toString
+  }
+
   /** `body` with one SQL conf set, restoring its previous value after. */
   def withConf[T](key: String, value: String)(body: => T): T = {
     val was = spark.conf.getOption(key)
