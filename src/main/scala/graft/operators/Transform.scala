@@ -72,8 +72,9 @@ object Transform {
     * attributes fail JSON encoding are dropped with a warning, not
     * failed. In the Spark shape attributes arrive as text, so the analog
     * is "drop rows whose attributes are not valid JSON"; NULL attributes
-    * (no attrs dict) are kept. Apply in the ingest stream before the
-    * sink; the warn side is the caller's (foreachBatch counts drops). */
+    * (no attrs dict) are kept. The ingest stream applies it through
+    * [[eventsToLtss]]'s `observe`, whose counts carry the drops to the
+    * query's progress. */
   def validJsonAttrs(attrs: Column): Column = {
     import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
     attrs.isNull || columnOf(graft.functions.IsValidJson(expressionOf(attrs)))
@@ -91,13 +92,29 @@ object Transform {
   def encodeAttrs(attrs: Column): Column =
     to_json(attrs, Map("timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSSxxx"))
 
+  // ---------------------------------------------------------------- drops
+  /** The name of the ingest's observed metrics: each trigger's
+    * `lastProgress.observedMetrics` carries, under this name, `rows_in`,
+    * `dropped_validity` (S2), `dropped_entity_filter` (F2),
+    * `dropped_invalid_json` (P4) and `rows_out`. */
+  val ObservedName = "ltss_ingest"
+
+  private val DropReason = "__drop_reason"
+
   // ---------------------------------------------------------------- P1 (+P4)
   /** Event → LTSS row projection (reference models.py:47-72). Maps the
     * driver's `events` table onto the LTSS shape (FIXTURES.md §B):
     * entity_id := event_type '.' user_id, time := ts,
     * state := stringified value (NUL-sanitized), attributes := props.
-    */
-  def eventsToLtss(events: DataFrame, cfg: LtssConfig = LtssConfig()): DataFrame = {
+    *
+    * S2 and F2 filter the events before the projection. With `observe`
+    * (the ingest stream) P4 drops the rows whose projected attributes are
+    * not valid JSON ([[validJsonAttrs]]), and one `Dataset.observe` under
+    * [[ObservedName]] counts each reason's drops. */
+  def eventsToLtss(
+      events: DataFrame,
+      cfg: LtssConfig = LtssConfig(),
+      observe: Boolean = false): DataFrame = {
     val entityId = concat(col("event_type"), lit("."), col("user_id").cast("string"))
     // Stringify via exact DECIMAL so both engines apply one rounding rule:
     // Spark's double→decimal cast (BigDecimal.valueOf + HALF_UP) and
@@ -116,26 +133,42 @@ object Transform {
     // `abs(value) < 1e16` predicate drops it on the DuckDB side.
     val safeValue = when(abs(col("value")) < 1e16, col("value"))
     val state = sanitize(safeValue.cast("decimal(18,2)").cast("string"))
-    val base = events
+    val keyed = events
       .withColumn("entity_id", entityId)
       .withColumn("state", state)
-      .filter(validity(col("entity_id"), col("state")))
-      .filter(entityFilter(cfg, col("entity_id")))
-    val projected =
-      if (cfg.enableLocation)
-        base.select(
-          col("ts").as("time"),
-          col("entity_id"),
-          col("state"),
-          popLatLon(col("props")).as("attributes"),
-          locationStruct(col("props")).as("location"))
-      else
-        base.select(
-          col("ts").as("time"),
-          col("entity_id"),
-          col("state"),
-          col("props").as("attributes"))
-    projected
+    val valid = validity(col("entity_id"), col("state"))
+    val wanted = entityFilter(cfg, col("entity_id"))
+    def project(df: DataFrame, extra: Column*): DataFrame = {
+      val ltss =
+        if (cfg.enableLocation)
+          Seq(col("ts").as("time"), col("entity_id"), col("state"),
+            popLatLon(col("props")).as("attributes"),
+            locationStruct(col("props")).as("location"))
+        else
+          Seq(col("ts").as("time"), col("entity_id"), col("state"), col("props").as("attributes"))
+      df.select(ltss ++ extra: _*)
+    }
+    if (!observe) project(keyed.filter(valid).filter(wanted))
+    else {
+      // the reason each row is dropped for, 0 for none, counted against
+      // the first check it fails. S2 and F2 run before the projection and
+      // NULL the props of the rows they drop, so its JSON work skips them;
+      // P4 checks the projected attributes, as the reference encodes the
+      // attributes after popping lat/lon (models.py:59-60)
+      val early = keyed
+        .withColumn(DropReason, when(valid, when(wanted, 0).otherwise(2)).otherwise(1))
+        .withColumn("props", when(col(DropReason) === 0, col("props")))
+      val flagged = project(early, col(DropReason)).withColumn(DropReason,
+        when(col(DropReason) === 0 && !validJsonAttrs(col("attributes")), 3)
+          .otherwise(col(DropReason)))
+      def dropped(reason: Int) = count_if(col(DropReason) === reason)
+      flagged
+        .observe(ObservedName, count(lit(1)).as("rows_in"), dropped(1).as("dropped_validity"),
+          dropped(2).as("dropped_entity_filter"), dropped(3).as("dropped_invalid_json"),
+          dropped(0).as("rows_out"))
+        .filter(col(DropReason) === 0)
+        .drop(DropReason)
+    }
   }
 
   /** PK `(time, entity_id)` uniqueness invariant (reference

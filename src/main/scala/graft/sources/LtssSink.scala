@@ -1,6 +1,8 @@
 package graft.sources
 
 import java.sql.{Connection, DriverManager, SQLException}
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.message.StringMapMessage
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import graft.config.LtssConfig
@@ -23,6 +25,16 @@ import graft.config.LtssConfig
   *    row-per-transaction loop (__init__.py:207-218).
   */
 object LtssSink {
+
+  /** Operator-facing events (PK-conflict rounds, dropped batches, the
+    * migration sweep, bootstrap and migration notices) go to the
+    * `graft.sources.LtssSink` logger as map messages keyed by `event`. */
+  private val logger = LogManager.getLogger(getClass.getName.stripSuffix("$"))
+
+  private def event(name: String, fields: (String, Any)*): StringMapMessage =
+    fields.foldLeft(new StringMapMessage().`with`("event", name)) {
+      case (m, (k, v)) => m.`with`(k, String.valueOf(v))
+    }
 
   /** Derived chunk column (partition key), e.g. `chunk=2024-01-01` for a
     * 30-day interval. Pure epoch arithmetic — the UTC day of the chunk
@@ -377,11 +389,10 @@ object LtssSink {
             // is the expected cause, but externally-lost chunk FILES
             // look identical from here, and a silent sweep would mask
             // that loss
-            System.err.println(
-              s"[ltss-migrate] WARN chunk '$c' under $path has no data " +
-                "files in its live, staged, or retired dirs — sweeping " +
-                "the empty dirs and skipping it. If this chunk ever " +
-                "held rows, they were lost OUTSIDE this migration.")
+            logger.warn(event("migrate_sweep", "chunk" -> c, "path" -> path,
+              "message" -> ("no data files in the live, staged or retired " +
+                "dirs; sweeping the empty dirs and skipping the chunk. If " +
+                "it ever held rows, they were lost outside this migration")))
             fs.delete(staged, true)
             fs.delete(retired, true)
         }
@@ -557,10 +568,22 @@ object LtssSink {
 
   private val MarkerName = "_ltss_layout.json"
 
+  /** The marker's file system and path. A checksummed file system (the
+    * local one) is read and written through its raw file system: the
+    * marker is replaced by a rename, and a checksum file renamed after
+    * its data would fail a read caught between the two. */
+  private def markerFile(spark: org.apache.spark.sql.SparkSession, path: String) = {
+    val (fs, root) = hadoopFs(spark, path)
+    val raw = fs match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+      case f => f
+    }
+    (raw, new org.apache.hadoop.fs.Path(root, MarkerName))
+  }
+
   def readLayoutMarker(
       spark: org.apache.spark.sql.SparkSession, path: String): Option[LayoutMarker] = {
-    val (fs, root) = hadoopFs(spark, path)
-    val p = new org.apache.hadoop.fs.Path(root, MarkerName)
+    val (fs, p) = markerFile(spark, path)
     if (!fs.exists(p)) return None
     val in = fs.open(p)
     val text =
@@ -583,19 +606,31 @@ object LtssSink {
     Some(LayoutMarker(interval, keys, generation, compacting, encoding, migrating))
   }
 
+  /** Records `m` as the layout's marker: written to a hidden temp file
+    * and renamed over the old one, so a concurrent [[readLayoutMarker]]
+    * reads the old marker or the new one, never a partial file. */
   private[graft] def writeLayoutMarker(
       spark: org.apache.spark.sql.SparkSession, path: String, m: LayoutMarker): Unit = {
-    val (fs, root) = hadoopFs(spark, path)
-    val p = new org.apache.hadoop.fs.Path(root, MarkerName)
+    val (fs, p) = markerFile(spark, path)
     val keys = m.attrKeys.map { case (k, t) => s"""["$k","$t"]""" }.mkString("[", ",", "]")
     val compacting = m.compacting.map(c => s""","compacting":"$c"""").getOrElse("")
     val migrating = m.migrating.map(t => s""","migratingEncoding":"$t"""").getOrElse("")
-    val out = fs.create(p, true)
-    try out.write(
-      (s"""{"chunkTimeIntervalUs":${m.chunkTimeIntervalUs},"attrKeys":$keys""" +
-        s""","generation":${m.generation}$compacting$migrating""" +
-        s""","attributesEncoding":"${m.attributesEncoding}"}""").getBytes("UTF-8"))
+    val text = s"""{"chunkTimeIntervalUs":${m.chunkTimeIntervalUs},"attrKeys":$keys""" +
+      s""","generation":${m.generation}$compacting$migrating""" +
+      s""","attributesEncoding":"${m.attributesEncoding}"}"""
+    val tmp = new org.apache.hadoop.fs.Path(p.getParent, s".$MarkerName.${java.util.UUID.randomUUID}")
+    val out = fs.create(tmp, false)
+    try out.write(text.getBytes("UTF-8"))
     finally out.close()
+    // a local rename replaces the target atomically; HDFS refuses an
+    // existing target there, and its FileContext rename replaces it
+    // atomically instead
+    if (!fs.rename(tmp, p))
+      org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, fs.getConf)
+        .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    // a marker written before this one through the checksummed file
+    // system left a checksum that no longer matches it
+    fs.delete(new org.apache.hadoop.fs.Path(p.getParent, s".$MarkerName.crc"), false)
   }
 
   /** Time-range scan of the chunked layout with CHUNK EXCLUSION: the
@@ -715,10 +750,13 @@ object LtssSink {
       .mode(mode)
       .partitionBy("chunk")
       .parquet(path)
-    if (!legacyUnmarked)
-      writeLayoutMarker(spark, path, LayoutMarker(cfg.chunkTimeIntervalUs, attrKeys,
-        generation = marker.map(_.generation).getOrElse(0L),
-        attributesEncoding = attributesEncoding))
+    val next = LayoutMarker(cfg.chunkTimeIntervalUs, attrKeys,
+      generation = marker.map(_.generation).getOrElse(0L),
+      attributesEncoding = attributesEncoding)
+    // an append that keeps the layout's configuration keeps its marker, so
+    // a steady stream of appends never rewrites it; an overwrite deleted it
+    if (!legacyUnmarked && (mode == SaveMode.Overwrite || !marker.contains(next)))
+      writeLayoutMarker(spark, path, next)
   }
 
   /** Bucketed-table sink — the layout for REPEATED per-entity joins
@@ -1246,7 +1284,7 @@ object LtssSink {
       retryWaitMs: Long = 3000L,
       sleep: Long => Unit = Thread.sleep,
       connect: String => Connection = url => DriverManager.getConnection(url),
-      log: String => Unit = m => System.err.println(m)): Seq[String] = {
+      log: String => Unit = m => logger.warn(event("bootstrap", "message" -> m))): Seq[String] = {
     val (defAttrs, defLoc) = defaultTypesFor(cfg.dbUrl)
     val attrsType = Option(attributesType).getOrElse(defAttrs)
     var attempt = 0
@@ -1400,7 +1438,7 @@ object LtssSink {
       table: String = "ltss",
       connect: String => Connection = url => DriverManager.getConnection(url),
       dryRun: Boolean = false,
-      log: String => Unit = m => System.err.println(m)): Seq[String] = {
+      log: String => Unit = m => logger.warn(event("migrate", "message" -> m))): Seq[String] = {
     if (!cfg.dbUrl.startsWith("jdbc:postgresql")) return Nil
     val applied = scala.collection.mutable.ArrayBuffer.empty[String]
     val conn = connect(cfg.dbUrl)
@@ -1645,9 +1683,8 @@ object LtssSink {
             // before the sink. dropOnFailure keeps its availability
             // contract and drops the batch with a log line instead.
             if (dropOnFailure) {
-              System.err.println(
-                s"[ltss-sink] dropping batch after $maxConflictRounds conflict rounds " +
-                  s"(dropOnFailure): ${e.getMessage}")
+              logger.error(event("dropped_batch", "table" -> table, "cause" -> "pk_conflict",
+                "rounds" -> maxConflictRounds, "error" -> e.getMessage))
               done = true
             } else throw new IllegalStateException(
               s"PK conflicts persisted after $maxConflictRounds remainder retries — " +
@@ -1656,17 +1693,16 @@ object LtssSink {
                 "duplicates its own PKs. Not advancing past possibly-lost data.", e)
           } else {
             conflictRounds += 1
-            System.err.println(
-              s"[ltss-sink] PK conflict (replayed batch) — retrying the not-yet-committed " +
-                s"remainder (round $conflictRounds): ${e.getMessage}")
+            logger.info(event("pk_conflict_round", "table" -> table, "round" -> conflictRounds,
+              "error" -> e.getMessage))
             batch = withoutCommittedRows(batch, cfg, table)
           }
         case e: Exception if attempt < maxRetries && isTransient(e) =>
           attempt += 1; sleep(retryWaitMs)
         case e: Exception =>
           if (dropOnFailure) {
-            System.err.println(
-              s"[ltss-sink] dropping batch after $attempt retries: ${e.getMessage}")
+            logger.error(event("dropped_batch", "table" -> table, "cause" -> "write_failure",
+              "retries" -> attempt, "error" -> e.getMessage))
             done = true
           } else throw e
       }

@@ -1,7 +1,9 @@
 package graft.streaming
 
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.message.StringMapMessage
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, StreamingQueryManager, Trigger}
 import graft.config.LtssConfig
 import graft.operators.Transform
 import graft.sources.LtssSink
@@ -19,14 +21,13 @@ import graft.sources.LtssSink
   */
 object StreamingIngest {
 
+  private val log = LogManager.getLogger(getClass.getName.stripSuffix("$"))
+
   /** Streaming source of state events from a JSON directory (the test/
     * file guise of the reference's event-bus subscription, S1;
     * production guise would be Kafka with the same downstream plan). */
   def readJsonEvents(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema(graft.schema.LtssSchema.eventSchema)
-      .option("maxFilesPerTrigger", 16) // B1: the buffer knob
-      .json(dir)
+    readEvents(spark, graft.config.EventSource.JsonDir(dir))
 
   /** S1 source selection from config: ONLY the `readStream` leaf
     * changes per guise — everything downstream (S2/F2/P1–P4/K1/K2) is
@@ -72,19 +73,47 @@ object StreamingIngest {
       .select("e.*")
   }
 
-  /** events stream → LTSS rows stream (same Transform as batch — the
-    * pipeline is declarative, so batch and streaming share one plan). */
-  def toLtss(events: DataFrame, cfg: LtssConfig): DataFrame =
-    Transform.eventsToLtss(events, cfg)
+  /** Logs, for the query named `name`, each trigger that dropped rows
+    * with invalid JSON attributes (the reference's P4 warning,
+    * __init__.py:212-216): one WARN map message with the trigger's
+    * observed counts, read from its progress report. Added before the
+    * query starts, so it sees the first trigger; removes itself when the
+    * query terminates. */
+  private final class DropLog(streams: StreamingQueryManager, name: String)
+      extends StreamingQueryListener {
+    import StreamingQueryListener._
+    @volatile private var id: java.util.UUID = null
+    override def onQueryStarted(e: QueryStartedEvent): Unit =
+      if (e.name == name) id = e.id
+    override def onQueryProgress(e: QueryProgressEvent): Unit =
+      if (e.progress.name == name)
+        Option(e.progress.observedMetrics.get(Transform.ObservedName))
+          .filter(_.getAs[Long]("dropped_invalid_json") > 0)
+          .foreach { r =>
+            val m = new StringMapMessage()
+              .`with`("event", "dropped_invalid_json")
+              .`with`("query", name)
+              .`with`("batch", e.progress.batchId.toString)
+            r.schema.fieldNames.foreach(f => m.`with`(f, r.getAs[Long](f).toString))
+            log.warn(m)
+          }
+    override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+      if (e.id == id) streams.removeListener(this)
+  }
 
   /** Start the ingest: foreachBatch into the chunked parquet layout (or
     * JDBC when cfg.dbUrl is a jdbc: URL), checkpointed. JDBC targets are
     * bootstrapped first (D1/L1: connect-retry + adaptive CREATE TABLE —
     * returning from bootstrap is the readiness signal, reference
-    * __init__.py:124-162,315-344). Each batch drops rows whose
-    * attributes are not valid JSON with a warning (P4 error branch,
-    * __init__.py:212-216) before the sink; JDBC write failures propagate
-    * so the checkpoint never advances past lost data (at-least-once). */
+    * __init__.py:124-162,315-344). The events pass S2, F2 and the P4
+    * error branch (rows whose attributes are not valid JSON,
+    * __init__.py:212-216) in the streaming plan, which counts each
+    * reason's drops as the [[Transform.ObservedName]] observed metrics of
+    * the trigger's own write; a trigger with invalid-JSON drops is logged at
+    * WARN. A parquet trigger is one pass over its input. A JDBC trigger
+    * persists its rows because the retry envelope re-reads them; JDBC
+    * write failures propagate so the checkpoint never advances past lost
+    * data (at-least-once). */
   def start(
       events: DataFrame,
       cfg: LtssConfig,
@@ -122,45 +151,50 @@ object StreamingIngest {
         if (e.autoMigrate) {
           val migrated = LtssSink.checkAndMigrate(e)
           if (migrated.nonEmpty)
-            System.err.println(s"[ltss-ingest] migrated legacy table: ${migrated.mkString(", ")}")
+            log.info(new StringMapMessage()
+              .`with`("event", "migrated").`with`("steps", migrated.mkString(",")))
         } else {
           val pending = LtssSink.checkAndMigrate(e, dryRun = true)
           if (pending.nonEmpty)
-            System.err.println("[ltss-ingest] legacy schema detected; pending migrations " +
-              s"SKIPPED (set auto_migrate to apply): ${pending.mkString(", ")}")
+            log.warn(new StringMapMessage()
+              .`with`("event", "migrations_skipped").`with`("steps", pending.mkString(","))
+              .`with`("message", "legacy schema detected; set auto_migrate to apply"))
         }
         e
       } else cfg
-    toLtss(events, eff).writeStream
+    // a name per call: the drop log is added before the query has an id
+    val name = s"${Transform.ObservedName}-${java.util.UUID.randomUUID}"
+    val streams = events.sparkSession.streams
+    val drops = new DropLog(streams, name)
+    streams.addListener(drops)
+    try Transform.eventsToLtss(events, eff, observe = true).writeStream
+      .queryName(name)
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime("1 second"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        import org.apache.spark.sql.functions.col
-        batch.persist()
-        try {
-          val ok = Transform.validJsonAttrs(col("attributes"))
-          val bad = batch.filter(!ok).count()
-          if (bad > 0)
-            System.err.println(s"[ltss-ingest] dropping $bad row(s) with non-JSON attributes")
-          val valid = batch.filter(ok)
+        if (cfg.dbUrl.startsWith("jdbc:")) {
+          // writeJdbc re-reads the batch on every transient retry and
+          // every PK-conflict round; the persist keeps those re-reads
+          // off the source and out of the observed counts
+          batch.persist()
           // upsert is the CUTOVER-WINDOW sink — re-read rows land
           // ON CONFLICT DO UPDATE so the overlap converges to the
           // recomputed state instead of tripping the conflict
           // envelope (runbook step 6)
-          if (cfg.dbUrl.startsWith("jdbc:")) {
-            if (upsert)
-              LtssSink.upsertJdbc(LtssSink.locationToWkt(valid), cfg)
-            else LtssSink.writeJdbc(LtssSink.locationToWkt(valid), cfg)
-          }
-          // attrKeys: the materialized-key layout (GIN-expression-index
-          // analog) is produced BY INGEST — the sink extracts the typed
-          // attr_<key> columns per batch and the marker guard keeps every
-          // batch's configuration consistent
-          else LtssSink.writeParquet(valid, outPath, cfg, attrKeys = attrKeys)
-        } finally batch.unpersist()
+          try {
+            if (upsert) LtssSink.upsertJdbc(LtssSink.locationToWkt(batch), cfg)
+            else LtssSink.writeJdbc(LtssSink.locationToWkt(batch), cfg)
+          } finally batch.unpersist()
+        }
+        // attrKeys: the materialized-key layout (GIN-expression-index
+        // analog) is produced BY INGEST — the sink extracts the typed
+        // attr_<key> columns per batch and the marker guard keeps every
+        // batch's configuration consistent
+        else LtssSink.writeParquet(batch, outPath, cfg, attrKeys = attrKeys)
       }
       .start()
+    catch { case t: Throwable => streams.removeListener(drops); throw t }
   }
 
   /** The all-config entry: source from `cfg.eventSource`, sink from
