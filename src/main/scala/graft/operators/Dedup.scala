@@ -358,14 +358,12 @@ object Dedup {
     val nEdges = edges.count()
     if (Routes.local(Routes.Cc, nEdges)) {
       import s.implicits._
-      val lab = GraftLineage.truncate(edges.as[(Long, Long)].coalesce(1)
+      // one job: materializes the label blocks AND counts the nodes for
+      // the eager cut's honest statistics
+      return (GraftLineage.cut(edges.as[(Long, Long)].coalesce(1)
         .mapPartitions(it =>
           graft.operators.Queries.minRootComponents(it).iterator)
-        .toDF("id", "label"))
-      // one job: materializes the label blocks AND counts the nodes for
-      // the honest-stats re-attach (the convergence-job discipline)
-      val nNodes = lab.count()
-      return (GraftLineage.frameWithRowCount(lab, nNodes), 0)
+        .toDF("id", "label"), eager = true), 0)
     }
     val maxParts = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val parts = math.max(1L, math.min(maxParts.toLong, (2L * nEdges) / 100000L + 1L)).toInt
@@ -1218,6 +1216,7 @@ object Dedup {
         .join(edges.toDF("b", "c"), "b")
         .join(edges.toDF("a", "c"), Seq("a", "c"))
         .agg(count(lit(1)).as("n_triangles"))
+      // bound: two one-row aggregates
       degStats.crossJoin(broadcast(nEdges)).crossJoin(broadcast(tri))
         .select(col("n_nodes"), col("n_edges"), col("max_degree"),
           col("n_wedges"), col("n_triangles"),
@@ -1604,13 +1603,14 @@ object Dedup {
     * pipeline runs before mixing corpora — how much 3-gram content each
     * source pair shares, as distinct-shingle intersection counts and
     * Jaccard): docs reduce to distinct (source, shingle) rows, the
-    * intersection is a self-join per shingle, set sizes re-attach by
-    * broadcast. Scale shape: one distinct shuffle on (source, shingle);
-    * the per-shingle join group is bounded by |sources| (a constant), so
-    * the pair fan-out is linear in distinct shingles — never quadratic
-    * in docs; counts map-side combine and the counts table broadcasts
-    * (|sources| rows). The one double division runs on identical integer
-    * inputs on both engines. */
+    * intersection is a self-join per shingle, set sizes re-attach by a
+    * join the broadcast threshold decides. Scale shape: one distinct
+    * shuffle on (source, shingle); the per-shingle join group is bounded
+    * by |sources| (a constant), so the pair fan-out is linear in distinct
+    * shingles — never quadratic in docs; counts map-side combine and the
+    * |sources|-row counts table broadcasts while under the threshold. The
+    * one double division runs on identical integer inputs on both
+    * engines. */
   val sourceOverlap = OracleQuery(
     "source_overlap",
     (s, d) => {
@@ -1644,8 +1644,8 @@ object Dedup {
         .filter(col("a_src") < col("b_src"))
         .groupBy(col("a_src"), col("b_src"))
         .agg(count(lit(1)).as("shared"))
-        .join(broadcast(counts.toDF("a_src", "a_n")), "a_src")
-        .join(broadcast(counts.toDF("b_src", "b_n")), "b_src")
+        .join(counts.toDF("a_src", "a_n"), "a_src")
+        .join(counts.toDF("b_src", "b_n"), "b_src")
         .select(col("a_src"), col("b_src"), col("a_n"), col("b_n"), col("shared"),
           (col("shared").cast("double") /
             (col("a_n") + col("b_n") - col("shared")).cast("double")).as("jaccard"))
@@ -1980,11 +1980,12 @@ object Dedup {
     *
     * Scale shape: STRICTLY LIGHTER than the corpus-duplicate spans —
     * no corpus-wide count shuffle at all. The benchmark fp set is
-    * bounded by the benchmark suite's size (benchmarks are small by
-    * construction), so it BROADCASTS as 8-byte longs; corpus windows
-    * reduce to fps map-side and die in the broadcast semi-join unless
-    * they hit; the only shuffle is the per-doc span-merge window over
-    * the HIT windows — a vanishing fraction of the corpus. */
+    * bounded by the benchmark suite's size, so it broadcasts as 8-byte
+    * longs while under the threshold (the stand-in suite here is 1% of
+    * the corpus, so it grows with it); corpus windows reduce to fps
+    * map-side and die in the join unless they hit; the only shuffle is
+    * the per-doc span-merge window over the HIT windows — a vanishing
+    * fraction of the corpus. */
   val contaminationSpans = {
     val W = 8
     OracleQuery(
@@ -2006,7 +2007,7 @@ object Dedup {
           .filter(col("doc_id") % 100 === 0 ||
             (col("doc_id") % 100 === 50 && col("i") <= 16))
           .select(col("fp")).distinct()
-        val hits = corpus.join(broadcast(bench), "fp")
+        val hits = corpus.join(bench, "fp")
           .select(col("doc_id"), col("i"))
         mergeSpans(hits, W).orderBy(col("doc_id"), col("span_id"))
       },
@@ -2319,25 +2320,19 @@ object Dedup {
       // exact leg) otherwise each re-plan the banded self-join
       val pairs = GraftLineage.cut(
         lshPairFrame(s, d).select(col("a_id"), col("b_id")), eager = true)
-      // the candidate doc ids, cut and counted in one job: their honest
-      // row count lets autoBroadcastJoinThreshold decide the two scoping
-      // joins below — a broadcast at fixture scale, a shuffle when the
-      // candidate set outgrows the threshold (no unconditional hint)
-      val pairDocsCut = GraftLineage.cut(pairs.select(col("a_id").as("doc_id"))
+      // the candidate doc ids, one eager cut: its honest row count lets
+      // autoBroadcastJoinThreshold decide the two scoping joins below — a
+      // broadcast at fixture scale, a shuffle when the candidate set
+      // outgrows the threshold
+      val pairDocs = GraftLineage.cut(pairs.select(col("a_id").as("doc_id"))
         .union(pairs.select(col("b_id").as("doc_id")))
-        .distinct(), eager = false)
-      val pairDocs = GraftLineage.frameWithRowCount(pairDocsCut, pairDocsCut.count())
-      // signatures recompute the MinHash8 kernel over the docs frame —
-      // restrict it to the CANDIDATE docs before the kernel runs (r21):
-      // the attach joins only ever read pair docs' rows, and the two
-      // sig copies below otherwise each re-ran the md5 kernel over the
-      // whole corpus
-      val sig = minhashFrame(
-        Tables.documents(s, d).join(pairDocs, "doc_id"))
-      val aSig = sig.toDF(sig.columns.toIndexedSeq
-        .map(c => if (c == "doc_id") "a_id" else s"a_$c"): _*)
-      val bSig = sig.toDF(sig.columns.toIndexedSeq
-        .map(c => if (c == "doc_id") "b_id" else s"b_$c"): _*)
+        .distinct(), eager = true)
+      // the MinHash8 kernel runs once, over the CANDIDATE docs only: both
+      // signature attaches below read this one cut
+      val sig = GraftLineage.cut(minhashFrame(
+        Tables.documents(s, d).join(pairDocs, "doc_id")), eager = true)
+      def sigOf(side: String) = sig.toDF(sig.columns.toIndexedSeq
+        .map(c => if (c == "doc_id") s"${side}_id" else s"${side}_$c"): _*)
       def parity(c: Column): Column =
         substring(c, 8, 1).isin("1", "3", "5", "7", "9", "b", "d", "f")
       val agree8 = (0 until NumHashes)
@@ -2351,18 +2346,18 @@ object Dedup {
       // scope the exact leg to the CANDIDATE docs before any join or
       // size aggregate (r21, guide §3.2's semi-join idea): the audit
       // only reads sizes and intersections for docs that appear in a
-      // candidate pair — a broadcast-sized id set at fixture scale — so
-      // the corpus-wide shingle frame never enters the exact-leg
-      // shuffles. Values are unchanged: sz and inter are only ever
-      // consumed keyed by pair doc ids.
-      val cssh = ssh.join(pairDocs, "doc_id")
+      // candidate pair, so the corpus-wide shingle frame never enters the
+      // exact-leg shuffles. Values are unchanged: sz and inter are only
+      // ever consumed keyed by pair doc ids. One cut serves the size
+      // aggregate and both intersection legs.
+      val cssh = GraftLineage.cut(ssh.join(pairDocs, "doc_id"), eager = true)
       val sz = cssh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
       val inter = pairs
         .join(cssh.toDF("a_id", "fp"), "a_id")
         .join(cssh.toDF("b_id", "fp"), Seq("b_id", "fp"))
         .groupBy(col("a_id"), col("b_id")).agg(count(lit(1)).as("inter"))
       pairs
-        .join(aSig, "a_id").join(bSig, "b_id")
+        .join(sigOf("a"), "a_id").join(sigOf("b"), "b_id")
         .withColumn("agree8", agree8.cast("long"))
         .withColumn("agree1", agree1.cast("long"))
         .join(inter, Seq("a_id", "b_id"), "left")

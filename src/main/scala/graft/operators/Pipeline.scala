@@ -168,6 +168,7 @@ object Pipeline {
           .select(col("lang"), col("doc_id"), col("n_tokens"))
         val rates = Sampling.stratRates(
           survivors.groupBy(col("lang")).agg(count(lit(1)).as("n_lang")))
+        // bound: one row per language (closed vocabulary)
         val mixed = survivors.join(broadcast(rates), "lang")
           .filter(Sampling.stratAccept)
         val wPack = Window.partitionBy(col("lang"), col("shard")).orderBy(col("doc_id"))
@@ -257,6 +258,7 @@ object Pipeline {
           .select(col("lang"), col("doc_id"), col("n_tokens"))
         val rates = Sampling.stratRates(
           survivors.groupBy(col("lang")).agg(count(lit(1)).as("n_lang")))
+        // bound: one row per language (closed vocabulary)
         val mixed = survivors.join(broadcast(rates), "lang")
           .filter(Sampling.stratAccept)
         val wPack = Window.partitionBy(col("lang"), col("shard")).orderBy(col("doc_id"))
@@ -333,6 +335,7 @@ object Pipeline {
             col("__s.f2").as("source"))
         val rates = Sampling.stratRates(
           sv.groupBy(col("lang")).agg(count(lit(1)).as("n_lang")))
+        // bound: one row per language (closed vocabulary)
         val mixed = sv.join(broadcast(rates), "lang")
           .filter(Sampling.stratAccept)
         val qp = stage.groupBy(col("source"))

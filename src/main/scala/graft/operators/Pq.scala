@@ -144,6 +144,7 @@ object Pq {
           .partitionBy(col("vec_id")).orderBy(col("cos").desc, col("cid"))
         val aggs = count(lit(1)).as("cnt") +:
           (1 to P.subDim).map(i => sum(element_at(col("q"), i)).as(s"s$i"))
+        // bound: PqParams.k centroids
         val rows = train.crossJoin(broadcast(cents))
           .withColumn("cos", DetMath.cosinePre(
             DetMath.dotCol(col("emb"), col("ce"), P.subDim), col("nrm"), col("cn")))
@@ -203,6 +204,7 @@ object Pq {
       val best = (0 until P.m).map(m =>
         max(when(col("m") === m,
           struct(col("cos"), (lit(P.k - 1) - col("cid")).as("r")))).as(s"b$m"))
+      // bound: PqParams.m x k centroids
       withNrm.crossJoin(broadcast(cents))
         .withColumn("cos", cos)
         .groupBy(col("vec_id"))
@@ -226,6 +228,7 @@ object Pq {
         .select(col("cid").as(s"c$m"),
           DetMath.dotCol(col("ce"), col("ce"), P.subDim).as(s"sq$m")))
       (0 until P.m).foldLeft(pqCodes(s, d))((df, m) =>
+        // bound: one k-row table per subspace (PqParams.k)
         df.join(broadcast(sq(m)), s"c$m"))
         .select(col("vec_id") +: (0 until P.m).map(m => col(s"c$m")) :+
           (0 until P.m).map(m => col(s"sq$m")).reduce(_ + _).as("recon_sq"): _*)
@@ -253,6 +256,7 @@ object Pq {
       val q = Similarity.embWithCodes(s, d).filter(col("vec_id") === 0)
         .select(col("embedding").as("qe"), col("nrm").as("qn"))
       val dt = (0 until P.m).map(m => pqCentroids(s, d, m)
+        // bound: one query row (vec_id 0)
         .crossJoin(broadcast(q))
         .select(col("cid").as(s"c$m"),
           DetMath.dotCol(slice(col("qe"), P.off(m), P.subDim), col("ce"), P.subDim)
@@ -261,7 +265,9 @@ object Pq {
       val dtSum = (0 until P.m).map(m => col(s"dt$m")).reduce(_ + _)
       val sqSum = (0 until P.m).map(m => col(s"sq$m")).reduce(_ + _)
       (0 until P.m).foldLeft(pqCodes(s, d))((df, m) =>
+        // bound: one k-row ADC table per subspace (PqParams.k)
         df.join(broadcast(dt(m)), s"c$m"))
+        // bound: one query row (vec_id 0)
         .crossJoin(broadcast(q.select(col("qn"))))
         .filter(col("vec_id") =!= 0)
         .select(col("vec_id") +: (0 until P.m).map(m => col(s"c$m")) :+
@@ -415,6 +421,7 @@ object Pq {
       val probeCids = Similarity.probeCidsOf(
         Similarity.kmeansCentroids(s, d, Similarity.KmIters), q, nprobe)
       val dt = (0 until P.m).map(m => pqCentroids(s, d, m)
+        // bound: one query row (vec_id 0)
         .crossJoin(broadcast(q))
         .select(col("cid").as(s"c$m"),
           DetMath.dotCol(slice(col("qe"), P.off(m), P.subDim), col("ce"), P.subDim)
@@ -425,7 +432,9 @@ object Pq {
       val scan = s.read.parquet(ivfPqLayoutPath(s, d))
         .withColumn("cid", col("cid").cast("long")) // dir-name round-trip
         .filter(col("cid").isin(probeCids: _*) && col("vec_id") =!= 0)
+      // bound: one k-row ADC table per subspace (PqParams.k)
       (0 until P.m).foldLeft(scan)((df, m) => df.join(broadcast(dt(m)), s"c$m"))
+        // bound: one query row (vec_id 0)
         .crossJoin(broadcast(q.select(col("qn"))))
         .select(col("cid"), col("vec_id"),
           (dtSum / (col("qn") * sqrt(sqSum))).as("adc_cosine"))
@@ -498,6 +507,7 @@ object Pq {
       val emb = Similarity.embWithCodes(s, d)
       val q = emb.filter(col("vec_id") === 0)
         .select(col("embedding").as("qe"), col("nrm").as("qn"))
+      // bound: one query row (vec_id 0)
       val scored = emb.filter(col("vec_id") =!= 0).crossJoin(broadcast(q))
         .withColumn("cosine", DetMath.cosinePre(
           DetMath.dotCol(col("embedding"), col("qe"), Similarity.Dim),
@@ -512,6 +522,7 @@ object Pq {
         .filter(col("cid").isin(probeCids: _*))
         .orderBy(col("cosine").desc, col("vec_id")).limit(10).select(col("vec_id"))
       val dt = (0 until P.m).map(m => pqCentroids(s, d, m)
+        // bound: one query row (vec_id 0)
         .crossJoin(broadcast(q))
         .select(col("cid").as(s"c$m"),
           DetMath.dotCol(slice(col("qe"), P.off(m), P.subDim), col("ce"), P.subDim)
@@ -520,7 +531,9 @@ object Pq {
       val dtSum = (0 until P.m).map(m => col(s"dt$m")).reduce(_ + _)
       val sqSum = (0 until P.m).map(m => col(s"sq$m")).reduce(_ + _)
       val adc = (0 until P.m).foldLeft(pqCodes(s, d))((df, m) =>
+        // bound: one k-row ADC table per subspace (PqParams.k)
         df.join(broadcast(dt(m)), s"c$m"))
+        // bound: one query row (vec_id 0)
         .crossJoin(broadcast(q.select(col("qn"))))
         .filter(col("vec_id") =!= 0)
         .withColumn("adc_cosine", dtSum / (col("qn") * sqrt(sqSum)))
@@ -699,6 +712,7 @@ object Pq {
       val cents = Similarity.kmeansCentroids(s, d, Similarity.KmIters)
       val wq = org.apache.spark.sql.expressions.Window
         .partitionBy(col("qid")).orderBy(col("qcos").desc, col("cid"))
+      // bound: the k k-means centroids
       val probes = qs.crossJoin(broadcast(cents))
         .withColumn("qcos", DetMath.cosinePre(
           DetMath.dotCol(col("qe"), col("ce"), Similarity.Dim), col("qn"), col("cn")))
@@ -707,6 +721,7 @@ object Pq {
       // ADC dot tables per (qid, subspace, code): |queries|·M·k rows
       val P = params(s, d)
       val dt = (0 until P.m).map(m => pqCentroids(s, d, m)
+        // bound: five query rows (vec_id < 5)
         .crossJoin(broadcast(qs.select(col("qid"), col("qe"))))
         .select(col("qid"), col("cid").as(s"c$m"),
           DetMath.dotCol(slice(col("qe"), P.off(m), P.subDim), col("ce"), P.subDim)
@@ -720,7 +735,9 @@ object Pq {
       val cand = probes.join(asg, "cid").filter(col("vec_id") =!= col("qid"))
         .join(pqCodes(s, d), "vec_id")
       val scoredAdc = (0 until P.m).foldLeft(cand)((df, m) =>
+        // bound: one (query, code) table per subspace: 5 x PqParams.k rows
         df.join(broadcast(dt(m)), Seq("qid", s"c$m")))
+        // bound: five query rows (vec_id < 5)
         .join(broadcast(qs.select(col("qid"), col("qn"))), "qid")
         .withColumn("adc_cosine", dtSum / (col("qn") * sqrt(sqSum)))
       val wAdc = org.apache.spark.sql.expressions.Window
@@ -734,6 +751,7 @@ object Pq {
         .partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
       shortlist
         .join(e, "vec_id")
+        // bound: five query rows (vec_id < 5)
         .join(broadcast(qs), "qid")
         .withColumn("cosine", DetMath.cosinePre(
           DetMath.dotCol(col("embedding"), col("qe"), Similarity.Dim),
@@ -822,6 +840,7 @@ object Pq {
       val wq = org.apache.spark.sql.expressions.Window
         .partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
       val exact3 = emb.select(col("vec_id"), col("embedding"), col("nrm"))
+        // bound: five query rows (vec_id < 5)
         .crossJoin(broadcast(qs))
         .filter(col("vec_id") =!= col("qid"))
         .withColumn("cosine", DetMath.cosinePre(

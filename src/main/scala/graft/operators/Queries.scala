@@ -184,14 +184,15 @@ object Queries {
     * be ORDER-PRESERVING for pruning to work — parquet row groups are
     * skipped on the FILTERED column's min/max stats, so a hash bucket
     * would hand every row group the full string range; instead entities
-    * get a dense rank by string order (a fleet-size frame, broadcast
-    * back), days their index on a fixed epoch grid, and rows are
-    * range-partitioned + sorted by the 32-bit Morton key — each file
-    * then covers a rectangle-ish region of (entity, day) space, so BOTH
-    * an entity equality and a time range exclude most row groups by
-    * stats alone ([[graft.ZOrderSpec]] measures exactly that on the
-    * scan's own metrics). Build cost is one range-partitioned fleet
-    * rank ([[entityRanks]]) + one range shuffle, once at ingest. */
+    * get a dense rank by string order (a fleet-size eager cut, whose
+    * honest size lets the broadcast threshold decide its join), days
+    * their index on a fixed epoch grid, and rows are range-partitioned
+    * + sorted by the 32-bit Morton key — each file then covers a
+    * rectangle-ish region of (entity, day) space, so BOTH an entity
+    * equality and a time range exclude most row groups by stats alone
+    * ([[graft.ZOrderSpec]] measures exactly that on the scan's own
+    * metrics). Build cost is one range-partitioned fleet rank
+    * ([[entityRanks]]) + one range shuffle, once at ingest. */
   private[graft] def zorderWrite(l: DataFrame, p: String, parts: Int): Unit = {
     import graft.functions.ZOrder
     val (ranks, releaseRanks) = entityRanks(l, parts)
@@ -199,7 +200,7 @@ object Queries {
       floor(unix_micros(col("time")).cast("double") / 86400e6).cast("long") -
         lit(java.time.LocalDate.parse("2024-01-01").toEpochDay),
       lit(65536L))
-    try l.join(broadcast(ranks), Seq("entity_id"))
+    try l.join(ranks, Seq("entity_id"))
       .withColumn("zv",
         ZOrder.interleave16(pmod(col("ent_rank"), lit(65536L)), dayIdx))
       .repartitionByRange(parts, col("zv"))
@@ -3102,11 +3103,13 @@ object Queries {
           .groupBy(col("domain")).agg(min(col(valueCol)).as(outCol))
       }
       val med = weightedMedian(counts, "sv", "med")
+      // bound: one row per HA domain (closed vocabulary)
       val devCounts = counts.join(broadcast(med), "domain")
         .withColumn("dev", abs(col("sv") - col("med")))
         .groupBy(col("domain"), col("med"), col("dev"))
         .agg(sum(col("cnt")).as("cnt"))
       val mad = weightedMedian(devCounts, "dev", "mad")
+      // bound: one row per HA domain (closed vocabulary)
       devCounts.join(broadcast(mad), "domain")
         .groupBy(col("domain"), col("med"), col("mad"))
         .agg(sum(col("cnt")).as("n"),
@@ -5021,6 +5024,7 @@ object Queries {
       .withColumn("lat", (col("user_id") % 180 - 90).cast("double") + 0.5)
       .withColumn("lon", (col("event_id") % 360 - 180).cast("double") + 0.5)
       .select(col("user_id"), col("lat"), col("lon"))
+    // bound: the zone dimension (writeZoneLayout's contract: thousands of zones, not rows)
     val zones = broadcast(s.read.parquet(zoneLayoutPath(s, d)))
     val crossings = ringCrossings(col("lat"), col("lon"))
     fixes.join(zones,
@@ -5548,6 +5552,7 @@ object Queries {
       // full track-layout pass
       val visits = GraftLineage.cut(staypointVisits(s, d), eager = true)
       val zonesDim = s.read.parquet(zoneLayoutPath(s, d))
+      // bound: the zone dimension (writeZoneLayout's contract: thousands of zones, not rows)
       val hit = visits.join(broadcast(zonesDim),
           col("lat") >= col("lat_min") && col("lat") <= col("lat_max") &&
             col("lon") >= col("lon_min") && col("lon") <= col("lon_max"))
@@ -5714,6 +5719,7 @@ object Queries {
             lit(0L)))
         .select(col("user_id"), col("ts"), col("rn"), col("held_us"),
           col("lat"), col("lon"))
+      // bound: the zone dimension (writeZoneLayout's contract: thousands of zones, not rows)
       val zones = broadcast(s.read.parquet(zoneLayoutPath(s, d)))
       val nxt = concat(expr("slice(verts, 2, size(verts) - 1)"),
         expr("slice(verts, 1, 1)"))
@@ -5804,6 +5810,7 @@ object Queries {
         .withColumn("lat", (col("user_id") % 180 - 90).cast("double") + 0.5)
         .withColumn("lon", (col("event_id") % 360 - 180).cast("double") + 0.5)
         .select(col("user_id"), col("lat"), col("lon"))
+      // bound: the zone dimension (writeZoneLayout's contract: thousands of zones, not rows)
       val zones = broadcast(s.read.parquet(zoneLayoutPath(s, d))
         .select(col("zone_id"), col("name"), col("verts")))
       val nxt = concat(expr("slice(verts, 2, size(verts) - 1)"),
@@ -6435,6 +6442,7 @@ object Queries {
           sum(when(col("cls") === "string", 1L).otherwise(0L)).as("n_string"),
           sum(when(col("cls") === "bool", 1L).otherwise(0L)).as("n_bool"),
           sum(when(col("cls") === "array", 1L).otherwise(0L)).as("n_array"))
+        // bound: a one-row aggregate
         .crossJoin(broadcast(tot))
         .withColumn("share",
           col("n_present").cast("double") / col("n_rows").cast("double"))

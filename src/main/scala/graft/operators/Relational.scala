@@ -60,7 +60,8 @@ object Relational {
       |ORDER BY l_returnflag, l_linestatus""".stripMargin))
 
   /** TPC-H Q3-shaped: segment-filtered 3-way join, top-10 by revenue.
-    * `customer` is broadcast (small dim). */
+    * A market segment of `customer` grows with the data, so the broadcast
+    * threshold decides its join. */
   val q3 = OracleQuery(
     "q3_topk",
     (s, d) => {
@@ -69,7 +70,7 @@ object Relational {
       val l = Tables.lineitem(s, d).filter(col("l_shipdate") > "1999-01-01")
         .withColumn("rev", dec2(col("l_extendedprice")) * (oneDec - dec4disc(col("l_discount"))))
       l.join(o, l("l_orderkey") === o("o_orderkey"))
-        .join(broadcast(c), o("o_custkey") === c("c_custkey"))
+        .join(c, o("o_custkey") === c("c_custkey"))
         .groupBy(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
         .agg(sum(col("rev")).cast("double").as("revenue"))
         .orderBy(col("revenue").desc, col("o_orderkey"))
@@ -85,7 +86,8 @@ object Relational {
       |LIMIT 10""".stripMargin))
 
   /** TPC-H Q5-shaped: 6-way join, revenue per nation in one region.
-    * region/nation/supplier are broadcast. */
+    * region and nation are broadcast; `supplier` grows with the data, so
+    * the threshold decides its join. */
   val q5 = OracleQuery(
     "q5_region",
     (s, d) => {
@@ -97,9 +99,11 @@ object Relational {
         .withColumn("rev", dec2(col("l_extendedprice")) * (oneDec - dec4disc(col("l_discount"))))
       val sup = Tables.supplier(s, d)
       l.join(o, l("l_orderkey") === o("o_orderkey"))
-        .join(broadcast(sup), l("l_suppkey") === sup("s_suppkey"))
+        .join(sup, l("l_suppkey") === sup("s_suppkey"))
         .join(c, o("o_custkey") === c("c_custkey") && sup("s_nationkey") === c("c_nationkey"))
+        // bound: TPC-H nation (25 rows) and region (5 rows)
         .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
+        // bound: TPC-H region (5 rows)
         .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
         .groupBy(col("n_name"))
         .agg(sum(col("rev")).cast("double").as("revenue"))
@@ -287,7 +291,7 @@ object Relational {
     (s, d) => {
       val p = Tables.part(s, d).filter(col("p_brand").isin("Brand#12", "Brand#23"))
       Tables.lineitem(s, d).filter(col("l_quantity") < 10.0)
-        .join(broadcast(p), col("l_partkey") === col("p_partkey"))
+        .join(p, col("l_partkey") === col("p_partkey"))
         .groupBy(col("p_brand"))
         .agg(count(lit(1)).as("n"), sum(dec2(col("l_extendedprice"))).cast("double").as("s"))
         .orderBy(col("p_brand"))

@@ -94,6 +94,7 @@ object Retrieval {
             lit(9L) * col("dl") * col("n_docs"))).cast("double"))),
       lit(0.0d))
     post.join(dfreq, "tok")
+      // bound: the index's one-row stats file
       .crossJoin(broadcast(stats))
       .groupBy(col("doc_id"))
       .agg((term(terms(0)) + term(terms(1)) + term(terms(2))).as("score"))
@@ -196,6 +197,7 @@ object Retrieval {
       val q = emb.filter(col("vec_id") === 0)
         .select(col("embedding").as("qe"), col("nrm").as("qn"))
       val cos = emb.filter(col("vec_id") =!= 0)
+        // bound: one query row (vec_id 0)
         .crossJoin(broadcast(q))
         .withColumn("cosine", graft.functions.DetMath.cosinePre(
           graft.functions.DetMath.dotCol(col("embedding"), col("qe"), dim),
@@ -694,6 +696,7 @@ object Retrieval {
         .select(col("doc_id").as("probe_id"), col("sh"), col("df"))
       val cand = qt
         .join(pairs.select(col("doc_id").as("cand_id"), col("sh")), "sh")
+        // bound: a one-row aggregate
         .crossJoin(broadcast(nDocs))
         .groupBy(col("probe_id"), col("cand_id"))
         .agg(sum(expr("(n_docs * 1000) div df")).as("score"),

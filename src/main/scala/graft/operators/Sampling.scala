@@ -234,6 +234,7 @@ object Sampling {
       val docs = Tables.documents(s, d)
       val counts = docs.groupBy(col("lang")).agg(count(lit(1)).as("n_lang"))
       val rates = stratRates(counts)
+      // bound: one row per language (closed vocabulary)
       docs.join(broadcast(rates), "lang")
         .filter(stratAccept)
         .groupBy(col("lang"), col("n_lang"), col("thr"))
@@ -327,6 +328,7 @@ object Sampling {
       val target = docBuckets.filter(col("source") === ImportanceTarget)
         .groupBy(col("b")).agg(sum(col("c")).as("t"))
       docBuckets
+        // bound: 256 buckets (two hex digits of md5)
         .join(broadcast(target), Seq("b"), "left")
         .groupBy(col("doc_id"), col("source"))
         .agg(sum(col("c") * coalesce(col("t"), lit(0L))).as("affinity"),

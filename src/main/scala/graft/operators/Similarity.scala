@@ -110,6 +110,7 @@ object Similarity {
       val q = emb.filter(col("vec_id") === 0)
         .select(col("embedding").as("qe"), col("nrm").as("qn"))
       emb.filter(col("vec_id") =!= 0)
+        // bound: one query row (vec_id 0)
         .crossJoin(broadcast(q))
         .withColumn("cosine", DetMath.cosinePre(
           DetMath.dotCol(col("embedding"), col("qe"), Dim), col("nrm"), col("qn")))
@@ -150,6 +151,7 @@ object Similarity {
   private def assignTo(emb: DataFrame, cents: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("vec_id")).orderBy(col("cos").desc, col("cid"))
+    // bound: the k centroids of the call
     emb.crossJoin(broadcast(cents))
       .withColumn("cos", DetMath.cosinePre(
         DetMath.dotCol(col("embedding"), col("ce"), Dim), col("nrm"), col("cn")))
@@ -438,6 +440,7 @@ object Similarity {
       s.read.parquet(ivfLayoutPath(s, d))
         .withColumn("cid", col("cid").cast("long"))
         .filter(col("cid").isin(probeCids: _*) && col("vec_id") =!= 0)
+        // bound: one query row (vec_id 0)
         .crossJoin(broadcast(q))
         .withColumn("cosine", DetMath.cosinePre(
           DetMath.dotCol(col("embedding"), col("qe"), Dim), col("nrm"), col("qn")))
@@ -469,6 +472,7 @@ object Similarity {
     * a k-row driver argmax shared by the probe queries and the recall
     * test, so the production path and its pin use one selection rule. */
   private[graft] def probeCidsOf(cents: DataFrame, q: DataFrame, nprobe: Int): Seq[Long] =
+    // bound: one query row (the call takes a 1-row frame)
     cents.crossJoin(broadcast(q))
       .withColumn("qcos", DetMath.cosinePre(
         DetMath.dotCol(col("ce"), col("qe"), Dim), col("cn"), col("qn")))
@@ -490,6 +494,7 @@ object Similarity {
     val cids = probeCidsOf(cents, q, nprobe)
     assignTo(emb, cents)
       .filter(col("cid").isin(cids: _*) && col("vec_id") =!= 0)
+      // bound: one query row (vec_id 0)
       .crossJoin(broadcast(q))
       .withColumn("cosine", DetMath.cosinePre(
         DetMath.dotCol(col("embedding"), col("qe"), Dim), col("nrm"), col("qn")))
@@ -528,6 +533,7 @@ object Similarity {
         .withColumn("cid", col("cid").cast("long"))
         .filter(col("cid").isin(probeCids: _*) && col("vec_id") =!= 0
           && pmod(col("label"), lit(2)) === 0)
+        // bound: one query row (vec_id 0)
         .crossJoin(broadcast(q))
         .withColumn("cosine", DetMath.cosinePre(
           DetMath.dotCol(col("embedding"), col("qe"), Dim), col("nrm"), col("qn")))
@@ -901,6 +907,7 @@ object Similarity {
         bit_count(col("w0").bitwiseXOR(col("qw0"))) +
           bit_count(col("w1").bitwiseXOR(col("qw1")))
       val cand = packed.filter(col("vec_id") =!= 0)
+        // bound: one query row (vec_id 0)
         .crossJoin(broadcast(q))
         .withColumn("hamming", hamming)
         .orderBy(col("hamming"), col("vec_id"))
@@ -950,6 +957,7 @@ object Similarity {
       import s.implicits._
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
+      // bound: one query row (vec_id 0)
       val base = emb.filter(col("vec_id") =!= 0).crossJoin(broadcast(q))
       def top10(m: Int) = base
         .withColumn("pcos", DetMath.cosinePre(
@@ -1068,6 +1076,7 @@ object Similarity {
         .orderBy(col("cosine").desc, col("vec_id"))
       val wQ = org.apache.spark.sql.expressions.Window
         .partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
+      // bound: three query rows (vec_id < 3)
       emb.crossJoin(broadcast(qs))
         .filter(col("vec_id") =!= col("qid"))
         .withColumn("cosine", DetMath.cosinePre(
@@ -1205,6 +1214,7 @@ object Similarity {
         .orderBy(col("cosine"), col("vec_id"))
       val wL = org.apache.spark.sql.expressions.Window
         .partitionBy(col("label")).orderBy(col("cosine"), col("vec_id"))
+      // bound: one centroid per class label (closed vocabulary)
       emb.join(broadcast(cent), "label")
         .withColumn("cosine", DetMath.cosinePre(
           DetMath.dotCol(col("embedding"), col("ce"), Dim), col("nrm"), col("cn")))
@@ -1319,6 +1329,7 @@ object Similarity {
       val emb = embNorm(s, d)
       val q = emb.filter(col("vec_id") === 0)
         .select(col("embedding").as("qe"), col("nrm").as("qn"))
+      // bound: one query row (vec_id 0)
       val pool = emb.filter(col("vec_id") =!= 0).crossJoin(broadcast(q))
         .withColumn("rel", DetMath.cosinePre(
           DetMath.dotCol(col("embedding"), col("qe"), Dim), col("nrm"), col("qn")))
@@ -1330,6 +1341,7 @@ object Similarity {
         col("nrm").as("nb"))
       val relMap = pool.select(col("vec_id"), col("rel")).collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      // bound: the 20-row LIMIT of the relevance pool
       val sims = a.crossJoin(broadcast(b)).filter(col("ai") =!= col("bi"))
         .select(col("ai"), col("bi"), DetMath.cosinePre(
           DetMath.dotCol(col("ea"), col("eb"), Dim), col("na"), col("nb")).as("sim"))
@@ -1398,6 +1410,7 @@ object Similarity {
       val q = emb.filter(col("vec_id") < 3)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nrm").as("qn"))
       emb.filter(col("vec_id") >= 3)
+        // bound: three query rows (vec_id < 3)
         .crossJoin(broadcast(q))
         .withColumn("cosine", DetMath.cosinePre(
           DetMath.dotCol(col("embedding"), col("qe"), Dim), col("nrm"), col("qn")))
@@ -1440,6 +1453,7 @@ object Similarity {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("qid")).orderBy(col("cosine").desc, col("vec_id"))
       emb.filter(col("vec_id") >= 3 && pmod(col("label"), lit(2)) === 0)
+        // bound: three query rows (vec_id < 3)
         .crossJoin(broadcast(q))
         .withColumn("cosine", DetMath.cosinePre(
           DetMath.dotCol(col("embedding"), col("qe"), Dim), col("nrm"), col("qn")))
@@ -1482,6 +1496,7 @@ object Similarity {
       val q = emb.filter(col("vec_id") === 0)
         .select(col("embedding").as("qe"), col("nrm").as("qn"))
       val bf = emb.filter(col("vec_id") =!= 0 && pmod(col("label"), lit(2)) === 0)
+        // bound: one query row (vec_id 0)
         .crossJoin(broadcast(q))
         .withColumn("cosine", DetMath.cosinePre(
           DetMath.dotCol(col("embedding"), col("qe"), Dim), col("nrm"), col("qn")))

@@ -379,8 +379,8 @@ object TextOps {
     * when it shares any distinct 3-word shingle with the benchmark set
     * (here the deterministic pseudo-benchmark doc_id % 100 == 0; in
     * production a separate table). Scale shape: distinct shingles
-    * explode once per side, the benchmark side is tiny and broadcasts,
-    * and the overlap count is one map-side-combined aggregation — no
+    * explode once per side, the benchmark side broadcasts while it is
+    * under the threshold, and the overlap count is one map-side-combined aggregation — no
     * quadratic pass, no full-corpus shuffle of the text. */
   /** Distinct per-doc 3-gram shingles via the native ShinglesK kernel
     * (byte-span grams, no interpreted HOF), split into the benchmark
@@ -432,7 +432,7 @@ object TextOps {
     "contamination_check",
     (s, d) => {
       val (corpus, bench) = contaminationShingles(s, d)
-      val hits = corpus.join(broadcast(bench), "sh")
+      val hits = corpus.join(bench, "sh")
         .groupBy(col("doc_id")).agg(count(lit(1)).as("n_overlap"))
       contaminationReport(s, d, hits)
     },
@@ -546,6 +546,7 @@ object TextOps {
       pairs.join(cnt, "tok")
         .groupBy(col("doc_id"))
         .agg(sum(col("k") * col("cnt")).as("cnt_sum"), sum(col("k")).as("n_tokens"))
+        // bound: a one-row aggregate
         .crossJoin(broadcast(tot))
         .select(col("doc_id"), col("n_tokens"),
           (col("cnt_sum").cast("double") /
@@ -1023,8 +1024,8 @@ object TextOps {
       counts.toDF("source_a", "tok", "ca")
         .join(counts.toDF("source_b", "tok", "cb"), "tok")
         .filter(col("source_a") < col("source_b"))
-        .join(broadcast(totals.toDF("source_a", "na")), "source_a")
-        .join(broadcast(totals.toDF("source_b", "nb")), "source_b")
+        .join(totals.toDF("source_a", "na"), "source_a")
+        .join(totals.toDF("source_b", "nb"), "source_b")
         .groupBy(col("source_a"), col("source_b"), col("na"), col("nb"))
         .agg(count(lit(1)).as("shared_tokens"),
           sum(abs(col("ca") * col("nb") - col("cb") * col("na"))).as("num_shared"),
@@ -1155,8 +1156,8 @@ object TextOps {
     * Scale: position scan is capped at the first [[MaxScan]]=12 tokens, so
     * the (source, pos, token) count is ONE combinable (map-side partial)
     * shuffle whose group space is |sources|x12x|head vocab|; the per-source
-    * prefix-length frame that comes back is |sources| rows — broadcast —
-    * and the excision itself is a single map-side projection over the
+    * prefix-length frame that comes back is |sources| rows, which the
+    * broadcast threshold takes — and the excision itself is a single map-side projection over the
     * corpus. No all-pairs stage anywhere; at 100 TB the only corpus-sized
     * exchange is the capped head-token count. */
   val boilerplate = {
@@ -1182,7 +1183,7 @@ object TextOps {
         val plen = posstat.groupBy("source").agg(
           coalesce(min(when(col("maxcnt") * 5 < col("total") * 4, col("i"))) - 1, lit(MaxScan))
             .cast("long").as("boiler_len"))
-        toks.join(broadcast(plen), "source")
+        toks.join(plen, "source")
           .select(col("doc_id"), col("source"), col("boiler_len"),
             (size(col("w")) - col("boiler_len")).cast("long").as("clean_tokens"),
             element_at(col("w"), (col("boiler_len") + 1).cast("int")).as("clean_head"),
@@ -1248,6 +1249,7 @@ object TextOps {
       val cnt = pairs.groupBy(col("tok")).agg(sum(col("k")).as("c"))
       val tot = cnt.agg(sum(col("c")).as("n_total"))
       pairs.join(cnt, "tok")
+        // bound: a one-row aggregate
         .crossJoin(broadcast(tot))
         .withColumn("bits", (length(bin(expr("n_total div c"))) - 1).cast("long"))
         .groupBy(col("doc_id"))

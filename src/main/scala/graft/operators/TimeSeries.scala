@@ -396,9 +396,9 @@ object TimeSeries {
     *
     * Scale shape: the late frame aggregates once (combinable, map-side
     * partials); the materialization is read back FILTERED to touched
-    * buckets by a broadcast semi-join (per refresh cycle the
-    * invalidation set is small by definition — were it ever corpus-
-    * sized, Spark would fall back to a shuffle join, still never a
+    * buckets by a semi-join that the broadcast threshold decides (per
+    * refresh cycle the invalidation set is small, so it broadcasts; a
+    * corpus-sized backlog of late rows shuffles instead, still never a
     * rescan of raw history); output is bounded by |touched buckets|.
     * No path re-reads the pre-cutoff raw stream. */
   private[graft] def reconcile(mat: DataFrame, late: DataFrame): DataFrame = {
@@ -410,7 +410,7 @@ object TimeSeries {
     val touched = lateAgg.select(col("entity_id"), col("bus"))
     mat.select(col("entity_id"), col("bus"), col("cnt"),
         col("ssum").cast("decimal(32,2)").as("ssum"))
-      .join(broadcast(touched), Seq("entity_id", "bus"), "left_semi")
+      .join(touched, Seq("entity_id", "bus"), "left_semi")
       .unionByName(lateAgg)
       .groupBy(col("entity_id"), col("bus"))
       .agg(sum(col("cnt")).as("n"), sum(col("ssum")).as("msum"))
@@ -1922,6 +1922,7 @@ object TimeSeries {
       .groupBy(col("domain"), col("bus")).agg(count(lit(1)).as("c"))
     val bounds = counts.agg(min(col("bus")).as("b0"), max(col("bus")).as("b1"))
     val grid = counts.select(col("domain")).distinct()
+      // bound: a one-row aggregate
       .crossJoin(broadcast(bounds))
       .select(col("domain"),
         explode(sequence(col("b0"), col("b1"), lit(widthUs))).as("bus"))
@@ -1938,7 +1939,9 @@ object TimeSeries {
         && col("da") < col("db"))
       .groupBy(col("da"), col("db"), col("lag"))
       .agg(sum(col("deva") * col("devb")).as("num"), count(lit(1)).as("n_pairs"))
+      // bound: one row per HA domain (closed vocabulary)
       .join(broadcast(energy.select(col("domain").as("da"), col("en").as("ea"))), Seq("da"))
+      // bound: one row per HA domain (closed vocabulary)
       .join(broadcast(energy.select(col("domain").as("db"), col("en").as("eb"))), Seq("db"))
       .select(col("da"), col("db"), col("lag"), col("n_pairs"),
         when(col("ea") > 0 && col("eb") > 0,

@@ -1,9 +1,13 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SortOrder
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
-import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection, UnknownPartitioning}
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSession}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** The one module that cuts lineage, and the lineage/statistics surgery
   * for iterative loops — the one place this repo reaches into Spark's
@@ -17,9 +21,14 @@ import org.apache.spark.sql.execution.LogicalRDD
   * recomputing; a cluster deployment sets the directory (SCALING.md
   * "Lineage cuts and executor loss" lists every cut site).
   *
-  * [[cut]] is `Dataset.localCheckpoint`/`checkpoint`: it keeps the
-  * origin plan's statistics, for shared intermediates and the
-  * determinism pin of entity ranks.
+  * [[cut]] is `Dataset.localCheckpoint`/`checkpoint`, for shared
+  * intermediates and the determinism pin of entity ranks. An EAGER cut
+  * counts its rows in the job that materializes it and carries HONEST
+  * statistics (`rowCount`, rows × flat row width), so
+  * `autoBroadcastJoinThreshold` decides every join against it on its real
+  * size: a cut keeps its origin plan's estimate otherwise, and that can be
+  * five orders of magnitude off (a distinct over a cut read 1.6 GB for
+  * 12 KB of rows). A lazy cut keeps the origin statistics.
   *
   * [[truncate]] is the per-round cut of fixpoint loops (r19, found by
   * the folded-10× convoy probe melting the driver): the built-in
@@ -41,68 +50,82 @@ import org.apache.spark.sql.execution.LogicalRDD
   * truncated frame won't auto-broadcast (size reads as leaf-default) —
   * right INSIDE a hand-partitioned fixpoint loop, its only caller.
   *
-  * [[frameWithRowCount]] is the other half of that trade (r19 VERDICT
-  * finding #1: `dedup_semantic` lost its label-frame auto-broadcast and
-  * regressed 60%): once the caller knows the exact row count,
-  * re-attaching an honest `Statistics(rows × width, rows)` lets
-  * Catalyst auto-broadcast a dimension-sized frame at every consumer —
-  * and, just as honestly, refuse to broadcast a corpus-sized one. */
+  * [[frameWithRowCount]] is the connected-components half of that trade
+  * (r19 VERDICT finding #1: `dedup_semantic` lost its label-frame
+  * auto-broadcast and regressed 60%): the loop's convergence job already
+  * counts the labels, and re-attaching the same honest statistics an
+  * eager cut carries lets Catalyst broadcast a dimension-sized label
+  * frame — and refuse a corpus-sized one. */
 object GraftLineage {
 
-  /** The partitioning a `LogicalRDD` can carry — a
-    * `PartitioningCollection` (join outputs) narrows to its first
-    * member, the rule `Dataset.checkpoint` historically applied. An
-    * ADAPTIVE plan degrades to unknown: AQE may still replan its
-    * exchanges (coalesce partitions, demote a shuffle) after we read
-    * the declared partitioning, and a leaf that over-promises lets
+  /** The partitioning and ordering a `LogicalRDD` over `physical` can
+    * carry — a `PartitioningCollection` (join outputs) narrows to its
+    * first member, the rule `Dataset.checkpoint` historically applied. An
+    * ADAPTIVE plan degrades to unknown and unordered: AQE may still replan
+    * its exchanges (coalesce partitions, demote a shuffle) after we read
+    * the declared layout, and a leaf that over-promises lets
     * EnsureRequirements skip an exchange the data actually needs. The
     * fixpoint loops all run under `withAqeOff`, so they keep the
     * preserved partitioning where it matters. */
-  private def declaredPartitioning(
-      physical: org.apache.spark.sql.execution.SparkPlan): Partitioning =
-    physical match {
-      case _: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning(0)
-      case p => firstLeaf(p.outputPartitioning)
-    }
+  private def layout(physical: SparkPlan): (Partitioning, Seq[SortOrder]) = physical match {
+    case _: AdaptiveSparkPlanExec => (UnknownPartitioning(0), Nil)
+    case p => (firstLeaf(p.outputPartitioning), p.outputOrdering)
+  }
 
   private def firstLeaf(p: Partitioning): Partitioning = p match {
     case pc: PartitioningCollection => firstLeaf(pc.partitionings.head)
     case other => other
   }
 
-  /** The deployment set a checkpoint directory: cuts go to it. */
-  private def toDir(s: SparkSession): Boolean =
-    s.sparkContext.getCheckpointDir.isDefined
+  /** `rdd` marked for a cut in the deployment's tier: files in the
+    * checkpoint directory when one is set, executor-local blocks
+    * otherwise. */
+  private def marked(rdd: RDD[InternalRow], s: SparkSession): RDD[InternalRow] = {
+    if (s.sparkContext.getCheckpointDir.isDefined) rdd.checkpoint() else rdd.localCheckpoint()
+    rdd
+  }
 
   private def rebuild(
       df: Dataset[Row], stats: Option[Statistics], mark: Boolean): Dataset[Row] = {
     val s = df.sparkSession.asInstanceOf[ClassicSession]
     val qe = df.queryExecution
-    val physical = qe.executedPlan
     // copy before the block manager sees the rows: unsafe rows are
     // reused buffers, the same defensive copy Dataset.checkpoint makes
-    val rdd = if (!mark) qe.toRdd else {
-      val r = qe.toRdd.map(_.copy())
-      if (toDir(s)) r.checkpoint() else r.localCheckpoint()
-      r
-    }
-    val ordering = physical match { // same AQE caveat as the partitioning
-      case _: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        Nil
-      case p => p.outputOrdering
-    }
-    val plan = LogicalRDD(
-      qe.analyzed.output, rdd, declaredPartitioning(physical),
-      ordering, isStreaming = false, None)(s, stats, None)
-    ClassicDataset.ofRows(s, plan)
+    val rdd = if (mark) marked(qe.toRdd.map(_.copy()), s) else qe.toRdd
+    val (partitioning, ordering) = layout(qe.executedPlan)
+    ClassicDataset.ofRows(s, LogicalRDD(qe.analyzed.output, rdd, partitioning, ordering,
+      isStreaming = false, None)(s, stats, None))
   }
 
-  /** `df` with its lineage cut, exactly `Dataset.checkpoint(eager)`
-    * (directory set) or `Dataset.localCheckpoint(eager)`: origin
-    * statistics kept, a lazy cut materialized by the next job. */
-  def cut(df: Dataset[Row], eager: Boolean): Dataset[Row] =
-    if (toDir(df.sparkSession)) df.checkpoint(eager) else df.localCheckpoint(eager)
+  /** `df` with its lineage cut: `Dataset.checkpoint(eager)` when a
+    * checkpoint directory is set, `Dataset.localCheckpoint(eager)`
+    * otherwise. A lazy cut keeps the origin statistics and is
+    * materialized by the next job. An eager cut runs the built-in's one
+    * job and builds its leaf, and counts the rows in that job for honest
+    * statistics. */
+  def cut(df: Dataset[Row], eager: Boolean): Dataset[Row] = {
+    val d = df.asInstanceOf[ClassicDataset[Row]]
+    val s = d.sparkSession
+    if (!eager) return if (s.sparkContext.getCheckpointDir.isDefined) d.checkpoint(false)
+      else d.localCheckpoint(false)
+    val rows = s.sparkContext.longAccumulator
+    SQLExecution.withNewExecutionId(d.queryExecution, Some("checkpoint")) {
+      // a result-stage accumulator: retried and speculative attempts do
+      // not add to it, so the count is exact
+      val rdd = marked(d.queryExecution.executedPlan.execute()
+        .map { r => rows.add(1L); r.copy() }, s)
+      rdd.doCheckpoint() // the eager job
+      val leaf = LogicalRDD.fromDataset(rdd, d, isStreaming = false)
+      ClassicDataset.ofRows(s,
+        leaf.copy()(s, Some(honest(d.schema, rows.value)), Some(leaf.constraints)))
+    }
+  }
+
+  /** `rows` rows of `schema`: size = rows × flat row width from the
+    * schema's default sizes. */
+  private def honest(schema: org.apache.spark.sql.types.StructType, rows: Long): Statistics =
+    Statistics(rowCount = Some(BigInt(math.max(0L, rows))), sizeInBytes =
+      BigInt(math.max(1L, rows * (8L + schema.map(_.dataType.defaultSize).sum))))
 
   /** `df` truncated: its RDD marked for checkpointing (materialized
     * lazily by the caller's next job) and wrapped in a new `LogicalRDD`
@@ -112,17 +135,13 @@ object GraftLineage {
   def truncate(df: Dataset[Row]): Dataset[Row] = rebuild(df, None, mark = true)
 
   /** `df` as a new `LogicalRDD` leaf (no checkpoint marking — the
-    * plan usually already sits on truncated blocks) carrying HONEST
-    * statistics for a known row count (size = rows × flat row width
-    * from the schema's default sizes) — the post-convergence re-attach
-    * that restores auto-broadcast for dimension-sized results without
-    * reviving the in-loop compounding. */
-  def frameWithRowCount(df: Dataset[Row], rows: Long): Dataset[Row] = {
-    val width = 8L + df.schema.map(_.dataType.defaultSize.toLong).sum
-    rebuild(df, Some(Statistics(
-      sizeInBytes = BigInt(math.max(1L, rows * width)),
-      rowCount = Some(BigInt(math.max(0L, rows))))), mark = false)
-  }
+    * plan already sits on truncated blocks) carrying the honest
+    * statistics of an eager [[cut]] for a known row count — the
+    * post-convergence re-attach of connected components, which restores
+    * auto-broadcast for dimension-sized labels without reviving the
+    * in-loop compounding. */
+  def frameWithRowCount(df: Dataset[Row], rows: Long): Dataset[Row] =
+    rebuild(df, Some(honest(df.schema, rows)), mark = false)
 
   /** Eagerly free the block storage behind a [[cut]] frame.
     * `Dataset.unpersist` is a NO-OP for these: the blocks belong to the

@@ -39,6 +39,38 @@ class LineageSpec extends SparkSpec {
     assert(filesUnder(ckpt) == after, "checkpoint files written with no directory set")
   }
 
+  /** 100 of 100 000 rows: the origin plan estimates the filter at the
+    * size of the whole range. */
+  private def sparse = spark.range(100000).toDF("x").filter("x % 1000 = 0")
+
+  test("an eager cut reports its exact row count; a lazy cut keeps the origin estimate") {
+    val cut = GraftLineage.cut(sparse, eager = true)
+    val stats = cut.queryExecution.optimizedPlan.stats
+    assert(stats.rowCount.contains(BigInt(100)))
+    assert(stats.sizeInBytes == BigInt(100 * (8 + 8)), "rows × (8 + the long's 8 bytes)")
+    assert(cut.count() == 100)
+    val lazyCut = GraftLineage.cut(sparse, eager = false)
+    assert(lazyCut.queryExecution.optimizedPlan.stats.sizeInBytes ==
+      sparse.queryExecution.optimizedPlan.stats.sizeInBytes)
+  }
+
+  test("an eager cut runs one job and keeps the built-in checkpoint's leaf") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    val (cut, jobs) = jobsOf(GraftLineage.cut(sparse, eager = true))
+    assert(jobs == 1, s"the eager cut ran $jobs jobs")
+    val (builtIn, builtInJobs) = jobsOf(sparse.localCheckpoint(eager = true))
+    assert(builtInJobs == 1)
+    def leaf(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed match {
+      case l: LogicalRDD => // attribute ids differ between the two frames
+        s"${l.outputPartitioning} ${l.outputOrdering}".replaceAll("#\\d+", "")
+      case other => fail(s"not a checkpoint leaf: $other")
+    }
+    assert(leaf(cut) == leaf(builtIn))
+    assert(cut.collect().toSeq.map(_.getLong(0)).sorted ==
+      builtIn.collect().toSeq.map(_.getLong(0)).sorted)
+  }
+
   test("release frees the blocks Dataset.unpersist cannot") {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val df = GraftLineage.cut(spark.range(1000).toDF("x"), eager = true)

@@ -756,34 +756,161 @@ class PlanSpec extends SparkSpec {
     assert(filesUnder(ckpt) > 0, "no reliable checkpoint was written")
   }
 
-  test("bbit audit: the candidate-doc joins broadcast by size, not by hint") {
-    import org.apache.spark.sql.catalyst.plans.QueryPlan
-    import org.apache.spark.sql.catalyst.plans.logical.Join
-    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
-    // the joins that scope the audit to candidate docs (two in the
-    // query, one per consumer in the physical plan): their right side
-    // is the distinct candidate doc-id frame
-    def isDocs(p: QueryPlan[_]): Boolean = p.output.map(_.name) == Seq("doc_id")
-    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
-    def run(): (Seq[String], Seq[Boolean], BigInt) = {
-      val df = SparkEntry.queries("dedup_bbit_minhash")(spark, "/root/testdata/sf0.01")
-      val rows = df.collect().map(_.toString).toSeq
-      val size = df.queryExecution.optimizedPlan.collect {
-        case j: Join if isDocs(j.right) => j.right.stats.sizeInBytes
-      }.max
-      val broadcast = helper.collect(df.queryExecution.executedPlan) {
-        case j: BaseJoinExec if isDocs(j.right) => j.isInstanceOf[BroadcastHashJoinExec]
-      }
-      (rows, broadcast, size)
+  /** Every query `body` executes — actions, writes and eager lineage
+    * cuts — with `body`'s result. Listener calls arrive asynchronously;
+    * once a marker query run after `body` has been seen, all of `body`'s
+    * have been. */
+  private def executionsOf[T](body: => T)
+      : (T, Seq[org.apache.spark.sql.execution.QueryExecution]) = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val marker = s"marker_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    def isMarker(qe: QueryExecution) = qe.analyzed.output.map(_.name) == Seq(marker)
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    val (rows, broadcast, size) = run()
-    assert(broadcast.nonEmpty && broadcast.forall(identity),
-      s"the $size-byte candidate-doc frame must broadcast at sf0.01: $broadcast")
-    val (lowRows, lowBroadcast, _) =
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      spark.range(1).toDF(marker).collect()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.stream().anyMatch(isMarker(_)) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.stream().anyMatch(isMarker(_)), "the listener never saw the marker query")
+      import scala.jdk.CollectionConverters._
+      (out, seen.asScala.toSeq.filterNot(isMarker))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Every physical node of an executed plan, once each: through AQE's
+    * final plan, query stages, reused exchanges and write commands, but
+    * not into cached relations, which an earlier query built. */
+  private def nodesOf(root: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
+    def walk(p: SparkPlan): Seq[SparkPlan] = if (!seen.add(p)) Nil else {
+      val next = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case r: ReusedExchangeExec => Seq(r.child)
+        case c: CommandResultExec => Seq(c.commandPhysicalPlan)
+        case _ => p.children
+      }
+      p +: next.flatMap(walk)
+    }
+    walk(root)
+  }
+
+  /** How the joins that match `side` (by output column names) planned:
+    * per match, whether it is a broadcast join and whether it broadcast
+    * the matching side; and the smallest size a planner saw for a
+    * matching side — its logical estimate, or the runtime size of its
+    * nearest shuffle stage, on which AQE replans. */
+  private def sideJoins(qes: Seq[org.apache.spark.sql.execution.QueryExecution],
+      side: Seq[String] => Boolean): (Seq[(Boolean, Boolean)], BigInt) = {
+    import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildSide}
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+    import org.apache.spark.sql.execution.adaptive.ShuffleQueryStageExec
+    import org.apache.spark.sql.execution.joins._
+    def names(p: org.apache.spark.sql.catalyst.plans.QueryPlan[_]) = p.output.map(_.name)
+    def logical(p: LogicalPlan): Seq[LogicalPlan] =
+      p +: (p.children ++ p.innerChildren.collect { case c: LogicalPlan => c }).flatMap(logical)
+    val estimates = qes.flatMap(qe => logical(qe.optimizedPlan)).collect {
+      case j: Join => Seq(j.left, j.right).filter(c => side(names(c))).map(_.stats.sizeInBytes)
+    }.flatten
+    val joins = qes.flatMap(qe => nodesOf(qe.executedPlan)).collect {
+      case j: BaseJoinExec if side(names(j.left)) || side(names(j.right)) => j
+    }
+    def builds(j: BaseJoinExec, b: BuildSide) =
+      (true, side(names(if (b == BuildLeft) j.left else j.right)))
+    val broadcast = joins.map {
+      case j: BroadcastHashJoinExec => builds(j, j.buildSide)
+      case j: BroadcastNestedLoopJoinExec => builds(j, j.buildSide)
+      case _ => (false, false)
+    }
+    val runtime = joins.flatMap(j => Seq(j.left, j.right).filter(c => side(names(c))))
+      .flatMap(c => nodesOf(c).collectFirst {
+        case q: ShuffleQueryStageExec if q.isMaterialized => q.getRuntimeStatistics.sizeInBytes
+      })
+    (broadcast, (estimates ++ runtime).minOption.getOrElse(BigInt(0)))
+  }
+
+  /** The threshold, not a hint, decides the joins that match `side` in
+    * `query` at sf0.01: they are broadcast joins under the default
+    * threshold (at this scale the other side may be under it too, and
+    * AQE picks the build side), they do not broadcast the side under half
+    * its size, and the rows agree. Each run reads a fresh copy of the
+    * fixture, so no layout or cached frame built under one threshold is
+    * read under the other. Returns the executions of the default run. */
+  private def thresholdDecides(query: String, side: Seq[String] => Boolean)
+      : Seq[org.apache.spark.sql.execution.QueryExecution] = {
+    def run() = executionsOf(SparkEntry.queries(query)(spark, fixtureCopy("/root/testdata/sf0.01"))
+      .collect().map(_.toString).toSeq)
+    def below(size: BigInt) =
       withConf("spark.sql.autoBroadcastJoinThreshold", (size / 2).toString)(run())
-    assert(lowBroadcast.nonEmpty && !lowBroadcast.exists(identity),
-      s"a threshold below the frame's $size bytes must not broadcast it: $lowBroadcast")
-    assert(lowRows == rows, "the shuffled joins changed the audit's rows")
+    val (rows, qes) = run()
+    val (joins, size) = sideJoins(qes, side)
+    assert(joins.nonEmpty && joins.forall(_._1),
+      s"$query: the $size-byte side's joins must broadcast at sf0.01: $joins")
+    // a side broadcast statically shows its runtime size only once a
+    // shuffled run materializes it, and AQE replans on that size
+    val (lowRows, lowQes) = {
+      val first = below(size)
+      val seen = sideJoins(first._2, side)._2
+      if (seen < size) below(seen) else first
+    }
+    val (lowJoins, lowSize) = sideJoins(lowQes, side)
+    assert(lowJoins.nonEmpty && !lowJoins.exists(_._2),
+      s"$query: a threshold below the side's $lowSize bytes must not broadcast it: $lowJoins")
+    assert(lowRows == rows, s"$query: the shuffled joins changed the rows")
+    qes
+  }
+
+  /** The joins whose broadcast the threshold decides: every side that
+    * once carried an unbounded hint, and the cut frames that feed
+    * hint-free joins. A side is named by its output columns. */
+  private val thresholdJoins: Seq[(String, String, Seq[String] => Boolean)] = Seq(
+    ("q3_topk", "the market-segment customers", _.forall(_.startsWith("c_"))),
+    ("q5_region", "supplier", _.forall(_.startsWith("s_"))),
+    ("part_join", "the brand-filtered parts", _.forall(_.startsWith("p_"))),
+    ("ltss_zorder_layout", "the entity ranks", _ == Seq("entity_id", "ent_rank")),
+    ("ltss_cagg_reconcile", "the touched buckets", _ == Seq("entity_id", "bus")),
+    ("contamination_check", "the benchmark shingles", _ == Seq("sh")),
+    ("contamination_spans", "the benchmark fingerprints", _ == Seq("fp")),
+    ("source_overlap", "the per-source counts",
+      n => n == Seq("a_src", "a_n") || n == Seq("b_src", "b_n")),
+    ("source_divergence", "the per-source totals",
+      n => n == Seq("source_a", "na") || n == Seq("source_b", "nb")),
+    ("text_boilerplate", "the per-source prefix lengths", _ == Seq("source", "boiler_len")),
+    ("source_overlap", "the cut (source, shingle) frame",
+      n => n == Seq("a_src", "sh") || n == Seq("b_src", "sh")),
+    ("ltss_kmv_merge", "the per-day legs of the cut (day, bus, h) frame",
+      n => n == Seq("day", "n_direct", "kth_direct") || n == Seq("day", "n_hours")),
+    ("ltss_geo_od_zones", "the zone hits of the cut visits",
+      _ == Seq("user_id", "t_start", "t_end", "zid")))
+
+  for ((query, what, side) <- thresholdJoins)
+    test(s"threshold decides: $query joins $what by size") {
+      thresholdDecides(query, side)
+    }
+
+  test("bbit audit: the candidate-doc joins broadcast by size, not by hint") {
+    import org.apache.spark.sql.execution.ProjectExec
+    // the candidate doc-id frame scopes the signature and shingle legs;
+    // both are cut once, so the executions evaluate MinHash8 once
+    val qes = thresholdDecides("dedup_bbit_minhash", _ == Seq("doc_id"))
+    val minhash = qes.flatMap(qe => nodesOf(qe.executedPlan)).count {
+      case p: ProjectExec =>
+        p.projectList.exists(_.exists(_.isInstanceOf[graft.functions.MinHash8]))
+      case _ => false
+    }
+    assert(minhash == 1, s"MinHash8 is evaluated in $minhash places, not one")
   }
 
   test("bucketed tables co-locate the fact join: no shuffle exchange on either side") {
