@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.GroupStateTimeout
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** Stateful streaming views over the LTSS stream — the extensions the
   * reference's append-only design leaves to the query layer (SURVEY.md
@@ -57,26 +57,75 @@ object StreamingOps {
       bd.movePointRight(2).longValueExact()
     }.toOption
 
+  /** The keyed fold every stateful twin without a timeout runs through.
+    * It groups `rows` by `key`, sorts each key's rows of one
+    * micro-batch by `order`, and hands `fold` the key, the sorted rows
+    * and the key's stored state. The state `fold` returns is stored
+    * (`None` removes it) and its rows are emitted in `mode`.
+    *
+    * `order` is the twin's total order, its batch window's ORDER BY:
+    * rows it ranks equal must be interchangeable for the fold. Then a
+    * twin's output does not depend on the order Spark fetches a batch's
+    * shuffle blocks in, and a replayed batch emits the same rows. The
+    * order is per batch only: a row behind the state's frontier in a
+    * LATER batch meets each twin's own frontier rule. */
+  private def foldSorted[T, K: Encoder, O: Ordering, S: Encoder, U: Encoder](
+      rows: Dataset[T])(key: T => K, order: T => O, mode: OutputMode)(
+      fold: (K, Seq[T], Option[S]) => (Option[S], Iterator[U])): Dataset[U] =
+    rows.groupByKey(key).flatMapGroupsWithState[S, U](mode, GroupStateTimeout.NoTimeout) {
+      (k, batch, st) =>
+        val sorted = batch.map(r => (order(r), r)).toVector.sortBy(_._1).map(_._2)
+        val (next, out) = fold(k, sorted, st.getOption)
+        next match {
+          case Some(s) => st.update(s)
+          case None => if (st.exists) st.remove()
+        }
+        out
+    }
+
   final case class LtssEvent(time: java.sql.Timestamp, entity_id: String, state: String)
+
+  /** The `(time, entity_id, state)` rows the LTSS twins fold. */
+  private def events(ltss: DataFrame): Dataset[LtssEvent] = {
+    import ltss.sparkSession.implicits._
+    ltss.select(col("time"), col("entity_id"), col("state")).as[LtssEvent]
+  }
+
+  /** LTSS twin orders: event time alone (the twin reads no state), then
+    * the state string, or the `try_cast(decimal(12,2))` cents with junk
+    * first (the batch NULLS FIRST). */
+  private val byTime: LtssEvent => Long = e => micros(e.time)
+  private val byTimeState: LtssEvent => (Long, String) = e => (micros(e.time), e.state)
+  private val byTimeCents: LtssEvent => (Long, Option[Long]) =
+    e => (micros(e.time), centsOf12_2(e.state))
+
+  /** One tracker fix, the rows the trajectory twins fold. */
+  final case class Fix(
+      time: java.sql.Timestamp, user_id: Long, event_id: Long, lat: Double, lon: Double)
+
+  private def fixes(pts: DataFrame): Dataset[Fix] = {
+    import pts.sparkSession.implicits._
+    pts.select(col("time"), col("user_id"), col("event_id"), col("lat"), col("lon")).as[Fix]
+  }
+
+  /** The batch trajectory window's total order: (µs, event_id). */
+  private val byFixTime: Fix => (Long, Long) = f => (micros(f.time), f.event_id)
+
   final case class LatestState(entity_id: String, last_time: java.sql.Timestamp, last_state: String)
 
   /** Continuously-maintained latest-state-per-entity (the streaming twin
-    * of the batch `ltss_latest` query): `mapGroupsWithState` keeps one
-    * (time, state) per entity, ties broken on state like the batch
-    * window's (time DESC, state DESC) ordering. Emit in update mode. */
+    * of the batch `ltss_latest` query): one (time, state) per entity,
+    * ties broken on state like the batch window's (time DESC, state
+    * DESC) ordering. Emits one row per touched entity in update mode. */
   def latestState(ltss: DataFrame): Dataset[LatestState] = {
     import ltss.sparkSession.implicits._
-    ltss.select(col("time"), col("entity_id"), col("state")).as[LtssEvent]
-      .groupByKey(_.entity_id)
-      .mapGroupsWithState[LatestState, LatestState](GroupStateTimeout.NoTimeout) {
-        (key, events, st) =>
-          val prev = st.getOption.map(s => LtssEvent(s.last_time, key, s.last_state))
-          val best = (events ++ prev.iterator)
-            .maxBy(e => (micros(e.time), e.state))
-          val out = LatestState(key, best.time, best.state)
-          st.update(out)
-          out
-      }
+    foldSorted(events(ltss))(_.entity_id, byTimeState, OutputMode.Update()) {
+      (key, sorted, prev: Option[LatestState]) =>
+        val best = (prev.map(s => LtssEvent(s.last_time, key, s.last_state)) ++ sorted)
+          .maxBy(byTimeState)
+        val out = LatestState(key, best.time, best.state)
+        (Some(out), Iterator.single(out))
+    }
   }
 
   /** The PK `(time, entity_id)` uniqueness invariant applied IN-STREAM
@@ -144,10 +193,10 @@ object StreamingOps {
     * bounded by the event gap, so state and output stay O(|entities|)
     * and O(observed span) at any history size.
     *
-    * Ordering contract: events are applied in event-time order WITHIN a
-    * batch; an event older than the entity's last emitted bucket cannot
-    * retro-fill (its buckets already emitted) and is dropped — the same
-    * at-most-once-per-bucket emission a live dashboard needs. Pair with
+    * Frontier rule (order (µs, state)): an event older than the
+    * entity's last emitted bucket cannot retro-fill (its buckets already
+    * emitted) and is dropped — the same at-most-once-per-bucket
+    * emission a live dashboard needs. Pair with
     * [[dedupByPkStream]] upstream and a watermark sized to the expected
     * disorder.
     *
@@ -164,14 +213,10 @@ object StreamingOps {
     * or use a windowed aggregate with a watermark instead of this op. */
   def gapfillLocfStream(ltss: DataFrame, widthUs: Long = 3600000000L): Dataset[GapfillRow] = {
     import ltss.sparkSession.implicits._
-    ltss.select(col("time"), col("entity_id"), col("state")).as[LtssEvent]
-      .groupByKey(_.entity_id)
-      .flatMapGroupsWithState[GapfillState, GapfillRow](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) { (key, events, st) =>
-        val sorted = events.toSeq.sortBy(e => (micros(e.time), e.state))
+    foldSorted(events(ltss))(_.entity_id, byTimeState, OutputMode.Append()) {
+      (key, sorted, prev: Option[GapfillState]) =>
         val out = scala.collection.mutable.ArrayBuffer.empty[GapfillRow]
-        var cur = st.getOption
+        var cur = prev
         for (e <- sorted) {
           val bus = {
             val us = micros(e.time)
@@ -196,9 +241,8 @@ object StreamingOps {
               cur = Some(GapfillState(bus, e.state))
           }
         }
-        cur.foreach(st.update)
-        out.iterator
-      }
+        (cur, out.iterator)
+    }
   }
 
   final case class InterpRow(
@@ -228,25 +272,19 @@ object StreamingOps {
   def gapfillInterpStream(
       ltss: DataFrame, widthUs: Long = 3600000000L): Dataset[InterpRow] = {
     import ltss.sparkSession.implicits._
-    ltss.select(col("time"), col("entity_id"), col("state")).as[LtssEvent]
-      .groupByKey(_.entity_id)
-      .flatMapGroupsWithState[GapfillState, InterpRow](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) { (key, events, st) =>
+    foldSorted(events(ltss))(_.entity_id, byTimeState, OutputMode.Append()) {
+      (key, sorted, prev: Option[GapfillState]) =>
+        val out = scala.collection.mutable.ArrayBuffer.empty[InterpRow]
+        // a stored carry outside the cast domain (impossible via this
+        // operator; conceivable via store surgery) degrades to "no carry"
+        // rather than poisoning every later batch
+        var cur = prev.filter(g => centsOf12_2(g.lastState).isDefined)
         // junk states SKIP (the batch twin's try_cast(decimal(12,2))
         // null-skips the same rows) instead of throwing inside the state
         // function, and accepted values enter the arithmetic ROUNDED to
         // the cast's scale — centsOf12_2 is the spec-pinned
         // acceptance-domain twin of that cast
-        val sorted = events
-          .flatMap(e => centsOf12_2(e.state).map(c => (e, c))).toSeq
-          .sortBy { case (e, _) => (micros(e.time), e.state) }
-        val out = scala.collection.mutable.ArrayBuffer.empty[InterpRow]
-        // a stored carry outside the cast domain (impossible via this
-        // operator; conceivable via store surgery) degrades to "no carry"
-        // rather than poisoning every later batch
-        var cur = st.getOption.filter(g => centsOf12_2(g.lastState).isDefined)
-        for ((e, c) <- sorted) {
+        for (e <- sorted; c <- centsOf12_2(e.state)) {
           val bus = {
             val us = micros(e.time)
             us - java.lang.Math.floorMod(us, widthUs)
@@ -274,9 +312,8 @@ object StreamingOps {
               cur = Some(GapfillState(bus, e.state))
           }
         }
-        cur.foreach(st.update)
-        out.iterator
-      }
+        (cur, out.iterator)
+    }
   }
 
   /** Per-entity reading frontier: `lastTimeUs` is event-time in epoch-µs
@@ -290,11 +327,9 @@ object StreamingOps {
     * twin of the batch `ltss_counter_rate` query's reset rule): each
     * arriving reading emits its delta vs the previous reading — a
     * decrease means the counter reset, so the new reading counts in
-    * full. State is ONE (time, value) pair per entity. Same ordering
-    * contract as [[gapfillLocfStream]]: in-order per entity (sorted
-    * within batch; readings at or behind the state's frontier are
-    * dropped — their delta already emitted). Downstream, a windowed sum
-    * over the deltas is the rate.
+    * full. State is ONE (time, value) pair per entity. Readings at or
+    * behind the state's frontier are dropped — their delta already
+    * emitted. Downstream, a windowed sum over the deltas is the rate.
     *
     * Tie rule, mirroring the batch op's (time, sv) window ordering:
     * same-timestamp readings are applied in numeric-value order and a
@@ -306,24 +341,18 @@ object StreamingOps {
     * price of at-most-once emission. */
   def counterDeltaStream(ltss: DataFrame): Dataset[CounterDelta] = {
     import ltss.sparkSession.implicits._
-    ltss.select(col("time"), col("entity_id"), col("state")).as[LtssEvent]
-      .groupByKey(_.entity_id)
-      .flatMapGroupsWithState[CounterState, CounterDelta](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) { (key, events, st) =>
+    foldSorted(events(ltss))(_.entity_id, byTimeCents, OutputMode.Append()) {
+      (key, sorted, prev: Option[CounterState]) =>
+        val out = scala.collection.mutable.ArrayBuffer.empty[CounterDelta]
+        // a stored frontier outside the cast domain (store surgery only)
+        // degrades to "no frontier" rather than poisoning later batches
+        var cur = prev.flatMap(s =>
+          centsOf12_2(s.lastState).map(c => (s.lastTimeUs, c, s.lastState)))
         // junk states SKIP (the batch twin's try_cast null-skips the same
         // rows) instead of throwing; accepted values are the cast's
         // decimal(12,2)-rounded cents, so deltas match the batch sv
         // arithmetic exactly (one closing IEEE division)
-        val sorted = events
-          .flatMap(e => centsOf12_2(e.state).map(c => (e, c))).toSeq
-          .sortBy { case (e, c) => (micros(e.time), c) }
-        val out = scala.collection.mutable.ArrayBuffer.empty[CounterDelta]
-        // a stored frontier outside the cast domain (store surgery only)
-        // degrades to "no frontier" rather than poisoning later batches
-        var cur = st.getOption.flatMap(s =>
-          centsOf12_2(s.lastState).map(c => (s.lastTimeUs, c, s.lastState)))
-        for ((e, c) <- sorted) {
+        for (e <- sorted; c <- centsOf12_2(e.state)) {
           val tUs = micros(e.time)
           cur match {
             case Some((lastT, lastC, _))
@@ -336,9 +365,8 @@ object StreamingOps {
               cur = Some((tUs, c, e.state))
           }
         }
-        cur.foreach { case (t, _, raw) => st.update(CounterState(t, raw)) }
-        out.iterator
-      }
+        (cur.map { case (t, _, raw) => CounterState(t, raw) }, out.iterator)
+    }
   }
 
   final case class HeldInterval(
@@ -358,20 +386,14 @@ object StreamingOps {
   def heldIntervalStream(
       ltss: DataFrame, bucketWidthUs: Long = 86400000000L): Dataset[HeldInterval] = {
     import ltss.sparkSession.implicits._
-    ltss.select(col("time"), col("entity_id"), col("state")).as[LtssEvent]
-      .groupByKey(_.entity_id)
-      .flatMapGroupsWithState[CounterState, HeldInterval](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) { (key, events, st) =>
+    foldSorted(events(ltss))(_.entity_id, byTimeCents, OutputMode.Append()) {
+      (key, sorted, prev: Option[CounterState]) =>
+        val out = scala.collection.mutable.ArrayBuffer.empty[HeldInterval]
+        var cur = prev.flatMap(s =>
+          centsOf12_2(s.lastState).map(c => (s.lastTimeUs, c, s.lastState)))
         // same junk-skip + decimal(12,2)-rounded parse as
         // [[counterDeltaStream]] — the batch feeder's try_cast semantics
-        val sorted = events
-          .flatMap(e => centsOf12_2(e.state).map(c => (e, c))).toSeq
-          .sortBy { case (e, c) => (micros(e.time), c) }
-        val out = scala.collection.mutable.ArrayBuffer.empty[HeldInterval]
-        var cur = st.getOption.flatMap(s =>
-          centsOf12_2(s.lastState).map(c => (s.lastTimeUs, c, s.lastState)))
-        for ((e, c) <- sorted) {
+        for (e <- sorted; c <- centsOf12_2(e.state)) {
           val tUs = micros(e.time)
           cur match {
             case Some((lastT, lastC, _))
@@ -385,9 +407,8 @@ object StreamingOps {
               cur = Some((tUs, c, e.state))
           }
         }
-        cur.foreach { case (t, _, raw) => st.update(CounterState(t, raw)) }
-        out.iterator
-      }
+        (cur.map { case (t, _, raw) => CounterState(t, raw) }, out.iterator)
+    }
   }
 
   final case class HeartbeatState(lastTimeUs: Long)
@@ -408,15 +429,11 @@ object StreamingOps {
   def heartbeatStream(
       ltss: DataFrame, livenessUs: Long): Dataset[OutageRow] = {
     import ltss.sparkSession.implicits._
-    ltss.select(col("time"), col("entity_id"), col("state")).as[LtssEvent]
-      .groupByKey(_.entity_id)
-      .flatMapGroupsWithState[HeartbeatState, OutageRow](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) { (key, events, st) =>
-        val sorted = events.toSeq.map(e => micros(e.time)).sorted
+    foldSorted(events(ltss))(_.entity_id, byTime, OutputMode.Append()) {
+      (key, sorted, prev: Option[HeartbeatState]) =>
         val out = scala.collection.mutable.ArrayBuffer.empty[OutageRow]
-        var cur = st.getOption
-        for (tUs <- sorted) {
+        var cur = prev
+        for (tUs <- sorted.map(byTime)) {
           cur match {
             case Some(HeartbeatState(lastT)) if tUs > lastT =>
               if (tUs - lastT > livenessUs)
@@ -429,9 +446,8 @@ object StreamingOps {
             case None => cur = Some(HeartbeatState(tUs))
           }
         }
-        cur.foreach(st.update)
-        out.iterator
-      }
+        (cur, out.iterator)
+    }
   }
 
   final case class StateAggState(
@@ -439,6 +455,14 @@ object StreamingOps {
       durs: Map[String, Long], counts: Map[String, Long])
   final case class StateAggRow(
       entity_id: String, state_class: String, duration_us: Long, n_intervals: Long)
+
+  /** The batch `ltss_state_agg` CASE over `try_cast(state AS
+    * decimal(12,2))`, in cents: a non-numeric state (HA-style
+    * 'on'/'unavailable') casts to NULL and classifies 'high'. */
+  private def stateClassOf(state: String): String = centsOf12_2(state) match {
+    case Some(c) => if (c < 2000L) "low" else if (c < 6000L) "mid" else "high"
+    case None => "high"
+  }
 
   /** Continuously-maintained time-in-state totals per entity (the
     * streaming twin of the batch `ltss_state_agg` query — TimescaleDB's
@@ -460,35 +484,20 @@ object StreamingOps {
     * rows; `ltss_dedup_pk` implies the raw feed can. */
   def stateAggStream(ltss: DataFrame): Dataset[StateAggRow] = {
     import ltss.sparkSession.implicits._
-    // Non-numeric states (HA-style 'on'/'unavailable') must not poison
-    // the query: the batch twin casts to DECIMAL, yielding NULL, and its
-    // CASE routes NULL to 'high' — parse with Try and classify None the
-    // same way, instead of letting NumberFormatException kill the stream.
-    def parse(s: String): Option[BigDecimal] =
-      scala.util.Try(BigDecimal(s)).toOption
-    def classOf(s: String): String = parse(s) match {
-      case Some(v) => if (v < 20) "low" else if (v < 60) "mid" else "high"
-      case None => "high" // the batch CASE's otherwise-branch for NULL sv
-    }
     // Option ordering (None < Some) mirrors the batch window's NULLS
     // FIRST ordering on the casted sv.
-    val ord = Ordering.Option(Ordering[BigDecimal])
-    ltss.select(col("time"), col("entity_id"), col("state")).as[LtssEvent]
-      .groupByKey(_.entity_id)
-      .flatMapGroupsWithState[StateAggState, StateAggRow](
-        org.apache.spark.sql.streaming.OutputMode.Update(),
-        GroupStateTimeout.NoTimeout) { (key, events, st) =>
-        val sorted = events.toSeq.sortBy(e => (micros(e.time), parse(e.state)))(
-          Ordering.Tuple2(Ordering[Long], ord))
-        var cur = st.getOption
+    val ord = Ordering[Option[Long]]
+    foldSorted(events(ltss))(_.entity_id, byTimeCents, OutputMode.Update()) {
+      (key, sorted, prev: Option[StateAggState]) =>
+        var cur = prev
         val touched = scala.collection.mutable.LinkedHashSet.empty[String]
         for (e <- sorted) {
           val tUs = micros(e.time)
           cur match {
             case Some(s @ StateAggState(lastT, lastS, durs, counts))
                 if tUs > lastT ||
-                  (tUs == lastT && ord.gt(parse(e.state), parse(lastS))) =>
-              val cls = classOf(lastS)
+                  (tUs == lastT && ord.gt(centsOf12_2(e.state), centsOf12_2(lastS))) =>
+              val cls = stateClassOf(lastS)
               touched += cls
               cur = Some(StateAggState(tUs, e.state,
                 durs.updated(cls, durs.getOrElse(cls, 0L) + (tUs - lastT)),
@@ -498,11 +507,10 @@ object StreamingOps {
               cur = Some(StateAggState(tUs, e.state, Map.empty, Map.empty))
           }
         }
-        cur.foreach(st.update)
         val s = cur.get
-        touched.iterator.map(cls =>
-          StateAggRow(key, cls, s.durs(cls), s.counts(cls)))
-      }
+        (cur, touched.iterator.map(cls =>
+          StateAggRow(key, cls, s.durs(cls), s.counts(cls))))
+    }
   }
 
   /** Default [[nearDupStream]] dedup horizon: 7 days in µs. Sized so a
@@ -570,58 +578,63 @@ object StreamingOps {
       col("t"))
     val bandOf = (lo: Int) => concat(
       (lo until lo + 4).map(i => element_at(col("sig"), i + 1)): _*)
-    sig
+    val bands = sig
       .select(col("doc_id"), col("sig"), col("t"),
         explode(map(lit(0), bandOf(0), lit(1), bandOf(4)))
           .as(Seq("band_idx", "band_val")))
       .as[BandDoc]
-      .groupByKey(b => (b.band_idx, b.band_val))
-      .flatMapGroupsWithState[BucketState, DupCandidate](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        if (retention.isDefined) GroupStateTimeout.EventTimeTimeout
-        else GroupStateTimeout.NoTimeout) { (key, rows, st) =>
-        if (st.hasTimedOut) { st.remove(); Iterator.empty }
-        else {
-          var stored = st.getOption.map(_.docs).getOrElse(Nil)
-          val out = scala.collection.mutable.ArrayBuffer.empty[DupCandidate]
-          // event-time order (tUs = 0 without retention, preserving the
-          // original doc_id order there)
-          val rs = rows.toSeq
-            .map(r => (r, r.t.map(micros).getOrElse(0L)))
-            .sortBy { case (r, tUs) => (tUs, r.doc_id) }
-          for ((r, tUs) <- rs) {
-            // TTL first, THEN membership/pairing: an arrival pairs only
-            // with members inside its horizon, and a doc whose old entry
-            // aged out re-registers as new
-            retention.foreach { ret =>
-              stored = stored.filter { case (_, _, mt) => mt >= tUs - ret }
+    val key = (b: BandDoc) => (b.band_idx, b.band_val)
+    // event-time order (tUs = 0 without retention, preserving the
+    // original doc_id order there)
+    val tUsOf = (b: BandDoc) => b.t.map(micros).getOrElse(0L)
+    val order = (b: BandDoc) => (tUsOf(b), b.doc_id)
+    val fold = (band: (Int, String), rs: Seq[BandDoc], prev: Option[BucketState]) => {
+      var stored = prev.map(_.docs).getOrElse(Nil)
+      val out = scala.collection.mutable.ArrayBuffer.empty[DupCandidate]
+      for (r <- rs) {
+        val tUs = tUsOf(r)
+        // TTL first, THEN membership/pairing: an arrival pairs only
+        // with members inside its horizon, and a doc whose old entry
+        // aged out re-registers as new
+        retention.foreach { ret =>
+          stored = stored.filter { case (_, _, mt) => mt >= tUs - ret }
+        }
+        if (!stored.exists(_._1 == r.doc_id)) {
+          if (stored.size < maxBucket) {
+            for ((id, s2, _) <- stored) {
+              val matches = s2.zip(r.sig).count { case (a, b) => a == b }
+              out += DupCandidate(math.min(id, r.doc_id), math.max(id, r.doc_id),
+                band._1, matches / 8.0)
             }
-            if (!stored.exists(_._1 == r.doc_id)) {
-              if (stored.size < maxBucket) {
-                for ((id, s2, _) <- stored) {
-                  val matches = s2.zip(r.sig).count { case (a, b) => a == b }
-                  out += DupCandidate(math.min(id, r.doc_id), math.max(id, r.doc_id),
-                    key._1, matches / 8.0)
-                }
-                stored = (r.doc_id, r.sig, tUs) :: stored
-              } // at cap: hot band — no more pairing here, offline verify path
-            }
-          }
-          if (stored.isEmpty) st.remove()
-          else {
-            st.update(BucketState(stored))
-            for (ret <- retention) {
-              // drop the whole bucket once it has been idle past the
-              // horizon (newest member + retention, clamped above the
-              // current watermark as the API requires)
-              val newestMs = stored.map(_._3).max / 1000L
-              st.setTimeoutTimestamp(
-                math.max(newestMs + ret / 1000L, st.getCurrentWatermarkMs() + 1L))
-            }
-          }
-          out.iterator
+            stored = (r.doc_id, r.sig, tUs) :: stored
+          } // at cap: hot band — no more pairing here, offline verify path
         }
       }
+      (if (stored.isEmpty) None else Some(BucketState(stored)), out.iterator)
+    }
+    retention match {
+      case None => foldSorted(bands)(key, order, OutputMode.Append())(fold)
+      case Some(ret) =>
+        bands.groupByKey(key).flatMapGroupsWithState[BucketState, DupCandidate](
+          OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) { (band, rows, st) =>
+          if (st.hasTimedOut) { st.remove(); Iterator.empty }
+          else {
+            val (next, out) = fold(band, rows.toSeq.sortBy(order), st.getOption)
+            next match {
+              case None => st.remove()
+              case Some(s) =>
+                st.update(s)
+                // drop the whole bucket once it has been idle past the
+                // horizon (newest member + retention, clamped above the
+                // current watermark as the API requires)
+                val newestMs = s.docs.map(_._3).max / 1000L
+                st.setTimeoutTimestamp(
+                  math.max(newestMs + ret / 1000L, st.getCurrentWatermarkMs() + 1L))
+            }
+            out
+          }
+        }
+    }
   }
 
   final case class FunnelState(
@@ -637,24 +650,22 @@ object StreamingOps {
     * batch query's per-step user counts incrementally. State per user
     * is three optional timestamps; the ordered-steps rule is the same
     * as the batch op (a click BEFORE the first view does not convert,
-    * pinned by AnalyticsSpec for the shared batch body). In-order
-    * contract within a batch; ties at the same instant satisfy the
-    * at-or-after rule, matching the batch `>=`. */
+    * pinned by AnalyticsSpec for the shared batch body). Ties at the
+    * same instant satisfy the at-or-after rule, matching the batch
+    * `>=` (its RANGE frame includes same-instant rows): the order is
+    * (µs, step) with view < click < purchase, so a same-instant view
+    * converts a click however the two arrive. */
   def funnelStream(ltss: DataFrame): Dataset[FunnelEvent] = {
     import ltss.sparkSession.implicits._
-    ltss
-      .filter(split(col("entity_id"), "\\.").getItem(0)
-        .isin("view", "click", "purchase"))
-      .select(col("time"), col("entity_id"), col("state")).as[LtssEvent]
-      .groupByKey(_.entity_id.split("\\.")(1).toLong)
-      .flatMapGroupsWithState[FunnelState, FunnelEvent](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) { (uid, events, st) =>
+    val steps = Seq("view", "click", "purchase")
+    val step = (e: LtssEvent) => e.entity_id.split("\\.")(0)
+    foldSorted(events(ltss.filter(split(col("entity_id"), "\\.").getItem(0).isin(steps: _*))))(
+      _.entity_id.split("\\.")(1).toLong, e => (micros(e.time), steps.indexOf(step(e))),
+      OutputMode.Append()) { (uid, sorted, prev: Option[FunnelState]) =>
         val out = scala.collection.mutable.ArrayBuffer.empty[FunnelEvent]
-        var s = st.getOption.getOrElse(FunnelState(None, None, None))
-        val sorted = events.toSeq.sortBy(e => micros(e.time))
+        var s = prev.getOrElse(FunnelState(None, None, None))
         for (e <- sorted) {
-          val d = e.entity_id.split("\\.")(0)
+          val d = step(e)
           val t = micros(e.time)
           def ts(u: Long) = tsOfMicros(u)
           if (d == "view" && s.t1.isEmpty) {
@@ -665,9 +676,8 @@ object StreamingOps {
             s = s.copy(t3 = Some(t)); out += FunnelEvent(uid, "3_purchase", ts(t))
           }
         }
-        st.update(s)
-        out.iterator
-      }
+        (Some(s), out.iterator)
+    }
   }
 
   final case class AsofState(t: Long, state: String)
@@ -681,29 +691,25 @@ object StreamingOps {
     * stream-stream as-of without buffering either side, because the
     * backward direction only ever needs the ONE latest left-side row:
     * state per user is a single (time, state) frontier, exactly
-    * [[latestState]]'s bound applied per join key. Within a batch,
-    * events apply in event-time order with purchases before clicks at
-    * the same instant (the batch op's ≤ tie rule); a click older than
-    * an already-held purchase frontier still enriches correctly only
-    * against frontiers at or before it — out-of-order input beyond a
+    * [[latestState]]'s bound applied per join key. The order puts
+    * purchases before clicks at the same instant (the batch op's ≤ tie
+    * rule); a click older than an already-held purchase frontier still
+    * enriches correctly only against frontiers at or before it —
+    * out-of-order input beyond a
     * batch boundary follows the same in-order contract as the other
     * stateful ops (compose after [[dedupByPkStream]] with a watermark
     * sized to the disorder). Append mode: an enriched click is an
     * immutable fact. */
   def asofStream(ltss: DataFrame): Dataset[AsofRow] = {
     import ltss.sparkSession.implicits._
-    ltss
-      .filter(split(col("entity_id"), "\\.").getItem(0).isin("click", "purchase"))
-      .select(col("time"), col("entity_id"), col("state")).as[LtssEvent]
-      .groupByKey(_.entity_id.split("\\.")(1).toLong)
-      .flatMapGroupsWithState[AsofState, AsofRow](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) { (uid, events, st) =>
+    foldSorted(events(ltss.filter(
+        split(col("entity_id"), "\\.").getItem(0).isin("click", "purchase"))))(
+      _.entity_id.split("\\.")(1).toLong,
+      // purchases (ord 0) before clicks (ord 1) at the same instant
+      e => (micros(e.time), if (e.entity_id.startsWith("purchase")) 0 else 1, e.state),
+      OutputMode.Append()) { (uid, sorted, prev: Option[AsofState]) =>
         val out = scala.collection.mutable.ArrayBuffer.empty[AsofRow]
-        var cur = st.getOption
-        // purchases (ord 0) before clicks (ord 1) at the same instant
-        val sorted = events.toSeq.sortBy(e =>
-          (micros(e.time), if (e.entity_id.startsWith("purchase")) 0 else 1, e.state))
+        var cur = prev
         for (e <- sorted) {
           if (e.entity_id.startsWith("purchase")) {
             val t = micros(e.time)
@@ -717,9 +723,8 @@ object StreamingOps {
               eff.map(c => tsOfMicros(c.t)), eff.map(_.state))
           }
         }
-        cur.foreach(st.update)
-        out.iterator
-      }
+        (cur, out.iterator)
+    }
   }
 
   /** State encoder schema NOTE: the `tainted` field was added after the
@@ -759,14 +764,11 @@ object StreamingOps {
   def trendStream(ltss: DataFrame): Dataset[TrendRow] = {
     import ltss.sparkSession.implicits._
     val baseUs = graft.operators.TimeSeries.TrendBaseUs
-    ltss.select(col("time"), col("entity_id"), col("state")).as[LtssEvent]
-      .groupByKey(_.entity_id)
-      .flatMapGroupsWithState[TrendState, TrendRow](
-        org.apache.spark.sql.streaming.OutputMode.Update(),
-        GroupStateTimeout.NoTimeout) { (key, events, st) =>
+    foldSorted(events(ltss))(_.entity_id, byTimeState, OutputMode.Update()) {
+      (key, sorted, prev: Option[TrendState]) =>
         import java.lang.Math.{addExact, multiplyExact}
-        var s = st.getOption.getOrElse(TrendState(0L, 0L, 0L, 0L, 0L, 0L, tainted = false))
-        for (e <- events) {
+        var s = prev.getOrElse(TrendState(0L, 0L, 0L, 0L, 0L, 0L, tainted = false))
+        for (e <- sorted) {
           centsOf12_2(e.state) match {
             case Some(yc) =>
               val x = java.lang.Math.floorDiv(micros(e.time) - baseUs, 1000000L)
@@ -780,9 +782,8 @@ object StreamingOps {
             case None => () // non-numeric state: the batch op filters it out
           }
         }
-        if (s.n == 0) Iterator.empty
-        else {
-          st.update(s)
+        if (s.n == 0) (None, Iterator.empty)
+        else (Some(s), {
           // back to unit scale (y = cents / 100) so the closing chain sees
           // the batch op's exact sums, then the identical IEEE chain
           val Exact = 1L << 53 // doubles are exact for integers within ±2^53
@@ -805,8 +806,8 @@ object StreamingOps {
               Iterator.single(TrendRow(key, s.n, slope, (sy - slope * sx) / n))
             } else Iterator.empty
           }
-        }
-      }
+        })
+    }
   }
 
   final case class EwmaState(tus: Seq[Long], cents: Seq[Long])
@@ -822,23 +823,21 @@ object StreamingOps {
     * entity no matter the stream volume — and each accepted event
     * re-evaluates the batch op's exact closed form (BIGINT
     * numerator/weight sums, one closing division) over that window.
-    * Ties at the frontier timestamp max-merge exactly like the batch
-    * MAX(state) tie rule; events BEHIND the frontier are dropped
-    * (in-order contract, same as the other stateful ops — the batch op
-    * is the replay for late data); non-numeric states are skipped.
+    * The order is (µs, cents). Ties at the frontier timestamp
+    * max-merge exactly like the batch MAX(state) tie rule; events
+    * behind an earlier batch's frontier are dropped (in-order contract,
+    * same as the other stateful ops — the batch op is the replay for
+    * late data); non-numeric states are skipped.
     * Emits one updated row per accepted event in Update mode. */
   def ewmaStream(ltss: DataFrame): Dataset[EwmaRow] = {
     import ltss.sparkSession.implicits._
     val span = graft.operators.TimeSeries.EwmaSpan
-    ltss.select(col("time"), col("entity_id"), col("state")).as[LtssEvent]
-      .groupByKey(_.entity_id)
-      .flatMapGroupsWithState[EwmaState, EwmaRow](
-        org.apache.spark.sql.streaming.OutputMode.Update(),
-        GroupStateTimeout.NoTimeout) { (key, events, st) =>
-        var tus = st.getOption.map(_.tus.toList).getOrElse(Nil)
-        var cents = st.getOption.map(_.cents.toList).getOrElse(Nil)
+    foldSorted(events(ltss))(_.entity_id, byTimeCents, OutputMode.Update()) {
+      (key, sorted, prev: Option[EwmaState]) =>
+        var tus = prev.map(_.tus.toList).getOrElse(Nil)
+        var cents = prev.map(_.cents.toList).getOrElse(Nil)
         val out = scala.collection.mutable.ListBuffer.empty[EwmaRow]
-        for (e <- events) {
+        for (e <- sorted) {
           val t = micros(e.time)
           val parsed = centsOf12_2(e.state)
           val accepted = parsed match {
@@ -865,9 +864,8 @@ object StreamingOps {
               num.toDouble / (den * 100).toDouble, cents.length.toLong)
           }
         }
-        st.update(EwmaState(tus, cents))
-        out.iterator
-      }
+        (Some(EwmaState(tus, cents)), out.iterator)
+    }
   }
 
   final case class DrawdownState(
@@ -895,20 +893,18 @@ object StreamingOps {
     * applies the batch op's closing casts (two /100 quantity scalings,
     * the rel ratio one IEEE division, None when the peak is ≤ 0).
     * State per entity is EIGHT BIGINTs — bounded no matter the stream
-    * volume. Events behind the frontier drop (in-order contract; the
-    * batch op is the replay for late data); non-numeric states are
-    * skipped, so `n_obs` counts accepted observations (the batch op
-    * counts a collapsed timestamp even when no tie at it is numeric —
-    * parity holds on numeric series). Emits per accepted event in
+    * volume. The order is (µs, cents); events behind an earlier
+    * batch's frontier drop (in-order contract; the batch op is the
+    * replay for late data); non-numeric states are skipped, so `n_obs`
+    * counts accepted observations (the batch op counts a collapsed
+    * timestamp even when no tie at it is numeric — parity holds on
+    * numeric series). Emits per accepted event in
     * Update mode (a tie-merge re-emits: it may have changed the
     * answer). */
   def drawdownStream(ltss: DataFrame): Dataset[DrawdownRow] = {
     import ltss.sparkSession.implicits._
-    ltss.select(col("time"), col("entity_id"), col("state")).as[LtssEvent]
-      .groupByKey(_.entity_id)
-      .flatMapGroupsWithState[DrawdownState, DrawdownRow](
-        org.apache.spark.sql.streaming.OutputMode.Update(),
-        GroupStateTimeout.NoTimeout) { (key, events, st) =>
+    foldSorted(events(ltss))(_.entity_id, byTimeCents, OutputMode.Update()) {
+      (key, sorted, prev: Option[DrawdownState]) =>
         // local to the closure: a def on the enclosing object would drag
         // the non-serializable StreamingOps$ into the task closure
         val folded = (s: DrawdownState) => {
@@ -929,9 +925,9 @@ object StreamingOps {
             if (f.bestPeak > 0) Some(f.bestDd.toDouble / f.bestPeak.toDouble)
             else None)
         }
-        var s = st.getOption.orNull
+        var s = prev.orNull
         val out = scala.collection.mutable.ListBuffer.empty[DrawdownRow]
-        for (e <- events) {
+        for (e <- sorted) {
           val t = micros(e.time)
           centsOf12_2(e.state) match {
             case Some(c) if s == null =>
@@ -947,9 +943,8 @@ object StreamingOps {
             case _ => () // non-numeric, or behind the frontier: dropped
           }
         }
-        if (s != null) st.update(s)
-        out.iterator
-      }
+        (Option(s), out.iterator)
+    }
   }
 
   final case class SloState(
@@ -972,8 +967,9 @@ object StreamingOps {
     * cross-multiplied `downtime·10 ≤ span` compare — no ratio ever
     * forms). Emits per accepted event once the entity has a span
     * (n ≥ 2; the batch op drops single-heartbeat entities), so every
-    * emission is the batch panel on the prefix seen so far. Late
-    * events drop (in-order contract; batch replay covers them);
+    * emission is the batch panel on the prefix seen so far. The order
+    * is (µs, cents); events behind an earlier batch's frontier drop
+    * (in-order contract; batch replay covers them);
     * non-numeric states are heartbeats too (liveness is about event
     * ARRIVAL, and the batch chain keeps NULL sv rows — only their sv
     * tie-order differs, which the telescoped sum cannot see). */
@@ -982,14 +978,11 @@ object StreamingOps {
       livenessUs: Long = graft.operators.TimeSeries.LivenessUs): Dataset[SloRow] = {
     import ltss.sparkSession.implicits._
     val sloDen = graft.operators.TimeSeries.SloDen
-    ltss.select(col("time"), col("entity_id"), col("state")).as[LtssEvent]
-      .groupByKey(_.entity_id)
-      .flatMapGroupsWithState[SloState, SloRow](
-        org.apache.spark.sql.streaming.OutputMode.Update(),
-        GroupStateTimeout.NoTimeout) { (key, events, st) =>
-        var s = st.getOption.orNull
+    foldSorted(events(ltss))(_.entity_id, byTimeCents, OutputMode.Update()) {
+      (key, sorted, prev: Option[SloState]) =>
+        var s = prev.orNull
         val out = scala.collection.mutable.ListBuffer.empty[SloRow]
-        for (e <- events) {
+        for (e <- sorted) {
           val t = micros(e.time)
           var accepted = true
           if (s == null) s = SloState(t, t, 1L, 0L, 0L)
@@ -1008,9 +1001,8 @@ object StreamingOps {
               if (down * sloDen <= span) 1 else 0)
           }
         }
-        if (s != null) st.update(s)
-        out.iterator
-      }
+        (Option(s), out.iterator)
+    }
   }
 
   final case class RateState(
@@ -1034,13 +1026,10 @@ object StreamingOps {
   def rateAnomalyStream(
       ltss: DataFrame, widthUs: Long = 3600000000L): Dataset[RateAnomaly] = {
     import ltss.sparkSession.implicits._
-    ltss.select(col("time"), col("entity_id"), col("state")).as[LtssEvent]
-      .groupByKey(e => e.entity_id.split("\\.")(0))
-      .flatMapGroupsWithState[RateState, RateAnomaly](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) { (key, events, st) =>
+    foldSorted(events(ltss))(_.entity_id.split("\\.")(0), byTime, OutputMode.Append()) {
+      (key, sorted, prev: Option[RateState]) =>
         val out = scala.collection.mutable.ArrayBuffer.empty[RateAnomaly]
-        var cur = st.getOption
+        var cur = prev
         def close(s: RateState): RateState = {
           // fold the closed bucket into the moments, THEN test it against
           // everything seen so far (itself included, as the batch op does)
@@ -1052,7 +1041,7 @@ object StreamingOps {
             s.openCount, if (d > 0 && d * d > 9 * varn) 1 else 0)
           RateState(0L, 0L, n, s1, s2)
         }
-        for (e <- events.toSeq.sortBy(e => micros(e.time))) {
+        for (e <- sorted) {
           val bus = { val t = micros(e.time); t - java.lang.Math.floorMod(t, widthUs) }
           cur = Some(cur match {
             case Some(s) if bus == s.openBus =>
@@ -1063,9 +1052,8 @@ object StreamingOps {
             case None => RateState(bus, 1L, 0L, 0L, 0L)
           })
         }
-        cur.foreach(st.update)
-        out.iterator
-      }
+        (cur, out.iterator)
+    }
   }
 
   final case class CusumState(openBus: Long, openCount: Long, cusum: Long)
@@ -1092,20 +1080,17 @@ object StreamingOps {
       ltss: DataFrame, refPerBucket: Long, alarmAt: Long,
       widthUs: Long = 3600000000L): Dataset[CusumRow] = {
     import ltss.sparkSession.implicits._
-    ltss.select(col("time"), col("entity_id"), col("state")).as[LtssEvent]
-      .groupByKey(e => e.entity_id.split("\\.")(0))
-      .flatMapGroupsWithState[CusumState, CusumRow](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) { (key, events, st) =>
+    foldSorted(events(ltss))(_.entity_id.split("\\.")(0), byTime, OutputMode.Append()) {
+      (key, sorted, prev: Option[CusumState]) =>
         val out = scala.collection.mutable.ArrayBuffer.empty[CusumRow]
-        var cur = st.getOption
+        var cur = prev
         def close(s: CusumState, bus: Long, c: Long): CusumState = {
           val next = math.max(0L, s.cusum + (c - refPerBucket))
           out += CusumRow(key, tsOfMicros(bus), c, next,
             if (next > alarmAt) 1 else 0)
           s.copy(cusum = next)
         }
-        for (e <- events.toSeq.sortBy(e => micros(e.time))) {
+        for (e <- sorted) {
           val bus = { val t = micros(e.time); t - java.lang.Math.floorMod(t, widthUs) }
           cur = Some(cur match {
             case Some(s) if bus == s.openBus =>
@@ -1119,9 +1104,8 @@ object StreamingOps {
             case None => CusumState(bus, 1L, 0L)
           })
         }
-        cur.foreach(st.update)
-        out.iterator
-      }
+        (cur, out.iterator)
+    }
   }
 
   /** Continuous-aggregate MAINTENANCE — the refresh worker behind the
@@ -1315,22 +1299,18 @@ object StreamingOps {
         h(col("entity_id")).as("h"))
       .union(base.select(col("domain"), lit("states").as("target"),
         h(col("state")).as("h")))
-    u.as[(String, String, Long)]
-      .groupByKey(t => (t._1, t._2))
-      .mapGroupsWithState[KmvState, KmvRow](GroupStateTimeout.NoTimeout) {
-        (key, rows, st) =>
-          val prev = st.getOption.map(_.hs).getOrElse(Nil)
-          // union + retop: the KMV merge — dedup, sort, keep k smallest
-          val merged = (prev.iterator ++ rows.map(_._3))
-            .toSet.toList.sorted.take(k)
-          st.update(KmvState(merged))
-          val n = merged.size.toLong
-          val kth = merged.last
-          val est =
-            if (n < k) n.toDouble
-            else ((k - 1).toDouble * 1152921504606846976.0d) / kth.toDouble
-          KmvRow(key._1, key._2, n, kth, est)
-      }
+    foldSorted(u.as[(String, String, Long)])(t => (t._1, t._2), _._3, OutputMode.Update()) {
+      (key, rows, prev: Option[KmvState]) =>
+        // union + retop: the KMV merge — dedup, sort, keep k smallest
+        val merged = (prev.map(_.hs).getOrElse(Nil).iterator ++ rows.map(_._3))
+          .toSet.toList.sorted.take(k)
+        val n = merged.size.toLong
+        val kth = merged.last
+        val est =
+          if (n < k) n.toDouble
+          else ((k - 1).toDouble * 1152921504606846976.0d) / kth.toDouble
+        (Some(KmvState(merged)), Iterator.single(KmvRow(key._1, key._2, n, kth, est)))
+    }
   }
 
   final case class CmsCell(d: Int, bucket: Long, cell: Long)
@@ -1358,14 +1338,11 @@ object StreamingOps {
         columnOf(graft.functions.Md5Prefix64(expressionOf(
           concat(col("d").cast("string"), lit(":"), col("state"))))),
         lit(width.toLong)))
-    hashed.select(col("d"), col("bucket")).as[(Int, Long)]
-      .groupByKey(identity)
-      .mapGroupsWithState[Long, CmsCell](GroupStateTimeout.NoTimeout) {
-        (key, rows, st) =>
-          val cell = st.getOption.getOrElse(0L) + rows.size
-          st.update(cell)
-          CmsCell(key._1, key._2, cell)
-      }
+    foldSorted(hashed.select(col("d"), col("bucket")).as[(Int, Long)])(
+      identity, identity, OutputMode.Update()) { (key, rows, prev: Option[Long]) =>
+        val cell = prev.getOrElse(0L) + rows.size
+        (Some(cell), Iterator.single(CmsCell(key._1, key._2, cell)))
+    }
   }
 
   final case class GeofenceEvent(
@@ -1377,10 +1354,9 @@ object StreamingOps {
     * next batch query): per entity the state is ONE inside/outside bit;
     * each arrival classifies against the same haversine kernel and
     * emits a transition iff the bit flips (the first observation seeds
-    * the bit silently, as in the batch `lag` form). Arrivals are
-    * ordered by the SAME total key the batch window uses — (µs event
-    * time, event_id) — within each micro-batch before folding, so
-    * prefix emissions equal the batch query over the same rows
+    * the bit silently, as in the batch `lag` form). The order is the
+    * SAME total key the batch window uses — (µs event time, event_id) —
+    * so prefix emissions equal the batch query over the same rows
     * (spec-pinned, including duplicate-µs fixes: enter+exit in the
     * same microsecond orders by event_id in both forms) under the
     * per-entity in-order delivery the event bus provides — cross-batch
@@ -1396,31 +1372,26 @@ object StreamingOps {
       centerLon: Double = 11.97,
       radiusKm: Double = 2000.0): Dataset[GeofenceEvent] = {
     import pts.sparkSession.implicits._
-    pts
+    val rows = pts
       .withColumn("inside",
         (graft.functions.Haversine.haversineKm(
           col("lat"), col("lon"), lit(centerLat), lit(centerLon)) <= radiusKm)
           .cast("int"))
       .select(col("time"), col("user_id"), col("event_id"), col("inside"))
       .as[(java.sql.Timestamp, Long, Long, Int)]
-      .groupByKey(_._2)
-      .flatMapGroupsWithState[Int, GeofenceEvent](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) {
-        (uid, rows, st) =>
-          // µs-exact (micros, not ms getTime) + event_id: the batch
-          // window's exact total order per entity
-          val sorted = rows.toSeq.sortBy(r => (micros(r._1), r._3))
-          var prev = st.getOption
-          val out = scala.collection.mutable.ArrayBuffer.empty[GeofenceEvent]
-          for ((t, _, eid, inside) <- sorted) {
-            if (prev.exists(_ != inside))
-              out += GeofenceEvent(uid, t, eid, if (inside == 1) "enter" else "exit")
-            prev = Some(inside)
-          }
-          prev.foreach(st.update)
-          out.iterator
-      }
+    // µs-exact (micros, not ms getTime) + event_id: the batch window's
+    // exact total order per entity
+    foldSorted(rows)(_._2, r => (micros(r._1), r._3), OutputMode.Append()) {
+      (uid, sorted, prev: Option[Int]) =>
+        var cur = prev
+        val out = scala.collection.mutable.ArrayBuffer.empty[GeofenceEvent]
+        for ((t, _, eid, inside) <- sorted) {
+          if (cur.exists(_ != inside))
+            out += GeofenceEvent(uid, t, eid, if (inside == 1) "enter" else "exit")
+          cur = Some(inside)
+        }
+        (cur, out.iterator)
+    }
   }
 
   final case class Odometer(user_id: Long, n_legs: Long, travel_m: Long, max_leg_m: Long)
@@ -1437,33 +1408,27 @@ object StreamingOps {
     * per-entity in-order delivery the event bus provides, the emitted
     * totals equal the batch query over the same rows EXACTLY
     * (spec-pinned; integer arithmetic, no float accumulation drift by
-    * construction). Arrivals are ordered (µs, event_id) within each
-    * micro-batch, the batch window's total key, as in [[geofenceStream]].
-    * State is 2 doubles + 3 longs per entity — a fleet of 10⁸ trackers
-    * holds 4 GB of state across the cluster, flat in stream length. */
+    * construction). The order is (µs, event_id), the batch window's
+    * total key, as in [[geofenceStream]]. State is 2 doubles + 3 longs
+    * per entity — a fleet of 10⁸ trackers holds 4 GB of state across
+    * the cluster, flat in stream length. */
   def odometerStream(
       pts: DataFrame // time TIMESTAMP, user_id LONG, event_id LONG, lat DOUBLE, lon DOUBLE
   ): Dataset[Odometer] = {
     import pts.sparkSession.implicits._
-    pts
-      .select(col("time"), col("user_id"), col("event_id"), col("lat"), col("lon"))
-      .as[(java.sql.Timestamp, Long, Long, Double, Double)]
-      .groupByKey(_._2)
-      .mapGroupsWithState[OdoState, Odometer](GroupStateTimeout.NoTimeout) {
-        (uid, rows, st) =>
-          val sorted = rows.toSeq.sortBy(r => (micros(r._1), r._3))
-          var s = st.getOption.orNull
-          for ((_, _, _, lat, lon) <- sorted) {
-            if (s == null) s = OdoState(lat, lon, 0L, 0L, 0L)
-            else {
-              val leg = math.floor(graft.functions.GeoMath.haversineKm(
-                s.lat, s.lon, lat, lon) * 1000.0).toLong
-              s = OdoState(lat, lon, s.n + 1, s.total + leg, math.max(s.maxLeg, leg))
-            }
+    foldSorted(fixes(pts))(_.user_id, byFixTime, OutputMode.Update()) {
+      (uid, sorted, prev: Option[OdoState]) =>
+        var s = prev.orNull
+        for (f <- sorted) {
+          if (s == null) s = OdoState(f.lat, f.lon, 0L, 0L, 0L)
+          else {
+            val leg = math.floor(graft.functions.GeoMath.haversineKm(
+              s.lat, s.lon, f.lat, f.lon) * 1000.0).toLong
+            s = OdoState(f.lat, f.lon, s.n + 1, s.total + leg, math.max(s.maxLeg, leg))
           }
-          st.update(s)
-          Odometer(uid, s.n, s.total, s.maxLeg)
-      }
+        }
+        (Some(s), Iterator.single(Odometer(uid, s.n, s.total, s.maxLeg)))
+    }
   }
 
   final case class SpeedAlert(
@@ -1488,40 +1453,32 @@ object StreamingOps {
       pts: DataFrame, // time TIMESTAMP, user_id LONG, event_id LONG, lat DOUBLE, lon DOUBLE
       thresholdKmh: Long = 500L): Dataset[SpeedAlert] = {
     import pts.sparkSession.implicits._
-    pts
-      .select(col("time"), col("user_id"), col("event_id"), col("lat"), col("lon"))
-      .as[(java.sql.Timestamp, Long, Long, Double, Double)]
-      .groupByKey(_._2)
-      .flatMapGroupsWithState[OdoFix, SpeedAlert](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) {
-        (uid, rows, st) =>
-          val sorted = rows.toSeq.sortBy(r => (micros(r._1), r._3))
-          var prev = st.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[SpeedAlert]
-          for ((t, _, eid, lat, lon) <- sorted) {
-            if (prev != null) {
-              val legM = math.floor(graft.functions.GeoMath.haversineKm(
-                prev.lat, prev.lon, lat, lon) * 1000.0).toLong
-              val dtUs = micros(t) - prev.tUs
-              val speed =
-                if (dtUs > 0L)
-                  Some(math.floor(legM.toDouble * 3600000.0 / dtUs.toDouble).toLong)
-                else None
-              // dtUs < 0 is a cross-batch OUT-OF-ORDER arrival, outside
-              // the per-entity in-order contract every trajectory stream
-              // shares — the batch window's per-entity sort guarantees
-              // dt_us >= 0, so alerting here would fabricate a teleport
-              // the batch form can never produce; skip the emission
-              // (state still advances, as the siblings do)
-              if (dtUs >= 0L && speed.forall(_ > thresholdKmh))
-                out += SpeedAlert(uid, t, eid, legM, dtUs, speed)
-            }
-            prev = OdoFix(lat, lon, micros(t))
+    foldSorted(fixes(pts))(_.user_id, byFixTime, OutputMode.Append()) {
+      (uid, sorted, prev: Option[OdoFix]) =>
+        var last = prev.orNull
+        val out = scala.collection.mutable.ArrayBuffer.empty[SpeedAlert]
+        for (f <- sorted) {
+          if (last != null) {
+            val legM = math.floor(graft.functions.GeoMath.haversineKm(
+              last.lat, last.lon, f.lat, f.lon) * 1000.0).toLong
+            val dtUs = micros(f.time) - last.tUs
+            val speed =
+              if (dtUs > 0L)
+                Some(math.floor(legM.toDouble * 3600000.0 / dtUs.toDouble).toLong)
+              else None
+            // dtUs < 0 is a cross-batch OUT-OF-ORDER arrival, outside
+            // the per-entity in-order contract every trajectory stream
+            // shares — the batch window's per-entity sort guarantees
+            // dt_us >= 0, so alerting here would fabricate a teleport
+            // the batch form can never produce; skip the emission
+            // (state still advances, as the siblings do)
+            if (dtUs >= 0L && speed.forall(_ > thresholdKmh))
+              out += SpeedAlert(uid, f.time, f.event_id, legM, dtUs, speed)
           }
-          if (prev != null) st.update(prev)
-          out.iterator
-      }
+          last = OdoFix(f.lat, f.lon, micros(f.time))
+        }
+        (Option(last), out.iterator)
+    }
   }
 
   /** Last-fix state shared by the trajectory streams. */
@@ -1571,18 +1528,12 @@ object StreamingOps {
       zoneVersion: Long = 0L): Dataset[ZoneTransition] = {
     import pts.sparkSession.implicits._
     val zs = zones.sortBy(_._1)
-    pts
-      .select(col("time"), col("user_id"), col("event_id"), col("lat"), col("lon"))
-      .as[(java.sql.Timestamp, Long, Long, Double, Double)]
-      .groupByKey(_._2)
-      .flatMapGroupsWithState[ZoneSetState, ZoneTransition](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) { (uid, rows, st) =>
-        val sorted = rows.toSeq.sortBy(r => (micros(r._1), r._3))
-        var s = st.getOption.orNull
+    foldSorted(fixes(pts))(_.user_id, byFixTime, OutputMode.Append()) {
+      (uid, sorted, prev: Option[ZoneSetState]) =>
+        var s = prev.orNull
         requireZoneVersion(s == null, if (s == null) 0L else s.version, zoneVersion)
         val out = scala.collection.mutable.ArrayBuffer.empty[ZoneTransition]
-        for ((t, _, eid, lat, lon) <- sorted) {
+        for (Fix(t, _, eid, lat, lon) <- sorted) {
           val tus = micros(t)
           // at-or-behind arrivals drop: their containment verdict was
           // already folded into the transition log (the sibling
@@ -1599,9 +1550,8 @@ object StreamingOps {
             s = ZoneSetState(tus, eid, now, zoneVersion)
           }
         }
-        if (s != null) st.update(s)
-        out.iterator
-      }
+        (Option(s), out.iterator)
+    }
   }
 
   /** The zone-version gate shared by the zone-table twins: a restored
@@ -1653,17 +1603,11 @@ object StreamingOps {
       zoneVersion: Long = 0L): Dataset[ZonesDwellRow] = {
     import pts.sparkSession.implicits._
     val zs = zones.sortBy(_._1)
-    pts
-      .select(col("time"), col("user_id"), col("event_id"), col("lat"), col("lon"))
-      .as[(java.sql.Timestamp, Long, Long, Double, Double)]
-      .groupByKey(_._2)
-      .flatMapGroupsWithState[ZonesDwellState, ZonesDwellRow](
-        org.apache.spark.sql.streaming.OutputMode.Update(),
-        GroupStateTimeout.NoTimeout) { (uid, rows, st) =>
-        val sorted = rows.toSeq.sortBy(r => (micros(r._1), r._3))
-        var s = st.getOption.orNull
+    foldSorted(fixes(pts))(_.user_id, byFixTime, OutputMode.Update()) {
+      (uid, sorted, prev: Option[ZonesDwellState]) =>
+        var s = prev.orNull
         requireZoneVersion(s == null, if (s == null) 0L else s.version, zoneVersion)
-        for ((t, _, eid, lat, lon) <- sorted) {
+        for (Fix(t, _, eid, lat, lon) <- sorted) {
           val tus = micros(t)
           if (s == null || tus > s.tUs || (tus == s.tUs && eid > s.seq)) {
             val now = zs.collect {
@@ -1686,13 +1630,11 @@ object StreamingOps {
             s = ZonesDwellState(tus, eid, now, ledgers, zoneVersion)
           }
         }
-        if (s != null) st.update(s)
-        if (s == null) Iterator.empty
-        else s.ledgers.toSeq.sortBy(_._1).iterator.map { case (z, l) =>
+        (Some(s), s.ledgers.toSeq.sortBy(_._1).iterator.map { case (z, l) =>
           ZonesDwellRow(z, uid, l.nObs, l.dwellUs, l.visits,
             tsOfMicros(l.firstUs), tsOfMicros(l.lastUs))
-        }
-      }
+        })
+    }
   }
 
   /** Bootstrap [[geoZonesStream]] from the STORED zone layout: rings
@@ -1735,17 +1677,18 @@ object StreamingOps {
     * visit filter. An at-or-behind arrival returns the state unchanged
     * with no closure (the trajectory streams' in-order contract). */
   private def advanceStay(
-      s: StayState, tus: Long, eid: Long, lat: Double, lon: Double,
-      chunkUs: Long => Long, radiusM: Long): (StayState, Option[StayState]) = {
-    if (s != null && !(tus > s.t1Us || (tus == s.t1Us && eid > s.seq))) (s, None)
+      s: StayState, f: Fix, chunkUs: Long => Long, radiusM: Long)
+      : (StayState, Option[StayState]) = {
+    val tus = micros(f.time)
+    if (s != null && !(tus > s.t1Us || (tus == s.t1Us && f.event_id > s.seq))) (s, None)
     else {
       val cu = chunkUs(tus)
       val near = s != null && math.floor(graft.functions.GeoMath.haversineKm(
-        s.alat, s.alon, lat, lon) * 1000.0).toLong <= radiusM
+        s.alat, s.alon, f.lat, f.lon) * 1000.0).toLong <= radiusM
       if (s != null && cu == s.chunkUs && near)
-        (s.copy(t1Us = tus, seq = eid, n = s.n + 1), None)
+        (s.copy(t1Us = tus, seq = f.event_id, n = s.n + 1), None)
       else
-        (StayState(cu, lat, lon, tus, tus, eid, 1L), Option(s))
+        (StayState(cu, f.lat, f.lon, tus, tus, f.event_id, 1L), Option(s))
     }
   }
 
@@ -1772,28 +1715,20 @@ object StreamingOps {
       minDwellUs: Long = 43200000000L): Dataset[StayVisit] = {
     import pts.sparkSession.implicits._
     val chunkUsOf = monthChunker(pts.sparkSession)
-    pts
-      .select(col("time"), col("user_id"), col("event_id"), col("lat"), col("lon"))
-      .as[(java.sql.Timestamp, Long, Long, Double, Double)]
-      .groupByKey(_._2)
-      .flatMapGroupsWithState[StayState, StayVisit](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) { (uid, rows, st) =>
-        val sorted = rows.toSeq.sortBy(r => (micros(r._1), r._3))
-        var s = st.getOption.orNull
+    foldSorted(fixes(pts))(_.user_id, byFixTime, OutputMode.Append()) {
+      (uid, sorted, prev: Option[StayState]) =>
+        var s = prev.orNull
         val out = scala.collection.mutable.ArrayBuffer.empty[StayVisit]
-        for ((t, _, eid, lat, lon) <- sorted) {
-          val (ns, closed) = advanceStay(s, micros(t), eid, lat, lon,
-            chunkUsOf, radiusM)
+        for (f <- sorted) {
+          val (ns, closed) = advanceStay(s, f, chunkUsOf, radiusM)
           s = ns
           closed.filter(isVisit(_, minDwellUs)).foreach { r =>
             out += StayVisit(uid, tsOfMicros(r.t0Us), tsOfMicros(r.t1Us),
               r.n, r.t1Us - r.t0Us, r.alat, r.alon)
           }
         }
-        if (s != null) st.update(s)
-        out.iterator
-      }
+        (Option(s), out.iterator)
+    }
   }
 
   final case class OdFlowState(stay: StayState, origin: Option[StayState])
@@ -1824,20 +1759,13 @@ object StreamingOps {
     import pts.sparkSession.implicits._
     val chunkUsOf = monthChunker(pts.sparkSession)
     def cell(x: Double): Long = math.floor(x / 10.0).toLong
-    pts
-      .select(col("time"), col("user_id"), col("event_id"), col("lat"), col("lon"))
-      .as[(java.sql.Timestamp, Long, Long, Double, Double)]
-      .groupByKey(_._2)
-      .flatMapGroupsWithState[OdFlowState, OdTrip](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) { (uid, rows, st) =>
-        val sorted = rows.toSeq.sortBy(r => (micros(r._1), r._3))
-        var stay = st.getOption.map(_.stay).orNull
-        var origin = st.getOption.flatMap(_.origin)
+    foldSorted(fixes(pts))(_.user_id, byFixTime, OutputMode.Append()) {
+      (uid, sorted, prev: Option[OdFlowState]) =>
+        var stay = prev.map(_.stay).orNull
+        var origin = prev.flatMap(_.origin)
         val out = scala.collection.mutable.ArrayBuffer.empty[OdTrip]
-        for ((t, _, eid, lat, lon) <- sorted) {
-          val (ns, closed) = advanceStay(stay, micros(t), eid, lat, lon,
-            chunkUsOf, radiusM)
+        for (f <- sorted) {
+          val (ns, closed) = advanceStay(stay, f, chunkUsOf, radiusM)
           stay = ns
           closed.filter(isVisit(_, minDwellUs)).foreach { v =>
             origin.foreach { o =>
@@ -1848,9 +1776,8 @@ object StreamingOps {
             origin = Some(v)
           }
         }
-        if (stay != null) st.update(OdFlowState(stay, origin))
-        out.iterator
-      }
+        (Option(stay).map(OdFlowState(_, origin)), out.iterator)
+    }
   }
 
   final case class TrackFix(
@@ -1881,47 +1808,52 @@ object StreamingOps {
       pts: DataFrame // time TIMESTAMP, user_id LONG, event_id LONG, lat DOUBLE, lon DOUBLE
   ): Dataset[TrackSegment] = {
     import pts.sparkSession.implicits._
-    // month boundaries follow the SESSION timezone, captured at plan
-    // construction — the batch twin truncates with date_trunc('month'),
-    // which reads spark.sql.session.timeZone, so a non-UTC session gets
-    // the SAME segment boundaries from both faces (r14 hard-coded UTC
-    // here and the documented parity held only because the harness pins
-    // UTC everywhere)
-    val chunkZone = java.time.ZoneId.of(
-      pts.sparkSession.conf.get("spark.sql.session.timeZone"))
-    def chunkUsOf(tus: Long): Long = {
-      val d = java.time.Instant.ofEpochSecond(
-        Math.floorDiv(tus, 1000000L), (Math.floorMod(tus, 1000000L)) * 1000L)
-        .atZone(chunkZone).toLocalDate.withDayOfMonth(1)
-      d.atStartOfDay(chunkZone).toInstant.getEpochSecond * 1000000L
+    val chunkUsOf = monthChunker(pts.sparkSession)
+    foldSorted(fixes(pts))(_.user_id, byFixTime, OutputMode.Append()) {
+      (uid, sorted, prev: Option[TrackSegState]) =>
+        val (open, closed) = advanceMonth(prev, sorted, chunkUsOf)
+        (open, closed.iterator.map { c =>
+          val seg = monthFixes(c)
+          TrackSegment(uid, tsOfMicros(c.chunkUs), seg.size, seg)
+        })
     }
-    pts
-      .select(col("time"), col("user_id"), col("event_id"), col("lat"), col("lon"))
-      .as[(java.sql.Timestamp, Long, Long, Double, Double)]
-      .groupByKey(_._2)
-      .flatMapGroupsWithState[TrackSegState, TrackSegment](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) { (uid, rows, st) =>
-        val sorted = rows.toSeq.sortBy(r => (micros(r._1), r._3))
-        var s = st.getOption.orNull
-        val out = scala.collection.mutable.ArrayBuffer.empty[TrackSegment]
-        def close(state: TrackSegState): TrackSegment = {
-          val seg = state.fixes.sortBy(f => (micros(f.ts), f.seq))
-          TrackSegment(uid, tsOfMicros(state.chunkUs), seg.size, seg)
-        }
-        for ((t, _, eid, lat, lon) <- sorted) {
-          val cu = chunkUsOf(micros(t))
-          val fix = TrackFix(t, eid, lat, lon)
-          if (s == null) s = TrackSegState(cu, Seq(fix))
-          else if (cu > s.chunkUs) {
-            out += close(s)
-            s = TrackSegState(cu, Seq(fix))
-          } else if (cu == s.chunkUs) s = s.copy(fixes = s.fixes :+ fix)
-          // cu < s.chunkUs: the month already closed and shipped — drop
-        }
-        if (s != null) st.update(s)
-        out.iterator
-      }
+  }
+
+  /** Fold one entity's sorted fixes into its open month — the segment
+    * protocol [[trackSegmentStream]] and [[dpSimplifyLiveStream]] share.
+    * A fix in a later month closes the open one, a fix in the open month
+    * joins it, and a fix for an already-closed month drops (its segment
+    * shipped). Returns the open month and the months closed, in order. */
+  private def advanceMonth(
+      prev: Option[TrackSegState], sorted: Seq[Fix], chunkUsOf: Long => Long)
+      : (Option[TrackSegState], Seq[TrackSegState]) = {
+    var s = prev.orNull
+    val closed = scala.collection.mutable.ArrayBuffer.empty[TrackSegState]
+    for (f <- sorted) {
+      val cu = chunkUsOf(micros(f.time))
+      val fix = TrackFix(f.time, f.event_id, f.lat, f.lon)
+      if (s == null) s = TrackSegState(cu, Seq(fix))
+      else if (cu > s.chunkUs) {
+        closed += s
+        s = TrackSegState(cu, Seq(fix))
+      } else if (cu == s.chunkUs) s = s.copy(fixes = s.fixes :+ fix)
+    }
+    (Option(s), closed.toSeq)
+  }
+
+  /** A month's fixes in the batch layout's `sort_array` order. */
+  private def monthFixes(s: TrackSegState): Seq[TrackFix] =
+    s.fixes.sortBy(f => (micros(f.ts), f.seq))
+
+  /** One segment simplified by the batch `ltss_geo_dp`'s own worklist
+    * ([[graft.operators.Queries.dpKeep]]). */
+  private def dpSegment(
+      uid: Long, chunk: java.sql.Timestamp, seg: Seq[TrackFix], eps2: Double): DpSegment = {
+    val fixes = seg.toIndexedSeq
+    val keep = graft.operators.Queries.dpKeep(
+      fixes.map(f => graft.operators.Queries.DpFix(f.ts, f.seq, f.lat, f.lon)), eps2)
+    val kept = fixes.indices.collect { case i if keep(i) => fixes(i) }
+    DpSegment(uid, chunk, fixes.size, kept.size, kept)
   }
 
   final case class DpSegment(
@@ -1944,14 +1876,7 @@ object StreamingOps {
       pts: DataFrame, // time TIMESTAMP, user_id LONG, event_id LONG, lat DOUBLE, lon DOUBLE
       eps2: Double = 100.0): Dataset[DpSegment] = {
     import pts.sparkSession.implicits._
-    trackSegmentStream(pts).map { seg =>
-      val fixes = seg.seg.toIndexedSeq
-      val keep = graft.operators.Queries.dpKeep(
-        fixes.map(f => graft.operators.Queries.DpFix(f.ts, f.seq, f.lat, f.lon)),
-        eps2)
-      val kept = fixes.indices.collect { case i if keep(i) => fixes(i) }
-      DpSegment(seg.user_id, seg.chunk, seg.n_fixes, kept.size, kept)
-    }
+    trackSegmentStream(pts).map(seg => dpSegment(seg.user_id, seg.chunk, seg.seg, eps2))
   }
 
   /** PROGRESSIVE Douglas–Peucker — the live-map face
@@ -1972,40 +1897,14 @@ object StreamingOps {
       eps2: Double = 100.0): Dataset[DpSegment] = {
     import pts.sparkSession.implicits._
     val chunkUsOf = monthChunker(pts.sparkSession)
-    pts
-      .select(col("time"), col("user_id"), col("event_id"), col("lat"), col("lon"))
-      .as[(java.sql.Timestamp, Long, Long, Double, Double)]
-      .groupByKey(_._2)
-      .flatMapGroupsWithState[TrackSegState, DpSegment](
-        org.apache.spark.sql.streaming.OutputMode.Update(),
-        GroupStateTimeout.NoTimeout) { (uid, rows, st) =>
-        val sorted = rows.toSeq.sortBy(r => (micros(r._1), r._3))
-        var s = st.getOption.orNull
-        val out = scala.collection.mutable.ArrayBuffer.empty[DpSegment]
-        def simplified(state: TrackSegState): DpSegment = {
-          val seg = state.fixes.sortBy(f => (micros(f.ts), f.seq))
-          val keep = graft.operators.Queries.dpKeep(
-            seg.toIndexedSeq.map(f =>
-              graft.operators.Queries.DpFix(f.ts, f.seq, f.lat, f.lon)), eps2)
-          val kept = seg.indices.collect { case i if keep(i) => seg(i) }
-          DpSegment(uid, tsOfMicros(state.chunkUs), seg.size, kept.size, kept)
-        }
-        for ((t, _, eid, lat, lon) <- sorted) {
-          val cu = chunkUsOf(micros(t))
-          val fix = TrackFix(t, eid, lat, lon)
-          if (s == null) s = TrackSegState(cu, Seq(fix))
-          else if (cu > s.chunkUs) {
-            out += simplified(s) // the month's FINAL polyline
-            s = TrackSegState(cu, Seq(fix))
-          } else if (cu == s.chunkUs) s = s.copy(fixes = s.fixes :+ fix)
-          // cu < s.chunkUs: the month already closed and shipped — drop
-        }
-        if (s != null) {
-          st.update(s)
-          out += simplified(s) // the open month's PROVISIONAL polyline
-        }
-        out.iterator
-      }
+    foldSorted(fixes(pts))(_.user_id, byFixTime, OutputMode.Update()) {
+      (uid, sorted, prev: Option[TrackSegState]) =>
+        val (open, closed) = advanceMonth(prev, sorted, chunkUsOf)
+        // each closed month's FINAL polyline, then the open month's
+        // PROVISIONAL one
+        (open, (closed ++ open).iterator.map(m =>
+          dpSegment(uid, tsOfMicros(m.chunkUs), monthFixes(m), eps2)))
+    }
   }
 
   final case class HullSegment(
@@ -2059,28 +1958,22 @@ object StreamingOps {
     * rows emit with their clipped window (n_window 3, 4) once their
     * right context exists. Over any in-order prefix the emitted rows
     * equal the batch output minus the last two held samples
-    * (spec-pinned). Contract: in-order per entity (sorted within
-    * batch; an arrival STRICTLY behind the (time, value) frontier is
-    * dropped — its window position was already consumed — while a row
-    * TYING the frontier exactly is admitted as a distinct reading,
-    * matching the batch window that keeps duplicate (time, value)
-    * rows as distinct members. Out of contract: a LOWER value at the
+    * (spec-pinned). Contract: in-order per entity (an arrival STRICTLY
+    * behind the (time, value) frontier is dropped — its window
+    * position was already consumed — while a row TYING the frontier
+    * exactly is admitted as a distinct reading, matching the batch
+    * window that keeps duplicate (time, value) rows as distinct
+    * members. Out of contract: a LOWER value at the
     * frontier's timestamp arriving after a higher one — within one
     * timestamp, deliver value-ordered or in one batch). */
   def hampelStream(ltss: DataFrame): Dataset[HampelOut] = {
     import ltss.sparkSession.implicits._
-    ltss.select(col("time"), col("entity_id"), col("state")).as[LtssEvent]
-      .groupByKey(_.entity_id)
-      .flatMapGroupsWithState[HampelState, HampelOut](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) { (key, events, st) =>
-        // batch tie order is ORDER BY (tus, sc) with nulls first —
+    // batch tie order is ORDER BY (tus, sc) with nulls first
+    foldSorted(events(ltss))(_.entity_id, byTimeCents, OutputMode.Append()) {
+      (key, sorted, prev: Option[HampelState]) =>
         // MinValue stands in for the null cents key
         def k(c: Option[Long]): Long = c.getOrElse(Long.MinValue)
-        val sorted = events
-          .map(e => HampelBufRow(micros(e.time), centsOf12_2(e.state))).toSeq
-          .sortBy(r => (r.tus, k(r.cents)))
-        val s0 = st.getOption.getOrElse(HampelState(0L, 0L, Nil))
+        val s0 = prev.getOrElse(HampelState(0L, 0L, Nil))
         val buf = scala.collection.mutable.ArrayBuffer[HampelBufRow](s0.buf: _*)
         var nextEmit = s0.nextEmit
         var firstIdx = s0.firstIdx
@@ -2102,7 +1995,7 @@ object StreamingOps {
             } else (0, sv)
           HampelOut(key, tsOfMicros(center.tus), sv, n, spike, filtered)
         }
-        for (r <- sorted) {
+        for (r <- sorted.map(e => HampelBufRow(micros(e.time), centsOf12_2(e.state)))) {
           // strictly-behind drops; a row TYING the frontier exactly
           // (same time, same cents) is ADMITTED as a distinct window
           // member — the batch collect_list keeps duplicate readings
@@ -2120,9 +2013,8 @@ object StreamingOps {
             }
           }
         }
-        st.update(HampelState(nextEmit, firstIdx, buf.toSeq))
-        out.iterator
-      }
+        (Some(HampelState(nextEmit, firstIdx, buf.toSeq)), out.iterator)
+    }
   }
 
   final case class AsapState(
@@ -2150,36 +2042,30 @@ object StreamingOps {
       windows: Seq[Int] = Seq(2, 3, 4, 6, 8, 12, 24)): Dataset[AsapPick] = {
     import counts.sparkSession.implicits._
     val maxW = windows.max
-    counts.select(col("domain"), col("bus"), col("c"))
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[AsapState, AsapPick](
-        org.apache.spark.sql.streaming.OutputMode.Update(),
-        GroupStateTimeout.NoTimeout) {
-        (domain, rows, st) =>
-          var s = st.getOption.getOrElse(
-            AsapState(Vector.fill(maxW)(0L), 0L,
-              windows.map(_ -> ((0L, 0L, 0L))).toMap))
-          for ((_, _, c) <- rows.toSeq.sortBy(_._2)) {
-            val stats = s.stats.map { case (w, (m, sd, sd2)) =>
-              if (s.seen >= w) {
-                val d = c - s.ring(((s.seen - w) % maxW).toInt)
-                w -> ((m + 1, sd + d, sd2 + d * d))
-              } else w -> ((m, sd, sd2))
-            }
-            s = AsapState(
-              s.ring.updated((s.seen % maxW).toInt, c), s.seen + 1, stats)
+    foldSorted(counts.select(col("domain"), col("bus"), col("c")).as[(String, Long, Long)])(
+      _._1, r => (r._2, r._3), OutputMode.Update()) { (domain, rows, prev: Option[AsapState]) =>
+        var s = prev.getOrElse(
+          AsapState(Vector.fill(maxW)(0L), 0L, windows.map(_ -> ((0L, 0L, 0L))).toMap))
+        for ((_, _, c) <- rows) {
+          val stats = s.stats.map { case (w, (m, sd, sd2)) =>
+            if (s.seen >= w) {
+              val d = c - s.ring(((s.seen - w) % maxW).toInt)
+              w -> ((m + 1, sd + d, sd2 + d * d))
+            } else w -> ((m, sd, sd2))
           }
-          st.update(s)
-          val picks = s.stats.toSeq.collect {
-            case (w, (m, sd, sd2)) if m > 0 =>
-              val varInt = m * sd2 - sd * sd
-              AsapPick(domain, w, m, varInt,
-                math.sqrt(varInt.toDouble) / (m * w).toDouble)
-          }
+          s = AsapState(
+            s.ring.updated((s.seen % maxW).toInt, c), s.seen + 1, stats)
+        }
+        val picks = s.stats.toSeq.collect {
+          case (w, (m, sd, sd2)) if m > 0 =>
+            val varInt = m * sd2 - sd * sd
+            AsapPick(domain, w, m, varInt,
+              math.sqrt(varInt.toDouble) / (m * w).toDouble)
+        }
+        (Some(s),
           if (picks.isEmpty) Iterator.empty
-          else Iterator.single(picks.minBy(p => (p.roughness, p.w_best)))
-      }
+          else Iterator.single(picks.minBy(p => (p.roughness, p.w_best))))
+    }
   }
 
   final case class ZoneDwellState(
@@ -2204,37 +2090,34 @@ object StreamingOps {
       centerLon: Double = 11.97,
       radiusKm: Double = 2000.0): Dataset[ZoneDwellRow] = {
     import pts.sparkSession.implicits._
-    pts
+    val rows = pts
       .withColumn("inside",
         (graft.functions.Haversine.haversineKm(
           col("lat"), col("lon"), lit(centerLat), lit(centerLon)) <= radiusKm)
           .cast("int"))
       .select(col("time"), col("user_id"), col("inside"))
       .as[(java.sql.Timestamp, Long, Int)]
-      .groupByKey(_._2)
-      .mapGroupsWithState[ZoneDwellState, ZoneDwellRow](GroupStateTimeout.NoTimeout) {
-        (uid, rows, st) =>
-          // µs-exact event times through [[micros]]/[[tsOfMicros]]: the
-          // batch twin aggregates unix_micros, so ms-truncated arithmetic
-          // here would shift dwell_us/first_seen/last_seen for sub-ms
-          // event times and break the prefix-equality the doc promises
-          val sorted = rows.toSeq.sortBy(r => (micros(r._1), r._3))
-          var s = st.getOption.orNull
-          for ((t, _, inside) <- sorted) {
-            val us = micros(t)
-            s =
-              if (s == null)
-                ZoneDwellState(us, inside, 0L, if (inside == 1) 1L else 0L, 1L, us)
-              else ZoneDwellState(
-                us, inside,
-                s.dwellUs + (if (s.lastInside == 1) us - s.lastUs else 0L),
-                s.visits + (if (inside == 1 && s.lastInside == 0) 1L else 0L),
-                s.nObs + 1L, s.firstUs)
-          }
-          st.update(s)
-          ZoneDwellRow(uid, s.nObs, s.dwellUs, s.visits,
-            tsOfMicros(s.firstUs), tsOfMicros(s.lastUs))
-      }
+    foldSorted(rows)(_._2, r => (micros(r._1), r._3), OutputMode.Update()) {
+      (uid, sorted, prev: Option[ZoneDwellState]) =>
+        // µs-exact event times through [[micros]]/[[tsOfMicros]]: the
+        // batch twin aggregates unix_micros, so ms-truncated arithmetic
+        // here would shift dwell_us/first_seen/last_seen for sub-ms
+        // event times and break the prefix-equality the doc promises
+        var s = prev.orNull
+        for ((t, _, inside) <- sorted) {
+          val us = micros(t)
+          s =
+            if (s == null)
+              ZoneDwellState(us, inside, 0L, if (inside == 1) 1L else 0L, 1L, us)
+            else ZoneDwellState(
+              us, inside,
+              s.dwellUs + (if (s.lastInside == 1) us - s.lastUs else 0L),
+              s.visits + (if (inside == 1 && s.lastInside == 0) 1L else 0L),
+              s.nObs + 1L, s.firstUs)
+        }
+        (Some(s), Iterator.single(ZoneDwellRow(uid, s.nObs, s.dwellUs, s.visits,
+          tsOfMicros(s.firstUs), tsOfMicros(s.lastUs))))
+    }
   }
 
   final case class SsState(counters: Map[String, (Long, Long)])
@@ -2253,40 +2136,37 @@ object StreamingOps {
     * and any state with true count > N/k is guaranteed tracked; a row
     * with err = 0 carries an EXACT count (`exact` = 1 — the state was
     * never evicted). State is ≤ k counters per domain FOREVER — volume-
-    * and cardinality-independent like the KMV/CMS twins. Arrival-order
-    * dependence is inherent to SpaceSaving (unlike the mergeable
-    * KMV/CMS), which is why its guarantees — not prefix-equality to a
+    * and cardinality-independent like the KMV/CMS twins. Within a
+    * micro-batch the counters fold in state order, so a replayed batch
+    * emits the same counters; across batches arrival-order dependence
+    * is inherent to SpaceSaving (unlike the mergeable KMV/CMS), which
+    * is why its guarantees — not prefix-equality to a
     * batch query — are the contract, and why it has no oracle-checked
     * batch twin: the batch answer is the exact `ltss_cms_freq` truth
     * column. */
   def heavyHittersStream(ltss: DataFrame, k: Int = 8): Dataset[HeavyHitter] = {
     import ltss.sparkSession.implicits._
-    ltss
-      .select(split(col("entity_id"), "\\.").getItem(0).as("domain"), col("state"))
-      .as[(String, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[SsState, HeavyHitter](
-        org.apache.spark.sql.streaming.OutputMode.Update(),
-        GroupStateTimeout.NoTimeout) {
-        (domain, rows, st) =>
-          var c = st.getOption.map(_.counters).getOrElse(Map.empty)
-          for ((_, s) <- rows) {
-            c.get(s) match {
-              case Some((est, err)) => c = c.updated(s, (est + 1, err))
-              case None if c.size < k => c = c.updated(s, (1L, 0L))
-              case None =>
-                // evict the minimum counter (tie → state asc, determinism);
-                // the newcomer inherits its count as the error bound
-                val (ms, (mEst, _)) = c.minBy { case (s2, (e2, _)) => (e2, s2) }
-                c = (c - ms).updated(s, (mEst + 1, mEst))
-            }
+    foldSorted(ltss
+        .select(split(col("entity_id"), "\\.").getItem(0).as("domain"), col("state"))
+        .as[(String, String)])(_._1, _._2, OutputMode.Update()) {
+      (domain, rows, prev: Option[SsState]) =>
+        var c = prev.map(_.counters).getOrElse(Map.empty)
+        for ((_, s) <- rows) {
+          c.get(s) match {
+            case Some((est, err)) => c = c.updated(s, (est + 1, err))
+            case None if c.size < k => c = c.updated(s, (1L, 0L))
+            case None =>
+              // evict the minimum counter (tie → state asc, determinism);
+              // the newcomer inherits its count as the error bound
+              val (ms, (mEst, _)) = c.minBy { case (s2, (e2, _)) => (e2, s2) }
+              c = (c - ms).updated(s, (mEst + 1, mEst))
           }
-          st.update(SsState(c))
-          c.toSeq.sortBy { case (s, (e, _)) => (-e, s) }.map {
-            case (s, (est, err)) =>
-              HeavyHitter(domain, s, est, err, if (err == 0) 1 else 0)
-          }.iterator
-      }
+        }
+        (Some(SsState(c)), c.toSeq.sortBy { case (s, (e, _)) => (-e, s) }.map {
+          case (s, (est, err)) =>
+            HeavyHitter(domain, s, est, err, if (err == 0) 1 else 0)
+        }.iterator)
+    }
   }
 
   final case class ContactFix(
@@ -2355,8 +2235,7 @@ object StreamingOps {
     import pts.sparkSession.implicits._
     val r2 = radiusDeg * radiusDeg
     val lateUs = if (latenessUs < 0L) windowUs else latenessUs
-    val exploded = pts
-      .select(col("time"), col("user_id"), col("event_id"), col("lat"), col("lon"))
+    val exploded = fixes(pts)
       // ceil to whole seconds: truncating would SHORTEN the promised
       // lateness and drop in-horizon out-of-order rows at the watermark
       .withWatermark("time", s"${(lateUs + 999999L) / 1000000L} seconds")
@@ -2371,7 +2250,7 @@ object StreamingOps {
     exploded
       .groupByKey(r => (r._6, r._7))
       .flatMapGroupsWithState[CellContactState, ContactEvent](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
+        OutputMode.Append(),
         GroupStateTimeout.EventTimeTimeout) { (_, rows, st) =>
         if (st.hasTimedOut) { st.remove(); Iterator.empty }
         else {
@@ -2473,7 +2352,7 @@ object StreamingOps {
       .withWatermark("time_b", s"${(latenessUs + 999999L) / 1000000L} seconds")
       .groupByKey(c => (math.min(c.user_a, c.user_b), math.max(c.user_a, c.user_b)))
       .flatMapGroupsWithState[ConvoyState, ConvoyEpisode](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
+        OutputMode.Append(),
         GroupStateTimeout.EventTimeTimeout) { (key, rows, st) =>
         val out = scala.collection.mutable.ArrayBuffer.empty[ConvoyEpisode]
         def emitRun(r: ConvoyRun): Unit =
@@ -2571,7 +2450,7 @@ object StreamingOps {
       .withWatermark("time_b", s"${(latenessUs + 999999L) / 1000000L} seconds")
       .groupByKey(c => micros(c.time_a) / HrUs)
       .flatMapGroupsWithState[HourEdgeState, HourGroupRow](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
+        OutputMode.Append(),
         GroupStateTimeout.EventTimeTimeout) { (hr, rows, st) =>
         if (st.hasTimedOut) {
           val edges = st.get.edges
@@ -2660,18 +2539,13 @@ object StreamingOps {
       k: Int = 3,
       m: Int = 2): Dataset[graft.operators.Queries.ConvoyCoreEp] = {
     import groups.sparkSession.implicits._
-    groups
-      .groupByKey(_ => 0)
-      .flatMapGroupsWithState[CoreTwinState,
-        graft.operators.Queries.ConvoyCoreEp](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) { (_, rows, st) =>
+    foldSorted(groups)(_ => 0, g => (g.hr, g.gid), OutputMode.Append()) {
+      (_, rows, prev0: Option[CoreTwinState]) =>
         val out = scala.collection.mutable.ArrayBuffer
           .empty[graft.operators.Queries.ConvoyCoreEp]
         def close(mem: Array[Long], s: Long, e: Long): Unit =
           graft.operators.Queries.coreEpisode(mem, s, e, k, m).foreach(out += _)
-        val s0 = st.getOption.getOrElse(
-          CoreTwinState(Long.MinValue, Nil, Nil))
+        val s0 = prev0.getOrElse(CoreTwinState(Long.MinValue, Nil, Nil))
         var prev = s0.prev
         var state = scala.collection.mutable.HashMap.empty[
           graft.operators.Queries.ConvoyCls, Long]
@@ -2708,11 +2582,10 @@ object StreamingOps {
             state = scala.collection.mutable.HashMap.empty
           }
         }
-        st.update(CoreTwinState(prev, keep,
-          state.toSeq.map { case (c, since) =>
-            CoreAlive(c.mem.toSeq, since) }))
-        out.iterator
-      }
+        (Some(CoreTwinState(prev, keep,
+          state.toSeq.map { case (c, since) => CoreAlive(c.mem.toSeq, since) })),
+          out.iterator)
+    }
   }
 
   final case class CoreAlive(members: Seq[Long], since: Long)
@@ -2753,7 +2626,7 @@ object StreamingOps {
       .as[(Long, Long, Long, String, java.sql.Timestamp)]
       .groupByKey(_._4)
       .flatMapGroupsWithState[GroupRunState, GroupEpisode](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
+        OutputMode.Append(),
         GroupStateTimeout.EventTimeTimeout) { (members, rows, st) =>
         val out = scala.collection.mutable.ArrayBuffer.empty[GroupEpisode]
         def emit(r: GroupRunState): Unit =
@@ -2901,7 +2774,7 @@ object StreamingOps {
     cellPanelExploded(pts, radiusDeg, windowUs, lateUs)
       .groupByKey(r => (r._3, r._4, r._5))
       .flatMapGroupsWithState[CellPanelState, CellPanelLiveRow](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
+        OutputMode.Append(),
         GroupStateTimeout.EventTimeTimeout) { (key, rows, st) =>
         if (st.hasTimedOut) {
           val s0 = st.get

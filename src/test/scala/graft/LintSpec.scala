@@ -22,6 +22,24 @@ class LintSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"System.err in: ${hits.mkString(", ")}; log through a named logger")
   }
 
+  test("stateful streaming twins without a timeout fold through the one keyed fold") {
+    // a hand-written groupByKey + *GroupsWithState twin decides its fold
+    // order again; only StreamingOps.foldSorted's body may name NoTimeout
+    val hits = scalaFiles("src/main/scala/graft/streaming").flatMap { f =>
+      val lines = Files.readAllLines(f).asScala.toIndexedSeq
+      val start = lines.indexWhere(_.contains("def foldSorted["))
+      // the primitive ends at the next member of the object
+      val end = if (start < 0) -1 else lines.indexWhere(l =>
+        l.startsWith("  ") && !l.startsWith("   ") && l.trim.nonEmpty, start + 1)
+      lines.indices.filter { i =>
+        lines(i).contains("mapGroupsWithState") ||
+          lines(i).contains("GroupStateTimeout.NoTimeout") && !(i > start && i < end)
+      }.map(i => s"$f:${i + 1}")
+    }
+    assert(hits.isEmpty, s"mapGroupsWithState, or NoTimeout outside StreamingOps.foldSorted, " +
+      s"in: ${hits.mkString(", ")}; state the twin's key, order, mode and fold through foldSorted")
+  }
+
   test("every broadcast hint states what bounds its side") {
     // a hint overrides autoBroadcastJoinThreshold, so it belongs only on
     // a side bounded by construction; anything that grows with the data

@@ -383,6 +383,28 @@ class StatefulStreamingSpec extends SparkSpec {
     assert(totals == Set(("low", 2 * H, 2L), ("mid", 2 * H, 1L)))
   }
 
+  test("streaming state_agg classifies through the batch try_cast(decimal(12,2)) domain") {
+    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val ms = MemoryStream[(java.sql.Timestamp, String, String)]
+    val df = ms.toDF.toDF("time", "entity_id", "state")
+    val q = StreamingOps.stateAggStream(df).writeStream
+      .format("memory").queryName("sa_cast_t").outputMode("update").start()
+    // the cast trims " 5 " to 5.00 (low) and rounds 19.999 to 20.00 (mid)
+    val feed = Seq(
+      (ts("2024-01-01 10:00:00"), "a.1", " 5 "),
+      (ts("2024-01-01 11:00:00"), "a.1", "19.999"),
+      (ts("2024-01-01 12:00:00"), "a.1", "1"))
+    try {
+      ms.addData(feed: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    val got = spark.table("sa_cast_t").as[(String, String, Long, Long)].collect().toSet
+    val want = graft.operators.TimeSeries.stateAgg(feed.toDF("time", "entity_id", "state"))
+      .select($"entity_id", $"state_class", $"duration_us", $"n_intervals")
+      .as[(String, String, Long, Long)].collect().toSet
+    assert(got == want, s"stream $got, batch $want")
+  }
+
   test("streaming heartbeat: an outage emits when the closing heartbeat arrives") {
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val H = 3600000000L
@@ -1059,6 +1081,143 @@ class StatefulStreamingSpec extends SparkSpec {
       (2L, "1_view", ts("2024-01-01 10:30:00"))))
   }
 
+  test("streaming funnel: a same-instant view converts a click that arrives first (batch >= tie rule)") {
+    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val ms = MemoryStream[(java.sql.Timestamp, String, String)]
+    val df = ms.toDF.toDF("time", "entity_id", "state")
+    val q = StreamingOps.funnelStream(df).writeStream
+      .format("memory").queryName("fn_tie_t").outputMode("append").start()
+    val t = ts("2024-01-01 10:00:00")
+    // one instant, arriving purchase, click, view: the batch RANGE frame
+    // sees the view at the click's time and the click at the purchase's
+    val feed = Seq((t, "purchase.7", "1"), (t, "click.7", "1"), (t, "view.7", "1"))
+    try {
+      ms.addData(feed: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    val rows = spark.table("fn_tie_t")
+      .as[(Long, String, java.sql.Timestamp)].collect().toSet
+    assert(rows == Set((7L, "1_view", t), (7L, "2_click", t), (7L, "3_purchase", t)),
+      s"got $rows")
+    val batch = graft.operators.Queries.funnelTimes(feed.toDF("time", "entity_id", "state"))
+      .as[(Long, java.sql.Timestamp, java.sql.Timestamp, java.sql.Timestamp)].collect()
+    assert(batch.toSeq == Seq((7L, t, t, t)), s"batch funnel: ${batch.toSeq}")
+  }
+
+  /** The rows `twin` emits when `feed` arrives as ONE micro-batch of a
+    * fresh query. */
+  private def emittedOnce[A: org.apache.spark.sql.Encoder](
+      feed: Seq[A], cols: Seq[String], mode: String,
+      twin: org.apache.spark.sql.DataFrame => org.apache.spark.sql.Dataset[_]): Seq[String] = {
+    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val ms = MemoryStream[A]
+    val name = "order_inv_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val q = twin(ms.toDF.toDF(cols: _*)).toDF.writeStream
+      .format("memory").queryName(name).outputMode(mode).start()
+    try {
+      ms.addData(feed)
+      q.processAllAvailable()
+    } finally q.stop()
+    spark.table(name).collect().map(_.toString).sorted.toSeq
+  }
+
+  test("order-invariance: each keyed-fold twin emits the same rows for a batch fed forward or reversed") {
+    // one micro-batch is one MemoryStream partition, and each key's rows
+    // reach its fold in feed order, so reversing the feed reverses them
+    def at(s: String) = ts(s"2024-01-01 $s")
+    val ltss = Seq(
+      (at("10:00:00"), "sensor.1", "5.00"),
+      (at("10:00:00"), "sensor.1", "9.00"), // tie
+      (at("10:20:00"), "sensor.1", "2.00"),
+      (at("11:40:00"), "sensor.1", "on"), // junk
+      (at("13:10:00"), "sensor.1", "7.50"),
+      (at("13:10:00.000001"), "sensor.1", "1.00"), // µs apart
+      (at("14:30:00"), "sensor.1", "8.25"),
+      (at("09:00:00"), "sensor.2", "3.00"),
+      (at("12:00:00"), "sensor.2", "4.00"),
+      (at("12:00:00"), "sensor.2", "4.00"), // exact duplicate
+      (at("10:00:00"), "view.7", "v"),
+      (at("10:00:00"), "click.7", "c"), // same instant as the view
+      (at("10:05:00"), "purchase.7", "12.00"),
+      (at("10:05:00"), "click.7", "c2"),
+      (at("10:30:00"), "click.7", "c3"),
+      (at("11:00:00"), "view.8", "v"),
+      (at("11:00:00"), "purchase.8", "3.00"))
+    val fixes = Seq(
+      (ts("2024-01-31 10:00:00"), 100L, 79L, 10.5, -100.5),
+      (ts("2024-01-31 10:00:00"), 100L, 80L, 10.5, -40.5), // same µs
+      (ts("2024-01-31 23:00:00"), 100L, 139L, 10.5, -40.4),
+      (ts("2024-02-01 12:00:00"), 100L, 190L, 10.5, 10.5), // next month
+      (ts("2024-02-02 01:00:00"), 100L, 191L, 10.6, 10.5),
+      (ts("2024-02-02 20:00:00"), 100L, 210L, 10.5, 30.5),
+      (ts("2024-03-01 12:00:00"), 100L, 280L, 10.5, 100.5),
+      (ts("2024-01-31 10:00:00"), 9L, 180L, -80.5, 0.5),
+      (ts("2024-01-31 10:00:00"), 9L, 181L, -80.5, 0.6),
+      (ts("2024-02-01 10:00:00"), 9L, 182L, 57.7, 11.97))
+    val counts = (0L until 30L).map(b => ("d", b, (b * 7L) % 5L + (if (b == 20L) 9L else 0L)))
+    val groups = Seq(
+      StreamingOps.HourGroupRow(10L, 1L, 3L, "1,2,3"),
+      StreamingOps.HourGroupRow(11L, 1L, 3L, "1,2,3"),
+      StreamingOps.HourGroupRow(12L, 1L, 4L, "1,2,3,4"),
+      StreamingOps.HourGroupRow(12L, 7L, 3L, "7,8,9"),
+      StreamingOps.HourGroupRow(13L, 7L, 3L, "7,8,9"),
+      StreamingOps.HourGroupRow(15L, 1L, 3L, "1,2,3"))
+    val text = "the quick brown fox jumps over the lazy dog by the river bank"
+    val docs = Seq((1L, text), (2L, text), (3L, text + " again"), (4L, text))
+    val zones = graft.operators.Queries.ZoneDefs.map { case (id, _, vs) => (id, vs) }
+    val H = 3600000000L
+    type Twin = org.apache.spark.sql.DataFrame => org.apache.spark.sql.Dataset[_]
+    def run[A: org.apache.spark.sql.Encoder](feed: Seq[A], cols: String*)(
+        mode: String)(twin: Twin): Boolean => Seq[String] =
+      rev => emittedOnce(if (rev) feed.reverse else feed, cols, mode, twin)
+    def onLtss(mode: String)(twin: Twin) = run(ltss, "time", "entity_id", "state")(mode)(twin)
+    def onFixes(mode: String)(twin: Twin) =
+      run(fixes, "time", "user_id", "event_id", "lat", "lon")(mode)(twin)
+    val table: Seq[(String, Boolean => Seq[String])] = Seq(
+      "latestState" -> onLtss("update")(StreamingOps.latestState),
+      "gapfillLocfStream" -> onLtss("append")(StreamingOps.gapfillLocfStream(_)),
+      "gapfillInterpStream" -> onLtss("append")(StreamingOps.gapfillInterpStream(_)),
+      "counterDeltaStream" -> onLtss("append")(StreamingOps.counterDeltaStream),
+      "heldIntervalStream" -> onLtss("append")(StreamingOps.heldIntervalStream(_)),
+      "heartbeatStream" -> onLtss("append")(StreamingOps.heartbeatStream(_, H)),
+      "stateAggStream" -> onLtss("update")(StreamingOps.stateAggStream),
+      "funnelStream" -> onLtss("append")(StreamingOps.funnelStream),
+      "asofStream" -> onLtss("append")(StreamingOps.asofStream),
+      "trendStream" -> onLtss("update")(StreamingOps.trendStream),
+      "ewmaStream" -> onLtss("update")(StreamingOps.ewmaStream),
+      "drawdownStream" -> onLtss("update")(StreamingOps.drawdownStream),
+      "sloStream" -> onLtss("update")(StreamingOps.sloStream(_, H)),
+      "rateAnomalyStream" -> onLtss("append")(StreamingOps.rateAnomalyStream(_)),
+      "changepointStream" -> onLtss("append")(StreamingOps.changepointStream(_, 1L, 1L)),
+      "kmvStream" -> onLtss("update")(StreamingOps.kmvStream(_, k = 4)),
+      "cmsStream" -> onLtss("update")(StreamingOps.cmsStream(_, depth = 2, width = 8)),
+      "hampelStream" -> onLtss("append")(StreamingOps.hampelStream),
+      "heavyHittersStream" -> onLtss("update")(StreamingOps.heavyHittersStream(_, k = 2)),
+      "geofenceStream" -> onFixes("append")(StreamingOps.geofenceStream(_)),
+      "odometerStream" -> onFixes("update")(StreamingOps.odometerStream),
+      "geoSpeedStream" -> onFixes("append")(StreamingOps.geoSpeedStream(_)),
+      "geoZonesStream" -> onFixes("append")(StreamingOps.geoZonesStream(_, zones)),
+      "zonesDwellStream" -> onFixes("update")(StreamingOps.zonesDwellStream(_, zones)),
+      "staypointStream" -> onFixes("append")(StreamingOps.staypointStream(_)),
+      "odFlowStream" -> onFixes("append")(StreamingOps.odFlowStream(_)),
+      "trackSegmentStream" -> onFixes("append")(StreamingOps.trackSegmentStream),
+      "dpSimplifyLiveStream" -> onFixes("update")(StreamingOps.dpSimplifyLiveStream(_)),
+      "zoneDwellStream" -> onFixes("update")(StreamingOps.zoneDwellStream(_)),
+      "asapStream" -> run(counts, "domain", "bus", "c")("update")(
+        StreamingOps.asapStream(_)),
+      "convoyGroupsCoreStream" -> run(groups, "hr", "gid", "n_members", "members")(
+        "append")(g => StreamingOps.convoyGroupsCoreStream(g.as[StreamingOps.HourGroupRow])),
+      "nearDupStream (unbounded)" -> run(docs, "doc_id", "text")("append")(
+        StreamingOps.nearDupStream(_, unboundedRetention = true)))
+    val differ = table.flatMap { case (name, emitted) =>
+      val fwd = emitted(false)
+      assert(fwd.nonEmpty, s"$name emits nothing on the fixture: the row shows nothing")
+      val rev = emitted(true)
+      if (fwd == rev) None else Some(s"$name\n  forward  $fwd\n  reversed $rev")
+    }
+    assert(differ.isEmpty, s"arrival order changed the output of:\n${differ.mkString("\n")}")
+  }
+
   test("streaming funnel state survives a checkpoint restart") {
     import java.nio.file.{Files, Paths}
     def tmp(p: String) = Files.createTempDirectory(p).toString
@@ -1342,7 +1501,10 @@ class StatefulStreamingSpec extends SparkSpec {
       (ts("2024-01-01 10:00:00"), "a.1", "9.00"), // tie: MAX wins, like batch
       (ts("2024-01-01 09:00:00"), "a.1", "50.00")) // behind frontier: dropped
     try {
-      ms.addData(dup: _*)
+      ms.addData(dup.take(2): _*)
+      q.processAllAvailable()
+      // a later batch: the row is behind the frontier the first one set
+      ms.addData(dup(2))
       q.processAllAvailable()
     } finally q.stop()
     val emitted = spark.table("ewma_tie_t")
@@ -1408,7 +1570,10 @@ class StatefulStreamingSpec extends SparkSpec {
       (ts("2024-01-01 10:01:00"), "a.1", "4.00"),
       (ts("2024-01-01 09:00:00"), "a.1", "99.00")) // behind frontier: dropped
     try {
-      ms.addData(feed: _*)
+      ms.addData(feed.take(3): _*)
+      q.processAllAvailable()
+      // a later batch: the row is behind the frontier the first one set
+      ms.addData(feed(3))
       q.processAllAvailable()
     } finally q.stop()
     val emitted = spark.table("dd_tie_t")
@@ -1477,7 +1642,10 @@ class StatefulStreamingSpec extends SparkSpec {
       (ts("2024-01-01 10:30:00"), "a.1", "3.00"), // tie: gap 0, no uptime
       (ts("2024-01-01 09:00:00"), "a.1", "9.00")) // late: dropped
     try {
-      ms.addData(feed: _*)
+      ms.addData(feed.take(3): _*)
+      q.processAllAvailable()
+      // a later batch: the row is behind the frontier the first one set
+      ms.addData(feed(3))
       q.processAllAvailable()
     } finally q.stop()
     val got = spark.table("slo_tie_t")
