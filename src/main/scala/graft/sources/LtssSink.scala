@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.sql.{Connection, DriverManager, SQLException}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.logging.log4j.LogManager
 import org.apache.logging.log4j.message.StringMapMessage
 import org.apache.spark.sql.{DataFrame, SaveMode}
@@ -198,63 +199,140 @@ object LtssSink {
       .sorted
   }
 
-  /** Compaction: rewrite one chunk's files into `targetFiles` sorted
-    * files (streaming micro-batches leave many small files per chunk;
-    * parquet scan efficiency wants few large ones). Chunk-local, like
-    * TimescaleDB recompression, so compaction runs incrementally behind
-    * ingest. Crash-safe swap: the compacted copy is staged under a
-    * DOT-prefixed dir (invisible to partition discovery — readers never
-    * see chunk rows twice), the live dir is renamed aside, the staged
-    * copy renamed in, and only then is the retired copy deleted — any
-    * crash leaves the data recoverable in a hidden dir, never
-    * double-counted. A concurrent reader can observe the chunk absent
-    * for the instant between the two renames; pair with a table format
-    * (Delta/Iceberg) where that window must be zero. */
+  // ------------------------------------------------------------ layout swap
+
+  /** The one layout-swap step. Compaction, the encoding migration and
+    * the track-month append each replace a directory `live` by a
+    * complete copy written beside it under a hidden `staged` name: `live`
+    * is renamed aside to the hidden `retired` name when it exists,
+    * `staged` is renamed in, and only then is `retired` dropped. Hidden
+    * names start with a dot, so partition discovery never reads a key
+    * twice, and at every crash point the rows survive in `live`, in a
+    * staged copy carrying `_SUCCESS` (Spark writes it after the last data
+    * file) or in `retired`. [[recoverSwap]] is the one rule that finds
+    * them. A reader can see `live` absent for the instant between the
+    * two renames; pair with a table format (Delta/Iceberg) where that
+    * window must be zero. The rule relies on atomic directory renames, as
+    * on HDFS and local disks. */
+  private def swapIn(fs: FileSystem, live: Path, staged: Path, retired: Path): Unit = {
+    if (fs.exists(live) && !fs.rename(live, retired))
+      throw new java.io.IOException(s"could not retire $live; it is still live")
+    if (!fs.rename(staged, live))
+      throw new java.io.IOException(
+        s"could not swap in $staged; the original, if any, is kept at $retired")
+    fs.delete(retired, true)
+  }
+
+  /** The recovery rule for one key's [[swapIn]] dirs, whatever point the
+    * swap stopped at, applied in order:
+    *
+    *  1. `live` holds data files: drop the hidden copies
+    *     (`discarded_leftovers`);
+    *  2. otherwise `staged` has `_SUCCESS`: swap it in (`completed_swap`);
+    *  3. otherwise `retired` holds data files: restore it
+    *     (`restored_original`);
+    *  4. otherwise sweep the dirs that hold no data files and return None.
+    *
+    * A staged copy that holds data files but no `_SUCCESS` is never
+    * trusted, and in case 4 it is kept for the operator rather than
+    * deleted. Idempotent. */
+  private def recoverSwap(
+      fs: FileSystem, live: Path, staged: Path, retired: Path): Option[String] =
+    if (hasDataFiles(fs, live)) {
+      fs.delete(staged, true)
+      fs.delete(retired, true)
+      Some("discarded_leftovers")
+    } else {
+      fs.delete(live, true) // a husk without data files
+      if (fs.exists(new Path(staged, "_SUCCESS"))) {
+        swapIn(fs, live, staged, retired)
+        Some("completed_swap")
+      } else if (hasDataFiles(fs, retired)) {
+        if (!fs.rename(retired, live))
+          throw new java.io.IOException(s"could not restore $retired")
+        fs.delete(staged, true)
+        Some("restored_original")
+      } else {
+        Seq(staged, retired).filterNot(hasDataFiles(fs, _)).foreach(fs.delete(_, true))
+        None
+      }
+    }
+
+  /** A dir holds rows only if it holds a data file: `spark.read.parquet`
+    * on a dir with none (crash residue, manual cleanup) throws "Unable to
+    * infer schema". */
+  private def hasDataFiles(fs: FileSystem, p: Path): Boolean =
+    fs.exists(p) && fs.listStatus(p).exists { s =>
+      val n = s.getPath.getName
+      s.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }
+
+  /** The keys `k` of the dirs `<prefix>k` directly under `root`: the
+    * migration lists its chunks, live or left only as a hidden copy, and
+    * the append its stranded months. */
+  private def keysOf(fs: FileSystem, root: Path, prefixes: String*): Seq[String] =
+    fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath.getName)
+      .flatMap(n => prefixes.find(n.startsWith).map(n.stripPrefix)).distinct
+
+  /** A chunk's live dir and its hidden staged and retired copies for `op`
+    * ("compact" or "migrate"). */
+  private def chunkDirs(root: Path, op: String, chunk: String): (Path, Path, Path) =
+    (new Path(root, s"chunk=$chunk"), new Path(root, s".${op}_staged_chunk_$chunk"),
+      new Path(root, s".${op}_retired_chunk_$chunk"))
+
+  /** Compaction: rewrite one chunk's files into `targetFiles` files sorted
+    * by `sortCols` (streaming micro-batches leave many small files per
+    * chunk; parquet scan efficiency wants few large ones) and return the
+    * size audit. Chunk-local, like TimescaleDB recompression, so
+    * compaction runs incrementally behind ingest; the rewrite replaces the
+    * chunk through [[swapIn]].
+    *
+    * Sorted by the `ltss_compress_plan` recommendation (segmentby,
+    * orderby), this is TimescaleDB's `compress_chunk` after setting
+    * `compress_segmentby`/`compress_orderby`: parquet's RLE/dictionary
+    * pages encode the long same-value runs the sort creates, the
+    * mechanism the report's `rle_ratio` predicts, and the audit row is
+    * what a lifecycle job logs to prove the policy pays before rolling it
+    * across 100 TB of chunks. */
   def compactChunk(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       chunk: String,
       targetFiles: Int = 1,
-      sortCols: Seq[String] = Seq("entity_id", "time")): Unit = {
+      sortCols: Seq[String] = Seq("entity_id", "time")): CompactionAudit = {
     val (fs, root) = hadoopFs(spark, path)
-    val chunkDir = new org.apache.hadoop.fs.Path(root, s"chunk=$chunk")
-    val staged = new org.apache.hadoop.fs.Path(root, s".compact_staged_chunk_$chunk")
-    val retired = new org.apache.hadoop.fs.Path(root, s".compact_retired_chunk_$chunk")
+    val (live, staged, retired) = chunkDirs(root, "compact", chunk)
     // GENERATION STAMP: before any rename, the layout marker records the
     // in-flight chunk under a bumped generation, so a reader (chunkScan)
     // that arrives while the chunk dir is mid-swap — or after a crash
     // between the two renames — detects the state instead of silently
     // returning a partial layout. Cleared on success;
     // [[recoverCompaction]] repairs any crash point. A marker-less
-    // legacy layout compacts unstamped, as before. The in-flight check
-    // runs BEFORE the leftover deletes below: when a previous compaction
-    // crashed mid-swap, those hidden dirs hold the only surviving copy
-    // of the chunk — deleting them here would destroy it.
+    // legacy layout compacts unstamped, so the recovery rule settles its
+    // crash residue here, after the in-flight check: a stamped crash is
+    // left to recoverCompaction.
     val marker = readLayoutMarker(spark, path)
     requireUnlocked(marker, path, "before compacting")
+    if (recoverSwap(fs, live, staged, retired).isEmpty)
+      throw new java.io.FileNotFoundException(s"chunk '$chunk' of $path holds no data files")
+    val (fb, bb) = parquetStats(fs, live)
     marker.foreach { m =>
       writeLayoutMarker(spark, path,
         m.copy(generation = m.generation + 1, compacting = Some(chunk)))
     }
-    fs.delete(staged, true)
-    fs.delete(retired, true)
-    spark.read.parquet(chunkDir.toString)
+    spark.read.parquet(live.toString)
       .repartition(targetFiles)
       .sortWithinPartitions(sortCols.map(col): _*)
       .write.mode(SaveMode.Overwrite).parquet(staged.toString)
-    if (!fs.rename(chunkDir, retired))
-      throw new java.io.IOException(s"compaction could not retire $chunkDir")
-    if (!fs.rename(staged, chunkDir))
-      throw new java.io.IOException(
-        s"compaction could not swap in $staged — original preserved at $retired")
-    fs.delete(retired, true)
+    swapIn(fs, live, staged, retired)
     marker.foreach(m => writeLayoutMarker(spark, path,
       m.copy(generation = m.generation + 1, compacting = None)))
-    ()
+    val (fa, ba) = parquetStats(fs, live)
+    CompactionAudit(chunk, sortCols, fb, bb, fa, ba)
   }
 
-  /** Size audit of one [[compactChunkMeasured]] run: parquet file count
-    * and bytes before/after the rewrite, plus the applied sort. */
+  /** Size audit of one [[compactChunk]] run: parquet file count and bytes
+    * before/after the rewrite, plus the applied sort. */
   final case class CompactionAudit(
       chunk: String, sort_cols: Seq[String],
       files_before: Long, bytes_before: Long,
@@ -269,37 +347,10 @@ object LtssSink {
 
   /** Parquet file count + bytes under one chunk dir (data files only —
     * markers and hidden staging dirs excluded). */
-  private def parquetStats(
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): (Long, Long) = {
+  private def parquetStats(fs: FileSystem, dir: Path): (Long, Long) = {
     val files = fs.listStatus(dir).filter(st =>
       st.isFile && st.getPath.getName.endsWith(".parquet"))
     (files.length.toLong, files.map(_.getLen).sum)
-  }
-
-  /** [[compactChunk]] with the `ltss_compress_plan` recommendation
-    * APPLIED AND AUDITED — the action the tuning panel exists to drive
-    * (TimescaleDB's `compress_chunk` after setting
-    * `compress_segmentby`/`compress_orderby`): rewrite the chunk sorted
-    * by the recommended (segmentby, orderby) columns and report parquet
-    * bytes before/after. The byte win is real recompression — parquet's
-    * RLE/dictionary pages encode the long same-value runs the sorted
-    * order creates, the exact mechanism the report's `rle_ratio`
-    * predicts — and the audit row is what a lifecycle job logs to prove
-    * the policy pays before rolling it across 100 TB of chunks. Same
-    * crash-safe swap as [[compactChunk]]. */
-  def compactChunkMeasured(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      chunk: String,
-      sortCols: Seq[String] = Seq("entity_id", "time"),
-      targetFiles: Int = 1): CompactionAudit = {
-    val (fs, root) = hadoopFs(spark, path)
-    val chunkDir = new org.apache.hadoop.fs.Path(root, s"chunk=$chunk")
-    val (fb, bb) = parquetStats(fs, chunkDir)
-    compactChunk(spark, path, chunk, targetFiles, sortCols)
-    val (fa, ba) = parquetStats(fs, chunkDir)
-    CompactionAudit(chunk, sortCols, fb, bb, fa, ba)
   }
 
   /** Layout-side analog of the reference's attributes TEXT → JSONB
@@ -310,18 +361,19 @@ object LtssSink {
     * without re-ingesting history. Protocol: the marker is stamped
     * `migratingEncoding` FIRST (readers, appenders, and compaction
     * refuse the layout while set — a half-migrated layout mixes physical
-    * types across chunks and breaks schema merge), then every chunk is
-    * rewritten through the compaction swap (staged dot-dir → retire →
-    * swap-in), and one final marker write commits
-    * `attributesEncoding = "variant"` and lifts the lock. Crash
-    * recovery is RE-RUNNING the migration: per chunk it first restores
-    * a live dir from a staged/retired survivor, then skips chunks whose
-    * parquet already holds variant — idempotent at every crash point.
-    * Returns the chunks rewritten by THIS run. Scale: chunk-local
-    * rewrites behind ingest, exactly like compaction — the reference
-    * migrates its whole table in one ALTER because PostgreSQL can; a
-    * 100 TB layout migrates incrementally, and the lock is what keeps
-    * readers correct meanwhile. */
+    * types across chunks and breaks schema merge), then every json chunk
+    * is rewritten and replaced through [[swapIn]], and one final marker
+    * write commits `attributesEncoding = "variant"` and lifts the lock.
+    * Crash recovery is RE-RUNNING the migration: it lists the chunks
+    * left only as a hidden copy too, settles each chunk's dirs by
+    * [[recoverSwap]] (a chunk with no copy left is logged as
+    * `migrate_sweep` and skipped), then skips chunks whose parquet
+    * already holds variant — idempotent at every crash point. Returns
+    * the chunks rewritten by THIS run. Scale: chunk-local rewrites
+    * behind ingest, exactly like compaction — the reference migrates its
+    * whole table in one ALTER because PostgreSQL can; a 100 TB layout
+    * migrates incrementally, and the lock is what keeps readers correct
+    * meanwhile. */
   def migrateAttributesEncoding(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
@@ -331,88 +383,40 @@ object LtssSink {
     val m0 = readLayoutMarker(spark, path).getOrElse(throw new IllegalStateException(
       s"layout at $path has no marker — its encoding is unknown; rewrite with " +
         "writeParquet(SaveMode.Overwrite, attributesEncoding = \"variant\") instead"))
-    m0.compacting.foreach { c =>
-      throw new IllegalStateException(
-        s"layout at $path has an unfinished compaction of chunk '$c' — " +
-          "run recoverCompaction before migrating")
-    }
+    // a re-run resumes its own lock; every other lock refuses
+    requireUnlocked(Some(m0.copy(migrating = m0.migrating.filterNot(_ == target))),
+      path, "before migrating")
     if (m0.attributesEncoding == target && m0.migrating.isEmpty) return Nil
     val (fs, root) = hadoopFs(spark, path)
     if (m0.migrating.isEmpty)
       writeLayoutMarker(spark, path,
         m0.copy(generation = m0.generation + 1, migrating = Some(target)))
-    // discover chunks from live dirs AND the hidden migration copies: a
-    // crash between the renames leaves a chunk with NO live dir, visible
-    // only as its staged/retired survivor — a live-only listing would
-    // silently skip it and the commit below would strand its rows
-    val names = fs.listStatus(root).filter(_.isDirectory).map(_.getPath.getName)
-    val chunks = (names.filter(_.startsWith("chunk=")).map(_.stripPrefix("chunk=")) ++
-      names.filter(_.startsWith(".migrate_staged_chunk_"))
-        .map(_.stripPrefix(".migrate_staged_chunk_")) ++
-      names.filter(_.startsWith(".migrate_retired_chunk_"))
-        .map(_.stripPrefix(".migrate_retired_chunk_"))).distinct.sorted.toSeq
+    // a crash between the renames leaves a chunk with NO live dir — a
+    // live-only listing would skip it and the commit below would strand
+    // its rows
+    val chunks = keysOf(fs, root,
+      "chunk=", ".migrate_staged_chunk_", ".migrate_retired_chunk_").sorted
     val done = scala.collection.mutable.ArrayBuffer.empty[String]
-    // a dir "has rows" only if it holds at least one data file —
-    // `spark.read.parquet` on an existing-but-file-less dir (crash
-    // residue, manual cleanup) throws "Unable to infer schema" and
-    // would abort the migration with the layout still marker-locked
-    def hasDataFiles(p: org.apache.hadoop.fs.Path): Boolean =
-      fs.exists(p) && fs.listStatus(p).exists { s =>
-        val n = s.getPath.getName
-        s.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
     for (c <- chunks) {
-      val chunkDir = new org.apache.hadoop.fs.Path(root, s"chunk=$c")
-      val staged = new org.apache.hadoop.fs.Path(root, s".migrate_staged_chunk_$c")
-      val retired = new org.apache.hadoop.fs.Path(root, s".migrate_retired_chunk_$c")
-      // crash recovery: a prior run may have died between the renames —
-      // restore a live dir from whichever hidden copy survived (staged
-      // is complete by construction once the retire rename began). A
-      // live dir that exists but is FILE-LESS counts as missing: a
-      // recoverable copy replaces it, and with no copy anywhere the
-      // husk is swept and the chunk skipped — zero rows need migrating.
-      if (!hasDataFiles(chunkDir)) {
-        fs.delete(chunkDir, true)
-        val src =
-          if (hasDataFiles(staged)) Some(staged)
-          else if (hasDataFiles(retired)) Some(retired)
-          else None
-        src match {
-          case Some(s) =>
-            if (!fs.rename(s, chunkDir))
-              throw new java.io.IOException(
-                s"chunk '$c' could not be restored from $s under $path")
-          case None =>
-            // file-less husks everywhere: zero rows need migrating —
-            // sweep the residue and move on instead of aborting with
-            // the layout still locked. Named out loud: crash residue
-            // is the expected cause, but externally-lost chunk FILES
-            // look identical from here, and a silent sweep would mask
-            // that loss
-            logger.warn(event("migrate_sweep", "chunk" -> c, "path" -> path,
-              "message" -> ("no data files in the live, staged or retired " +
-                "dirs; sweeping the empty dirs and skipping the chunk. If " +
-                "it ever held rows, they were lost outside this migration")))
-            fs.delete(staged, true)
-            fs.delete(retired, true)
-        }
-      }
-      if (fs.exists(chunkDir)) {
-        fs.delete(staged, true)
-        fs.delete(retired, true)
-        val df = spark.read.parquet(chunkDir.toString)
-        if (df.schema("attributes").dataType !=
-            org.apache.spark.sql.types.VariantType) {
-          df.withColumn("attributes", parse_json(col("attributes")))
-            .write.mode(SaveMode.Overwrite).parquet(staged.toString)
-          if (!fs.rename(chunkDir, retired))
-            throw new java.io.IOException(s"migration could not retire $chunkDir")
-          if (!fs.rename(staged, chunkDir))
-            throw new java.io.IOException(
-              s"migration could not swap in $staged — original preserved at $retired")
-          fs.delete(retired, true)
-          done += c
-        }
+      val (live, staged, retired) = chunkDirs(root, "migrate", c)
+      recoverSwap(fs, live, staged, retired) match {
+        case None =>
+          // named out loud: crash residue is the expected cause, but
+          // externally-lost chunk FILES look identical from here, and a
+          // silent sweep would mask that loss
+          logger.warn(event("migrate_sweep", "chunk" -> c, "path" -> path,
+            "message" -> ("no data files in the live or retired dirs and no " +
+              "complete staged copy; sweeping the empty dirs and skipping the " +
+              "chunk. If it ever held rows, they were lost outside this migration")))
+        case Some(_) =>
+          val df = spark.read.parquet(live.toString)
+          if (df.schema("attributes").dataType !=
+              org.apache.spark.sql.types.VariantType) {
+            df.withColumn("attributes", parse_json(col("attributes")))
+              .write.mode(SaveMode.Overwrite).parquet(staged.toString)
+            swapIn(fs, live, staged, retired)
+            done += c
+          }
       }
     }
     val m1 = readLayoutMarker(spark, path).getOrElse(m0)
@@ -421,47 +425,21 @@ object LtssSink {
     done.toSeq
   }
 
-  /** Repair a compaction interrupted at any point, using the marker's
-    * `compacting` stamp plus which of the live/staged/retired dirs
-    * survive. Every crash point lands in exactly one case:
-    *
-    *  1. live chunk intact (crash before the retire rename, or after the
-    *     swap-in completed): discard hidden leftovers;
-    *  2. live chunk missing, staged copy COMPLETE (`_SUCCESS` present —
-    *     crash between the two renames): finish the swap-in;
-    *  3. live chunk missing, staged absent/incomplete: restore the
-    *     retired original.
-    *
-    * Idempotent; clears the stamp at the end. Returns the action taken,
-    * or None when no compaction was in flight. */
+  /** Repair a compaction interrupted at any point: the marker's
+    * `compacting` stamp names the chunk, and [[recoverSwap]] settles its
+    * dirs. Idempotent; clears the stamp at the end. Returns the rule's
+    * action, or None when no compaction was in flight; throws when no
+    * copy of the chunk can be trusted. */
   def recoverCompaction(
       spark: org.apache.spark.sql.SparkSession, path: String): Option[String] = {
     val marker = readLayoutMarker(spark, path)
     marker.flatMap(m => m.compacting).map { chunk =>
       val (fs, root) = hadoopFs(spark, path)
-      val chunkDir = new org.apache.hadoop.fs.Path(root, s"chunk=$chunk")
-      val staged = new org.apache.hadoop.fs.Path(root, s".compact_staged_chunk_$chunk")
-      val retired = new org.apache.hadoop.fs.Path(root, s".compact_retired_chunk_$chunk")
-      val action =
-        if (fs.exists(chunkDir)) {
-          fs.delete(staged, true)
-          fs.delete(retired, true)
-          "discarded_leftovers"
-        } else if (fs.exists(staged) &&
-          fs.exists(new org.apache.hadoop.fs.Path(staged, "_SUCCESS"))) {
-          if (!fs.rename(staged, chunkDir))
-            throw new java.io.IOException(s"recovery could not swap in $staged")
-          fs.delete(retired, true)
-          "completed_swap"
-        } else if (fs.exists(retired)) {
-          if (!fs.rename(retired, chunkDir))
-            throw new java.io.IOException(s"recovery could not restore $retired")
-          fs.delete(staged, true)
-          "restored_original"
-        } else
-          throw new java.io.IOException(
-            s"chunk '$chunk' of $path is unrecoverable: live, staged and " +
-              "retired copies are all missing")
+      val (live, staged, retired) = chunkDirs(root, "compact", chunk)
+      val action = recoverSwap(fs, live, staged, retired).getOrElse(
+        throw new java.io.IOException(
+          s"chunk '$chunk' of $path is unrecoverable: the live and retired copies " +
+            "hold no data files and no staged copy is complete"))
       writeLayoutMarker(spark, path, marker.get.copy(compacting = None))
       action
     }
@@ -568,17 +546,40 @@ object LtssSink {
 
   private val MarkerName = "_ltss_layout.json"
 
-  /** The marker's file system and path. A checksummed file system (the
-    * local one) is read and written through its raw file system: the
-    * marker is replaced by a rename, and a checksum file renamed after
-    * its data would fail a read caught between the two. */
+  /** The file system small commit files (the marker, the zone version
+    * intent, the zone manifest) are read and written through. A
+    * checksummed file system (the local one) is bypassed for its raw file
+    * system: the files are replaced by a rename, and a checksum file
+    * renamed after its data would fail a read caught between the two. */
+  private def rawFs(fs: FileSystem): FileSystem = fs match {
+    case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+    case f => f
+  }
+
+  /** Replaces the small file `p` by `text` so that a concurrent reader
+    * (through [[rawFs]]) sees the old file or the new one, never a
+    * partial or absent file: the text goes to a hidden temp file that is
+    * renamed over `p`. */
+  private[graft] def replaceFile(fs: FileSystem, p: Path, text: String): Unit = {
+    val raw = rawFs(fs)
+    val tmp = new Path(p.getParent, s".${p.getName}.${java.util.UUID.randomUUID}")
+    val out = raw.create(tmp, false)
+    try out.write(text.getBytes("UTF-8"))
+    finally out.close()
+    // a local rename replaces the target atomically; HDFS refuses an
+    // existing target there, and its FileContext rename replaces it
+    // atomically instead
+    if (!raw.rename(tmp, p))
+      org.apache.hadoop.fs.FileContext.getFileContext(raw.getUri, raw.getConf)
+        .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    // a file written before this one through the checksummed file
+    // system left a checksum that no longer matches it
+    raw.delete(new Path(p.getParent, s".${p.getName}.crc"), false)
+  }
+
   private def markerFile(spark: org.apache.spark.sql.SparkSession, path: String) = {
     val (fs, root) = hadoopFs(spark, path)
-    val raw = fs match {
-      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-      case f => f
-    }
-    (raw, new org.apache.hadoop.fs.Path(root, MarkerName))
+    (rawFs(fs), new Path(root, MarkerName))
   }
 
   def readLayoutMarker(
@@ -606,9 +607,9 @@ object LtssSink {
     Some(LayoutMarker(interval, keys, generation, compacting, encoding, migrating))
   }
 
-  /** Records `m` as the layout's marker: written to a hidden temp file
-    * and renamed over the old one, so a concurrent [[readLayoutMarker]]
-    * reads the old marker or the new one, never a partial file. */
+  /** Records `m` as the layout's marker through [[replaceFile]], so a
+    * concurrent [[readLayoutMarker]] reads the old marker or the new one,
+    * never a partial file. */
   private[graft] def writeLayoutMarker(
       spark: org.apache.spark.sql.SparkSession, path: String, m: LayoutMarker): Unit = {
     val (fs, p) = markerFile(spark, path)
@@ -618,19 +619,7 @@ object LtssSink {
     val text = s"""{"chunkTimeIntervalUs":${m.chunkTimeIntervalUs},"attrKeys":$keys""" +
       s""","generation":${m.generation}$compacting$migrating""" +
       s""","attributesEncoding":"${m.attributesEncoding}"}"""
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent, s".$MarkerName.${java.util.UUID.randomUUID}")
-    val out = fs.create(tmp, false)
-    try out.write(text.getBytes("UTF-8"))
-    finally out.close()
-    // a local rename replaces the target atomically; HDFS refuses an
-    // existing target there, and its FileContext rename replaces it
-    // atomically instead
-    if (!fs.rename(tmp, p))
-      org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, fs.getConf)
-        .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    // a marker written before this one through the checksummed file
-    // system left a checksum that no longer matches it
-    fs.delete(new org.apache.hadoop.fs.Path(p.getParent, s".$MarkerName.crc"), false)
+    replaceFile(fs, p, text)
   }
 
   /** Time-range scan of the chunked layout with CHUNK EXCLUSION: the
@@ -830,17 +819,17 @@ object LtssSink {
     * slice, never rescan the corpus).
     *
     * Protocol, under the layout marker lock like every other lifecycle
-    * mutation: stamp `migrating = "appending"`, stage the merged
-    * months under a hidden dot-dir (the stage READS complete before
-    * any live dir moves), then per month retire → swap-in → drop
-    * retired (the [[compactChunk]] swap). Crash recovery is RE-RUNNING
-    * the append with the same segments: entry first restores any
-    * retired month dir whose live twin vanished (the only copy), and
-    * the merge is idempotent at every crash point. Input columns:
-    * `(id, chunk, n_fixes, seg)` — `trackSegmentStream`'s emission
-    * schema. Caller contract: run under the SAME session timezone as
-    * the layout's writer (month keys are session-tz calendar months,
-    * the layout's own chunking policy). */
+    * mutation: stamp `migrating = "appending:<owner>"`, stage the merged
+    * months under the hidden `.append_staged` dir (the stage READS
+    * complete before any live dir moves), then replace each month dir
+    * through [[swapIn]]. Crash recovery is RE-RUNNING the append with the
+    * same segments: entry settles every stranded month by
+    * [[recoverSwap]] (a retired month whose live twin vanished is the
+    * only copy and is restored), and the merge is idempotent at every
+    * crash point. Input columns: `(id, chunk, n_fixes, seg)` —
+    * `trackSegmentStream`'s emission schema. Caller contract: run under
+    * the SAME session timezone as the layout's writer (month keys are
+    * session-tz calendar months, the layout's own chunking policy). */
   def appendTrackMonth(
       segments: DataFrame, path: String, parts: Int = 32,
       force: Boolean = false): Unit = {
@@ -864,18 +853,15 @@ object LtssSink {
       generation = marker.generation + 1,
       migrating = Some(s"appending:${ownerToken()}")))
     val (fs, root) = hadoopFs(spark, path)
-    // crash restore: a retired month dir without a live twin holds the
-    // ONLY copy of that month — restore it before reading
-    fs.listStatus(root)
-      .filter(_.getPath.getName.startsWith(".append_retired_"))
-      .foreach { st =>
-        val k = st.getPath.getName.stripPrefix(".append_retired_")
-        val live = new org.apache.hadoop.fs.Path(root, s"chunk_key=$k")
-        if (!fs.exists(live) && !fs.rename(st.getPath, live))
-          throw new java.io.IOException(
-            s"could not restore crashed append residue ${st.getPath}")
-      }
-    val staged = new org.apache.hadoop.fs.Path(root, ".append_staged")
+    val staged = new Path(root, ".append_staged")
+    def monthDirs(k: String) = (new Path(root, s"chunk_key=$k"),
+      new Path(staged, s"chunk_key=$k"), new Path(root, s".append_retired_$k"))
+    // settle stranded months before the read: a month with no copy left
+    // is new to this run
+    keysOf(fs, root, ".append_retired_").foreach { k =>
+      val (live, in, retired) = monthDirs(k)
+      recoverSwap(fs, live, in, retired)
+    }
     fs.delete(staged, true)
     // bounded planning collect: distinct MONTHS in the batch, not rows
     val monthKeys = incoming
@@ -893,16 +879,8 @@ object LtssSink {
     merged.write.mode(SaveMode.Overwrite).partitionBy("chunk_key")
       .parquet(staged.toString)
     for (k <- monthKeys) {
-      val live = new org.apache.hadoop.fs.Path(root, s"chunk_key=$k")
-      val in = new org.apache.hadoop.fs.Path(staged, s"chunk_key=$k")
-      val retired = new org.apache.hadoop.fs.Path(root, s".append_retired_$k")
-      fs.delete(retired, true)
-      if (fs.exists(live) && !fs.rename(live, retired))
-        throw new java.io.IOException(s"append could not retire $live")
-      if (!fs.rename(in, live))
-        throw new java.io.IOException(
-          s"append could not swap in $in — prior month preserved at $retired")
-      fs.delete(retired, true)
+      val (live, in, retired) = monthDirs(k)
+      swapIn(fs, live, in, retired)
     }
     fs.delete(staged, true)
     writeLayoutMarker(spark, path, marker.copy(
@@ -944,13 +922,13 @@ object LtssSink {
     // read prior = 0 and stamp 1 again, re-arming the silent-diff
     // hazard for any state pinned to the original version 1. The
     // intended version therefore persists in a SIDECAR next to the
-    // layout (temp write + atomic rename) BEFORE the Overwrite and is
+    // layout ([[replaceFile]]) BEFORE the Overwrite and is
     // removed only after the marker lands; version reads take the MAX
     // of marker and surviving sidecar, so a torn redraw can only skip
     // version numbers forward, never reuse one.
     val spark = zones.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
-    val intentPath = new org.apache.hadoop.fs.Path(path + ".zver_intent")
+    val intentPath = new Path(path + ".zver_intent")
     val fs = intentPath.getFileSystem(conf)
     // WRITE-path prior takes the MAX of marker and surviving intent
     // (unlike the read path, which prefers a present marker): a torn
@@ -966,14 +944,7 @@ object LtssSink {
         "the retired rings); pass 0 to auto-bump")
     val v = if (version == 0L) prior + 1L else version
     val frame = zoneLayoutFrame(zones) // validate BEFORE staking the intent
-    locally {
-      val tmp = new org.apache.hadoop.fs.Path(path + ".zver_intent.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-      fs.delete(intentPath, false)
-      if (!fs.rename(tmp, intentPath))
-        throw new java.io.IOException(s"could not stake $intentPath")
-    }
+    replaceFile(fs, intentPath, v.toString)
     frame.write.mode(SaveMode.Overwrite).parquet(path)
     // marker AFTER the Overwrite (which clears the directory): the
     // generation field IS the zone_version the streaming twins pin
@@ -1010,27 +981,19 @@ object LtssSink {
   }
 
   /** The surviving `.zver_intent` sidecar's staked version — 0 when
-    * absent or unparsable (a torn temp-write reads as absent). Written
-    * by [[writeZoneLayout]] BEFORE the Overwrite, removed only after
-    * the marker lands, so in the torn window it alone carries the
-    * generation. */
+    * absent or unparsable. Written by [[writeZoneLayout]] BEFORE the
+    * Overwrite, removed only after the marker lands, so in the torn
+    * window it alone carries the generation. */
   private def readZoneVersionIntent(
       spark: org.apache.spark.sql.SparkSession, path: String): Long = {
-    val intentPath = new org.apache.hadoop.fs.Path(path + ".zver_intent")
-    val fs = intentPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // exists-then-open races the writer's final delete (the sidecar is
-    // removed the instant the marker lands) — a file vanishing between
-    // the two calls means the marker now carries the version, so
-    // "absent" is the correct answer, not an exception
+    val intentPath = new Path(path + ".zver_intent")
+    val fs = rawFs(intentPath.getFileSystem(spark.sparkContext.hadoopConfiguration))
+    // the sidecar is removed the instant the marker lands: absent then
+    // means the marker carries the version
     try {
-      if (!fs.exists(intentPath)) 0L
-      else {
-        val len = fs.getFileStatus(intentPath).getLen.toInt
-        val buf = new Array[Byte](len)
-        val in = fs.open(intentPath)
-        try in.readFully(0, buf) finally in.close()
-        new String(buf, "UTF-8").trim.toLongOption.getOrElse(0L)
-      }
+      val in = fs.open(intentPath)
+      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      text.trim.toLongOption.getOrElse(0L)
     } catch {
       case _: java.io.FileNotFoundException => 0L
     }
@@ -1093,22 +1056,23 @@ object LtssSink {
       spark: org.apache.spark.sql.SparkSession,
       fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path): Unit = {
-    val manifest = new org.apache.hadoop.fs.Path(root, ZoneManifestName)
-    val staged = new org.apache.hadoop.fs.Path(root, ZoneStageDir)
-    // a crash between the temp write and its rename leaves an orphan
-    // .tmp — never a commit point, always residue to discard
-    fs.delete(new org.apache.hadoop.fs.Path(root, ZoneManifestName + ".tmp"), false)
-    if (!fs.exists(manifest)) { fs.delete(staged, true); return }
-    val in = fs.open(manifest)
+    val manifest = new Path(root, ZoneManifestName)
+    val staged = new Path(root, ZoneStageDir)
+    // the fixed temp name earlier manifest writes used: a crash between
+    // that write and its rename left an orphan, never a commit point
+    fs.delete(new Path(root, ZoneManifestName + ".tmp"), false)
+    val raw = rawFs(fs)
+    if (!raw.exists(manifest)) { fs.delete(staged, true); return }
+    val in = raw.open(manifest)
     val lines =
       try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
       finally in.close()
-    // the temp-write+rename protocol makes a half-written manifest
-    // unreachable, but defend in depth anyway: an UNPARSABLE manifest
-    // (empty, or a garbled version line) is treated as UNCOMMITTED —
-    // discard it and the stage, keep the live files — rather than
-    // wedging the layout on NumberFormatException or, worse, replaying
-    // a truncated name list as a committed swap
+    // [[replaceFile]] makes a half-written manifest unreachable, but
+    // defend in depth anyway: an UNPARSABLE manifest (empty, or a
+    // garbled version line) is treated as UNCOMMITTED — discard it and
+    // the stage, keep the live files — rather than wedging the layout on
+    // NumberFormatException or, worse, replaying a truncated name list
+    // as a committed swap
     val parsed = lines.headOption.flatMap(h => h.toLongOption)
     if (parsed.isEmpty) {
       fs.delete(manifest, false)
@@ -1182,8 +1146,8 @@ object LtssSink {
       val cur = readLayoutMarker(spark, path).getOrElse(LayoutMarker(0L, Nil))
       writeLayoutMarker(spark, path, cur.copy(
         migrating = Some(s"zone-upsert:${ownerToken()}")))
-      val staged = new org.apache.hadoop.fs.Path(root, ZoneStageDir)
-      val manifest = new org.apache.hadoop.fs.Path(root, ZoneManifestName)
+      val staged = new Path(root, ZoneStageDir)
+      val manifest = new Path(root, ZoneManifestName)
       try {
         val gone = (dropIds ++ incomingIds).toSet
         val kept = spark.read.parquet(path)
@@ -1197,29 +1161,15 @@ object LtssSink {
         val names = fs.listStatus(staged).map(_.getPath.getName)
           .filter(n => !n.startsWith(".") && !n.startsWith("_")).sorted
         // the manifest IS the commit point, so its WRITE must be atomic:
-        // create+write straight at the final name can crash mid-stream,
-        // and a truncated name list would read as a committed swap that
-        // deletes live files absent from it. Write to a temp name and
-        // rename in — rename is the atomic commit on HDFS and local —
-        // so the manifest either exists complete or not at all.
-        val tmp = new org.apache.hadoop.fs.Path(root, ZoneManifestName + ".tmp")
-        fs.delete(tmp, false)
-        val out = fs.create(tmp, true)
-        try out.write(((cur.generation + 1) +: names.toSeq)
-          .mkString("\n").getBytes("UTF-8"))
-        finally out.close()
-        if (!fs.rename(tmp, manifest))
-          throw new java.io.IOException(
-            s"zone upsert could not commit the manifest at $manifest")
+        // a truncated name list would read as a committed swap that
+        // deletes live files absent from it
+        replaceFile(fs, manifest, ((cur.generation + 1) +: names.toSeq).mkString("\n"))
       } catch {
         case e: Throwable =>
           // an in-process refusal (e.g. the ring gate) is not a crash:
-          // nothing committed, so discard the stage (and any orphan
-          // manifest temp) and hand the layout back unlocked instead of
-          // leaving takeover residue
-          if (!fs.exists(manifest)) {
-            fs.delete(new org.apache.hadoop.fs.Path(
-              root, ZoneManifestName + ".tmp"), false)
+          // nothing committed, so discard the stage and hand the layout
+          // back unlocked instead of leaving takeover residue
+          if (!rawFs(fs).exists(manifest)) {
             fs.delete(staged, true)
             writeLayoutMarker(spark, path, cur)
           }

@@ -1182,6 +1182,32 @@ class GeoTrajectorySpec extends SparkSpec {
     assert(LtssSink.zoneLayoutVersion(spark, dir) == v + 13)
   }
 
+  test("zone version intent: a reader never sees the sidecar absent while it is rewritten") {
+    import graft.sources.LtssSink
+    // a reader caught between a delete and a rename of the intent reads
+    // version 0; with the marker absent too, the next redraw would reuse
+    // a version the zone-version gate exists to forbid
+    val dir = java.nio.file.Files.createTempDirectory("graft-zone-intent").toString + "/z"
+    val intent = new org.apache.hadoop.fs.Path(dir + ".zver_intent")
+    val fs = intent.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    LtssSink.replaceFile(fs, intent, "1")
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val reader = new Thread(() => while (!done.get) {
+      seen += LtssSink.zoneLayoutVersion(spark, dir)
+      started.countDown()
+    })
+    reader.start()
+    try {
+      started.await()
+      (2 to 201).foreach(v => LtssSink.replaceFile(fs, intent, v.toString))
+    } finally { done.set(true); reader.join() }
+    assert(!seen.contains(0L), s"the intent read absent in ${seen.count(_ == 0L)} of ${seen.size} reads")
+    assert(seen == seen.sorted, "a read went back to an older intent")
+    assert(LtssSink.zoneLayoutVersion(spark, dir) == 201L)
+  }
+
   test("appendTrackMonth owner token: a live concurrent appender refuses, dead residue passes") {
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("graft-track-tok").toString + "/t"

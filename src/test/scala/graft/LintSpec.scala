@@ -4,8 +4,8 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source-tree rules that keep operator-facing output structured and
-  * every broadcast hint bounded. */
+/** Source-tree rules that keep operator-facing output structured, every
+  * broadcast hint bounded and every layout swap on one protocol. */
 class LintSpec extends AnyFunSuite {
 
   private def scalaFiles(dir: String): List[java.nio.file.Path] = {
@@ -38,6 +38,27 @@ class LintSpec extends AnyFunSuite {
     }
     assert(hits.isEmpty, s"mapGroupsWithState, or NoTimeout outside StreamingOps.foldSorted, " +
       s"in: ${hits.mkString(", ")}; state the twin's key, order, mode and fold through foldSorted")
+  }
+
+  test("layout dirs and small commit files are replaced only through the swap and replace helpers") {
+    // a hand-written retire/swap decides its own crash recovery again;
+    // renames stay in the swap primitive, its recovery rule, the atomic
+    // small-file replace and the zone manifest's roll-forward
+    val owners = Seq("def swapIn(", "def recoverSwap(", "def replaceFile(", "def finishZoneSwap(")
+    val hits = scalaFiles("src/main/scala/graft/sources").flatMap { f =>
+      val lines = Files.readAllLines(f).asScala.toIndexedSeq
+      // each body ends at the next member of the object
+      val bodies = owners.map(o => lines.indexWhere(_.contains(o))).filter(_ >= 0).map { s =>
+        (s, lines.indexWhere(l => l.startsWith("  ") && !l.startsWith("   ") && l.trim.nonEmpty, s + 1))
+      }
+      lines.indices.filter { i =>
+        val t = lines(i).trim
+        val code = !t.startsWith("*") && !t.startsWith("//") && !t.startsWith("/*")
+        code && t.contains("rename(") && !bodies.exists { case (s, e) => i > s && i < e }
+      }.map(i => s"$f:${i + 1}")
+    }
+    assert(hits.isEmpty, s"rename( outside swapIn, recoverSwap, replaceFile and finishZoneSwap " +
+      s"in: ${hits.mkString(", ")}; replace a dir through LtssSink.swapIn")
   }
 
   test("every broadcast hint states what bounds its side") {

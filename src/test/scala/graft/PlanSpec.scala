@@ -130,13 +130,13 @@ class PlanSpec extends SparkSpec {
       .head().getLong(0)
     // control: compact in plain TIME order — single file, entities still
     // interleaved, so value runs stay length ~1
-    val timeOrdered = LtssSink.compactChunkMeasured(spark, out, chunk,
+    val timeOrdered = LtssSink.compactChunk(spark, out, chunk,
       sortCols = Seq("time"))
     assert(timeOrdered.files_before >= 2 && timeOrdered.files_after == 1, timeOrdered)
     // the recommendation: segmentby entity, orderby time — same rows,
     // same single file; the ONLY difference is the sort, so the byte
     // delta is pure recompression (RLE/dictionary pages over the runs)
-    val planOrdered = LtssSink.compactChunkMeasured(spark, out, chunk,
+    val planOrdered = LtssSink.compactChunk(spark, out, chunk,
       sortCols = Seq("entity_id", "time"))
     assert(planOrdered.files_after == 1, planOrdered)
     assert(planOrdered.bytes_after < timeOrdered.bytes_after,
@@ -182,7 +182,7 @@ class PlanSpec extends SparkSpec {
         .count(_.getName.endsWith(".parquet"))
       assert(filesBefore >= 2,
         s"chunk $c should hold several increments' files, got $filesBefore")
-      val a = LtssSink.compactChunkMeasured(spark, out, c,
+      val a = LtssSink.compactChunk(spark, out, c,
         sortCols = Seq("entity_id", "time"))
       assert(a.files_before == filesBefore && a.files_after == 1, a)
       assert(a.bytes_after > 0 && !a.ratio.isNaN, a)
@@ -367,6 +367,159 @@ class PlanSpec extends SparkSpec {
     assert(!staged.exists())
     assert(LtssSink.recoverCompaction(spark, out).isEmpty) // idempotent no-op
     assert(spark.read.parquet(out).count() == 2)
+  }
+
+  test("crash-point table: compaction, migration and the track-month append keep every row at each crash point") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, parse_json}
+    import graft.sources.LtssSink
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    // Each rewrite stages a copy, retires the live dir and swaps the copy
+    // in. Points 0-2 are built by hand under the hidden names the layouts
+    // have always used, so older residue recovers too; point 3 stops the
+    // rewrite itself at the swap-in rename, on the CrashFs scheme.
+    val points = Seq("before the retire, leftover stage", "between the renames, stage complete",
+      "retired copy, incomplete stage", "swap-in rename fails")
+    spark.sparkContext.hadoopConfiguration.set("fs.crashfs.impl", classOf[CrashFs].getName)
+    def fresh(prefix: String, p: Int) = {
+      val local = java.nio.file.Files.createTempDirectory(prefix).toString
+      (local, if (p == 3) s"crashfs://$local" else local)
+    }
+    def stage(df: DataFrame, dir: String, complete: Boolean, by: String*): Unit = {
+      df.write.mode("overwrite").partitionBy(by: _*).parquet(dir)
+      if (!complete) assert(new java.io.File(dir, "_SUCCESS").delete())
+    }
+    // builds point p by hand (points 0-2), or runs the rewrite into the
+    // failing swap-in (point 3), then recovers
+    def crashAndRecover(p: Int, live: String, retired: String)(
+        stageAs: Boolean => Unit)(rewrite: => Any)(recover: => Any): Unit = {
+      if (p < 3) {
+        stageAs(p != 2)
+        if (p > 0) assert(new java.io.File(live).renameTo(new java.io.File(retired)))
+      } else {
+        CrashFs.failNextSwapIn.set(true)
+        val e = intercept[java.io.IOException](rewrite)
+        assert(e.getMessage.contains("injected crash"), e.getMessage)
+      }
+      recover
+    }
+    def hiddenDirs(dir: String) = new java.io.File(dir).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith(".")).map(_.getName).toSeq
+    def rows(dir: String) = spark.read.parquet(dir)
+      .select(col("time").cast("string"), col("entity_id"), col("state"))
+      .as[(String, String, String)].collect().sorted.toSeq
+    val ltss = Seq(
+      (ts("2024-01-05 00:00:00"), "a.1", "1", """{"k": 1}"""),
+      (ts("2024-01-06 00:00:00"), "b.1", "2", """{"k": 2}"""),
+      (ts("2024-03-20 00:00:00"), "b.1", "3", """{"k": 3}"""))
+      .toDF("time", "entity_id", "state", "attributes")
+    // the first chunk holds both entities; the partial stage only a.1
+    def chunkLayout(p: Int): (String, String, String) = {
+      val (local, uri) = fresh("graft-crash-table", p)
+      LtssSink.writeParquet(ltss, uri)
+      val chunk = new java.io.File(local).list().filter(_.startsWith("chunk=")).min
+      (local, uri, chunk.stripPrefix("chunk="))
+    }
+    val want = rows(chunkLayout(0)._1)
+
+    for ((label, p) <- points.zipWithIndex) {
+      // compaction: the marker's stamp names the chunk; recoverCompaction
+      val (out, uri, c) = chunkLayout(p)
+      val live = s"$out/chunk=$c"
+      crashAndRecover(p, live, s"$out/.compact_retired_chunk_$c") { complete =>
+        val m = LtssSink.readLayoutMarker(spark, out).get
+        LtssSink.writeLayoutMarker(spark, out,
+          m.copy(generation = m.generation + 1, compacting = Some(c)))
+        val src = spark.read.parquet(live)
+        stage(if (complete) src else src.filter(col("entity_id") === "a.1"),
+          s"$out/.compact_staged_chunk_$c", complete)
+      } { LtssSink.compactChunk(spark, uri, c) } {
+        assert(LtssSink.recoverCompaction(spark, uri).isDefined, s"compaction, $label")
+      }
+      assert(rows(out) == want, s"compaction, $label")
+      assert(hiddenDirs(out).isEmpty, s"compaction, $label: ${hiddenDirs(out)}")
+      assert(LtssSink.readLayoutMarker(spark, out).get.compacting.isEmpty)
+    }
+    locally {
+      // a marker-less layout has no stamp: compacting it settles a crash
+      // between the renames instead of deleting the only copies
+      val (out, _, c) = chunkLayout(0)
+      assert(new java.io.File(out, "_ltss_layout.json").delete())
+      val live = s"$out/chunk=$c"
+      crashAndRecover(1, live, s"$out/.compact_retired_chunk_$c") { _ =>
+        stage(spark.read.parquet(live), s"$out/.compact_staged_chunk_$c", complete = true)
+      } {} { LtssSink.compactChunk(spark, out, c) }
+      assert(rows(out) == want && hiddenDirs(out).isEmpty, "marker-less compaction")
+      // a chunk with no data refuses before the stamp: the layout stays unlocked
+      val (out2, _, _) = chunkLayout(0)
+      intercept[java.io.FileNotFoundException](LtssSink.compactChunk(spark, out2, "1999-01-01"))
+      assert(LtssSink.readLayoutMarker(spark, out2).get.compacting.isEmpty)
+    }
+
+    for ((label, p) <- points.zipWithIndex) {
+      // encoding migration: the re-run is the recovery
+      val (out, uri, c) = chunkLayout(p)
+      val live = s"$out/chunk=$c"
+      crashAndRecover(p, live, s"$out/.migrate_retired_chunk_$c") { complete =>
+        val m = LtssSink.readLayoutMarker(spark, out).get
+        LtssSink.writeLayoutMarker(spark, out,
+          m.copy(generation = m.generation + 1, migrating = Some("variant")))
+        val src = spark.read.parquet(live)
+          .withColumn("attributes", parse_json(col("attributes")))
+        stage(if (complete) src else src.filter(col("entity_id") === "a.1"),
+          s"$out/.migrate_staged_chunk_$c", complete)
+      } { LtssSink.migrateAttributesEncoding(spark, uri) } {
+        LtssSink.migrateAttributesEncoding(spark, uri)
+      }
+      assert(rows(out) == want, s"migration, $label")
+      assert(hiddenDirs(out).isEmpty, s"migration, $label: ${hiddenDirs(out)}")
+      val m1 = LtssSink.readLayoutMarker(spark, out).get
+      assert(m1.attributesEncoding == "variant" && m1.migrating.isEmpty, s"migration, $label")
+    }
+
+    // track-month append of a new entity's January segment into a layout
+    // holding two entities in January; the partial stage holds only the
+    // new one
+    val fixes = Seq(
+      (1L, ts("2024-01-03 00:00:00"), 1L, 10.0, 20.0),
+      (1L, ts("2024-02-03 00:00:00"), 2L, 10.5, 20.5),
+      (2L, ts("2024-01-04 00:00:00"), 3L, 11.0, 21.0),
+      (2L, ts("2024-01-05 00:00:00"), 4L, 11.5, 21.5))
+    val newFix = (3L, ts("2024-01-06 00:00:00"), 5L, 12.0, 22.0)
+    def trackLayout(fs: Seq[(Long, java.sql.Timestamp, Long, Double, Double)], p: Int = 0) = {
+      val (local, uri) = fresh("graft-crash-track", p)
+      LtssSink.writeTrackLayout(fs.toDF("id", "ts", "seq", "lat", "lon"), uri, parts = 2)
+      (local, uri)
+    }
+    def dump(dir: String) = spark.read.parquet(dir)
+      .selectExpr("id", "chunk_key", "n_fixes", "transform(seg, f -> f.seq) AS seqs")
+      .as[(Long, String, Int, Seq[Long])].collect().sortBy(r => (r._1, r._2)).toSeq
+    val full = trackLayout(fixes :+ newFix)._1
+    val segLazy = spark.read.parquet(trackLayout(Seq(newFix))._1)
+      .select(col("id"), col("chunk"), col("n_fixes"), col("seg"))
+    val segments = spark.createDataFrame(
+      java.util.Arrays.asList(segLazy.collect(): _*), segLazy.schema)
+    val host = java.net.InetAddress.getLocalHost.getHostName
+    for ((label, p) <- points.zipWithIndex) {
+      // the re-run with the same segments is the recovery
+      val (dir, uri) = trackLayout(fixes, p)
+      crashAndRecover(p, s"$dir/chunk_key=2024-01", s"$dir/.append_retired_2024-01") {
+        complete =>
+          // the crashed owner's pid is dead
+          val m = LtssSink.readLayoutMarker(spark, dir).get
+          LtssSink.writeLayoutMarker(spark, dir, m.copy(generation = m.generation + 1,
+            migrating = Some(s"appending:$host:999999999:deadtok")))
+          val jan = spark.read.parquet(full).filter(col("chunk_key") === "2024-01")
+          stage(if (complete) jan else jan.filter(col("id") === 3L),
+            s"$dir/.append_staged", complete, "chunk_key")
+      } { LtssSink.appendTrackMonth(segments, uri, parts = 2) } {
+        LtssSink.appendTrackMonth(segments, uri, parts = 2)
+      }
+      assert(dump(dir) == dump(full), s"append, $label")
+      assert(hiddenDirs(dir).isEmpty, s"append, $label: ${hiddenDirs(dir)}")
+      assert(LtssSink.readLayoutMarker(spark, dir).get.migrating.isEmpty, s"append, $label")
+    }
   }
 
   test("layout marker guards appends: changed chunk interval or attr keys fail loudly") {
@@ -1324,4 +1477,24 @@ class PlanSpec extends SparkSpec {
       assert(spark.table("small_sort_stream").collect().map(_.getLong(1)).toSeq == Seq(6L, 7L, 7L))
     } finally q.stop()
   }
+}
+
+/** The local file system under the `crashfs` scheme. Once armed, the next
+  * rename of a staged copy onto a live dir throws, as a crash at a swap's
+  * swap-in rename would. Spark's own commit renames (under `_temporary`)
+  * pass. */
+class CrashFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("crashfs:///")
+  override def getScheme: String = "crashfs"
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean = {
+    val swapIn = src.toString.contains("staged") && !src.toString.contains("_temporary") &&
+      dst.getName.startsWith("chunk")
+    if (swapIn && CrashFs.failNextSwapIn.compareAndSet(true, false))
+      throw new java.io.IOException(s"injected crash renaming $src to $dst")
+    super.rename(src, dst)
+  }
+}
+
+object CrashFs {
+  val failNextSwapIn = new java.util.concurrent.atomic.AtomicBoolean(false)
 }

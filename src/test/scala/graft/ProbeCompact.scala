@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Committed-measurement probe for [[graft.sources.LtssSink.compactChunkMeasured]]
+/** Committed-measurement probe for [[graft.sources.LtssSink.compactChunk]]
   * (VERDICT r11 #8): build an LTSS chunk layout from the sf events in
   * ARRIVAL order — several time-ordered increments, the file state a
   * streaming ingest leaves behind — then apply the `ltss_compress_plan`
@@ -46,7 +46,7 @@ object ProbeCompact {
     println(s"PROBE rows=$rows chunks=${chunks.length} increments=$increments")
     var tb = 0L; var ta = 0L
     for (c <- chunks) {
-      val a = LtssSink.compactChunkMeasured(spark, out, c,
+      val a = LtssSink.compactChunk(spark, out, c,
         sortCols = Seq("entity_id", "time"))
       tb += a.bytes_before; ta += a.bytes_after
       println(f"AUDIT chunk=$c files ${a.files_before}%d->${a.files_after}%d " +
