@@ -88,6 +88,32 @@ object Pipeline {
       .select(col("__s.f0").as("doc_id"), col("__s.f1").as("lang"),
         col("__s.f2").as("n_tokens"))
 
+  /** Stratified temperature sampling over the dedup survivors: the
+    * rates come from the SURVIVOR language counts, and the membership
+    * filter is [[Sampling.stratAccept]], so the composed stage cannot
+    * drift from [[Sampling.sampleStratified]]. */
+  private def mixture(survivors: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val rates = Sampling.stratRates(
+      survivors.groupBy(col("lang")).agg(count(lit(1)).as("n_lang")))
+    // bound: one row per language (closed vocabulary)
+    survivors.join(broadcast(rates), "lang").filter(Sampling.stratAccept)
+  }
+
+  /** Sequence packing: each doc's start offset is the token sum of the
+    * docs before it in its (lang, shard), one window shuffle, and its
+    * sequence is that offset over [[Sampling.PackBudget]]. */
+  private def pack(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val wPack = Window.partitionBy(col("lang"), col("shard")).orderBy(col("doc_id"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow - 1)
+    docs
+      .withColumn("shard", expr(s"doc_id div ${Sampling.ShardDocs}"))
+      .withColumn("start_offset", coalesce(sum(col("n_tokens")).over(wPack), lit(0L)))
+      .select(col("lang"), col("shard"), col("doc_id"), col("n_tokens"),
+        (col("start_offset") / Sampling.PackBudget).cast("long").as("seq_id"))
+      .orderBy(col("lang"), col("shard"), col("doc_id"))
+  }
+
   val curate = {
     val budget = Sampling.PackBudget
     val shardDocs = Sampling.ShardDocs
@@ -100,14 +126,7 @@ object Pipeline {
         // one combinable hash aggregate — see dedupSurvivors)
         val survivors = dedupSurvivors(stageFrame(s, d))
         // stage 3: pack the surviving stream into training windows
-        val wPack = Window.partitionBy(col("lang"), col("shard")).orderBy(col("doc_id"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow - 1)
-        survivors
-          .withColumn("shard", expr(s"doc_id div $shardDocs"))
-          .withColumn("start_offset", coalesce(sum(col("n_tokens")).over(wPack), lit(0L)))
-          .select(col("lang"), col("shard"), col("doc_id"), col("n_tokens"),
-            (col("start_offset") / budget).cast("long").as("seq_id"))
-          .orderBy(col("lang"), col("shard"), col("doc_id"))
+        pack(survivors)
       },
       Some(s"""WITH scored AS (
         |  SELECT doc_id, lang, source, text,
@@ -164,21 +183,7 @@ object Pipeline {
     OracleQuery(
       "pipeline_curate_mix",
       (s, d) => {
-        val survivors = dedupSurvivors(stageFrame(s, d))
-          .select(col("lang"), col("doc_id"), col("n_tokens"))
-        val rates = Sampling.stratRates(
-          survivors.groupBy(col("lang")).agg(count(lit(1)).as("n_lang")))
-        // bound: one row per language (closed vocabulary)
-        val mixed = survivors.join(broadcast(rates), "lang")
-          .filter(Sampling.stratAccept)
-        val wPack = Window.partitionBy(col("lang"), col("shard")).orderBy(col("doc_id"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow - 1)
-        mixed
-          .withColumn("shard", expr(s"doc_id div $shardDocs"))
-          .withColumn("start_offset", coalesce(sum(col("n_tokens")).over(wPack), lit(0L)))
-          .select(col("lang"), col("shard"), col("doc_id"), col("n_tokens"),
-            (col("start_offset") / budget).cast("long").as("seq_id"))
-          .orderBy(col("lang"), col("shard"), col("doc_id"))
+        pack(mixture(dedupSurvivors(stageFrame(s, d))))
       },
       Some {
         // the curate oracle's CTE chain up to `survivors`, then the
@@ -254,21 +259,7 @@ object Pipeline {
       (s, d) => {
         // stages 1+2 (quality gate, passage gate) come persisted from
         // the shared stage frame; gate = 1 rows are the passage-gated
-        val survivors = dedupSurvivors(stageFrame(s, d).filter(col("gate") === 1))
-          .select(col("lang"), col("doc_id"), col("n_tokens"))
-        val rates = Sampling.stratRates(
-          survivors.groupBy(col("lang")).agg(count(lit(1)).as("n_lang")))
-        // bound: one row per language (closed vocabulary)
-        val mixed = survivors.join(broadcast(rates), "lang")
-          .filter(Sampling.stratAccept)
-        val wPack = Window.partitionBy(col("lang"), col("shard")).orderBy(col("doc_id"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow - 1)
-        mixed
-          .withColumn("shard", expr(s"doc_id div $shardDocs"))
-          .withColumn("start_offset", coalesce(sum(col("n_tokens")).over(wPack), lit(0L)))
-          .select(col("lang"), col("shard"), col("doc_id"), col("n_tokens"),
-            (col("start_offset") / budget).cast("long").as("seq_id"))
-          .orderBy(col("lang"), col("shard"), col("doc_id"))
+        pack(mixture(dedupSurvivors(stageFrame(s, d).filter(col("gate") === 1))))
       },
       Some {
         // the curate oracle's chain up to `kept`, then the passage gate
@@ -333,11 +324,7 @@ object Pipeline {
             col("source").as("f2"))).as("__s"))
           .select(col("__s.f0").as("doc_id"), col("__s.f1").as("lang"),
             col("__s.f2").as("source"))
-        val rates = Sampling.stratRates(
-          sv.groupBy(col("lang")).agg(count(lit(1)).as("n_lang")))
-        // bound: one row per language (closed vocabulary)
-        val mixed = sv.join(broadcast(rates), "lang")
-          .filter(Sampling.stratAccept)
+        val mixed = mixture(sv)
         val qp = stage.groupBy(col("source"))
           .agg(count(lit(1)).as("n_quality"),
             sum(col("gate")).cast("long").as("n_passage"))

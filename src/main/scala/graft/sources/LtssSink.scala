@@ -27,9 +27,9 @@ import graft.config.LtssConfig
   */
 object LtssSink {
 
-  /** Operator-facing events (PK-conflict rounds, dropped batches, the
-    * migration sweep, bootstrap and migration notices) go to the
-    * `graft.sources.LtssSink` logger as map messages keyed by `event`. */
+  /** Operator-facing events (the migration sweep, bootstrap and
+    * migration notices) go to the `graft.sources.LtssSink` logger as map
+    * messages keyed by `event`. */
   private val logger = LogManager.getLogger(getClass.getName.stripSuffix("$"))
 
   private def event(name: String, fields: (String, Any)*): StringMapMessage =
@@ -447,9 +447,9 @@ object LtssSink {
 
   /** Render the `location` struct as WKT text for relational targets —
     * the reference stores `SRID=4326;POINT(lon lat)` into the geometry
-    * column (models.py:61); Spark's JDBC writer has no struct mapping,
-    * so the WKT string IS the wire format. Parquet targets keep the
-    * typed struct. No-op when the column is absent or already a string. */
+    * column (models.py:61); JDBC has no struct mapping, so the WKT
+    * string IS the wire format. Parquet targets keep the typed struct.
+    * No-op when the column is absent or already a string. */
   def locationToWkt(ltss: DataFrame): DataFrame =
     ltss.schema.fields.find(_.name == "location") match {
       case Some(f) if f.dataType.typeName == "struct" =>
@@ -1185,7 +1185,6 @@ object LtssSink {
     * resolve through this; explicit arguments override. */
   def defaultTypesFor(url: String): (String, String) =
     if (url.startsWith("jdbc:postgresql")) ("JSONB", "VARCHAR(255)")
-    else if (url.startsWith("jdbc:derby")) ("CLOB", "CLOB")
     else ("VARCHAR(32000)", "VARCHAR(255)")
 
   /** D1 + L1: startup bootstrap, mirroring the reference's
@@ -1574,87 +1573,33 @@ object LtssSink {
   }
 
   /** JDBC append with the reference's retry envelope (≤10 tries, 3 s —
-    * __init__.py:53,201-244). Transient (connection-class) failures retry
-    * the whole batch. Once retries are exhausted — or on a non-transient
-    * error — the default is to RETHROW so a streaming caller's checkpoint
-    * does not advance past lost data (at-least-once); `dropOnFailure =
-    * true` opts into the reference's log-and-drop behavior
-    * (__init__.py:229-235) for callers that prefer availability.
-    *
-    * On a `jdbc:postgresql:` URL every batch goes through [[copyIntoPg]]:
-    * COPY where the connection offers it, the conflict-tolerant insert
-    * where it does not. It lands a replayed batch's PK conflicts itself,
-    * so only transient and fatal errors reach the envelope.
-    *
-    * Any other dialect uses Spark's JDBC writer. INTEGRITY violations
-    * (SQLState 23xxx — duplicate PK) are the expected face of
-    * at-least-once + the `(time, entity_id)` PK: a replayed batch
-    * re-inserting committed rows (reference drop-on-PK-conflict,
-    * __init__.py:229-231). A conflict does NOT mean the whole batch is
-    * committed — Spark's JDBC writer commits per PARTITION, so an
-    * earlier attempt may have committed only some partitions. On
-    * conflict the batch is ANTI-JOINED against the rows already in the
-    * table for its (time) key range and the remainder is retried — the
-    * checkpoint advances only once every partition's rows are durable,
-    * never past lost data. */
+    * __init__.py:53,201-244). Every dialect lands the batch through
+    * [[copyIntoPg]]: COPY where the connection offers it, the
+    * conflict-tolerant insert where it does not. The database decides
+    * PK conflicts by its own key comparison and skips stored keys
+    * (reference drop-on-PK-conflict, __init__.py:229-231): PostgreSQL
+    * through ` ON CONFLICT DO NOTHING`, any other dialect by replaying a
+    * conflicting chunk row by row under savepoints. A replayed batch —
+    * the expected face of at-least-once — and a batch that repeats its
+    * own PK both land each key once. Transient (connection-class)
+    * failures retry the whole batch; once retries are exhausted, or on
+    * any other error, the write RETHROWS so a streaming caller's
+    * checkpoint does not advance past lost data. */
   def writeJdbc(
       ltss: DataFrame,
       cfg: LtssConfig,
       table: String = "ltss",
       maxRetries: Int = 10,
       retryWaitMs: Long = 3000L,
-      sleep: Long => Unit = Thread.sleep,
-      dropOnFailure: Boolean = false,
-      maxConflictRounds: Int = 3): Unit = {
+      sleep: Long => Unit = Thread.sleep): Unit = {
+    val suffix = if (postgresDialect(cfg.dbUrl)) " ON CONFLICT DO NOTHING" else ""
     var attempt = 0
-    var conflictRounds = 0
-    var batch = ltss
     var done = false
     while (!done) {
-      try {
-        if (postgresDialect(cfg.dbUrl)) copyIntoPg(batch, cfg.dbUrl, table)
-        else batch.write
-          .mode(SaveMode.Append)
-          .option("batchsize", 1000)
-          .jdbc(cfg.dbUrl, table, new java.util.Properties())
-        done = true
-      } catch {
-        case e: Exception if isConflict(e) =>
-          if (conflictRounds >= maxConflictRounds) {
-            // exhausted rounds mean the anti-join keeps failing to match
-            // the committed rows — almost always a key-comparability gap
-            // between Spark and the target (timestamp precision
-            // truncation, entity_id collation/case folding) or a batch
-            // that conflicts within itself. Default is a deliberate LOUD
-            // failure rather than the old conflict-means-committed
-            // assumption (which silently dropped uncommitted
-            // partitions); fix the key round-trip (µs-precision
-            // timestamps, binary collation) or dedup the batch by PK
-            // before the sink. dropOnFailure keeps its availability
-            // contract and drops the batch with a log line instead.
-            if (dropOnFailure) {
-              logger.error(event("dropped_batch", "table" -> table, "cause" -> "pk_conflict",
-                "rounds" -> maxConflictRounds, "error" -> e.getMessage))
-              done = true
-            } else throw new IllegalStateException(
-              s"PK conflicts persisted after $maxConflictRounds remainder retries — " +
-                "the (time, entity_id) keys read back from the database do not match " +
-                "the batch's (timestamp precision? collation?), or the batch " +
-                "duplicates its own PKs. Not advancing past possibly-lost data.", e)
-          } else {
-            conflictRounds += 1
-            logger.info(event("pk_conflict_round", "table" -> table, "round" -> conflictRounds,
-              "error" -> e.getMessage))
-            batch = withoutCommittedRows(batch, cfg, table)
-          }
+      try { copyIntoPg(ltss, cfg.dbUrl, table, suffix); done = true }
+      catch {
         case e: Exception if attempt < maxRetries && isTransient(e) =>
           attempt += 1; sleep(retryWaitMs)
-        case e: Exception =>
-          if (dropOnFailure) {
-            logger.error(event("dropped_batch", "table" -> table, "cause" -> "write_failure",
-              "retries" -> attempt, "error" -> e.getMessage))
-            done = true
-          } else throw e
       }
     }
   }
@@ -1691,7 +1636,8 @@ object LtssSink {
     insertIgnoreConflicts(deduped, cfg.dbUrl, table, suffix)
   }
 
-  /** The sink dialect whose conflict handling the database can do itself. */
+  /** The sink dialect that skips stored keys in one statement
+    * (`ON CONFLICT`) and can upsert. */
   private[graft] def postgresDialect(url: String): Boolean =
     url.startsWith("jdbc:postgresql:")
 
@@ -1706,7 +1652,7 @@ object LtssSink {
     * connection and drives ONE prepared statement in 1000-row batches.
     * With the Postgres suffix the statement never conflicts — the
     * database skips committed PKs. On a dialect whose suffix cannot
-    * express that (the embedded-Derby tests pass ""), a chunk that hits
+    * express that (every other dialect passes ""), a chunk that hits
     * an integrity violation is replayed row-by-row swallowing per-row
     * conflicts — same semantics, used only where the one-statement form
     * is unavailable. */
@@ -1860,24 +1806,27 @@ object LtssSink {
     t.toString + (if (a % 60 == 0) hm else f"$hm:${a % 60}%02d")
   }
 
-  /** The PostgreSQL write path of [[writeJdbc]] (the reference commits
-    * one row per INSERT transaction, `__init__.py:207-218`; batched
-    * INSERT beats that ~50×, COPY beats batched INSERT again by
-    * skipping per-row statement overhead — both measured on live PG 15
-    * in `PostgresE2ESpec`). Per partition: one connection, the
-    * partition streamed in bounded CHUNKS of COPY text (memory = one
-    * chunk, never the partition), each chunk one `COPY … FROM STDIN`
-    * statement. COPY cannot express ON CONFLICT, so a chunk whose load
-    * hits the `(time, entity_id)` PK (a replayed batch — the expected
-    * face of at-least-once) falls back to the conflict-tolerant insert
-    * (`ON CONFLICT DO NOTHING` + savepoint replay), landing each chunk
-    * exactly once. A connection with no COPY surface ([[copyApiOf]])
-    * lands the whole partition through that insert. */
+  /** The one write path of [[writeJdbc]] (the reference commits one
+    * row per INSERT transaction, `__init__.py:207-218`; batched INSERT
+    * beats that ~50×, COPY beats batched INSERT again by skipping
+    * per-row statement overhead — both measured on live PG 15 in
+    * `PostgresE2ESpec`). Per partition: one connection. Where
+    * [[copyApiOf]] finds a COPY surface, the partition streams in
+    * bounded CHUNKS of COPY text (memory = one chunk, never the
+    * partition), each chunk one `COPY … FROM STDIN` statement. COPY
+    * cannot express ON CONFLICT, so a chunk whose load hits the
+    * `(time, entity_id)` PK (a replayed batch, or one that repeats its
+    * own PK) falls back to the conflict-tolerant insert with the
+    * dialect's `suffix` (`ON CONFLICT DO NOTHING` on PostgreSQL, `""`
+    * elsewhere: savepoint replay), landing each key exactly once. A
+    * connection with no COPY surface lands the whole partition through
+    * that insert. */
   private[graft] def copyIntoPg(
-      batch: DataFrame, url: String, table: String, chunkRows: Int = 10000): Unit = {
+      batch: DataFrame, url: String, table: String, suffix: String,
+      chunkRows: Int = 10000): Unit = {
     val cols = batch.columns.toIndexedSeq
     val copySql = s"COPY $table (${cols.mkString(", ")}) FROM STDIN"
-    val fallbackSql = insertSql(table, cols, " ON CONFLICT DO NOTHING")
+    val fallbackSql = insertSql(table, cols, suffix)
     batch.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
       val conn = DriverManager.getConnection(url)
       try copyApiOf(conn) match {
@@ -1890,8 +1839,8 @@ object LtssSink {
             try copyIn(copySql, new java.io.StringReader(sb.toString))
             catch {
               case e: SQLException if isConflict(e) =>
-                // replayed rows in THIS chunk: the database skips
-                // committed PKs itself via the insert fallback
+                // conflicting rows in THIS chunk: the database skips
+                // stored PKs itself via the insert fallback
                 insertRowsIgnoreConflicts(conn, fallbackSql, cols.length, chunk.iterator)
             }
             chunk.clear()
@@ -1903,22 +1852,6 @@ object LtssSink {
           flush()
       } finally conn.close()
     }
-  }
-
-  /** The batch minus rows whose `(time, entity_id)` PK already exists in
-    * the table — the replay-safe remainder after a PK conflict. The
-    * existing-key read is bounded to the batch's time range (the
-    * predicate pushes down to the database, so at scale this reads one
-    * chunk's keys, not the table). */
-  private def withoutCommittedRows(
-      batch: DataFrame, cfg: LtssConfig, table: String): DataFrame = {
-    val spark = batch.sparkSession
-    val bounds = batch.agg(min(col("time")).as("lo"), max(col("time")).as("hi")).head()
-    if (bounds.isNullAt(0)) return batch // empty batch
-    val existing = spark.read.jdbc(cfg.dbUrl, table, new java.util.Properties())
-      .filter(col("time").between(lit(bounds.getTimestamp(0)), lit(bounds.getTimestamp(1))))
-      .select(col("time"), col("entity_id"))
-    batch.join(existing, Seq("time", "entity_id"), "left_anti")
   }
 
   /** Integrity-constraint violations (duplicate PK on replay). Walks the

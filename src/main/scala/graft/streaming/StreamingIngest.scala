@@ -174,9 +174,9 @@ object StreamingIngest {
       .trigger(Trigger.ProcessingTime("1 second"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (cfg.dbUrl.startsWith("jdbc:")) {
-          // writeJdbc re-reads the batch on every transient retry and
-          // every PK-conflict round; the persist keeps those re-reads
-          // off the source and out of the observed counts
+          // writeJdbc re-reads the batch only on a transient retry; the
+          // persist keeps that re-read off the source and out of the
+          // observed counts
           batch.persist()
           // upsert is the CUTOVER-WINDOW sink — re-read rows land
           // ON CONFLICT DO UPDATE so the overlap converges to the

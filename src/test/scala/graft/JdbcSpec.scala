@@ -75,15 +75,16 @@ class JdbcSpec extends SparkSpec {
     val cfg = LtssConfig(dbUrl = url, enableLocation = false)
     LtssSink.bootstrapJdbc(cfg)
     def row(t: String, e: String, st: String) = (ts(t), e, st, s"""{"v":"$st"}""")
-    // an earlier attempt committed SOME of the batch (Spark's JDBC write
-    // commits per partition): rows 1-2 are already in the table
+    // an earlier attempt committed SOME of the batch (each partition
+    // commits on its own): rows 1-2 are already in the table
     LtssSink.writeJdbc(
       Seq(row("2024-01-01 00:00:00", "a.1", "1"), row("2024-01-01 00:00:01", "a.2", "2"))
         .toDF("time", "entity_id", "state", "attributes"),
       cfg, retryWaitMs = 1)
     // the replayed FULL batch holds the committed rows plus never-committed
-    // ones, spread over several partitions → the write conflicts; the sink
-    // must land the remainder instead of declaring the batch done
+    // ones, spread over several partitions → a chunk conflicts; Derby has
+    // no ON CONFLICT, so the chunk replays row by row under savepoints,
+    // skipping the stored keys without reading them back
     val replay = Seq(
       row("2024-01-01 00:00:00", "a.1", "1"), row("2024-01-01 00:00:01", "a.2", "2"),
       row("2024-01-01 00:00:02", "a.3", "3"), row("2024-01-01 00:00:03", "a.4", "4"))
@@ -93,6 +94,8 @@ class JdbcSpec extends SparkSpec {
     assert(back.count() == 4, "never-committed rows were dropped on conflict")
     assert(back.select("entity_id").as[String].collect().sorted.toSeq ==
       Seq("a.1", "a.2", "a.3", "a.4"))
+    // committed rows kept their original values (conflicts skipped, not upserted)
+    assert(back.filter($"entity_id" === "a.1").select("state").as[String].head() == "1")
   }
 
   test("Postgres fast path: dialect detection and the one-statement conflict insert") {
@@ -143,23 +146,22 @@ class JdbcSpec extends SparkSpec {
     assert(LtssSink.isConflict(new RuntimeException("job aborted", bue)))
   }
 
-  test("conflict that persists past maxConflictRounds rethrows (no infinite replay loop)") {
-    val url = s"jdbc:derby:memory:graftcl_${System.nanoTime()};create=true"
+  test("a batch that repeats its own PK lands one row and does not throw") {
+    val url = s"jdbc:derby:memory:graftsd_${System.nanoTime()};create=true"
     val cfg = LtssConfig(dbUrl = url, enableLocation = false)
     LtssSink.bootstrapJdbc(cfg)
-    val base = Seq((ts("2024-01-01 00:00:00"), "a.1", "1", "{}"))
-      .toDF("time", "entity_id", "state", "attributes")
-    LtssSink.writeJdbc(base, cfg, retryWaitMs = 1)
-    // a batch that conflicts WITHIN ITSELF: two rows, same PK — the
-    // anti-join removes nothing new after round 1, rounds exhaust, throw
+    // two rows, one PK, one partition: the chunk conflicts with itself;
+    // the database keeps the first and skips the second, as the
+    // reference's drop-on-PK-conflict does (__init__.py:229-231)
     val selfDup = Seq(
       (ts("2024-02-01 00:00:00"), "b.1", "1", "{}"),
-      (ts("2024-02-01 00:00:00"), "b.1", "2", "{}"))
-      .toDF("time", "entity_id", "state", "attributes").repartition(1)
-    assertThrows[Exception] {
-      LtssSink.writeJdbc(selfDup, cfg, maxRetries = 0, retryWaitMs = 1, sleep = _ => (),
-        maxConflictRounds = 2)
-    }
+      (ts("2024-02-01 00:00:00"), "b.1", "2", "{}"),
+      (ts("2024-02-01 00:00:01"), "b.2", "3", "{}"))
+      .toDF("time", "entity_id", "state", "attributes").coalesce(1)
+    LtssSink.writeJdbc(selfDup, cfg, maxRetries = 0, retryWaitMs = 1, sleep = _ => ())
+    val back = spark.read.jdbc(url, "ltss", new java.util.Properties())
+    assert(back.select("entity_id").as[String].collect().sorted.toSeq == Seq("b.1", "b.2"))
+    assert(back.filter($"entity_id" === "b.1").select("state").as[String].head() == "1")
   }
 
   /** A java.sql.Connection + org.postgresql.PGConnection proxy whose

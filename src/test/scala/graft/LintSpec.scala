@@ -5,7 +5,8 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-tree rules that keep operator-facing output structured, every
-  * broadcast hint bounded and every layout swap on one protocol. */
+  * broadcast hint bounded, every layout swap on one protocol and every
+  * JDBC write on one lander. */
 class LintSpec extends AnyFunSuite {
 
   private def scalaFiles(dir: String): List[java.nio.file.Path] = {
@@ -59,6 +60,21 @@ class LintSpec extends AnyFunSuite {
     }
     assert(hits.isEmpty, s"rename( outside swapIn, recoverSwap, replaceFile and finishZoneSwap " +
       s"in: ${hits.mkString(", ")}; replace a dir through LtssSink.swapIn")
+  }
+
+  test("the sink lands JDBC rows through one lander") {
+    // Spark's JDBC writer commits per partition and leaves PK conflicts
+    // to the caller; every write goes through LtssSink.copyIntoPg, so
+    // `.jdbc(` appears under the sink only as a read
+    val hits = scalaFiles("src/main/scala/graft/sources").flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex.filter { case (l, _) =>
+        val t = l.trim
+        val code = !t.startsWith("*") && !t.startsWith("//") && !t.startsWith("/*")
+        code && t.replace("read.jdbc(", "").contains(".jdbc(")
+      }.map { case (_, i) => s"$f:${i + 1}" }
+    }
+    assert(hits.isEmpty, s".jdbc( other than read.jdbc( in: ${hits.mkString(", ")}; " +
+      "land JDBC rows through LtssSink.copyIntoPg")
   }
 
   test("every broadcast hint states what bounds its side") {

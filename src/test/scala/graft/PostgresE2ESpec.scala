@@ -207,6 +207,23 @@ class PostgresE2ESpec extends SparkSpec with BeforeAndAfterAll {
     }
   }
 
+  test("writeJdbc: a batch that repeats its own PK lands one row and does not throw") {
+    LtssSink.bootstrapJdbc(cfg, table = "ltss_selfdup", locationType = "VARCHAR(255)")
+    // one COPY chunk that conflicts with itself falls back to
+    // ON CONFLICT DO NOTHING, which keeps the first row of the key
+    val batch = Seq(
+      (ts("2024-02-01 00:00:00"), "b.1", "1", "{}"),
+      (ts("2024-02-01 00:00:00"), "b.1", "2", "{}"),
+      (ts("2024-02-01 00:00:01"), "b.2", "3", "{}"))
+      .toDF("time", "entity_id", "state", "attributes").coalesce(1)
+    LtssSink.writeJdbc(batch, cfg, table = "ltss_selfdup", maxRetries = 0,
+      retryWaitMs = 1, sleep = _ => ())
+    withWire { w =>
+      val got = w.query("SELECT entity_id, state FROM ltss_selfdup ORDER BY time").rows
+      assert(got == Vector(Vector("b.1", "1"), Vector("b.2", "3")), s"self-duplicate batch: $got")
+    }
+  }
+
   test("COPY payload with a surrogate pair straddling the 64 KiB read boundary round-trips") {
     withWire { w =>
       w.query("DROP TABLE IF EXISTS copy_smp")
@@ -477,6 +494,38 @@ class PostgresE2ESpec extends SparkSpec with BeforeAndAfterAll {
       assert(rows.zipWithIndex.forall { case (r, i) =>
         r(1) == s"${i + 1}.50" && r(2) == s"${i + 1}" }, // P1's 2-dp state format
         s"overlap rows must carry the recomputed (identical) payload: $rows")
+    }
+  }
+
+  test("streaming ingest: a trigger whose commit entry was lost replays and lands every row once") {
+    import java.nio.file.{Files, Paths}
+    // April 2024 PKs — disjoint from the sibling ingest tests in the
+    // shared ltss table
+    def line(i: Int) =
+      s"""{"event_id":$i,"ts":"2024-04-01T00:00:0$i.000001Z","user_id":$i,"event_type":"sensor","value":$i.5,"props":"{}"}"""
+    val in = Files.createTempDirectory("pg-c3-in").toString
+    val ckpt = Files.createTempDirectory("pg-c3-ckpt").toString
+    Files.writeString(Paths.get(in, "b1.json"), (1 to 3).map(line).mkString("\n"))
+    val c = LtssConfig(dbUrl = server.url, enableLocation = false)
+    graft.streaming.StreamingIngest.drainAndStop(graft.streaming.StreamingIngest.start(
+      graft.streaming.StreamingIngest.readJsonEvents(spark, in), c, "", ckpt))
+    // the trigger's rows reached the table but its commits/<id> entry
+    // did not: the restart re-runs that trigger from its offsets entry
+    val commits = new java.io.File(ckpt, "commits")
+    val newest = commits.listFiles().map(_.getName).filter(_.forall(_.isDigit)).maxBy(_.toLong)
+    assert(new java.io.File(commits, newest).delete())
+    new java.io.File(commits, s".$newest.crc").delete()
+    Files.writeString(Paths.get(in, "b2.json"), line(4))
+    val q2 = graft.streaming.StreamingIngest.start(
+      graft.streaming.StreamingIngest.readJsonEvents(spark, in), c, "", ckpt)
+    graft.streaming.StreamingIngest.drainAndStop(q2)
+    assert(q2.recentProgress.exists(p => p.batchId == newest.toLong && p.numInputRows == 3),
+      "the restart did not replay the uncommitted trigger")
+    withWire { w =>
+      val rows = w.query("SELECT entity_id FROM ltss " +
+        "WHERE time >= TIMESTAMP '2024-04-01 00:00:00' " +
+        "AND time < TIMESTAMP '2024-05-01 00:00:00' ORDER BY entity_id").rows.map(_(0))
+      assert(rows == (1 to 4).map(i => s"sensor.$i").toVector, s"replayed trigger: $rows")
     }
   }
 

@@ -116,25 +116,19 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() == 1)
   }
 
-  test("jdbc sink: non-transient failure rethrows by default, drops only on opt-in") {
+  test("jdbc sink: a failed write rethrows") {
     import spark.implicits._
     val df = Seq(("a", 1)).toDF("entity_id", "v")
     val cfg = LtssConfig(dbUrl = "jdbc:invalid://nowhere")
-    // default: rethrow, so a streaming checkpoint can't advance past loss
+    // the write rethrows, so a streaming checkpoint can't advance past loss
     assertThrows[Exception] {
       LtssSink.writeJdbc(df, cfg, maxRetries = 2, retryWaitMs = 1, sleep = _ => ())
     }
-    // opt-in: the reference's log-and-drop path (__init__.py:229-235)
-    LtssSink.writeJdbc(df, cfg, maxRetries = 2, retryWaitMs = 1, sleep = _ => (),
-      dropOnFailure = true)
-    succeed
   }
 
   test("jdbc bootstrap creates the ltss table with PK, idempotently; writes append (D1)") {
     val url = s"jdbc:derby:memory:graftd1_${System.nanoTime()};create=true"
     val cfg = LtssConfig(dbUrl = url, enableLocation = true)
-    // Derby defaults resolve to CLOB columns (Spark's Derby dialect binds
-    // NULL strings as CLOB, which Derby refuses to coerce into VARCHAR)
     LtssSink.bootstrapJdbc(cfg) // creates
     LtssSink.bootstrapJdbc(cfg) // introspects, skips — must not throw
     import spark.implicits._
@@ -147,10 +141,10 @@ class StreamingSpec extends SparkSpec {
     assert(back.count() == 2)
     assert(back.columns.map(_.toLowerCase).toSet ==
       Set("time", "entity_id", "state", "attributes", "location"))
-    // PK (time, entity_id) is enforced; a replayed batch's duplicate
-    // insert is classified as a conflict, the already-committed keys are
-    // anti-joined away, and the (empty) remainder retried — no throw,
-    // no duplicate rows (reference drop-on-PK-conflict, __init__.py:229-231)
+    // PK (time, entity_id) is enforced; a replayed batch's chunk hits
+    // the stored keys, replays row by row and the database skips each
+    // stored key — no throw, no duplicate rows (reference
+    // drop-on-PK-conflict, __init__.py:229-231)
     LtssSink.writeJdbc(rows, cfg, maxRetries = 1, retryWaitMs = 1, sleep = _ => ())
     assert(spark.read.jdbc(url, "ltss", new java.util.Properties()).count() == 2)
   }
@@ -190,6 +184,31 @@ class StreamingSpec extends SparkSpec {
     val back = spark.read.jdbc(url, "ltss", new java.util.Properties())
     assert(back.count() == 2)
     assert(back.select("entity_id").collect().map(_.getString(0)).sorted.toSeq == Seq("a.1", "a.2"))
+  }
+
+  test("jdbc sink: a trigger whose commit entry was lost replays and lands every row once") {
+    val in = tmp("ltss-in6"); val ckpt = tmp("ltss-ckpt6")
+    def line(i: Int) =
+      s"""{"event_id":$i,"ts":"2024-01-01T00:00:0$i.000001Z","user_id":$i,"event_type":"a","value":$i.5,"props":"{}"}"""
+    Files.writeString(java.nio.file.Paths.get(in, "b1.json"), (1 to 3).map(line).mkString("\n"))
+    val url = s"jdbc:derby:memory:graftc3_${System.nanoTime()};create=true"
+    val cfg = LtssConfig(dbUrl = url, enableLocation = false)
+    StreamingIngest.drainAndStop(
+      StreamingIngest.start(StreamingIngest.readJsonEvents(spark, in), cfg, "", ckpt))
+    // the trigger's rows reached the sink but its commits/<id> entry did
+    // not: the restart re-runs that trigger from its offsets entry
+    val commits = new java.io.File(ckpt, "commits")
+    val newest = commits.listFiles().map(_.getName).filter(_.forall(_.isDigit)).maxBy(_.toLong)
+    assert(new java.io.File(commits, newest).delete())
+    new java.io.File(commits, s".$newest.crc").delete()
+    Files.writeString(java.nio.file.Paths.get(in, "b2.json"), line(4))
+    val q2 = StreamingIngest.start(StreamingIngest.readJsonEvents(spark, in), cfg, "", ckpt)
+    StreamingIngest.drainAndStop(q2)
+    assert(q2.recentProgress.exists(p => p.batchId == newest.toLong && p.numInputRows == 3),
+      "the restart did not replay the uncommitted trigger")
+    val back = spark.read.jdbc(url, "ltss", new java.util.Properties())
+    assert(back.select("entity_id").collect().map(_.getString(0)).sorted.toSeq ==
+      (1 to 4).map(i => s"a.$i"))
   }
 
   test("sink failure fails the streaming query — checkpoint cannot advance past loss") {

@@ -603,8 +603,8 @@ object PgMiniDriver {
 
   /** ResultSetMetaData from the RowDescription's type OIDs (pg_type's
     * stable built-in OIDs, a documented public catalog surface) — what
-    * Spark's JDBC writer reads when it probes an existing table's
-    * schema with `SELECT * FROM t WHERE 1=0`. */
+    * Spark's JDBC source reads when it probes a table's schema with
+    * `SELECT * FROM t WHERE 1=0`. */
   private def resultSetMetaData(r: PgWire.Result): java.sql.ResultSetMetaData = {
     import java.sql.Types
     def sqlType(oid: Int): (Int, String) = oid match {
