@@ -42,7 +42,7 @@ object DetMath {
   // Left-associated explicit sums — identical fp order on Spark & DuckDB.
   // ------------------------------------------------------------------
 
-  /** Dot product via the native [[DotF64]] kernel: a compiled sequential
+  /** Dot product via the native [[graft.functions.Kernels.dotF64]] kernel: a compiled sequential
     * loop `acc += a[i]·b[i]` in doubles — the same fp order as SQL's
     * left-associated `+` chain (0.0 + x ≡ x), so the result is
     * bit-identical to [[dotSql]], and unlike the `aggregate`/`zip_with`
@@ -52,8 +52,7 @@ object DetMath {
     * multi-session application); `dot_f64` stays SQL-reachable via
     * [[graft.plans.GraftExtensions]]. */
   def dotCol(a: Column, b: Column, dim: Int): Column = {
-    import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
-    columnOf(DotF64(expressionOf(a), expressionOf(b), dim))
+    Kernels.dotF64(a, b, lit(dim))
   }
 
   def dotSql(a: String, b: String, dim: Int): String =

@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Structure-aware JSON member removal for the attribute-pop step of the
@@ -20,8 +16,10 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object JsonOps {
 
-  /** Entry point for the [[PopLatLon]] expression and its codegen. */
   def popLatLon(json: String): String = popTopLevel(json, "latitude", "longitude")
+
+  /** The static target of [[Kernels.popLatLon]]. */
+  def popLatLon(json: UTF8String): UTF8String = UTF8String.fromString(popLatLon(json.toString))
 
   /** Remove top-level members named `k1`/`k2` from a JSON object text.
     * Non-object or malformed input is returned unchanged (the reference
@@ -136,52 +134,7 @@ object JsonOps {
       } finally p.close()
     } catch { case _: Exception => false }
   }
-}
 
-/** `pop_latlon(attributes)` as a native expression: codegen emits one
-  * static call, so the projection stays inside whole-stage codegen. */
-case class PopLatLon(child: Expression) extends UnaryExpression with Serializable {
-
-  override def dataType: DataType = StringType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"pop_latlon expects STRING, got ${child.dataType.simpleString}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(JsonOps.popLatLon(input.asInstanceOf[UTF8String].toString))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.functions.JsonOps.popLatLon($c.toString()))")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "pop_latlon"
-}
-
-/** `is_valid_json(text)` — boolean validity probe, same codegen shape. */
-case class IsValidJson(child: Expression) extends UnaryExpression with Serializable {
-  import org.apache.spark.sql.types.BooleanType
-
-  override def dataType: DataType = BooleanType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"is_valid_json expects STRING, got ${child.dataType.simpleString}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    JsonOps.isValidJson(input.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.JsonOps.isValidJson($c.toString())")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "is_valid_json"
+  /** The static target of [[Kernels.isValidJson]]. */
+  def isValidJson(json: UTF8String): Boolean = isValidJson(json.toString)
 }

@@ -1,11 +1,7 @@
 package graft.functions
 
 import java.nio.charset.StandardCharsets
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass MinHash signature kernel.
@@ -372,206 +368,4 @@ object TextHash {
     while (i < 8) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
     v >>> 4
   }
-}
-
-/** `minhash8(text)` as a native expression: codegen emits one static
-  * call; the whole signature stage stays in whole-stage codegen. */
-case class MinHash8(child: Expression) extends UnaryExpression with Serializable {
-
-  override def dataType: DataType = ArrayType(StringType)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"minhash8 expects STRING, got ${child.dataType.simpleString}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextHash.minhash8(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.minhash8($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "minhash8"
-}
-
-/** `simhash16(text)` as a native expression — one compiled pass, one md5
-  * per token (vs 16 in the composed `aggregate` HOF form). */
-case class SimHash16(child: Expression) extends UnaryExpression with Serializable {
-
-  override def dataType: DataType = StringType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"simhash16 expects STRING, got ${child.dataType.simpleString}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextHash.simhash16(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.simhash16($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "simhash16"
-}
-
-/** `simhash64(text)` as a native expression — the 64-bit signature for
-  * scale-ready 4×16-bit banding; one compiled pass, one md5 per token. */
-case class SimHash64(child: Expression) extends UnaryExpression with Serializable {
-
-  override def dataType: DataType = StringType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"simhash64 expects STRING, got ${child.dataType.simpleString}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextHash.simhash64(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.simhash64($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "simhash64"
-}
-
-/** `md5_prefix64(text)` as a native expression — the 60-bit md5-prefix
-  * shuffle fingerprint (bijective with the oracle's
-  * `substring(md5(x), 1, 15)`); one digest call inside whole-stage
-  * codegen. */
-case class Md5Prefix64(child: Expression) extends UnaryExpression with Serializable {
-
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"md5_prefix64 expects STRING, got ${child.dataType.simpleString}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextHash.md5Prefix64(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.md5Prefix64($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "md5_prefix64"
-}
-
-/** `gram2_stats(text)` → [n_tokens, n_2grams, n_uniq_2grams] as a native
-  * expression — one compiled pass, no interpreted HOF, no intermediate
-  * gram array. */
-case class Gram2Stats(child: Expression) extends UnaryExpression with Serializable {
-
-  override def dataType: DataType = ArrayType(org.apache.spark.sql.types.LongType)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"gram2_stats expects STRING, got ${child.dataType.simpleString}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextHash.gram2Stats(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.gram2Stats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "gram2_stats"
-}
-
-/** `token_set_count(text, words...)` as a native expression: count of
-  * tokens in a fixed word set, one compiled pass. The word set is a
-  * compile-time constant baked into the expression instance. */
-case class TokenSetCount(child: Expression, words: Seq[String])
-    extends UnaryExpression with Serializable {
-
-  @transient private lazy val wordBytes: Array[Array[Byte]] =
-    words.map(_.getBytes(StandardCharsets.UTF_8)).toArray
-
-  /** Codegen references the word set through a registered object. */
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"token_set_count expects STRING, got ${child.dataType.simpleString}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextHash.tokenSetCount(input.asInstanceOf[UTF8String], wordBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val wordsRef = ctx.addReferenceObj("tscWords", wordBytes, "byte[][]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.tokenSetCount($c, $wordsRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "token_set_count"
-}
-
-/** `shingles_k(text, k)` → ARRAY<STRING> of k-word shingles as a native
-  * expression — byte-span extraction, no per-element lambda. */
-case class ShinglesK(child: Expression, k: Int)
-    extends UnaryExpression with Serializable {
-
-  require(k >= 1, "shingle size must be >= 1")
-
-  override def dataType: DataType = ArrayType(StringType)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"shingles_k expects STRING, got ${child.dataType.simpleString}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextHash.shinglesK(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.shinglesK($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "shingles_k"
-}
-
-/** `min_shingle_fp(text, k)` as a native expression — one md5 per shingle
-  * in a compiled loop (vs an interpreted `transform`-of-md5 + array_min
-  * with an intermediate array per doc). `k` is a literal. */
-case class MinShingleFp(child: Expression, k: Int)
-    extends UnaryExpression with Serializable {
-
-  require(k >= 1, "shingle size must be >= 1")
-
-  override def dataType: DataType = StringType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"min_shingle_fp expects STRING, got ${child.dataType.simpleString}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextHash.minShingleFp(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.minShingleFp($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "min_shingle_fp"
 }

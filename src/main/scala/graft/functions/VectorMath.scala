@@ -1,14 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
-/** Float-vector dot product as a native expression.
+/** Float-vector kernels: the static targets of [[Kernels.dotF64]] and
+  * [[Kernels.quantizeI8]].
   *
-  * The composable form — `aggregate(zip_with(a, b, _*_), 0.0, _+_)` — is
+  * The dot product's composable form — `aggregate(zip_with(a, b, _*_), 0.0, _+_)` — is
   * a higher-order function, which Spark evaluates interpreted (lambda
   * expression eval per element, no whole-stage codegen). For an n²
   * verify stage that is the hot loop. This kernel is one compiled loop;
@@ -66,86 +63,4 @@ object VectorMath {
     }
     java.lang.Double.valueOf(acc)
   }
-}
-
-/** `quantize_i8(embedding)` → STRUCT<codes: ARRAY<INT>, max_abs_err:
-  * DOUBLE> as a native expression. */
-case class QuantizeI8(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with Serializable {
-
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("codes", ArrayType(
-      org.apache.spark.sql.types.IntegerType)),
-    org.apache.spark.sql.types.StructField("max_abs_err", DoubleType)))
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"quantize_i8 expects ARRAY<FLOAT>, got ${other.simpleString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorMath.quantizeI8(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val row = ctx.freshName("qRow")
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow $row =
-         |  graft.functions.VectorMath.quantizeI8($a);
-         |if ($row == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $row;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "quantize_i8"
-}
-
-/** `dot_f64(a, b, dim)` over two ARRAY<FLOAT> columns → DOUBLE. */
-case class DotF64(left: Expression, right: Expression, dim: Int)
-  extends BinaryExpression with Serializable {
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    })
-    if (ok && dim > 0) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"dot_f64 expects (ARRAY<FLOAT>, ARRAY<FLOAT>, dim > 0), got " +
-        s"${left.dataType.simpleString}, ${right.dataType.simpleString}, dim=$dim")
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorMath.dotF64OrNull(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], dim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val boxed = ctx.freshName("dotBoxed")
-      s"""
-         |java.lang.Double $boxed = graft.functions.VectorMath.dotF64OrNull($a, $b, $dim);
-         |if ($boxed == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $boxed.doubleValue();
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "dot_f64"
 }

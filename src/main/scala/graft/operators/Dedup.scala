@@ -25,7 +25,7 @@ import graft.{Routes, Tables}
 object Dedup {
 
   /** 2-word shingles (DuckDB side; the Spark side computes the same
-    * shingling inside the [[graft.functions.MinHash8]] kernel). */
+    * shingling inside the [[graft.functions.Kernels.minhash8]] kernel). */
   private[operators] val shingles2Sql =
     """CASE WHEN len(string_split(text, ' ')) >= 2
       |  THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 1),
@@ -57,16 +57,15 @@ object Dedup {
   /** MinHash signature frame: doc_id, m0..m7 (8-hex-char string mins).
     *
     * SHUFFLE-FREE and CODEGEN-NATIVE: the whole signature is computed
-    * row-locally by the [[graft.functions.MinHash8]] native expression
+    * row-locally by the [[graft.functions.Kernels.minhash8]] native kernel
     * (one compiled pass: shingle spans → 2×md5 → running slice-mins) —
     * no explode, no groupBy, no interpreted higher-order functions. At
     * 100 TB the signature stage is a pure map with no exchange at all;
     * only the LSH band join shuffles. */
   private def minhashFrame(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
     val base = Tables.fanOut(docs)
       .select(col("doc_id"),
-        columnOf(graft.functions.MinHash8(expressionOf(col("text")))).as("sig"))
+        graft.functions.Kernels.minhash8(col("text")).as("sig"))
     val mins = (0 until NumHashes).map(i => element_at(col("sig"), i + 1).as(s"m$i"))
     base.select(col("doc_id") +: mins: _*)
   }
@@ -964,13 +963,12 @@ object Dedup {
   private[graft] def sampleShingleFrame(s: SparkSession, d: String, bound: String): DataFrame =
     graft.CachedFrames.getOrBuild(
       s"sample_shingles$bound|${graft.CachedFrames.sessionKey(s)}|$d") {
-      import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
-      val sh2 = columnOf(graft.functions.ShinglesK(expressionOf(col("text")), 2))
+      val sh2 = graft.functions.Kernels.shinglesK(col("text"), lit(2))
       Tables.documents(s, d)
         .filter(substring(md5(col("doc_id").cast("string")), 1, 1) < bound)
         .select(col("doc_id"), explode(array_distinct(sh2)).as("sh"))
         .select(col("doc_id"),
-          columnOf(graft.functions.Md5Prefix64(expressionOf(col("sh")))).as("fp"))
+          graft.functions.Kernels.md5Prefix64(col("sh")).as("fp"))
         .distinct()
     }
 
@@ -1146,18 +1144,17 @@ object Dedup {
     (s, d) => {
       val shFrame = graft.CachedFrames.getOrBuild(
         s"allpairs_shingles|${graft.CachedFrames.sessionKey(s)}|$d") {
-        import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
         val samp = Tables.documents(s, d)
           .filter(substring(md5(col("doc_id").cast("string")), 1, 1) < "2")
           .select(col("doc_id"), col("text"))
         val corpus = samp.unionAll(samp.filter(col("doc_id") % 4 === 1)
           .select((col("doc_id") + 20000000L).as("doc_id"),
             concat(col("text"), lit(" twin")).as("text")))
-        val sh2 = columnOf(graft.functions.ShinglesK(expressionOf(col("text")), 2))
+        val sh2 = graft.functions.Kernels.shinglesK(col("text"), lit(2))
         corpus
           .select(col("doc_id"), explode(array_distinct(sh2)).as("sh"))
           .select(col("doc_id"),
-            columnOf(graft.functions.Md5Prefix64(expressionOf(col("sh")))).as("fp"))
+            graft.functions.Kernels.md5Prefix64(col("sh")).as("fp"))
           .distinct()
       }
       exactJaccardPairs(shFrame, 1, 2)
@@ -1408,10 +1405,9 @@ object Dedup {
   private[graft] def simhashBands(s: SparkSession, d: String, bits: Int): DataFrame =
     graft.CachedFrames.getOrBuild(
       s"simhash${bits}_bands|${graft.CachedFrames.sessionKey(s)}|$d") {
-      import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
       val kernel: Column = bits match {
-        case 16 => columnOf(graft.functions.SimHash16(expressionOf(col("text"))))
-        case 64 => columnOf(graft.functions.SimHash64(expressionOf(col("text"))))
+        case 16 => graft.functions.Kernels.simhash16(col("text"))
+        case 64 => graft.functions.Kernels.simhash64(col("text"))
         case other => throw new IllegalArgumentException(s"no simhash kernel for $other bits")
       }
       val bandWidth = bits / 4
@@ -1530,7 +1526,7 @@ object Dedup {
 
   /** 64-bit SimHash near-dup pairs — the 100 TB width, promised at the
     * 16-bit variant's doc ("width is a parameter, not a plan change")
-    * and now a real kernel ([[graft.functions.SimHash64]]): 4×16-bit
+    * and now a real kernel ([[graft.functions.Kernels.simhash64]]): 4×16-bit
     * bands give a band space of 2¹⁶ values, so hot buckets are RARE and
     * the banded tier keeps contributing at the full [[MaxLshBucket]]
     * cap — unlike 4-bit bands, whose 16-value space saturates every
@@ -1614,8 +1610,7 @@ object Dedup {
   val sourceOverlap = OracleQuery(
     "source_overlap",
     (s, d) => {
-      import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
-      val sh3 = columnOf(graft.functions.ShinglesK(expressionOf(col("text")), 3))
+      val sh3 = graft.functions.Kernels.shinglesK(col("text"), lit(3))
       // shingles reduce to 60-bit md5-prefix fingerprints BEFORE the
       // distinct: the shuffle carries an 8-byte long per shingle instead
       // of the string. Any prefix collision merges the same shingles on
@@ -1637,7 +1632,7 @@ object Dedup {
       val srcSh = GraftLineage.cut(Tables.documents(s, d)
         .select(col("source"), explode(array_distinct(sh3)).as("sh"))
         .select(col("source"),
-          columnOf(graft.functions.Md5Prefix64(expressionOf(col("sh")))).as("sh"))
+          graft.functions.Kernels.md5Prefix64(col("sh")).as("sh"))
         .distinct(), eager = true)
       val counts = srcSh.groupBy(col("source")).agg(count(lit(1)).as("n"))
       srcSh.toDF("a_src", "sh").join(srcSh.toDF("b_src", "sh"), "sh")
@@ -1779,7 +1774,6 @@ object Dedup {
     * count row (no fan-out); nothing in the plan holds a document's
     * text after the fingerprint projection. */
   private[graft] def passageStats(docs: DataFrame, width: Int = 16): DataFrame = {
-    import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
     val chunks = docs
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= width)
@@ -1787,7 +1781,7 @@ object Dedup {
         s"transform(sequence(0, CAST(size(w) / $width AS INT) - 1), " +
           s"i -> concat_ws(' ', slice(w, i * $width + 1, $width)))")).as("chunk"))
       .select(col("doc_id"),
-        columnOf(graft.functions.Md5Prefix64(expressionOf(col("chunk")))).as("fp"))
+        graft.functions.Kernels.md5Prefix64(col("chunk")).as("fp"))
     val counts = chunks.groupBy(col("fp")).agg(count(lit(1)).as("cnt"))
     val perDoc = chunks.join(counts, "fp")
       .groupBy(col("doc_id"))
@@ -1846,7 +1840,7 @@ object Dedup {
     * Scale design: production ExactSubstr builds a suffix array; this
     * stride-1 window form is its bounded-memory distributed analog —
     * ~n_tokens rows per document reduced to 8-byte [[
-    * graft.functions.Md5Prefix64]] fingerprints MAP-SIDE before the one
+    * graft.functions.Kernels.md5Prefix64]] fingerprints MAP-SIDE before the one
     * combinable count shuffle (a boilerplate window is ONE count row),
     * a semi-join back on the same 8-byte key, and the span merge a
     * per-doc lag window over only the DUPLICATED window starts (a
@@ -1869,7 +1863,6 @@ object Dedup {
   /** The span computation over a (doc_id, text) frame — see
     * [[substringSpans]] for semantics and the scale argument. */
   private[graft] def substringSpanStats(docs: DataFrame, width: Int = 16): DataFrame = {
-    import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
     val W = width
     val wins = docs
       .select(col("doc_id"), split(col("text"), " ").as("w"))
@@ -1877,8 +1870,8 @@ object Dedup {
       .select(col("doc_id"),
         explode(expr(s"sequence(0, size(w) - $W)")).as("i"), col("w"))
       .select(col("doc_id"), col("i"),
-        columnOf(graft.functions.Md5Prefix64(expressionOf(
-          expr(s"concat_ws(' ', slice(w, i + 1, $W))")))).as("fp"))
+        graft.functions.Kernels.md5Prefix64(
+          expr(s"concat_ws(' ', slice(w, i + 1, $W))")).as("fp"))
     // duplicated windows by ONE count-over-fp window (r21, guide §2.4):
     // the former groupBy(fp)+semi-join shape computed the corpus-wide
     // explode+md5 TWICE (once per consumer) and shuffled it twice; a
@@ -1991,15 +1984,14 @@ object Dedup {
     OracleQuery(
       "contamination_spans",
       (s, d) => {
-        import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
         def wins(df: DataFrame) = df
           .select(col("doc_id"), split(col("text"), " ").as("w"))
           .filter(size(col("w")) >= W)
           .select(col("doc_id"),
             explode(expr(s"sequence(0, size(w) - $W)")).as("i"), col("w"))
           .select(col("doc_id"), col("i"),
-            columnOf(graft.functions.Md5Prefix64(expressionOf(
-              expr(s"concat_ws(' ', slice(w, i + 1, $W))")))).as("fp"))
+            graft.functions.Kernels.md5Prefix64(
+              expr(s"concat_ws(' ', slice(w, i + 1, $W))")).as("fp"))
         val docs = Tables.documents(s, d)
         val allWins = wins(docs)
         val corpus = allWins.filter(col("doc_id") % 100 =!= 0)
@@ -2132,14 +2124,13 @@ object Dedup {
     * with i the passage index — the shared cutting rule of
     * [[fpStorePath]] and [[incremental]]. */
   private def passageFps(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
     docs.select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 16)
       .select(col("doc_id"), posexplode(expr(
         "transform(sequence(0, CAST(size(w) / 16 AS INT) - 1), " +
           "i -> concat_ws(' ', slice(w, i * 16 + 1, 16)))")).as(Seq("i", "chunk")))
       .select(col("doc_id"), col("i").cast("long").as("i"),
-        columnOf(graft.functions.Md5Prefix64(expressionOf(col("chunk")))).as("fp"))
+        graft.functions.Kernels.md5Prefix64(col("chunk")).as("fp"))
   }
 
   private val passageFpsSql =
@@ -2237,18 +2228,17 @@ object Dedup {
     *
     * The verifier stage shares [[jaccard]]'s shape (candidates come
     * from LSH banding at scale — this is the exact pass those
-    * candidates route through); tokens reduce to 8-byte `Md5Prefix64`
+    * candidates route through); tokens reduce to 8-byte `md5Prefix64`
     * keys before the intersection join, and each score is one IEEE
     * division of exact BIGINT set sizes. */
   val containment = OracleQuery(
     "dedup_containment",
     (s, d) => {
-      import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
       val toks = Tables.documents(s, d).filter(col("doc_id") < 80)
         .select(col("doc_id"),
           explode(array_distinct(split(col("text"), " "))).as("w"))
         .select(col("doc_id"),
-          columnOf(graft.functions.Md5Prefix64(expressionOf(col("w")))).as("fp"))
+          graft.functions.Kernels.md5Prefix64(col("w")).as("fp"))
       val sizes = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
       val inter = toks.as("x").join(toks.as("y"),
           col("x.fp") === col("y.fp") && col("x.doc_id") < col("y.doc_id"))
@@ -2327,7 +2317,7 @@ object Dedup {
       val pairDocs = GraftLineage.cut(pairs.select(col("a_id").as("doc_id"))
         .union(pairs.select(col("b_id").as("doc_id")))
         .distinct(), eager = true)
-      // the MinHash8 kernel runs once, over the CANDIDATE docs only: both
+      // the `minhash8` kernel runs once, over the CANDIDATE docs only: both
       // signature attaches below read this one cut
       val sig = GraftLineage.cut(minhashFrame(
         Tables.documents(s, d).join(pairDocs, "doc_id")), eager = true)
@@ -2431,7 +2421,7 @@ object Dedup {
     * per-doc signal a crawl scheduler reads to decide whether a source
     * is still yielding new text.
     *
-    * Scale shape: shingles reduce to 60-bit [[graft.functions.Md5Prefix64]]
+    * Scale shape: shingles reduce to 60-bit [[graft.functions.Kernels.md5Prefix64]]
     * longs map-side (8-byte shuffle keys, bijective with the oracle's
     * 15-hex-char md5 prefix so collisions merge identically on both
     * engines); ONE distinct shuffle on (fp, doc_id), first-occurrence
@@ -2444,12 +2434,11 @@ object Dedup {
   val docNovelty = OracleQuery(
     "doc_novelty",
     (s, d) => {
-      import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
-      val sh3 = columnOf(graft.functions.ShinglesK(expressionOf(col("text")), 3))
+      val sh3 = graft.functions.Kernels.shinglesK(col("text"), lit(3))
       val docSh = Tables.documents(s, d)
         .select(col("doc_id"), explode(array_distinct(sh3)).as("sh"))
         .select(col("doc_id"),
-          columnOf(graft.functions.Md5Prefix64(expressionOf(col("sh")))).as("fp"))
+          graft.functions.Kernels.md5Prefix64(col("sh")).as("fp"))
         .distinct()
       val w = Window.partitionBy(col("fp"))
       docSh

@@ -6356,12 +6356,11 @@ object Queries {
   val kmvDistinct = OracleQuery(
     "ltss_kmv_distinct",
     (s, d) => {
-      import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
       val base = ltss(s, d)
         .withColumn("domain", split(col("entity_id"), "\\.").getItem(0))
       def side(tag: String, c: org.apache.spark.sql.Column) =
         base.select(col("domain"), lit(tag).as("target"),
-          columnOf(graft.functions.Md5Prefix64(expressionOf(c))).as("h"))
+          graft.functions.Kernels.md5Prefix64(c).as("h"))
       val u = side("entities", col("entity_id"))
         .union(side("states", col("state")))
         .distinct()
@@ -6568,7 +6567,6 @@ object Queries {
   val kmvMerge = OracleQuery(
     "ltss_kmv_merge",
     (s, d) => {
-      import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
       val HourUs = 3600000000L
       val DayUs = 86400000000L
       def est(n: Column, kth: Column): Column =
@@ -6576,7 +6574,7 @@ object Queries {
           .otherwise((lit((KmvK - 1).toDouble) * lit(1152921504606846976.0d))
             / kth.cast("double"))
       val base = ltss(s, d)
-        .withColumn("h", columnOf(graft.functions.Md5Prefix64(expressionOf(col("entity_id")))))
+        .withColumn("h", graft.functions.Kernels.md5Prefix64(col("entity_id")))
         .withColumn("bus", unix_micros(col("time")) - pmod(unix_micros(col("time")), lit(HourUs)))
         .withColumn("day", unix_micros(col("time")) - pmod(unix_micros(col("time")), lit(DayUs)))
       val wHour = Window.partitionBy(col("bus")).orderBy(col("h"))
@@ -6709,7 +6707,7 @@ object Queries {
     * KMV rows: a D×W = 4×64 grid of counters where cell (d, w) sums the
     * counts of every state whose d-th hash lands in bucket w, and
     * est(x) = min_d cell(d, h_d(x)). Hashes are the engine's
-    * [[graft.functions.Md5Prefix64]] over "d:state" (the same 60-bit
+    * [[graft.functions.Kernels.md5Prefix64]] over "d:state" (the same 60-bit
     * md5-prefix device as KMV), so DuckDB replays the exact sketch and
     * the audit is hash-checked, not asserted: for the top-20 true
     * states the output carries est, true, the overcount, and the CMS
@@ -6727,12 +6725,11 @@ object Queries {
   val cmsFreq = OracleQuery(
     "ltss_cms_freq",
     (s, d) => {
-      import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
       val truth = ltss(s, d).groupBy(col("state")).agg(count(lit(1)).as("true_c"))
       val hashed = truth
         .withColumn("d", explode(sequence(lit(0), lit(CmsDepth - 1))))
-        .withColumn("h", columnOf(graft.functions.Md5Prefix64(expressionOf(
-          concat(col("d").cast("string"), lit(":"), col("state"))))))
+        .withColumn("h", graft.functions.Kernels.md5Prefix64(
+          concat(col("d").cast("string"), lit(":"), col("state"))))
         .withColumn("bucket", pmod(col("h"), lit(CmsWidth.toLong)))
       val cells = hashed.groupBy(col("d"), col("bucket"))
         .agg(sum(col("true_c")).as("cell"))

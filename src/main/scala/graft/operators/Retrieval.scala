@@ -676,14 +676,13 @@ object Retrieval {
     * pull is a posting join on the probes' RARE shingles, so each
     * probe's candidate set is df-bounded (rare → short lists); the
     * per-probe rank window runs over those bounded sets. One distinct
-    * (doc, shingle) pair frame (native [[graft.functions.ShinglesK]]
+    * (doc, shingle) pair frame (native [[graft.functions.Kernels.shinglesK]]
     * kernel, corpus exploded once) feeds everything. */
   val knownItemMrr = OracleQuery(
     "text_known_item_mrr",
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
-      val sh3 = columnOf(graft.functions.ShinglesK(expressionOf(col("text")), 3))
+      val sh3 = graft.functions.Kernels.shinglesK(col("text"), lit(3))
       val pairs = Tables.documents(s, d)
         .select(col("doc_id"), explode(array_distinct(sh3)).as("sh"))
       val df = pairs.groupBy(col("sh")).agg(count(lit(1)).as("df"))

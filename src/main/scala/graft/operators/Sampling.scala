@@ -454,13 +454,12 @@ object Sampling {
   val sampleSoftDedup = OracleQuery(
     "sample_soft_dedup",
     (s, d) => {
-      import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), md5(substring(col("text"), 1, 80)).as("fp"))
       val sizes = docs.groupBy(col("fp")).agg(count(lit(1)).as("dup_count"))
       docs.join(sizes, "fp")
-        .withColumn("h", columnOf(graft.functions.Md5Prefix64(expressionOf(
-          concat(lit("soft:"), col("doc_id").cast("string"))))))
+        .withColumn("h", graft.functions.Kernels.md5Prefix64(
+          concat(lit("soft:"), col("doc_id").cast("string"))))
         .withColumn("kept", (pmod(col("h"), col("dup_count")) === 0).cast("long"))
         .groupBy(col("dup_count"))
         .agg(count(lit(1)).as("n_docs"), sum(col("kept")).as("n_kept"))

@@ -277,7 +277,7 @@ object Similarity {
     * Gaussian planes are generated ON THE DRIVER from `seed` and embedded
     * as array literals (they ship with the plan — no side channel, no
     * refit between runs); a band's bucket is the sign pattern of the
-    * plane dots, computed by the same codegen'd [[graft.functions.DotF64]]
+    * plane dots, computed by the same codegen'd [[graft.functions.Kernels.dotF64]]
     * kernel as the verify stage. Random planes decorrelate the buckets
     * from the embedding's coordinate system, so recall at equal bucket
     * counts is ≥ the axis-aligned variant's (pinned by SimilaritySpec on
@@ -308,7 +308,7 @@ object Similarity {
   }
 
   /** DuckDB twin of [[embedNearDupRandom]]'s bucketing: each plane's
-    * dot is the SAME left-associated chain as [[graft.functions.DotF64]]
+    * dot is the SAME left-associated chain as [[graft.functions.Kernels.dotF64]]
     * — CAST(embedding[i] AS DOUBLE) times the plane coordinate as a
     * DOUBLE LITERAL (float→double widening is exact, and
     * `Double.toString` round-trips, so both engines multiply identical
@@ -568,7 +568,7 @@ object Similarity {
     * The update step is the novel bit, chosen for ORACLE PARITY AT ANY
     * PARALLELISM: a float mean is partial-aggregation-order-dependent,
     * so instead each centroid dimension is the sum of the vectors'
-    * int8-QUANTIZED codes ([[graft.functions.QuantizeI8]]) divided by
+    * int8-QUANTIZED codes ([[graft.functions.Kernels.quantizeI8]]) divided by
     * 127·count — integer addition is exact and order-independent, the
     * single division and the one double→float rounding are IEEE-
     * identical on both engines, so the trained centroids are
@@ -606,11 +606,10 @@ object Similarity {
       s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
     graft.CachedFrames.getOrBuild(
       s"kmeans_emb|${graft.CachedFrames.sessionKey(s)}|$d") {
-      import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
       Tables.embeddings(s, d)
         .withColumn("nrm", DetMath.normCol(col("embedding"), Dim))
         .withColumn("q",
-          columnOf(graft.functions.QuantizeI8(expressionOf(col("embedding"))))
+          graft.functions.Kernels.quantizeI8(col("embedding"))
             .getField("codes"))
         .select(col("vec_id"), col("embedding"), col("nrm"), col("q"))
     }
@@ -739,7 +738,7 @@ object Similarity {
     * dedup over a 100 TB vector corpus: candidate pairs only WITHIN a
     * trained cluster — (n/k)² per cluster instead of n² global — then
     * exact cosine verification): the trained assignment bucketes ids,
-    * pairs form per cid, vectors re-attach by key equi-join, one DotF64
+    * pairs form per cid, vectors re-attach by key equi-join, one `dotF64`
     * per pair. At real k ≈ √n the candidate bound is n^1.5; recall
     * misses only pairs straddling a cluster boundary — the standard IVF
     * dedup trade, tightened by multi-probe if needed. */
@@ -1018,12 +1017,11 @@ object Similarity {
   val embedQuantize = OracleQuery(
     "embed_quantize",
     (s, d) => {
-      // native QuantizeI8 kernel — one compiled pass (the composed
+      // native `quantizeI8` kernel — one compiled pass (the composed
       // transform + zip_with + aggregate form is three interpreted HOF
       // traversals with two intermediate arrays per vector)
-      import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
       Tables.embeddings(s, d)
-        .withColumn("q", columnOf(graft.functions.QuantizeI8(expressionOf(col("embedding")))))
+        .withColumn("q", graft.functions.Kernels.quantizeI8(col("embedding")))
         .select(col("vec_id"), element_at(col("q.codes"), 1).as("c1"),
           element_at(col("q.codes"), 2).as("c2"), col("q.max_abs_err").as("max_abs_err"))
         .orderBy(col("vec_id"))

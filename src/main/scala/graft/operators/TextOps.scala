@@ -33,7 +33,7 @@ object TextOps {
   val MinStopwordRatio = 0.01
 
   /** [n_tokens, n_2grams, n_uniq_2grams] of the `text` column via the
-    * native [[graft.functions.Gram2Stats]] kernel — shared by
+    * native [[graft.functions.Kernels.gram2Stats]] kernel — shared by
     * [[repetition]], [[qualityFilter]] and the composed pipeline so the
     * duplicate-2-gram signal and every consumer measure the same thing.
     * The composed `transform(sequence(...))` + `array_distinct` form is
@@ -41,16 +41,14 @@ object TextOps {
     * bottleneck (and invisible to `count()`-based benching, which prunes
     * unfiltered projections). */
   private[operators] def gramStats: Column = {
-    import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
-    columnOf(graft.functions.Gram2Stats(expressionOf(col("text"))))
+    graft.functions.Kernels.gram2Stats(col("text"))
   }
 
   /** Stopword occurrences of `text` via the native
-    * [[graft.functions.TokenSetCount]] kernel (replaces the interpreted
+    * [[graft.functions.Kernels.tokenSetCount]] kernel (replaces the interpreted
     * `size(filter(w, _.isin(...)))` HOF). */
   private[operators] def stopwordCount: Column = {
-    import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
-    columnOf(graft.functions.TokenSetCount(expressionOf(col("text")), StopWords))
+    graft.functions.Kernels.tokenSetCount(col("text") +: StopWords.map(lit): _*)
   }
 
   // --------------------------------------------------------------- queries
@@ -93,10 +91,9 @@ object TextOps {
     OracleQuery(
       "lang_id",
       (s, d) => {
-        import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
         val scored = markers.foldLeft(Tables.documents(s, d)) { case (df, (lang, ws)) =>
           df.withColumn(s"c_$lang",
-            columnOf(graft.functions.TokenSetCount(expressionOf(col("text")), ws)))
+            graft.functions.Kernels.tokenSetCount(col("text") +: ws.map(lit): _*))
         }
         val best = markers.map(_._1).foldRight(lit("und")) { case (lang, acc) =>
           when(col(s"c_$lang") > 0 &&
@@ -148,19 +145,18 @@ object TextOps {
 
   /** Document fingerprints: exact md5 + min-shingle fingerprint
     * (winnowing-style: min over md5 of 5-word shingles). The shingle min
-    * is the [[graft.functions.MinShingleFp]] native kernel — one md5 per
+    * is the [[graft.functions.Kernels.minShingleFp]] native kernel — one md5 per
     * shingle in a compiled loop, vs the composed `transform`-of-md5 +
     * `array_min` form that evaluates interpreted with an intermediate
     * array per doc. */
   val fingerprint = OracleQuery(
     "doc_fingerprint",
     (s, d) => {
-      import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
       Tables.documents(s, d)
         .select(
           col("doc_id"),
           md5(col("text")).as("exact_fp"),
-          columnOf(graft.functions.MinShingleFp(expressionOf(col("text")), 5))
+          graft.functions.Kernels.minShingleFp(col("text"), lit(5))
             .as("min_shingle_fp"))
         .orderBy(col("doc_id"))
     },
@@ -175,18 +171,17 @@ object TextOps {
 
   /** 16-bit SimHash from the high bit of each md5 hex digit, majority-
     * voted over (duplicated) tokens; rendered as a 16-char bitstring.
-    * The [[graft.functions.SimHash16]] native kernel hashes each token
+    * The [[graft.functions.Kernels.simhash16]] native kernel hashes each token
     * ONCE and derives all 16 bits in a compiled pass — the composed form
     * evaluated md5 16× per token inside an interpreted `aggregate` HOF. */
   val simhash = OracleQuery(
     "simhash",
     (s, d) => {
-      import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
       // null text → all-zero hash, matching the oracle's CASE ... ELSE '0'
       // (the kernel itself propagates null, like every Spark expression)
       Tables.documents(s, d)
         .select(col("doc_id"),
-          coalesce(columnOf(graft.functions.SimHash16(expressionOf(col("text")))),
+          coalesce(graft.functions.Kernels.simhash16(col("text")),
             lit("0" * 16)).as("simhash16"))
         .orderBy(col("doc_id"))
     },
@@ -382,14 +377,13 @@ object TextOps {
     * explode once per side, the benchmark side broadcasts while it is
     * under the threshold, and the overlap count is one map-side-combined aggregation — no
     * quadratic pass, no full-corpus shuffle of the text. */
-  /** Distinct per-doc 3-gram shingles via the native ShinglesK kernel
+  /** Distinct per-doc 3-gram shingles via the native `shinglesK` kernel
     * (byte-span grams, no interpreted HOF), split into the benchmark
     * docs (doc_id % 100 == 0 — the stand-in for the eval suite) and the
     * corpus remainder. */
   private def contaminationShingles(
       s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
-    val sh3 = columnOf(graft.functions.ShinglesK(expressionOf(col("text")), 3))
+    val sh3 = graft.functions.Kernels.shinglesK(col("text"), lit(3))
     val shingles = Tables.documents(s, d)
       .select(col("doc_id"), explode(array_distinct(sh3)).as("sh"))
     (shingles.filter(col("doc_id") % 100 =!= 0),
@@ -585,8 +579,7 @@ object TextOps {
       s: org.apache.spark.sql.SparkSession, d: String) =
     graft.CachedFrames.getOrBuild(
       s"shingle2|${graft.CachedFrames.sessionKey(s)}|$d") {
-      import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
-      val sh2 = columnOf(graft.functions.ShinglesK(expressionOf(col("text")), 2))
+      val sh2 = graft.functions.Kernels.shinglesK(col("text"), lit(2))
       Tables.fanOut(Tables.documents(s, d))
         .select(col("doc_id"), col("source"), explode(sh2).as("sh"))
         .groupBy(col("doc_id"), col("source"), col("sh"))
@@ -605,7 +598,7 @@ object TextOps {
     * while this ratio-of-sums is integer sums to ONE final IEEE division
     * — the oracle hash-matches.
     *
-    * Shape at 100 TB: one explode of 2-shingles (native [[ShinglesK]]
+    * Shape at 100 TB: one explode of 2-shingles (native [[graft.functions.Kernels.shinglesK]]
     * kernel, no lambda), collapsed to (doc, shingle, k) DISTINCT pairs
     * map-side; the bigram vocabulary aggregates from the pair frame
     * (the corpus is scanned ONCE), prefix counts aggregate from the

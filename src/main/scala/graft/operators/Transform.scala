@@ -60,12 +60,12 @@ object Transform {
   /** Pop `latitude`/`longitude` out of the JSON attributes (reference
     * models.py:59-60 — the keys are *removed* whether or not a point is
     * produced, and only at the *top level*: `attrs.pop` can't see nested
-    * dicts). Structure-aware scan via the [[graft.functions.PopLatLon]]
-    * native expression — nested `latitude` keys survive, object/array
+    * dicts). Structure-aware scan via the `pop_latlon` row of
+    * [[graft.functions.Kernels]], one static call of `JsonOps.popLatLon`
+    * per row — nested `latitude` keys survive, object/array
     * values are removed whole, remaining member text is kept verbatim. */
   def popLatLon(attrs: Column): Column = {
-    import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
-    columnOf(graft.functions.PopLatLon(expressionOf(attrs)))
+    graft.functions.Kernels.popLatLon(attrs)
   }
 
   /** P4 error branch (reference __init__.py:212-216): events whose
@@ -76,8 +76,7 @@ object Transform {
     * [[eventsToLtss]]'s `observe`, whose counts carry the drops to the
     * query's progress. */
   def validJsonAttrs(attrs: Column): Column = {
-    import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
-    attrs.isNull || columnOf(graft.functions.IsValidJson(expressionOf(attrs)))
+    attrs.isNull || graft.functions.Kernels.isValidJson(attrs)
   }
 
   // ---------------------------------------------------------------- P4

@@ -529,7 +529,7 @@ object StreamingOps {
     * batch `dedup_minhash_lsh` operator, for the ingest-time question
     * "is this document a near-duplicate of anything already accepted?":
     * each arriving doc computes its MinHash signature MAP-SIDE (the same
-    * native `MinHash8` kernel, no shuffle), bands with the batch
+    * native `minhash8` kernel, no shuffle), bands with the batch
     * operator's banding (2×4 fixed-width hex mins), and joins the state
     * store keyed by (band_idx, band_val) — a bucket's state is the
     * signatures of its accepted members, so a new arrival emits one
@@ -563,7 +563,6 @@ object StreamingOps {
       lateness: String = "0 seconds",
       unboundedRetention: Boolean = false): Dataset[DupCandidate] = {
     import docs.sparkSession.implicits._
-    import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
     val retention: Option[Long] =
       if (unboundedRetention) None else Some(retentionUs)
     val timed = retention match {
@@ -574,7 +573,7 @@ object StreamingOps {
         .select(col("doc_id"), col("text"), lit(null).cast("timestamp").as("t"))
     }
     val sig = timed.select(col("doc_id"),
-      columnOf(graft.functions.MinHash8(expressionOf(col("text")))).as("sig"),
+      graft.functions.Kernels.minhash8(col("text")).as("sig"),
       col("t"))
     val bandOf = (lo: Int) => concat(
       (lo until lo + 4).map(i => element_at(col("sig"), i + 1)): _*)
@@ -1207,7 +1206,7 @@ object StreamingOps {
     val mightContain = columnOf(
       org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
         expressionOf(lit(bf)), expressionOf(xxhash64(col("sh")))))
-    val sh3 = columnOf(graft.functions.ShinglesK(expressionOf(col("text")), 3))
+    val sh3 = graft.functions.Kernels.shinglesK(col("text"), lit(3))
     docs.select(col("doc_id"), explode(array_distinct(sh3)).as("sh"))
       .filter(mightContain)
       .join(bench, "sh")
@@ -1289,9 +1288,8 @@ object StreamingOps {
     * order-insensitive. */
   def kmvStream(ltss: DataFrame, k: Int = 64): Dataset[KmvRow] = {
     import ltss.sparkSession.implicits._
-    import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
     def h(c: org.apache.spark.sql.Column) =
-      columnOf(graft.functions.Md5Prefix64(expressionOf(c)))
+      graft.functions.Kernels.md5Prefix64(c)
     val base = ltss.select(
       split(col("entity_id"), "\\.").getItem(0).as("domain"),
       col("entity_id"), col("state"))
@@ -1330,13 +1328,12 @@ object StreamingOps {
     * Update-mode re-emission after restart recovers exactly. */
   def cmsStream(ltss: DataFrame, depth: Int = 4, width: Int = 64): Dataset[CmsCell] = {
     import ltss.sparkSession.implicits._
-    import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
     val hashed = ltss
       .select(col("state"))
       .withColumn("d", explode(sequence(lit(0), lit(depth - 1))))
       .withColumn("bucket", pmod(
-        columnOf(graft.functions.Md5Prefix64(expressionOf(
-          concat(col("d").cast("string"), lit(":"), col("state"))))),
+        graft.functions.Kernels.md5Prefix64(
+          concat(col("d").cast("string"), lit(":"), col("state"))),
         lit(width.toLong)))
     foldSorted(hashed.select(col("d"), col("bucket")).as[(Int, Long)])(
       identity, identity, OutputMode.Update()) { (key, rows, prev: Option[Long]) =>

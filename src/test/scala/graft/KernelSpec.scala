@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.GraftColumns.{columnOf, expressionOf}
-import graft.functions.{MinShingleFp, SimHash16}
+import graft.functions.{Haversine, Kernels}
+import graft.plans.GraftExtensions
 
 /** Native text-hash kernels vs the composed built-in expressions they
   * replace: the kernels must be bit-identical on every token-structure
@@ -61,14 +62,14 @@ class KernelSpec extends SparkSpec {
   test("simhash16 kernel is bit-identical to the composed aggregate form") {
     val df = fixtures.toDF("text").select(
       col("text"),
-      columnOf(SimHash16(expressionOf(col("text")))).as("kernel"),
+      Kernels.simhash16(col("text")).as("kernel"),
       composedSimhash(col("text")).as("composed"))
     val bad = df.filter(col("kernel") =!= col("composed")).collect()
     assert(bad.isEmpty, s"mismatches: ${bad.mkString("; ")}")
     // the kernel propagates null; the QUERY's coalesce restores the
     // composed/oracle behavior (CASE ... ELSE '0' → all-zero hash)
     val n = Seq[Option[String]](None).toDF("text").select(
-      coalesce(columnOf(SimHash16(expressionOf(col("text")))), lit("0" * 16)).as("kernel"),
+      coalesce(Kernels.simhash16(col("text")), lit("0" * 16)).as("kernel"),
       composedSimhash(col("text")).as("composed")).head()
     assert(n.getString(0) == "0000000000000000" && n.getString(0) == n.getString(1))
   }
@@ -76,7 +77,7 @@ class KernelSpec extends SparkSpec {
   test("min_shingle_fp kernel is bit-identical to the composed transform form") {
     val df = fixtures.toDF("text").select(
       col("text"),
-      columnOf(MinShingleFp(expressionOf(col("text")), 5)).as("kernel"),
+      Kernels.minShingleFp(col("text"), lit(5)).as("kernel"),
       composedMinShingle(col("text")).as("composed"))
     val bad = df.filter(col("kernel") =!= col("composed")).collect()
     assert(bad.isEmpty, s"mismatches: ${bad.mkString("; ")}")
@@ -116,15 +117,77 @@ class KernelSpec extends SparkSpec {
     }
   }
 
+  /** The fixture texts plus JSON shapes, a null text, float vectors of
+    * 0 to 4 elements (shorter than `dim` makes `dot_f64` null), points
+    * and instants: one input row per fixture. */
+  private def kernelInputs(s: SparkSession): DataFrame = {
+    import s.implicits._
+    val texts = fixtures.map(Option(_)) ++ Seq(Some("""{"latitude": 1.5, "k": {"latitude": 2}, "longitude": [3]}"""),
+      Some("{not json"), Some("[1, 2]"), None)
+    texts.zipWithIndex.map { case (t, i) =>
+      (i, t, Seq.tabulate(i % 5)(j => (j - i) / 3.0f), Seq.tabulate(4)(j => j * 0.5f - i),
+        55.0 + i / 7.0, 4.0 + i / 3.0, new java.sql.Timestamp(1700000000000L + i * 977777777L))
+    }.toDF("id", "text", "emb", "emb2", "lat", "lon", "ts")
+  }
+
+  /** One call of every registered function over [[kernelInputs]]: its name,
+    * its SQL text and its Column-API form. */
+  private lazy val calls: Seq[(String, String, Column)] = Seq(
+    ("minhash8", "minhash8(text)", Kernels.minhash8(col("text"))),
+    ("simhash16", "simhash16(text)", Kernels.simhash16(col("text"))),
+    ("simhash64", "simhash64(text)", Kernels.simhash64(col("text"))),
+    ("md5_prefix64", "md5_prefix64(text)", Kernels.md5Prefix64(col("text"))),
+    ("gram2_stats", "gram2_stats(text)", Kernels.gram2Stats(col("text"))),
+    ("token_set_count", "token_set_count(text, 'a', 'one', 'æøå')",
+      Kernels.tokenSetCount(col("text"), lit("a"), lit("one"), lit("æøå"))),
+    ("shingles_k", "shingles_k(text, 3)", Kernels.shinglesK(col("text"), lit(3))),
+    ("min_shingle_fp", "min_shingle_fp(text, 5)", Kernels.minShingleFp(col("text"), lit(5))),
+    ("pop_latlon", "pop_latlon(text)", Kernels.popLatLon(col("text"))),
+    ("is_valid_json", "is_valid_json(text)", Kernels.isValidJson(col("text"))),
+    ("quantize_i8", "quantize_i8(emb)", Kernels.quantizeI8(col("emb"))),
+    ("dot_f64", "dot_f64(emb, emb2, 3)", Kernels.dotF64(col("emb"), col("emb2"), lit(3))),
+    ("haversine_km", "haversine_km(lat, lon, 59.9D, 10.7D)",
+      Haversine.haversineKm(col("lat"), col("lon"), lit(59.9), lit(10.7))),
+    ("time_bucket", "time_bucket(3600000000L, ts)",
+      timestamp_micros(unix_micros(col("ts")) - pmod(unix_micros(col("ts")), lit(3600000000L)))))
+
   test("kernels are reachable from spark.sql via GraftExtensions") {
-    graft.plans.GraftExtensions.install(spark)
-    fixtures.toDF("text").createOrReplaceTempView("kernel_docs")
-    val rows = spark.sql(
-      """SELECT simhash16(text) AS sh, min_shingle_fp(text, 5) AS fp
-        |FROM kernel_docs WHERE text = 'one two three four five six seven'""".stripMargin)
-      .collect()
-    assert(rows.length == 1 && rows(0).getString(0).length == 16 &&
-      rows(0).getString(1).length == 32)
+    assert(calls.map(_._1).toSet == GraftExtensions.functions.map(_._1.funcName).toSet)
+    // a new session of the shared one gets its functions from the
+    // injected extension only; the second has them dropped, then installed
+    val viaExtension = spark.newSession()
+    val viaInstall = spark.newSession()
+    for ((name, _, _) <- calls)
+      viaInstall.sessionState.functionRegistry.dropFunction(FunctionIdentifier(name))
+    intercept[AnalysisException](viaInstall.sql("SELECT minhash8('a b')"))
+    GraftExtensions.install(viaInstall)
+    for (s <- Seq(viaExtension, viaInstall)) kernelInputs(s).createOrReplaceTempView("kernel_in")
+    val input = kernelInputs(spark)
+    def rows(df: DataFrame) = df.orderBy("id").collect().toSeq
+    for ((name, sql, column) <- calls) {
+      val want = rows(input.select(col("id"), column.as("r")))
+      // interpreted evaluation reaches the same static target by reflection
+      val interpreted = withConf("spark.sql.codegen.wholeStage", "false") {
+        withConf("spark.sql.codegen.factoryMode", "NO_CODEGEN") {
+          rows(input.select(col("id"), column.as("r")))
+        }
+      }
+      assert(interpreted == want, s"$name: interpreted and generated code differ")
+      for ((how, s) <- Seq("extension" -> viaExtension, "install" -> viaInstall))
+        assert(rows(s.sql(s"SELECT id, $sql AS r FROM kernel_in")) == want,
+          s"$name: spark.sql through the $how differs from the Column API")
+    }
+  }
+
+  test("SQL calls that do not fit a kernel's row fail at analysis, naming its arguments") {
+    for ((query, signature) <- Seq(
+        "SELECT minhash8()" -> "minhash8(text STRING)",
+        "SELECT shingles_k(t, n) FROM VALUES ('a b c', 2) AS v(t, n)" ->
+          "shingles_k(text STRING, k INT literal > 0)",
+        "SELECT token_set_count('a b', NULL)" -> "token_set_count(text STRING, word STRING literal, ...)")) {
+      val e = intercept[AnalysisException](spark.sql(query).collect())
+      assert(e.getMessage.contains(s"expected $signature"), s"$query: ${e.getMessage}")
+    }
   }
 
   test("md5_prefix64 in SQL matches the kernel and the DuckDB hex form") {

@@ -5,8 +5,8 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-tree rules that keep operator-facing output structured, every
-  * broadcast hint bounded, every layout swap on one protocol and every
-  * JDBC write on one lander. */
+  * broadcast hint bounded, every layout swap on one protocol, every
+  * JDBC write on one lander and every static-call kernel in one table. */
 class LintSpec extends AnyFunSuite {
 
   private def scalaFiles(dir: String): List[java.nio.file.Path] = {
@@ -93,5 +93,37 @@ class LintSpec extends AnyFunSuite {
     }
     assert(hits.isEmpty, s"broadcast( without a `// bound: …` comment on its line or the " +
       s"line above: ${hits.mkString(", ")}")
+  }
+
+  /** `file:line` of each code line (not a comment) under `dir` that `hit` matches. */
+  private def codeHits(dir: String)(hit: (java.nio.file.Path, String) => Boolean): Seq[String] =
+    scalaFiles(dir).flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex.filter { case (l, _) =>
+        val t = l.trim
+        !t.startsWith("*") && !t.startsWith("//") && !t.startsWith("/*") && hit(f, t)
+      }.map { case (_, i) => s"$f:${i + 1}" }
+    }
+
+  test("Catalyst codegen lives only in the generic kernel call and Haversine") {
+    // a hand-written expression repeats the type check, null handling and
+    // static call that NativeCall states once per kernel row; Haversine
+    // stays its own class because HaversineBoxRule matches its type
+    val owners = Seq("graft/functions/Kernels.scala", "graft/functions/Haversine.scala")
+    val hits = codeHits("src/main/scala/graft") { (f, t) =>
+      (t.contains("doGenCode") || t.contains("defineCodeGen")) && !owners.exists(f.toString.endsWith)
+    }
+    assert(hits.isEmpty, s"Catalyst codegen in: ${hits.mkString(", ")}; " +
+      "add the kernel as a row of graft.functions.Kernels")
+  }
+
+  test("SQL functions are registered only by the loops over GraftExtensions.functions") {
+    // the session extension and install register the same list, so a
+    // function reachable one way is reachable the other
+    val hits = codeHits("src/main/scala") { (_, t) =>
+      (t.contains("injectFunction") || t.contains("createOrReplaceTempFunction")) &&
+        !t.contains("functions.foreach")
+    }
+    assert(hits.isEmpty, s"function registration outside the table loops in: " +
+      s"${hits.mkString(", ")}; add the function to GraftExtensions.functions")
   }
 }

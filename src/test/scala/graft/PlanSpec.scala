@@ -1056,14 +1056,16 @@ class PlanSpec extends SparkSpec {
   test("bbit audit: the candidate-doc joins broadcast by size, not by hint") {
     import org.apache.spark.sql.execution.ProjectExec
     // the candidate doc-id frame scopes the signature and shingle legs;
-    // both are cut once, so the executions evaluate MinHash8 once
+    // both are cut once, so the executions evaluate minhash8 once
     val qes = thresholdDecides("dedup_bbit_minhash", _ == Seq("doc_id"))
     val minhash = qes.flatMap(qe => nodesOf(qe.executedPlan)).count {
-      case p: ProjectExec =>
-        p.projectList.exists(_.exists(_.isInstanceOf[graft.functions.MinHash8]))
+      case p: ProjectExec => p.projectList.exists(_.exists {
+        case k: graft.functions.NativeCall => k.prettyName == "minhash8"
+        case _ => false
+      })
       case _ => false
     }
-    assert(minhash == 1, s"MinHash8 is evaluated in $minhash places, not one")
+    assert(minhash == 1, s"minhash8 is evaluated in $minhash places, not one")
   }
 
   test("bucketed tables co-locate the fact join: no shuffle exchange on either side") {
