@@ -57,12 +57,17 @@ object GraftExtensions {
     * rules go through `experimental.extraOptimizations` (a live session
     * cannot take extension injections); predicates the box rule adds still reach
     * `PushedFilters` because data-source pushdown extracts sargable
-    * conjuncts from the scan-adjacent Filter at PHYSICAL planning. */
+    * conjuncts from the scan-adjacent Filter at PHYSICAL planning. A
+    * function whose registered entry already names the list's class and
+    * name (a session built with the extension, or installed before) is
+    * left as it is. */
   def install(spark: SparkSession): Unit = {
     val rules = Seq(HaversineBoxRule, SmallSortRule)
     spark.experimental.extraOptimizations = spark.experimental.extraOptimizations ++
       rules.filterNot(spark.experimental.extraOptimizations.contains)
     val reg = spark.sessionState.functionRegistry
-    functions.foreach { case (id, _, build) => reg.createOrReplaceTempFunction(id.funcName, build, "built-in") }
+    def held(id: FunctionIdentifier, info: ExpressionInfo) = reg.lookupFunction(id)
+      .exists(i => i.getClassName == info.getClassName && i.getName == info.getName)
+    functions.foreach { case (id, info, build) => if (!held(id, info)) reg.registerFunction(id, info, build) }
   }
 }

@@ -546,10 +546,9 @@ object LtssSink {
 
   private val MarkerName = "_ltss_layout.json"
 
-  /** The file system small commit files (the marker, the zone version
-    * intent, the zone manifest) are read and written through. A
+  /** The file system the layout marker is read and written through. A
     * checksummed file system (the local one) is bypassed for its raw file
-    * system: the files are replaced by a rename, and a checksum file
+    * system: the marker is replaced by a rename, and a checksum file
     * renamed after its data would fail a read caught between the two. */
   private def rawFs(fs: FileSystem): FileSystem = fs match {
     case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
@@ -905,52 +904,58 @@ object LtssSink {
     * contract as PostGIS `ST_Within` over the reference's geometry
     * column (models.py:35,44). Zones are a dimension table (a
     * deployment has thousands, not billions) — stored sorted by id,
-    * always broadcast by consumers. */
-  def writeZoneLayout(zones: DataFrame, path: String, version: Long = 0L): Unit = {
-    // A REDRAW must advance zone_version like an upsert does: the
-    // version exists so a restarted stream whose checkpoint holds
-    // containment sets computed against the OLD rings fails the
-    // requireZoneVersion gate instead of silently diffing against the
-    // redrawn table. Default (0 = auto) reads the prior marker BEFORE
-    // the Overwrite clears it and stamps prior+1 (a fresh directory
-    // stamps 1, the historical default); an explicit version must
-    // exceed the stored one for the same reason.
-    //
-    // CRASH WINDOW: the marker lives INSIDE the directory the
-    // Overwrite clears, so a crash between the Overwrite and the
-    // marker write would lose the generation — the NEXT redraw would
-    // read prior = 0 and stamp 1 again, re-arming the silent-diff
-    // hazard for any state pinned to the original version 1. The
-    // intended version therefore persists in a SIDECAR next to the
-    // layout ([[replaceFile]]) BEFORE the Overwrite and is
-    // removed only after the marker lands; version reads take the MAX
-    // of marker and surviving sidecar, so a torn redraw can only skip
-    // version numbers forward, never reuse one.
-    val spark = zones.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val intentPath = new Path(path + ".zver_intent")
-    val fs = intentPath.getFileSystem(conf)
-    // WRITE-path prior takes the MAX of marker and surviving intent
-    // (unlike the read path, which prefers a present marker): a torn
-    // prior redraw may have left intent > marker, and the next stamp
-    // must skip past BOTH so no version number is ever reused
-    val prior = math.max(
-      readLayoutMarker(spark, path).map(_.generation).getOrElse(0L),
-      readZoneVersionIntent(spark, path))
-    require(version == 0L || version > prior,
-      s"writeZoneLayout version $version must exceed the stored " +
-        s"zone_version $prior (a redraw that keeps or lowers the version " +
-        "would let restarted streams silently diff state held against " +
-        "the retired rings); pass 0 to auto-bump")
-    val v = if (version == 0L) prior + 1L else version
-    val frame = zoneLayoutFrame(zones) // validate BEFORE staking the intent
-    replaceFile(fs, intentPath, v.toString)
-    frame.write.mode(SaveMode.Overwrite).parquet(path)
-    // marker AFTER the Overwrite (which clears the directory): the
-    // generation field IS the zone_version the streaming twins pin
-    // their bootstrapped containment state to (see geoZonesStream)
-    writeLayoutMarker(spark, path, LayoutMarker(0L, Nil, generation = v))
-    fs.delete(intentPath, false)
+    * always broadcast by consumers. The table is replaced through
+    * [[swapZones]]: `version` 0 stamps the stored zone_version + 1, and an
+    * explicit one must exceed it. */
+  def writeZoneLayout(zones: DataFrame, path: String, version: Long = 0L): Unit =
+    swapZones(zones.sparkSession, path, version, force = false)(zones)
+
+  /** The one zone-table write, shared by the redraw and [[upsertZones]].
+    * Under the owner-token lock (op `zone-upsert`, stamped on the live
+    * marker) it settles a crashed predecessor's hidden siblings with
+    * [[recoverSwap]], writes the validated `rows` (built after that, so
+    * an upsert merges against the settled layout) into the hidden
+    * sibling `.<name>_zone_staged` and swaps it in through [[swapIn]].
+    * The staged copy gets its marker before Spark's `_SUCCESS`, with
+    * `generation` = the new zone_version, so the version moves with the
+    * rows: a restarted stream whose checkpoint holds containment sets
+    * computed against the old rings fails the requireZoneVersion gate
+    * instead of silently diffing against the new table. Version 0 stamps
+    * the live generation + 1 (a fresh directory stamps 1); an explicit
+    * version must exceed the live one. A staged copy that never swapped
+    * in was never visible, so its number may be used again. */
+  private def swapZones(
+      spark: org.apache.spark.sql.SparkSession, path: String, version: Long,
+      force: Boolean)(rows: => DataFrame): Unit = {
+    val (fs, live, staged, retired) = zoneDirs(spark, path)
+    def markerNow = readLayoutMarker(spark, path).getOrElse(LayoutMarker(0L, Nil))
+    acquireLifecycleLock(path, "zone-upsert", markerNow, force)
+    try {
+      recoverSwap(fs, live, staged, retired)
+      val cur = markerNow
+      require(version == 0L || version > cur.generation,
+        s"writeZoneLayout version $version must exceed the stored " +
+          s"zone_version ${cur.generation} (a redraw that keeps or lowers the version " +
+          "would let restarted streams silently diff state held against " +
+          "the retired rings); pass 0 to auto-bump")
+      val frame = zoneLayoutFrame(rows) // a bad ring refuses before the stamp
+      if (fs.exists(live))
+        writeLayoutMarker(spark, path, cur.copy(migrating = Some(s"zone-upsert:${ownerToken()}")))
+      fs.delete(staged, true)
+      writeLayoutMarker(spark, staged.toString, LayoutMarker(0L, Nil,
+        generation = if (version == 0L) cur.generation + 1 else version))
+      frame.write.mode(SaveMode.Append).parquet(staged.toString)
+      swapIn(fs, live, staged, retired)
+    } finally releaseLifecycleLock(path, "zone-upsert")
+  }
+
+  /** The zone table's live dir and its hidden sibling staged and retired
+    * copies. */
+  private def zoneDirs(
+      spark: org.apache.spark.sql.SparkSession, path: String): (FileSystem, Path, Path, Path) = {
+    val (fs, live) = hadoopFs(spark, path)
+    (fs, live, new Path(live.getParent, s".${live.getName}_zone_staged"),
+      new Path(live.getParent, s".${live.getName}_zone_retired"))
   }
 
   /** The validated, bbox-materialized zone frame both the full rebuild
@@ -980,48 +985,29 @@ object LtssSink {
       .orderBy(col("zone_id"))
   }
 
-  /** The surviving `.zver_intent` sidecar's staked version — 0 when
-    * absent or unparsable. Written by [[writeZoneLayout]] BEFORE the
-    * Overwrite, removed only after the marker lands, so in the torn
-    * window it alone carries the generation. */
-  private def readZoneVersionIntent(
+  /** The stored zone table's VERSION — the live layout marker's
+    * generation, bumped by every [[writeZoneLayout]] and [[upsertZones]]
+    * (a legacy marker-less layout reads 0). The streaming twins
+    * ([[graft.streaming.StreamingOps.geoZonesStream]], `zonesDwellStream`)
+    * stamp this into their per-entity state so held containment sets
+    * computed against retired rings are detected on restart instead of
+    * silently diffed against the redrawn table. A read in the instant
+    * between a swap's two renames fails loudly, as the rows read does;
+    * it never reads 0 or an older version. */
+  def zoneLayoutVersion(
       spark: org.apache.spark.sql.SparkSession, path: String): Long = {
-    val intentPath = new Path(path + ".zver_intent")
-    val fs = rawFs(intentPath.getFileSystem(spark.sparkContext.hadoopConfiguration))
-    // the sidecar is removed the instant the marker lands: absent then
-    // means the marker carries the version
-    try {
-      val in = fs.open(intentPath)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      text.trim.toLongOption.getOrElse(0L)
-    } catch {
-      case _: java.io.FileNotFoundException => 0L
+    def generation = readLayoutMarker(spark, path).map(_.generation)
+    generation.getOrElse {
+      // no marker: a legacy layout, or a swap between its renames, when
+      // both siblings exist (the retired one until the swap ends); the
+      // re-read returns the version of a swap that ended since
+      val (fs, live, staged, retired) = zoneDirs(spark, path)
+      if (fs.exists(staged) || fs.exists(retired) || !hasDataFiles(fs, live))
+        throw new java.io.FileNotFoundException(
+          s"zone layout at $path is mid-swap or missing; a crashed write is settled by the next one")
+      generation.getOrElse(0L)
     }
   }
-
-  /** The stored zone table's VERSION — the layout marker's generation,
-    * bumped by every [[upsertZones]] (a legacy un-markered layout reads
-    * 0). The streaming twins ([[graft.streaming.StreamingOps
-    * .geoZonesStream]], `zonesDwellStream`) stamp this into their per-
-    * entity state so held containment sets computed against retired
-    * rings are detected on restart instead of silently diffed against
-    * the redrawn table. The `.zver_intent` sidecar is consulted ONLY
-    * when the marker is ABSENT — [[writeZoneLayout]]'s torn window
-    * (Overwrite done, marker not yet written), where the sidecar alone
-    * holds the staked version, so a stream bootstrapping there stamps
-    * the INTENDED version instead of 0 and skips the spurious full
-    * rebuild it would otherwise take once the marker lands. A PRESENT
-    * marker always wins: in the pre-Overwrite window (intent staked,
-    * old rings still live) the reader gets the OLD rings and must get
-    * the OLD version with them — maxing in the intent there would pin
-    * retired-ring state to the NEW version and silently defeat the
-    * requireZoneVersion gate the stamp exists for. (The WRITE path's
-    * skip-forward still takes the max of both — see writeZoneLayout —
-    * so a torn redraw can never reuse a version number.) */
-  def zoneLayoutVersion(
-      spark: org.apache.spark.sql.SparkSession, path: String): Long =
-    readLayoutMarker(spark, path).map(_.generation)
-      .getOrElse(readZoneVersionIntent(spark, path))
 
   /** Driver-side read of the stored zone dimension as the `(zone_id,
     * ring)` constant the streaming twins broadcast, plus its version —
@@ -1029,6 +1015,9 @@ object LtssSink {
   def readZones(
       spark: org.apache.spark.sql.SparkSession,
       path: String): (Seq[(Long, Seq[(Double, Double)])], Long) = {
+    // the version first: a swap between the two reads then pins the new
+    // rings to the older version, which the restart gate refuses loudly
+    val version = zoneLayoutVersion(spark, path)
     val rows = spark.read.parquet(path)
       .select(col("zone_id"), col("verts")).orderBy(col("zone_id")).collect()
     val zones = rows.toIndexedSeq.map { r =>
@@ -1036,66 +1025,7 @@ object LtssSink {
         .map(v => (v.getDouble(0), v.getDouble(1)))
       (r.getLong(0), ring)
     }
-    (zones, zoneLayoutVersion(spark, path))
-  }
-
-  private val ZoneStageDir = ".zone_staged"
-  private val ZoneManifestName = ".zone_staged_manifest"
-
-  /** Roll FORWARD a committed zone-upsert swap (or discard an
-    * uncommitted stage). The manifest at the layout root is the commit
-    * point: written only after the staged layout is complete, it names
-    * the new data files and the new version, so at any crash point the
-    * swap is finishable deterministically — root data files NOT in the
-    * manifest are the retired layout (delete), manifest names still in
-    * the stage dir move in (names are unique per Spark write, so a
-    * half-moved stage never collides), and the final marker carries
-    * the manifest's version. No manifest = the stage never committed:
-    * discard it, the live layout was never touched. */
-  private def finishZoneSwap(
-      spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Unit = {
-    val manifest = new Path(root, ZoneManifestName)
-    val staged = new Path(root, ZoneStageDir)
-    // the fixed temp name earlier manifest writes used: a crash between
-    // that write and its rename left an orphan, never a commit point
-    fs.delete(new Path(root, ZoneManifestName + ".tmp"), false)
-    val raw = rawFs(fs)
-    if (!raw.exists(manifest)) { fs.delete(staged, true); return }
-    val in = raw.open(manifest)
-    val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-      finally in.close()
-    // [[replaceFile]] makes a half-written manifest unreachable, but
-    // defend in depth anyway: an UNPARSABLE manifest (empty, or a
-    // garbled version line) is treated as UNCOMMITTED — discard it and
-    // the stage, keep the live files — rather than wedging the layout on
-    // NumberFormatException or, worse, replaying a truncated name list
-    // as a committed swap
-    val parsed = lines.headOption.flatMap(h => h.toLongOption)
-    if (parsed.isEmpty) {
-      fs.delete(manifest, false)
-      fs.delete(staged, true)
-      return
-    }
-    val version = parsed.get
-    val names = lines.tail.filter(_.nonEmpty)
-    val nameSet = names.toSet
-    def isData(n: String) = !n.startsWith(".") && !n.startsWith("_")
-    fs.listStatus(root)
-      .filter(st => st.isFile && isData(st.getPath.getName) &&
-        !nameSet(st.getPath.getName))
-      .foreach(st => fs.delete(st.getPath, false))
-    if (fs.exists(staged)) names.foreach { n =>
-      val from = new org.apache.hadoop.fs.Path(staged, n)
-      val to = new org.apache.hadoop.fs.Path(root, n)
-      if (fs.exists(from) && !fs.exists(to) && !fs.rename(from, to))
-        throw new java.io.IOException(s"zone swap could not move $from in")
-    }
-    fs.delete(staged, true)
-    writeLayoutMarker(spark, root.toString, LayoutMarker(0L, Nil, generation = version))
-    fs.delete(manifest, false)
+    (zones, version)
   }
 
   /** ZONE-DIMENSION lifecycle — add, REPLACE (by id), and drop zones in
@@ -1117,15 +1047,13 @@ object LtssSink {
     *
     * Lifecycle contract (r16): incoming zone_ids must be DISTINCT — a
     * batch carrying two versions of one zone is ambiguous and refuses
-    * before anything moves. The rewrite runs under the owner-token
-    * marker lock ([[acquireLifecycleLock]] — same protocol as
-    * [[appendTrackMonth]]), stages the merged layout under a hidden
-    * dot-dir, and COMMITS by writing a manifest (new version + staged
-    * file names) before any live file is touched; from the manifest on,
-    * the swap rolls FORWARD deterministically at any crash point
-    * ([[finishZoneSwap]], also run at entry to converge a predecessor's
-    * residue). Every successful upsert bumps the layout's zone_version
-    * (marker generation), which the streaming twins pin their state to. */
+    * before anything moves. The rewrite is the redraw's: under the
+    * owner-token marker lock ([[acquireLifecycleLock]] — same protocol as
+    * [[appendTrackMonth]], `force` as there) the merged layout is staged
+    * beside the live one and swapped in ([[swapZones]]); a crashed
+    * predecessor is settled at entry by [[recoverSwap]]. Every successful
+    * upsert bumps the layout's zone_version (marker generation), which the
+    * streaming twins pin their state to. */
   def upsertZones(
       zones: DataFrame, path: String, dropIds: Seq[Long] = Nil,
       force: Boolean = false): Unit = {
@@ -1137,46 +1065,13 @@ object LtssSink {
       s"upsertZones requires distinct incoming zone_ids — duplicated: " +
         s"${dup.toSeq.sorted.mkString(", ")} (two versions of one zone in " +
         "a batch is ambiguous; pre-reduce to the intended row per id)")
-    val marker0 = readLayoutMarker(spark, path)
-      .getOrElse(LayoutMarker(0L, Nil)) // legacy un-markered layout = version 0
-    acquireLifecycleLock(path, "zone-upsert", marker0, force)
-    try {
-      val (fs, root) = hadoopFs(spark, path)
-      finishZoneSwap(spark, fs, root) // converge any crashed predecessor first
-      val cur = readLayoutMarker(spark, path).getOrElse(LayoutMarker(0L, Nil))
-      writeLayoutMarker(spark, path, cur.copy(
-        migrating = Some(s"zone-upsert:${ownerToken()}")))
-      val staged = new Path(root, ZoneStageDir)
-      val manifest = new Path(root, ZoneManifestName)
-      try {
-        val gone = (dropIds ++ incomingIds).toSet
-        val kept = spark.read.parquet(path)
-          .select(col("zone_id"), col("name"), col("verts"))
-          .filter(!col("zone_id").isin(gone.toSeq: _*))
-        fs.delete(staged, true)
-        // the stage READS the live files (still untouched) and validates
-        // the merged set before the manifest commits anything
-        zoneLayoutFrame(kept.unionByName(incoming))
-          .write.mode(SaveMode.Overwrite).parquet(staged.toString)
-        val names = fs.listStatus(staged).map(_.getPath.getName)
-          .filter(n => !n.startsWith(".") && !n.startsWith("_")).sorted
-        // the manifest IS the commit point, so its WRITE must be atomic:
-        // a truncated name list would read as a committed swap that
-        // deletes live files absent from it
-        replaceFile(fs, manifest, ((cur.generation + 1) +: names.toSeq).mkString("\n"))
-      } catch {
-        case e: Throwable =>
-          // an in-process refusal (e.g. the ring gate) is not a crash:
-          // nothing committed, so discard the stage and hand the layout
-          // back unlocked instead of leaving takeover residue
-          if (!rawFs(fs).exists(manifest)) {
-            fs.delete(staged, true)
-            writeLayoutMarker(spark, path, cur)
-          }
-          throw e
-      }
-      finishZoneSwap(spark, fs, root) // the commit point has passed: swap
-    } finally releaseLifecycleLock(path, "zone-upsert")
+    val gone = (dropIds ++ incomingIds).toSet
+    swapZones(spark, path, version = 0L, force) {
+      spark.read.parquet(path)
+        .select(col("zone_id"), col("name"), col("verts"))
+        .filter(!col("zone_id").isin(gone.toSeq: _*))
+        .unionByName(incoming)
+    }
   }
 
   /** Per-backend column types for the dynamic columns — the analog of

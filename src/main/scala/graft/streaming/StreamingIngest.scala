@@ -119,16 +119,11 @@ object StreamingIngest {
       cfg: LtssConfig,
       outPath: String,
       checkpoint: String,
-      attrKeys: Seq[(String, String)] = Nil,
-      upsert: Boolean = false): StreamingQuery = {
+      attrKeys: Seq[(String, String)] = Nil): StreamingQuery = {
     require(attrKeys.isEmpty || !cfg.dbUrl.startsWith("jdbc:"),
       "attrKeys materializes typed columns in the PARQUET layout only; a JDBC " +
         "target's schema is fixed by bootstrapJdbc — drop the option or use a " +
         "parquet outPath")
-    require(!upsert || cfg.dbUrl.startsWith("jdbc:"),
-      "upsert is the JDBC cutover-window sink (runbook step 6: re-read rows " +
-        "overwrite instead of conflicting); a parquet layout dedupes the " +
-        "overlap post-hoc by PK instead")
     // JDBC target: the stored schema wins over the flag (the reference's
     // startup re-detection — an existing location column keeps receiving
     // locations even if the config dropped it, and a table without one
@@ -178,14 +173,8 @@ object StreamingIngest {
           // persist keeps that re-read off the source and out of the
           // observed counts
           batch.persist()
-          // upsert is the CUTOVER-WINDOW sink — re-read rows land
-          // ON CONFLICT DO UPDATE so the overlap converges to the
-          // recomputed state instead of tripping the conflict
-          // envelope (runbook step 6)
-          try {
-            if (upsert) LtssSink.upsertJdbc(LtssSink.locationToWkt(batch), cfg)
-            else LtssSink.writeJdbc(LtssSink.locationToWkt(batch), cfg)
-          } finally batch.unpersist()
+          try LtssSink.writeJdbc(LtssSink.locationToWkt(batch), cfg)
+          finally batch.unpersist()
         }
         // attrKeys: the materialized-key layout (GIN-expression-index
         // analog) is produced BY INGEST — the sink extracts the typed
@@ -320,12 +309,10 @@ object StreamingIngest {
     *     max event time ≥ F, a replay tool re-feeding the retained
     *     log. The checkpoint path handed to the callback is the SAME
     *     path, now vacant — the restarted query begins fresh at the
-    *     rewound offsets. For JDBC targets the callback passes
-    *     `upsert = true` to [[start]] (step 6): the re-read window's
-    *     rows land ON CONFLICT DO UPDATE, so the overlap converges to
-    *     the recomputed state (equal to the originals by the
-    *     stream==batch parity contracts) instead of tripping the
-    *     append path's conflict envelope; parquet targets dedupe the
+    *     rewound offsets. Step 6: for JDBC targets the callback calls
+    *     [[start]] as usual — the database skips the re-read window's
+    *     stored keys, and the skipped rows equal the stored ones by the
+    *     stream==batch parity contracts; parquet targets dedupe the
     *     overlap post-hoc by PK (`dedup_exact`-keyed MERGE).
     *
     * Step 7 (verify counts/hashes over the overlap window against the

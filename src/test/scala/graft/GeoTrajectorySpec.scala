@@ -1061,46 +1061,51 @@ class GeoTrajectorySpec extends SparkSpec {
     }
     assert(dup.getMessage.contains("distinct incoming zone_ids"))
     assert(LtssSink.zoneLayoutVersion(spark, dir) == 2L)
-    // a refused RING gate restores the unlocked marker (no takeover residue)
+    // a refused RING gate refuses before the lock is stamped
     intercept[IllegalArgumentException] {
       LtssSink.upsertZones(
         zdf(Seq((8L, "flat", Seq((0.0, 0.0), (5.0, 5.0), (10.0, 10.0))))), dir)
     }
     assert(LtssSink.zoneLayoutVersion(spark, dir) == 2L)
+    assert(LtssSink.readLayoutMarker(spark, dir).get.migrating.isEmpty)
     val host = java.net.InetAddress.getLocalHost.getHostName
-    def stampMarker(migrating: String): Unit = {
+    def stampMarker(migrating: String, generation: Long): Unit = {
       java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_ltss_layout.json"),
-        (s"""{"chunkTimeIntervalUs":0,"attrKeys":[],"generation":2""" +
+        (s"""{"chunkTimeIntervalUs":0,"attrKeys":[],"generation":$generation""" +
           s""","migratingEncoding":"$migrating","attributesEncoding":"json"}""")
           .getBytes("UTF-8"))
       // raw write invalidates the local-FS checksum sidecar: drop it
       java.nio.file.Files.deleteIfExists(
         java.nio.file.Paths.get(dir, "._ltss_layout.json.crc"))
     }
-    // a LIVE owner on this host (pid 1 is alive in this sandbox) refuses;
-    // force overrides when the operator knows better
-    stampMarker(s"zone-upsert:$host:1:livetok")
+    // a LIVE owner on this host (pid 1, init, is always alive) refuses
+    // the upsert and the redraw alike; force overrides the upsert's when
+    // the operator knows better
+    stampMarker(s"zone-upsert:$host:1:livetok", 2L)
     val live = intercept[IllegalStateException] { LtssSink.upsertZones(zdf(tri), dir) }
     assert(live.getMessage.contains("live zone-upsert owner"))
+    val liveRedraw = intercept[IllegalStateException] {
+      LtssSink.writeZoneLayout(zdf(graft.operators.Queries.ZoneDefs), dir)
+    }
+    assert(liveRedraw.getMessage.contains("live zone-upsert owner"))
     LtssSink.upsertZones(zdf(tri), dir, force = true)
     assert(LtssSink.zoneLayoutVersion(spark, dir) == 3L)
-    // crash roll-forward: a predecessor that died AFTER the commit point
-    // (staged layout + manifest on disk, marker stamped with a DEAD pid)
-    // is converged at entry — its swap finishes, THEN the new delta lands
-    val stagedSrc = java.nio.file.Files.createTempDirectory("graft-zone-src").toString + "/s"
+    // a dead owner's residue is passed over by the redraw
+    stampMarker(s"zone-upsert:$host:999999999:deadtok", 3L)
+    LtssSink.writeZoneLayout(zdf(graft.operators.Queries.ZoneDefs ++ tri), dir)
+    assert(LtssSink.zoneLayoutVersion(spark, dir) == 4L)
+    assert(LtssSink.readLayoutMarker(spark, dir).get.migrating.isEmpty)
+    // crash roll-forward: a predecessor that died between the swap's two
+    // renames (the live dir retired with a DEAD pid's stamp, its complete
+    // staged copy at version 9 beside it) is settled at entry — its swap
+    // finishes, THEN the new delta lands
+    stampMarker(s"zone-upsert:$host:999999999:deadtok", 4L)
+    val parent = new java.io.File(dir).getParent
+    assert(new java.io.File(dir).renameTo(new java.io.File(parent, ".z_zone_retired")))
     LtssSink.writeZoneLayout(
-      zdf(Seq((50L, "ghost", Seq((0.0, 0.0), (2.0, 0.0), (1.0, 2.0))))), stagedSrc)
-    val stagedDir = java.nio.file.Paths.get(dir, ".zone_staged")
-    java.nio.file.Files.createDirectories(stagedDir)
-    val names = new java.io.File(stagedSrc).listFiles()
-      .filter(f => f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
-      .map { f =>
-        java.nio.file.Files.copy(f.toPath, stagedDir.resolve(f.getName))
-        f.getName
-      }.sorted
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, ".zone_staged_manifest"),
-      (("9" +: names.toSeq).mkString("\n")).getBytes("UTF-8"))
-    stampMarker(s"zone-upsert:$host:999999999:deadtok")
+      zdf(Seq((50L, "ghost", Seq((0.0, 0.0), (2.0, 0.0), (1.0, 2.0))))), s"$parent/ghost",
+      version = 9L)
+    assert(new java.io.File(parent, "ghost").renameTo(new java.io.File(parent, ".z_zone_staged")))
     LtssSink.upsertZones(zdf(tri), dir)
     // the ghost swap (version 9, zone 50 only) finished first, then the
     // delta merged on top of IT: final = {50, 7} at version 10
@@ -1108,104 +1113,72 @@ class GeoTrajectorySpec extends SparkSpec {
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(ids == Seq(7L, 50L), s"roll-forward then merge diverged: $ids")
     assert(LtssSink.zoneLayoutVersion(spark, dir) == 10L)
+    assert(new java.io.File(parent).list().toSeq == Seq("z"))
   }
 
-  test("zone swap: an unparsable manifest is UNCOMMITTED (live files kept, stage discarded); a redraw bumps zone_version") {
+  test("zone redraw: bumps zone_version and refuses a stale explicit one") {
     import org.apache.spark.sql.functions.expr
     import graft.sources.LtssSink
     def zdf(rows: Seq[(Long, String, Seq[(Double, Double)])]) =
       rows.toDF("zone_id", "name", "verts")
         .withColumn("verts", expr("transform(verts, v -> struct(v._1 AS x, v._2 AS y))"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-zone-trunc").toString + "/z"
+    val dir = java.nio.file.Files.createTempDirectory("graft-zone-redraw").toString + "/z"
     LtssSink.writeZoneLayout(zdf(graft.operators.Queries.ZoneDefs), dir)
-    val liveIds = spark.read.parquet(dir).select("zone_id")
-      .collect().map(_.getLong(0)).sorted.toSeq
-    // a predecessor crashed MID-MANIFEST-WRITE in the pre-atomic
-    // protocol: a garbled version line (torn write) must read as
-    // "never committed" — discard stage + manifest, keep every live
-    // file — not wedge on NumberFormatException or delete live data
-    val stagedDir = java.nio.file.Paths.get(dir, ".zone_staged")
-    java.nio.file.Files.createDirectories(stagedDir)
-    java.nio.file.Files.write(stagedDir.resolve("part-fake.parquet"),
-      "not parquet".getBytes("UTF-8"))
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, ".zone_staged_manifest"),
-      "9 garbled".getBytes("UTF-8"))
-    val tri = Seq((7L, "tri", Seq((0.0, 0.0), (5.0, 0.0), (3.0, 4.0))))
-    LtssSink.upsertZones(zdf(tri), dir) // entry convergence sees the garble
-    val ids = spark.read.parquet(dir).select("zone_id")
-      .collect().map(_.getLong(0)).sorted.toSeq
-    assert(ids == (liveIds :+ 7L).sorted,
-      s"an unparsable manifest must never cost live zones: $ids")
-    assert(!java.nio.file.Files.exists(stagedDir), "the orphan stage is discarded")
-    // an orphan manifest TEMP (crash between temp write and rename) is
-    // residue, never a commit point
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir, ".zone_staged_manifest.tmp"),
-      "99\npart-x".getBytes("UTF-8"))
-    LtssSink.upsertZones(zdf(Seq((8L, "tri2", Seq((20.0, 0.0), (25.0, 0.0), (23.0, 4.0))))), dir)
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dir, ".zone_staged_manifest.tmp")))
-    val v = LtssSink.zoneLayoutVersion(spark, dir)
+    assert(LtssSink.zoneLayoutVersion(spark, dir) == 1L)
     // a FULL REDRAW must advance the version like an upsert: a
     // restarted stream holding state stamped against the old rings
     // must fail the zone-version gate, not silently diff
-    LtssSink.writeZoneLayout(zdf(graft.operators.Queries.ZoneDefs), dir)
-    assert(LtssSink.zoneLayoutVersion(spark, dir) == v + 1,
-      "a redraw defaults to prior+1")
+    val tri = zdf(Seq((7L, "tri", Seq((0.0, 0.0), (5.0, 0.0), (3.0, 4.0)))))
+    LtssSink.writeZoneLayout(tri, dir)
+    assert(LtssSink.zoneLayoutVersion(spark, dir) == 2L, "a redraw defaults to prior+1")
     // an explicit stale version refuses (it would re-arm the silent
     // wrong-transition the contract exists to prevent)
     val e = intercept[IllegalArgumentException] {
-      LtssSink.writeZoneLayout(zdf(tri), dir, version = v)
+      LtssSink.writeZoneLayout(tri, dir, version = 2L)
     }
     assert(e.getMessage.contains("must exceed"))
+    assert(LtssSink.readLayoutMarker(spark, dir).get.migrating.isEmpty)
     // an explicit HIGHER version is honored
-    LtssSink.writeZoneLayout(zdf(tri), dir, version = v + 10)
-    assert(LtssSink.zoneLayoutVersion(spark, dir) == v + 10)
-    // CRASH WINDOW: a redraw that died between the Overwrite (which
-    // clears the marker) and the marker write leaves only the version
-    // INTENT sidecar — the next redraw must resume ABOVE it, never
-    // reset to 1 (which would re-arm the silent-diff hazard for state
-    // pinned to the original version 1)
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir + ".zver_intent"),
-      (v + 11).toString.getBytes("UTF-8"))
-    java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "_ltss_layout.json"))
-    LtssSink.writeZoneLayout(zdf(tri), dir)
-    assert(LtssSink.zoneLayoutVersion(spark, dir) == v + 12,
-      "a torn redraw's intent must floor the next version")
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir + ".zver_intent")),
-      "a completed redraw clears its intent sidecar")
-    // a GARBLED intent (torn sidecar write pre-rename is impossible,
-    // but defend anyway) reads as absent, not a wedge
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir + ".zver_intent"),
-      "garbled".getBytes("UTF-8"))
-    LtssSink.writeZoneLayout(zdf(tri), dir)
-    assert(LtssSink.zoneLayoutVersion(spark, dir) == v + 13)
+    LtssSink.writeZoneLayout(tri, dir, version = 12L)
+    assert(LtssSink.zoneLayoutVersion(spark, dir) == 12L)
+    assert(new java.io.File(dir).getParentFile.list().toSeq == Seq("z"))
   }
 
-  test("zone version intent: a reader never sees the sidecar absent while it is rewritten") {
+  test("zone version: a reader polling through 200 redraws never sees 0 or an older one") {
+    import org.apache.spark.sql.functions.expr
     import graft.sources.LtssSink
-    // a reader caught between a delete and a rename of the intent reads
-    // version 0; with the marker absent too, the next redraw would reuse
-    // a version the zone-version gate exists to forbid
-    val dir = java.nio.file.Files.createTempDirectory("graft-zone-intent").toString + "/z"
-    val intent = new org.apache.hadoop.fs.Path(dir + ".zver_intent")
-    val fs = intent.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    LtssSink.replaceFile(fs, intent, "1")
+    val dir = java.nio.file.Files.createTempDirectory("graft-zone-poll").toString + "/z"
+    val tri = Seq((7L, "tri", Seq((0.0, 0.0), (5.0, 0.0), (3.0, 4.0)))).toDF("zone_id", "name", "verts")
+      .withColumn("verts", expr("transform(verts, v -> struct(v._1 AS x, v._2 AS y))"))
+    LtssSink.writeZoneLayout(tri, dir, version = 12L)
+    // the version moves with the rows: a reader polling through 200
+    // redraws reads each live version in turn, or fails loudly in the
+    // instant between a swap's two renames, and never reads 0 or goes back
     val done = new java.util.concurrent.atomic.AtomicBoolean(false)
     val started = new java.util.concurrent.CountDownLatch(1)
-    val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val reader = new Thread(() => while (!done.get) {
-      seen += LtssSink.zoneLayoutVersion(spark, dir)
-      started.countDown()
+    var reads, zeros, backwards, misses = 0L // read after the join
+    val reader = new Thread(() => {
+      var last = 0L
+      while (!done.get) {
+        try {
+          val v = LtssSink.zoneLayoutVersion(spark, dir)
+          reads += 1
+          if (v == 0L) zeros += 1
+          if (v < last) backwards += 1
+          last = v
+        } catch { case _: java.io.IOException => misses += 1 }
+        started.countDown()
+      }
     })
     reader.start()
     try {
       started.await()
-      (2 to 201).foreach(v => LtssSink.replaceFile(fs, intent, v.toString))
+      (1 to 200).foreach(_ => LtssSink.writeZoneLayout(tri, dir))
     } finally { done.set(true); reader.join() }
-    assert(!seen.contains(0L), s"the intent read absent in ${seen.count(_ == 0L)} of ${seen.size} reads")
-    assert(seen == seen.sorted, "a read went back to an older intent")
-    assert(LtssSink.zoneLayoutVersion(spark, dir) == 201L)
+    assert(reads > 0 && zeros == 0L && backwards == 0L,
+      s"$reads reads: $zeros read 0, $backwards went back ($misses failed mid-swap)")
+    assert(LtssSink.zoneLayoutVersion(spark, dir) == 212L)
+    assert(new java.io.File(dir).getParentFile.list().toSeq == Seq("z"))
   }
 
   test("appendTrackMonth owner token: a live concurrent appender refuses, dead residue passes") {

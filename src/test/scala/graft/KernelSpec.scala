@@ -161,6 +161,16 @@ class KernelSpec extends SparkSpec {
       viaInstall.sessionState.functionRegistry.dropFunction(FunctionIdentifier(name))
     intercept[AnalysisException](viaInstall.sql("SELECT minhash8('a b')"))
     GraftExtensions.install(viaInstall)
+    // install leaves the extension's entries as they are: the same function
+    // and ExpressionInfo instances (a replaced one logs a WARN per function)
+    def entries(s: SparkSession) = calls.map { case (name, _, _) =>
+      val reg = s.sessionState.functionRegistry
+      (reg.lookupFunctionBuilder(FunctionIdentifier(name)).get, reg.lookupFunction(FunctionIdentifier(name)).get)
+    }
+    val before = entries(viaExtension)
+    GraftExtensions.install(viaExtension)
+    val kept = entries(viaExtension).zip(before).forall { case ((b1, i1), (b0, i0)) => (b1 eq b0) && (i1 eq i0) }
+    assert(kept, "install replaced a function the extension registered")
     for (s <- Seq(viaExtension, viaInstall)) kernelInputs(s).createOrReplaceTempView("kernel_in")
     val input = kernelInputs(spark)
     def rows(df: DataFrame) = df.orderBy("id").collect().toSeq

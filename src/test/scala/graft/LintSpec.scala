@@ -43,9 +43,9 @@ class LintSpec extends AnyFunSuite {
 
   test("layout dirs and small commit files are replaced only through the swap and replace helpers") {
     // a hand-written retire/swap decides its own crash recovery again;
-    // renames stay in the swap primitive, its recovery rule, the atomic
-    // small-file replace and the zone manifest's roll-forward
-    val owners = Seq("def swapIn(", "def recoverSwap(", "def replaceFile(", "def finishZoneSwap(")
+    // renames stay in the swap primitive, its recovery rule and the
+    // atomic small-file replace
+    val owners = Seq("def swapIn(", "def recoverSwap(", "def replaceFile(")
     val hits = scalaFiles("src/main/scala/graft/sources").flatMap { f =>
       val lines = Files.readAllLines(f).asScala.toIndexedSeq
       // each body ends at the next member of the object
@@ -58,8 +58,16 @@ class LintSpec extends AnyFunSuite {
         code && t.contains("rename(") && !bodies.exists { case (s, e) => i > s && i < e }
       }.map(i => s"$f:${i + 1}")
     }
-    assert(hits.isEmpty, s"rename( outside swapIn, recoverSwap, replaceFile and finishZoneSwap " +
+    assert(hits.isEmpty, s"rename( outside swapIn, recoverSwap and replaceFile " +
       s"in: ${hits.mkString(", ")}; replace a dir through LtssSink.swapIn")
+    // the zone table swaps too: no commit file of its own beside the marker
+    val zoneFiles = scalaFiles("src/main").flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (l, i) if l.contains(".zver_intent") || l.contains("zone_staged_manifest") => s"$f:${i + 1}"
+      }
+    }
+    assert(zoneFiles.isEmpty, s"zone commit files in: ${zoneFiles.mkString(", ")}; " +
+      "write the zone table through LtssSink.swapZones")
   }
 
   test("the sink lands JDBC rows through one lander") {
@@ -120,7 +128,7 @@ class LintSpec extends AnyFunSuite {
     // the session extension and install register the same list, so a
     // function reachable one way is reachable the other
     val hits = codeHits("src/main/scala") { (_, t) =>
-      (t.contains("injectFunction") || t.contains("createOrReplaceTempFunction")) &&
+      Seq("injectFunction", "createOrReplaceTempFunction", "registerFunction").exists(t.contains) &&
         !t.contains("functions.foreach")
     }
     assert(hits.isEmpty, s"function registration outside the table loops in: " +

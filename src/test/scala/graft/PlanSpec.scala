@@ -372,13 +372,14 @@ class PlanSpec extends SparkSpec {
   test("crash-point table: compaction, migration and the track-month append keep every row at each crash point") {
     import spark.implicits._
     import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.functions.{col, parse_json}
+    import org.apache.spark.sql.functions.{col, expr, parse_json}
     import graft.sources.LtssSink
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    // Each rewrite stages a copy, retires the live dir and swaps the copy
-    // in. Points 0-2 are built by hand under the hidden names the layouts
-    // have always used, so older residue recovers too; point 3 stops the
-    // rewrite itself at the swap-in rename, on the CrashFs scheme.
+    // Each rewrite (and each zone-table write) stages a copy, retires the
+    // live dir and swaps the copy in. Points 0-2 are built by hand under
+    // the hidden names the layouts have always used, so older residue
+    // recovers too; point 3 stops the rewrite itself at the swap-in
+    // rename, on the CrashFs scheme.
     val points = Seq("before the retire, leftover stage", "between the renames, stage complete",
       "retired copy, incomplete stage", "swap-in rename fails")
     spark.sparkContext.hadoopConfiguration.set("fs.crashfs.impl", classOf[CrashFs].getName)
@@ -519,6 +520,46 @@ class PlanSpec extends SparkSpec {
       assert(dump(dir) == dump(full), s"append, $label")
       assert(hiddenDirs(dir).isEmpty, s"append, $label: ${hiddenDirs(dir)}")
       assert(LtssSink.readLayoutMarker(spark, dir).get.migrating.isEmpty, s"append, $label")
+    }
+
+    // the zone table: a redraw and an upsert each stage the whole table as
+    // the sibling .z_zone_staged, marker first; the re-run is the recovery
+    def zdf(zs: Seq[(Long, String, Seq[(Double, Double)])]) = zs.toDF("zone_id", "name", "verts")
+      .withColumn("verts", expr("transform(verts, v -> struct(v._1 AS x, v._2 AS y))"))
+    val zones = zdf(graft.operators.Queries.ZoneDefs)
+    val tri = zdf(Seq((7L, "tri", Seq((0.0, 0.0), (5.0, 0.0), (3.0, 4.0)))))
+    def zoneRows(dir: String) = spark.read.parquet(dir)
+      .selectExpr("zone_id", "name", "lat_min", "lat_max", "lon_min", "lon_max")
+      .as[(Long, String, Double, Double, Double, Double)].collect().sorted.toSeq
+    def siblings(parent: String) = new java.io.File(parent).list().filter(_.startsWith(".")).toSeq
+    for ((op, write) <- Seq[(String, String => Unit)](
+        "redraw" -> (z => LtssSink.writeZoneLayout(tri, z)),
+        "upsert" -> (z => LtssSink.upsertZones(tri, z, dropIds = Seq(2L))))) {
+      val wantDir = fresh("graft-crash-zone", 0)._1 + "/z"
+      LtssSink.writeZoneLayout(zones, wantDir)
+      write(wantDir)
+      val wantRows = zoneRows(wantDir)
+      for ((label, p) <- points.zipWithIndex) {
+        val (parent, uri) = fresh("graft-crash-zone", p)
+        val dir = s"$parent/z"
+        LtssSink.writeZoneLayout(zones, dir) // zone_version 1
+        crashAndRecover(p, dir, s"$parent/.z_zone_retired") { complete =>
+          // the crashed owner's pid is dead
+          LtssSink.writeLayoutMarker(spark, dir, LtssSink.readLayoutMarker(spark, dir).get
+            .copy(migrating = Some(s"zone-upsert:$host:999999999:deadtok")))
+          val staged = s"$parent/.z_zone_staged"
+          val src = spark.read.parquet(wantDir)
+          stage(if (complete) src else src.filter(col("zone_id") === 7L), staged, complete)
+          LtssSink.writeLayoutMarker(spark, staged, LtssSink.LayoutMarker(0L, Nil, generation = 2L))
+        } { write(s"$uri/z") } { write(s"$uri/z") }
+        // a completed crashed write is version 2 and the re-run 3; an
+        // untouched one leaves the re-run at 2
+        val version = if (p % 2 == 1) 3L else 2L
+        assert(zoneRows(dir) == wantRows, s"zone $op, $label")
+        assert(LtssSink.zoneLayoutVersion(spark, dir) == version, s"zone $op, $label")
+        assert(siblings(parent).isEmpty, s"zone $op, $label: ${siblings(parent)}")
+        assert(LtssSink.readLayoutMarker(spark, dir).get.migrating.isEmpty, s"zone $op, $label")
+      }
     }
   }
 
@@ -1482,15 +1523,15 @@ class PlanSpec extends SparkSpec {
 }
 
 /** The local file system under the `crashfs` scheme. Once armed, the next
-  * rename of a staged copy onto a live dir throws, as a crash at a swap's
-  * swap-in rename would. Spark's own commit renames (under `_temporary`)
-  * pass. */
+  * rename of a staged copy onto a live chunk, month or zone dir throws, as
+  * a crash at a swap's swap-in rename would. Spark's own commit renames
+  * (under `_temporary`) pass. */
 class CrashFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("crashfs:///")
   override def getScheme: String = "crashfs"
   override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean = {
     val swapIn = src.toString.contains("staged") && !src.toString.contains("_temporary") &&
-      dst.getName.startsWith("chunk")
+      (dst.getName.startsWith("chunk") || src.getName == s".${dst.getName}_zone_staged")
     if (swapIn && CrashFs.failNextSwapIn.compareAndSet(true, false))
       throw new java.io.IOException(s"injected crash renaming $src to $dst")
     super.rename(src, dst)

@@ -440,12 +440,12 @@ class PostgresE2ESpec extends SparkSpec with BeforeAndAfterAll {
     }
   }
 
-  test("drain-and-cutover runbook mechanized: rewound re-read lands via upsert, output equals the uninterrupted run") {
+  test("drain-and-cutover runbook mechanized: rewound re-read lands, output equals the uninterrupted run") {
     import java.nio.file.{Files, Paths}
     // The full runbook as ONE callable chain (steps 1-6): ingest events
     // 1-3, drain + manifest, checkpoint moved aside, restart from a
     // REWOUND source (files covering events 2-5 — overlap {2, 3}
-    // re-emits) with the upsert sink, and the stored table must equal
+    // re-emits) through the same sink, and the stored table must equal
     // the uninterrupted run's rows exactly once each. March 2024 PKs —
     // disjoint from the sibling ingest test in the shared ltss table.
     def line(i: Int) =
@@ -471,7 +471,7 @@ class PostgresE2ESpec extends SparkSpec with BeforeAndAfterAll {
           (2 to 5).map(line).mkString("", "\n", "\n"))
         graft.streaming.StreamingIngest.start(
           graft.streaming.StreamingIngest.readJsonEvents(spark, in2),
-          c, "", freshCkpt, upsert = true) // runbook step 6
+          c, "", freshCkpt) // runbook step 6
     }
     graft.streaming.StreamingIngest.drainAndStop(res.restarted)
     // the manifest recorded the drain and the rewind targets
@@ -488,7 +488,7 @@ class PostgresE2ESpec extends SparkSpec with BeforeAndAfterAll {
           "WHERE time >= TIMESTAMP '2024-03-01 00:00:00' " +
           "AND time < TIMESTAMP '2024-04-01 00:00:00' ORDER BY entity_id").rows
       // equal to the uninterrupted run: every event exactly once, the
-      // overlap upserted rather than duplicated or conflicted
+      // overlap skipped rather than duplicated or conflicted
       assert(rows.map(_(0)) == (1 to 5).map(i => s"sensor.$i").toVector,
         s"cutover output diverged from the uninterrupted run: $rows")
       assert(rows.zipWithIndex.forall { case (r, i) =>
