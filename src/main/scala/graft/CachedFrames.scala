@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.message.StringMapMessage
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
@@ -14,6 +16,10 @@ import org.apache.spark.storage.StorageLevel
   * Keys are accessed LRU; past [[MaxEntries]] the stalest frame is
   * unpersisted on evict, bounding pinned executor storage for a
   * long-lived session that touches many datasets.
+  *
+  * Each build, hit and evict logs one INFO map message (`event` =
+  * `cache_build` / `cache_hit` / `cache_evict`, `key`) on the
+  * `graft.CachedFrames` logger.
   */
 object CachedFrames {
 
@@ -49,11 +55,18 @@ object CachedFrames {
     }
   }
 
+  private val log = LogManager.getLogger(getClass.getName.stripSuffix("$"))
+
+  private def logEvent(event: String, key: String): Unit =
+    if (log.isInfoEnabled)
+      log.info(new StringMapMessage().`with`("event", event).`with`("key", key))
+
   private val cache =
     new java.util.LinkedHashMap[String, Entry](MaxEntries, 0.75f, true) {
       override def removeEldestEntry(
           e: java.util.Map.Entry[String, Entry]): Boolean =
         if (this.size() > MaxEntries) {
+          logEvent("cache_evict", e.getKey)
           e.getValue.unpersistIfBuilt()
           true
         } else false
@@ -88,8 +101,9 @@ object CachedFrames {
     // ordering is acyclic.
     val entry = synchronized {
       val hit = cache.get(key)
-      if (hit != null) hit
+      if (hit != null) { logEvent("cache_hit", key); hit }
       else {
+        logEvent("cache_build", key)
         val e = new Entry(() => build, level)
         cache.put(key, e)
         e

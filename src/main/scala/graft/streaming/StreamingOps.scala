@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stateful streaming views over the LTSS stream — the extensions the
   * reference's append-only design leaves to the query layer (SURVEY.md
@@ -57,11 +57,21 @@ object StreamingOps {
       bd.movePointRight(2).longValueExact()
     }.toOption
 
-  /** The keyed fold every stateful twin without a timeout runs through.
-    * It groups `rows` by `key`, sorts each key's rows of one
-    * micro-batch by `order`, and hands `fold` the key, the sorted rows
-    * and the key's stored state. The state `fold` returns is stored
-    * (`None` removes it) and its rows are emitted in `mode`.
+  /** A timed twin's expiry. After each fold the key's event-time
+    * timeout is armed at `deadlineMs` of the stored state, clamped above
+    * the current watermark as the API requires; once the watermark
+    * passes it, `flush` emits what the stored state still owes and the
+    * state is dropped. */
+  private final case class Expiry[K, S, U](
+      deadlineMs: (K, S) => Long,
+      flush: (K, S) => Iterator[U] = (_: K, _: S) => Iterator.empty[U])
+
+  /** The keyed fold every stateful twin runs through. It groups `rows`
+    * by `key`, sorts each key's rows of one micro-batch by `order`, and
+    * hands `fold` the key, the sorted rows and the key's stored state.
+    * The state `fold` returns is stored (`None` removes it) and its rows
+    * are emitted in `mode`. A twin with an `expiry` runs on event-time
+    * timeouts; one without has none.
     *
     * `order` is the twin's total order, its batch window's ORDER BY:
     * rows it ranks equal must be interchangeable for the fold. Then a
@@ -70,18 +80,37 @@ object StreamingOps {
     * order is per batch only: a row behind the state's frontier in a
     * LATER batch meets each twin's own frontier rule. */
   private def foldSorted[T, K: Encoder, O: Ordering, S: Encoder, U: Encoder](
-      rows: Dataset[T])(key: T => K, order: T => O, mode: OutputMode)(
-      fold: (K, Seq[T], Option[S]) => (Option[S], Iterator[U])): Dataset[U] =
-    rows.groupByKey(key).flatMapGroupsWithState[S, U](mode, GroupStateTimeout.NoTimeout) {
-      (k, batch, st) =>
-        val sorted = batch.map(r => (order(r), r)).toVector.sortBy(_._1).map(_._2)
-        val (next, out) = fold(k, sorted, st.getOption)
-        next match {
-          case Some(s) => st.update(s)
-          case None => if (st.exists) st.remove()
+      rows: Dataset[T])(key: T => K, order: T => O, mode: OutputMode,
+      expiry: Option[Expiry[K, S, U]] = None)(
+      fold: (K, Seq[T], Option[S]) => (Option[S], Iterator[U])): Dataset[U] = {
+    val timeout =
+      if (expiry.isEmpty) GroupStateTimeout.NoTimeout else GroupStateTimeout.EventTimeTimeout
+    rows.groupByKey(key).flatMapGroupsWithState(mode, timeout) {
+      (k: K, batch: Iterator[T], st: GroupState[S]) =>
+        if (st.hasTimedOut) {
+          val s = st.get
+          st.remove()
+          expiry.get.flush(k, s)
+        } else {
+          val sorted = batch.map(r => (order(r), r)).toVector.sortBy(_._1).map(_._2)
+          val (next, out) = fold(k, sorted, st.getOption)
+          next match {
+            case Some(s) =>
+              st.update(s)
+              expiry.foreach(e => st.setTimeoutTimestamp(
+                math.max(e.deadlineMs(k, s), st.getCurrentWatermarkMs() + 1L)))
+            case None => if (st.exists) st.remove()
+          }
+          out
         }
-        out
     }
+  }
+
+  /** `rows` with a watermark on `timeCol` of `lateUs` µs, ceiled to
+    * whole seconds: truncating would SHORTEN the promised lateness and
+    * drop in-horizon out-of-order rows at the watermark. */
+  private def withLatenessUs[T](rows: Dataset[T], timeCol: String, lateUs: Long): Dataset[T] =
+    rows.withWatermark(timeCol, s"${(lateUs + 999999L) / 1000000L} seconds")
 
   final case class LtssEvent(time: java.sql.Timestamp, entity_id: String, state: String)
 
@@ -611,29 +640,11 @@ object StreamingOps {
       }
       (if (stored.isEmpty) None else Some(BucketState(stored)), out.iterator)
     }
-    retention match {
-      case None => foldSorted(bands)(key, order, OutputMode.Append())(fold)
-      case Some(ret) =>
-        bands.groupByKey(key).flatMapGroupsWithState[BucketState, DupCandidate](
-          OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) { (band, rows, st) =>
-          if (st.hasTimedOut) { st.remove(); Iterator.empty }
-          else {
-            val (next, out) = fold(band, rows.toSeq.sortBy(order), st.getOption)
-            next match {
-              case None => st.remove()
-              case Some(s) =>
-                st.update(s)
-                // drop the whole bucket once it has been idle past the
-                // horizon (newest member + retention, clamped above the
-                // current watermark as the API requires)
-                val newestMs = s.docs.map(_._3).max / 1000L
-                st.setTimeoutTimestamp(
-                  math.max(newestMs + ret / 1000L, st.getCurrentWatermarkMs() + 1L))
-            }
-            out
-          }
-        }
-    }
+    // drop the whole bucket once it has been idle past the horizon
+    // (newest member + retention)
+    val expiry = retention.map(ret => Expiry[(Int, String), BucketState, DupCandidate](
+      (_, s) => s.docs.map(_._3).max / 1000L + ret / 1000L))
+    foldSorted(bands)(key, order, OutputMode.Append(), expiry)(fold)
   }
 
   final case class FunnelState(
@@ -2232,10 +2243,7 @@ object StreamingOps {
     import pts.sparkSession.implicits._
     val r2 = radiusDeg * radiusDeg
     val lateUs = if (latenessUs < 0L) windowUs else latenessUs
-    val exploded = fixes(pts)
-      // ceil to whole seconds: truncating would SHORTEN the promised
-      // lateness and drop in-horizon out-of-order rows at the watermark
-      .withWatermark("time", s"${(lateUs + 999999L) / 1000000L} seconds")
+    val exploded = withLatenessUs(fixes(pts), "time", lateUs)
       .withColumn("cx", floor((col("lat") + lit(90.0)) / lit(radiusDeg)).cast("long"))
       .withColumn("cy", floor((col("lon") + lit(180.0)) / lit(radiusDeg)).cast("long"))
       .withColumn("dx", explode(expr("sequence(-1, 1)")))
@@ -2244,51 +2252,41 @@ object StreamingOps {
         (col("cx") + col("dx")).as("gx"), (col("cy") + col("dy")).as("gy"),
         (col("dx") === 0 && col("dy") === 0).as("home"))
       .as[(java.sql.Timestamp, Long, Long, Double, Double, Long, Long, Boolean)]
-    exploded
-      .groupByKey(r => (r._6, r._7))
-      .flatMapGroupsWithState[CellContactState, ContactEvent](
-        OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout) { (_, rows, st) =>
-        if (st.hasTimedOut) { st.remove(); Iterator.empty }
-        else {
-        val sorted = rows.toSeq.sortBy(r => (micros(r._1), r._2, r._3))
-        var state = st.getOption.getOrElse(CellContactState(Long.MinValue, Seq.empty))
-        var frontier = state.frontierUs
-        var held = state.fixes
-        val out = scala.collection.mutable.ArrayBuffer.empty[ContactEvent]
-        for ((t, uid, eid, lat, lon, _, _, home) <- sorted) {
-          val tus = micros(t)
-          if (frontier == Long.MinValue || tus >= frontier - windowUs) {
-            val f = ContactFix(tus, uid, eid, lat, lon, home)
-            val ord = Ordering.Tuple3[Long, Long, Long]
-            for (g <- held) {
-              val (a, b) =
-                if (ord.lt((g.tUs, g.uid, g.eid), (f.tUs, f.uid, f.eid))) (g, f)
-                else (f, g)
-              if (a.uid != b.uid && b.tUs - a.tUs <= windowUs && b.home) {
-                val d2 = (a.lat - b.lat) * (a.lat - b.lat) +
-                  (a.lon - b.lon) * (a.lon - b.lon)
-                if (d2 <= r2)
-                  out += ContactEvent(tsOfMicros(a.tUs), a.uid, a.eid,
-                    tsOfMicros(b.tUs), b.uid, b.eid, d2, b.tUs - a.tUs)
-              }
+    // evict a cell whole once the watermark passes frontier + T +
+    // lateness — only then is every held fix beyond T of the oldest
+    // admissible future arrival
+    val expiry = Expiry[(Long, Long), CellContactState, ContactEvent](
+      (_, s) => s.frontierUs / 1000L + (windowUs + lateUs) / 1000L)
+    foldSorted(exploded)(r => (r._6, r._7), r => (micros(r._1), r._2, r._3),
+      OutputMode.Append(), Some(expiry)) { (_, sorted, prev) =>
+      val state = prev.getOrElse(CellContactState(Long.MinValue, Seq.empty))
+      var frontier = state.frontierUs
+      var held = state.fixes
+      val out = scala.collection.mutable.ArrayBuffer.empty[ContactEvent]
+      for ((t, uid, eid, lat, lon, _, _, home) <- sorted) {
+        val tus = micros(t)
+        if (frontier == Long.MinValue || tus >= frontier - windowUs) {
+          val f = ContactFix(tus, uid, eid, lat, lon, home)
+          val ord = Ordering.Tuple3[Long, Long, Long]
+          for (g <- held) {
+            val (a, b) =
+              if (ord.lt((g.tUs, g.uid, g.eid), (f.tUs, f.uid, f.eid))) (g, f)
+              else (f, g)
+            if (a.uid != b.uid && b.tUs - a.tUs <= windowUs && b.home) {
+              val d2 = (a.lat - b.lat) * (a.lat - b.lat) +
+                (a.lon - b.lon) * (a.lon - b.lon)
+              if (d2 <= r2)
+                out += ContactEvent(tsOfMicros(a.tUs), a.uid, a.eid,
+                  tsOfMicros(b.tUs), b.uid, b.eid, d2, b.tUs - a.tUs)
             }
-            held = held :+ f
-            if (tus > frontier) frontier = tus
-          } // else: beyond the horizon — documented drop
-        }
-        held = held.filter(_.tUs >= frontier - windowUs)
-        st.update(CellContactState(frontier, held))
-        // evict this cell whole once the watermark passes
-        // frontier + T + lateness — only then is every held fix beyond
-        // T of the oldest admissible future arrival (clamped above the
-        // current watermark as the API requires)
-        st.setTimeoutTimestamp(math.max(
-          frontier / 1000L + (windowUs + lateUs) / 1000L,
-          st.getCurrentWatermarkMs() + 1L))
-        out.iterator
-        }
+          }
+          held = held :+ f
+          if (tus > frontier) frontier = tus
+        } // else: beyond the horizon — documented drop
       }
+      (Some(CellContactState(frontier, held.filter(_.tUs >= frontier - windowUs))),
+        out.iterator)
+    }
   }
 
   final case class ConvoyPend(hr: Long, cnt: Long, minUs: Long, maxUs: Long)
@@ -2343,74 +2341,61 @@ object StreamingOps {
     // horizons and break the stream==batch contract), +2 hour-boundary
     // slack. Constant per pair at any setting.
     val PendBack = (latenessUs + contactWindowUs) / HrUs + 2L
-    contacts
-      // ceil to whole seconds — truncation would shorten the promised
-      // lateness at the watermark
-      .withWatermark("time_b", s"${(latenessUs + 999999L) / 1000000L} seconds")
-      .groupByKey(c => (math.min(c.user_a, c.user_b), math.max(c.user_a, c.user_b)))
-      .flatMapGroupsWithState[ConvoyState, ConvoyEpisode](
-        OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout) { (key, rows, st) =>
-        val out = scala.collection.mutable.ArrayBuffer.empty[ConvoyEpisode]
-        def emitRun(r: ConvoyRun): Unit =
-          if (r.nHours >= minHours)
-            out += ConvoyEpisode(key._1, key._2, r.startHr, r.nHours,
-              r.nContacts, tsOfMicros(r.firstUs), tsOfMicros(r.lastUs))
-        // fold one FINAL hour into the open run: consecutive extends,
-        // a gap closes (emits) and reopens — the batch rn-gap rule
-        def fold(run: Option[ConvoyRun], p: ConvoyPend): Option[ConvoyRun] =
-          run match {
-            case Some(r) if p.hr == r.endHr + 1L =>
-              Some(ConvoyRun(r.startHr, p.hr, r.nHours + 1L,
-                r.nContacts + p.cnt, math.min(r.firstUs, p.minUs),
-                math.max(r.lastUs, p.maxUs)))
-            case Some(r) =>
-              emitRun(r)
-              Some(ConvoyRun(p.hr, p.hr, 1L, p.cnt, p.minUs, p.maxUs))
-            case None =>
-              Some(ConvoyRun(p.hr, p.hr, 1L, p.cnt, p.minUs, p.maxUs))
-          }
-        if (st.hasTimedOut) {
-          // the watermark passed lastHr + 2 h + lateness: every future
-          // contact opens a gap, so everything held is final — fold,
-          // close, emit, drop the pair
-          val s = st.get
-          var run = s.run
-          for (p <- s.pend.sortBy(_.hr)) run = fold(run, p)
-          run.foreach(emitRun)
-          st.remove()
-        } else {
-          var s = st.getOption.getOrElse(
-            ConvoyState(Long.MinValue, Seq.empty, None))
-          val sorted = rows.toSeq.sortBy(c => (micros(c.time_a), micros(c.time_b)))
-          for (c <- sorted) {
-            val aUs = micros(c.time_a)
-            val hr = aUs / HrUs
-            if (s.frontierHr == Long.MinValue || hr >= s.frontierHr - PendBack) {
-              val bUs = micros(c.time_b)
-              val np = s.pend.find(_.hr == hr) match {
-                case Some(p) => s.pend.filterNot(_.hr == hr) :+
-                  ConvoyPend(hr, p.cnt + 1L, math.min(p.minUs, aUs),
-                    math.max(p.maxUs, bUs))
-                case None => s.pend :+ ConvoyPend(hr, 1L, aUs, bUs)
-              }
-              val nf = math.max(s.frontierHr, hr)
-              val (fin, keep) = np.partition(_.hr < nf - PendBack)
-              var run = s.run
-              for (p <- fin.sortBy(_.hr)) run = fold(run, p)
-              s = ConvoyState(nf, keep, run)
-            } // else: beyond the pair's pending window — documented drop
-          }
-          st.update(s)
-          val lastHr = (s.pend.map(_.hr) ++ s.run.map(_.endHr))
-            .foldLeft(Long.MinValue)(math.max)
-          if (lastHr != Long.MinValue)
-            st.setTimeoutTimestamp(math.max(
-              (lastHr + 2L) * 3600000L + (latenessUs + contactWindowUs) / 1000L,
-              st.getCurrentWatermarkMs() + 1L))
-        }
-        out.iterator
+    // a closed run emits at ≥ minHours
+    val episode = (key: (Long, Long), r: ConvoyRun) =>
+      if (r.nHours >= minHours)
+        Some(ConvoyEpisode(key._1, key._2, r.startHr, r.nHours,
+          r.nContacts, tsOfMicros(r.firstUs), tsOfMicros(r.lastUs)))
+      else None
+    // fold FINAL hours into the open run in hour order: consecutive
+    // extends, a gap closes (emits) and reopens — the batch rn-gap rule
+    val foldHours = (key: (Long, Long), run: Option[ConvoyRun], hours: Seq[ConvoyPend],
+        out: scala.collection.mutable.Buffer[ConvoyEpisode]) =>
+      hours.sortBy(_.hr).foldLeft(run) {
+        case (Some(r), p) if p.hr == r.endHr + 1L =>
+          Some(ConvoyRun(r.startHr, p.hr, r.nHours + 1L,
+            r.nContacts + p.cnt, math.min(r.firstUs, p.minUs),
+            math.max(r.lastUs, p.maxUs)))
+        case (open, p) =>
+          out ++= open.flatMap(episode(key, _))
+          Some(ConvoyRun(p.hr, p.hr, 1L, p.cnt, p.minUs, p.maxUs))
       }
+    val expiry = Expiry[(Long, Long), ConvoyState, ConvoyEpisode](
+      // a stored pair always holds a pending hour or a run
+      (_, s) => ((s.pend.map(_.hr) ++ s.run.map(_.endHr)).max + 2L) * 3600000L +
+        (latenessUs + contactWindowUs) / 1000L,
+      // the watermark passed lastHr + 2 h + lateness: every future
+      // contact opens a gap, so everything held is final — fold, close,
+      // emit
+      (key, s) => {
+        val out = scala.collection.mutable.ArrayBuffer.empty[ConvoyEpisode]
+        out ++= foldHours(key, s.run, s.pend, out).flatMap(episode(key, _))
+        out.iterator
+      })
+    foldSorted(withLatenessUs(contacts, "time_b", latenessUs))(
+      c => (math.min(c.user_a, c.user_b), math.max(c.user_a, c.user_b)),
+      c => (micros(c.time_a), micros(c.time_b)), OutputMode.Append(), Some(expiry)) {
+      (key, sorted, prev) =>
+        val out = scala.collection.mutable.ArrayBuffer.empty[ConvoyEpisode]
+        var s = prev.getOrElse(ConvoyState(Long.MinValue, Seq.empty, None))
+        for (c <- sorted) {
+          val aUs = micros(c.time_a)
+          val hr = aUs / HrUs
+          if (s.frontierHr == Long.MinValue || hr >= s.frontierHr - PendBack) {
+            val bUs = micros(c.time_b)
+            val np = s.pend.find(_.hr == hr) match {
+              case Some(p) => s.pend.filterNot(_.hr == hr) :+
+                ConvoyPend(hr, p.cnt + 1L, math.min(p.minUs, aUs),
+                  math.max(p.maxUs, bUs))
+              case None => s.pend :+ ConvoyPend(hr, 1L, aUs, bUs)
+            }
+            val nf = math.max(s.frontierHr, hr)
+            val (fin, keep) = np.partition(_.hr < nf - PendBack)
+            s = ConvoyState(nf, keep, foldHours(key, s.run, fin, out))
+          } // else: beyond the pair's pending window — documented drop
+        }
+        (Some(s), out.iterator)
+    }
   }
 
   final case class HourEdgeState(edges: Seq[(Long, Long)])
@@ -2443,58 +2428,47 @@ object StreamingOps {
       contactWindowUs: Long = 7200000000L): Dataset[HourGroupRow] = {
     import contacts.sparkSession.implicits._
     val HrUs = 3600000000L
-    contacts
-      .withWatermark("time_b", s"${(latenessUs + 999999L) / 1000000L} seconds")
-      .groupByKey(c => micros(c.time_a) / HrUs)
-      .flatMapGroupsWithState[HourEdgeState, HourGroupRow](
-        OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout) { (hr, rows, st) =>
-        if (st.hasTimedOut) {
-          val edges = st.get.edges
-          st.remove()
-          // the batch per-hour task's OWN union-find (shared code —
-          // the engines' components cannot drift)
-          val roots = graft.operators.Queries.minRootComponents(
-            edges.iterator)
-          val comps = scala.collection.mutable.LongMap
-            .empty[scala.collection.mutable.ArrayBuffer[Long]]
-          roots.foreach { case (m, gid) =>
-            comps.getOrElseUpdate(gid,
-              scala.collection.mutable.ArrayBuffer.empty[Long]) += m
-          }
-          comps.iterator.collect {
-            case (gid, buf) if buf.length >= k =>
-              HourGroupRow(hr, gid, buf.length.toLong,
-                buf.sorted.mkString(","))
-          }
-        } else {
-          val set = scala.collection.mutable.HashSet
-            .empty[(Long, Long)] ++= st.getOption.map(_.edges).getOrElse(Nil)
-          rows.foreach { c =>
-            require(c.user_a >= 0L && c.user_b >= 0L,
-              "convoy-group twins need non-negative member ids (the " +
-                "shared CMC hour step's −1 absent sentinel — remap " +
-                "through a dense_rank dimension first, the batch core " +
-                "variant's contract)")
-            val lo = math.min(c.user_a, c.user_b)
-            val hi = math.max(c.user_a, c.user_b)
-            if (lo != hi) set += ((lo, hi))
-          }
-          st.update(HourEdgeState(set.toSeq))
-          // seal once no admissible contact can land in this hour:
-          // time_a < hour end and time_b ≤ time_a + window, so every
-          // such row is watermark-dropped once wm ≥ hour end + window.
-          // The lateness horizon is NOT added here — it already lives
-          // inside the watermark's definition (wm = max time_b −
-          // lateness); adding it again would delay every seal (and
-          // every downstream core episode) by a full lateness for
-          // nothing (review-found r20)
-          st.setTimeoutTimestamp(math.max(
-            (hr + 1L) * 3600000L + contactWindowUs / 1000L,
-            st.getCurrentWatermarkMs() + 1L))
-          Iterator.empty
+    val expiry = Expiry[Long, HourEdgeState, HourGroupRow](
+      // seal once no admissible contact can land in this hour: time_a <
+      // hour end and time_b ≤ time_a + window, so every such row is
+      // watermark-dropped once wm ≥ hour end + window. The lateness
+      // horizon is NOT added here — it already lives inside the
+      // watermark's definition (wm = max time_b − lateness); adding it
+      // again would delay every seal (and every downstream core
+      // episode) by a full lateness for nothing (review-found r20)
+      (hr, _) => (hr + 1L) * 3600000L + contactWindowUs / 1000L,
+      (hr, s) => {
+        // the batch per-hour task's OWN union-find (shared code — the
+        // engines' components cannot drift)
+        val roots = graft.operators.Queries.minRootComponents(s.edges.iterator)
+        val comps = scala.collection.mutable.LongMap
+          .empty[scala.collection.mutable.ArrayBuffer[Long]]
+        roots.foreach { case (m, gid) =>
+          comps.getOrElseUpdate(gid,
+            scala.collection.mutable.ArrayBuffer.empty[Long]) += m
         }
+        comps.iterator.collect {
+          case (gid, buf) if buf.length >= k =>
+            HourGroupRow(hr, gid, buf.length.toLong, buf.sorted.mkString(","))
+        }
+      })
+    foldSorted(withLatenessUs(contacts, "time_b", latenessUs))(
+      c => micros(c.time_a) / HrUs, c => (c.user_a, c.user_b),
+      OutputMode.Append(), Some(expiry)) { (_, rows, prev) =>
+      val set = scala.collection.mutable.HashSet
+        .empty[(Long, Long)] ++= prev.map(_.edges).getOrElse(Nil)
+      rows.foreach { c =>
+        require(c.user_a >= 0L && c.user_b >= 0L,
+          "convoy-group twins need non-negative member ids (the " +
+            "shared CMC hour step's −1 absent sentinel — remap " +
+            "through a dense_rank dimension first, the batch core " +
+            "variant's contract)")
+        val lo = math.min(c.user_a, c.user_b)
+        val hi = math.max(c.user_a, c.user_b)
+        if (lo != hi) set += ((lo, hi))
       }
+      (Some(HourEdgeState(set.toSeq)), Iterator.empty)
+    }
   }
 
   /** JEUNG CORE-CONVOY EPISODES, LIVE — the streaming twin of the batch
@@ -2616,61 +2590,75 @@ object StreamingOps {
       groups: Dataset[HourGroupRow],
       m: Int = 2): Dataset[GroupEpisode] = {
     import groups.sparkSession.implicits._
-    groups
+    // a closed run emits at ≥ m hours
+    val episode = (members: String, r: GroupRunState) =>
+      if (r.lastHr - r.startHr + 1 >= m)
+        Some(GroupEpisode(r.gidMin, r.nMembers, members,
+          r.startHr, r.lastHr - r.startHr + 1, r.lastHr))
+      else None
+    val expiry = Expiry[String, GroupRunState, GroupEpisode](
+      // fires once the watermark carries ANY sealed hour ≥ lastHr + 2
+      // (its seal_ts = hr·3600+3599 s first reaches this value at
+      // hr = lastHr + 2) — the earliest moment "no lastHr + 1 row
+      // arrived" is evidence of absence
+      (_, g) => (g.lastHr + 2L) * 3600000L,
+      // had the set held at lastHr + 1, stage 1's sealed row would have
+      // arrived — the run is closed by ABSENCE
+      (members, g) => episode(members, g).iterator)
+    val sealedRows = groups
       .withColumn("seal_ts",
         (col("hr") * 3600L + 3599L).cast("timestamp"))
       .withWatermark("seal_ts", "0 seconds")
       .as[(Long, Long, Long, String, java.sql.Timestamp)]
-      .groupByKey(_._4)
-      .flatMapGroupsWithState[GroupRunState, GroupEpisode](
-        OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout) { (members, rows, st) =>
+    foldSorted(sealedRows)(_._4, _._1, OutputMode.Append(), Some(expiry)) {
+      (members, rows, prev) =>
         val out = scala.collection.mutable.ArrayBuffer.empty[GroupEpisode]
-        def emit(r: GroupRunState): Unit =
-          if (r.lastHr - r.startHr + 1 >= m)
-            out += GroupEpisode(r.gidMin, r.nMembers, members,
-              r.startHr, r.lastHr - r.startHr + 1, r.lastHr)
-        if (st.hasTimedOut) {
-          // the watermark passed the end of lastHr + 2: had the set
-          // held at lastHr + 1, stage 1's sealed row would have
-          // arrived — the run is closed by ABSENCE
-          emit(st.get)
-          st.remove()
-        } else {
-          var run = st.getOption
-          for (r <- rows.toSeq.sortBy(_._1)) {
-            val h = r._1
-            run match {
-              case Some(g) if h == g.lastHr + 1L =>
-                run = Some(g.copy(gidMin = math.min(g.gidMin, r._2),
-                  nMembers = math.max(g.nMembers, r._3), lastHr = h))
-              case Some(g) if h > g.lastHr + 1L =>
-                emit(g) // the batch rn-gap rule: close, then reopen
-                run = Some(GroupRunState(r._2, r._3, h, h))
-              case Some(_) => // h <= lastHr: stage-1 replay — drop
-              case None =>
-                run = Some(GroupRunState(r._2, r._3, h, h))
-            }
-          }
-          run.foreach { g =>
-            st.update(g)
-            // fires once the watermark carries ANY sealed hour ≥
-            // lastHr + 2 (its seal_ts = hr·3600+3599 s first reaches
-            // this value at hr = lastHr + 2) — the earliest moment
-            // "no lastHr + 1 row arrived" is evidence of absence
-            st.setTimeoutTimestamp(math.max(
-              (g.lastHr + 2L) * 3600000L,
-              st.getCurrentWatermarkMs() + 1L))
+        var run = prev
+        for (r <- rows) {
+          val h = r._1
+          run match {
+            case Some(g) if h == g.lastHr + 1L =>
+              run = Some(g.copy(gidMin = math.min(g.gidMin, r._2),
+                nMembers = math.max(g.nMembers, r._3), lastHr = h))
+            case Some(g) if h > g.lastHr + 1L =>
+              out ++= episode(members, g) // the batch rn-gap rule: close, then reopen
+              run = Some(GroupRunState(r._2, r._3, h, h))
+            case Some(_) => // h <= lastHr: stage-1 replay — drop
+            case None =>
+              run = Some(GroupRunState(r._2, r._3, h, h))
           }
         }
-        out.iterator
-      }
+        (run, out.iterator)
+    }
   }
 
   final case class CellPanelState(ek: Long, k: Long, users: Seq[Long])
   final case class CellPanelRow(
       tb: Long, cx: Long, cy: Long, n_fixes: Long, n_users: Long,
       n_pairs_within: Long, n_candidates: Long)
+
+  /** The shared candidate-key explosion of [[contactCellsStream]] and
+    * [[contactCellsStreamLive]]: each fix to its 18 (bucket, 3×3 cell)
+    * target keys with the home flag on the (tb, 0, 0) copy. */
+  private def cellPanelExploded(
+      pts: DataFrame, radiusDeg: Double, windowUs: Long, lateUs: Long)
+      : Dataset[(java.sql.Timestamp, Long, Long, Long, Long, Boolean)] = {
+    import pts.sparkSession.implicits._
+    withLatenessUs(pts.select(col("time"), col("user_id"), col("lat"), col("lon")),
+        "time", lateUs)
+      .withColumn("cx", floor((col("lat") + lit(90.0)) / lit(radiusDeg)).cast("long"))
+      .withColumn("cy", floor((col("lon") + lit(180.0)) / lit(radiusDeg)).cast("long"))
+      .withColumn("tb", expr(s"unix_micros(time) div $windowUs"))
+      .withColumn("dtb", explode(expr("sequence(0, 1)")))
+      .withColumn("dx", explode(expr("sequence(-1, 1)")))
+      .withColumn("dy", explode(expr("sequence(-1, 1)")))
+      .select(col("time"), col("user_id"),
+        (col("tb") + col("dtb")).as("gtb"),
+        (col("cx") + col("dx")).as("gx"),
+        (col("cy") + col("dy")).as("gy"),
+        (col("dtb") === 0 && col("dx") === 0 && col("dy") === 0).as("home"))
+      .as[(java.sql.Timestamp, Long, Long, Long, Long, Boolean)]
+  }
 
   /** LIVE CONTACT-DENSITY panel — the streaming twin of the batch
     * `ltss_geo_contact_cells` forecast (r17 VERDICT gap #2): the
@@ -2695,31 +2683,6 @@ object StreamingOps {
     * lateness = the T horizon; raise `latenessUs` for skewed feeds).
     * State is bounded by ACTIVE cell-windows × (3 counters + the
     * cell's entity set) — never by history. */
-  /** The shared candidate-key explosion of [[contactCellsStream]] and
-    * [[contactCellsStreamLive]]: each fix to its 18 (bucket, 3×3 cell)
-    * target keys with the home flag on the (tb, 0, 0) copy. */
-  private def cellPanelExploded(
-      pts: DataFrame, radiusDeg: Double, windowUs: Long, lateUs: Long)
-      : Dataset[(java.sql.Timestamp, Long, Long, Long, Long, Boolean)] = {
-    import pts.sparkSession.implicits._
-    pts
-      .select(col("time"), col("user_id"), col("lat"), col("lon"))
-      // ceil to whole seconds — truncation would shorten the promise
-      .withWatermark("time", s"${(lateUs + 999999L) / 1000000L} seconds")
-      .withColumn("cx", floor((col("lat") + lit(90.0)) / lit(radiusDeg)).cast("long"))
-      .withColumn("cy", floor((col("lon") + lit(180.0)) / lit(radiusDeg)).cast("long"))
-      .withColumn("tb", expr(s"unix_micros(time) div $windowUs"))
-      .withColumn("dtb", explode(expr("sequence(0, 1)")))
-      .withColumn("dx", explode(expr("sequence(-1, 1)")))
-      .withColumn("dy", explode(expr("sequence(-1, 1)")))
-      .select(col("time"), col("user_id"),
-        (col("tb") + col("dtb")).as("gtb"),
-        (col("cx") + col("dx")).as("gx"),
-        (col("cy") + col("dy")).as("gy"),
-        (col("dtb") === 0 && col("dx") === 0 && col("dy") === 0).as("home"))
-      .as[(java.sql.Timestamp, Long, Long, Long, Long, Boolean)]
-  }
-
   def contactCellsStream(
       pts: DataFrame, // time TIMESTAMP, user_id LONG, lat DOUBLE, lon DOUBLE
       radiusDeg: Double = 8.0,
@@ -2768,54 +2731,42 @@ object StreamingOps {
       latenessUs: Long = -1L): Dataset[CellPanelLiveRow] = {
     import pts.sparkSession.implicits._
     val lateUs = if (latenessUs < 0L) windowUs else latenessUs
-    cellPanelExploded(pts, radiusDeg, windowUs, lateUs)
-      .groupByKey(r => (r._3, r._4, r._5))
-      .flatMapGroupsWithState[CellPanelState, CellPanelLiveRow](
-        OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout) { (key, rows, st) =>
-        if (st.hasTimedOut) {
-          val s0 = st.get
-          st.remove()
-          val k = s0.k
-          // the batch panel inner-joins home × early: a key that never
-          // saw a HOME fix has no batch row — emit nothing
-          if (k == 0L) Iterator.empty
-          else Iterator.single(CellPanelLiveRow(key._1, key._2, key._3,
-            k, s0.users.length.toLong, k * (k - 1L) / 2L, s0.ek * k,
-            is_final = true))
-        } else {
-          val s0 = st.getOption.getOrElse(CellPanelState(0L, 0L, Seq.empty))
-          // set semantics on a Seq-encoded state: merge the batch into
-          // a LinkedHashSet ONCE (insertion-ordered, so the stored Seq
-          // is deterministic) — a per-row Seq.contains would be O(k²)
-          // per batch on exactly the hot cells this panel exists for
-          val users = scala.collection.mutable.LinkedHashSet.empty[Long]
-          users ++= s0.users
-          var ek = s0.ek
-          var k = s0.k
-          for (r <- rows) {
-            ek += 1L
-            if (r._6) {
-              k += 1L
-              users += r._2
-            }
-          }
-          st.update(CellPanelState(ek, k, users.toSeq))
-          // close when the watermark passes the key's last admissible
-          // contributor: sources tb and tb−1 both end by (gtb+1)·T.
-          // CEIL the µs→ms conversion ((gtb+1)·windowUs first, divide
-          // last) — multiplying a truncated windowUs/1000 would close
-          // early by (gtb+1)·(windowUs mod 1000) µs and double-emit a
-          // key that a late in-horizon fix recreates. (Clamped above
-          // the current watermark as the API requires.)
-          st.setTimeoutTimestamp(math.max(
-            ((key._1 + 1L) * windowUs + 999L) / 1000L,
-            st.getCurrentWatermarkMs() + 1L))
-          if (k == 0L) Iterator.empty
-          else Iterator.single(CellPanelLiveRow(key._1, key._2, key._3,
-            k, users.size.toLong, k * (k - 1L) / 2L, ek * k,
-            is_final = false))
+    // the batch panel inner-joins home × early: a key that never saw a
+    // HOME fix has no batch row — emit nothing
+    val panelRow = (key: (Long, Long, Long), s: CellPanelState, isFinal: Boolean) =>
+      if (s.k == 0L) Iterator.empty
+      else Iterator.single(CellPanelLiveRow(key._1, key._2, key._3,
+        s.k, s.users.length.toLong, s.k * (s.k - 1L) / 2L, s.ek * s.k, isFinal))
+    // close when the watermark passes the key's last admissible
+    // contributor: sources tb and tb−1 both end by (gtb+1)·T. CEIL the
+    // µs→ms conversion ((gtb+1)·windowUs first, divide last) —
+    // multiplying a truncated windowUs/1000 would close early by
+    // (gtb+1)·(windowUs mod 1000) µs and double-emit a key that a late
+    // in-horizon fix recreates
+    val expiry = Expiry[(Long, Long, Long), CellPanelState, CellPanelLiveRow](
+      (key, _) => ((key._1 + 1L) * windowUs + 999L) / 1000L,
+      (key, s) => panelRow(key, s, true))
+    foldSorted(cellPanelExploded(pts, radiusDeg, windowUs, lateUs))(
+      r => (r._3, r._4, r._5), r => (micros(r._1), r._2),
+      OutputMode.Append(), Some(expiry)) { (key, rows, prev) =>
+      val s0 = prev.getOrElse(CellPanelState(0L, 0L, Seq.empty))
+      // set semantics on a Seq-encoded state: merge the batch into a
+      // LinkedHashSet ONCE (insertion-ordered, so the stored Seq is
+      // deterministic) — a per-row Seq.contains would be O(k²) per batch
+      // on exactly the hot cells this panel exists for
+      val users = scala.collection.mutable.LinkedHashSet.empty[Long]
+      users ++= s0.users
+      var ek = s0.ek
+      var k = s0.k
+      for (r <- rows) {
+        ek += 1L
+        if (r._6) {
+          k += 1L
+          users += r._2
         }
       }
+      val s = CellPanelState(ek, k, users.toSeq)
+      (Some(s), panelRow(key, s, false))
+    }
   }
 }

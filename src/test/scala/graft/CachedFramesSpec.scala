@@ -11,6 +11,36 @@ import graft.operators.Dedup
 class CachedFramesSpec extends SparkSpec {
   import spark.implicits._
 
+  /** `body`'s result and the (event, key) map messages the registry
+    * logged meanwhile, its logger held at INFO. */
+  private def cacheEvents[T](body: => T): (T, Seq[(String, String)]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import org.apache.logging.log4j.message.StringMapMessage
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val capture = new AbstractAppender("cache-event-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = e.getMessage match {
+        case m: StringMapMessage => events.add((m.get("event"), m.get("key")))
+        case _ =>
+      }
+    }
+    capture.start()
+    val logger = LogManager.getLogger("graft.CachedFrames").asInstanceOf[CoreLogger]
+    val was = logger.getLevel
+    // adding an appender rebuilds the logger's config, so the level goes after it
+    logger.addAppender(capture)
+    logger.setLevel(Level.INFO)
+    try {
+      val out = body
+      (out, events.toArray(Array.empty[(String, String)]).toSeq)
+    } finally {
+      logger.setLevel(was)
+      logger.removeAppender(capture)
+    }
+  }
+
   private def writeDocs(rows: Seq[(Long, String)]): String = {
     val d = java.nio.file.Files.createTempDirectory("graft-keyed").toString
     rows.toDF("doc_id", "text").coalesce(1)
@@ -21,10 +51,14 @@ class CachedFramesSpec extends SparkSpec {
   test("interleaved datasets: each keeps its cache entry (same instance back)") {
     val d1 = writeDocs(Seq((1L, "one two three"), (2L, "one two three")))
     val d2 = writeDocs(Seq((7L, "seven eight nine"), (8L, "seven eight nine")))
-    val a1 = Dedup.guardedBands(spark, d1)
-    val b1 = Dedup.guardedBands(spark, d2)
-    val a2 = Dedup.guardedBands(spark, d1)
+    val ((a1, b1, a2), events) = cacheEvents {
+      (Dedup.guardedBands(spark, d1), Dedup.guardedBands(spark, d2), Dedup.guardedBands(spark, d1))
+    }
     val b2 = Dedup.guardedBands(spark, d2)
+    // d1's band frame logs a build, then a hit on the interleaved return
+    val k1 = s"lsh_bands|${CachedFrames.sessionKey(spark)}|$d1"
+    assert(events.filter(_._2 == k1).map(_._1) == Seq("cache_build", "cache_hit"),
+      s"cache events: $events")
     assert(a1 eq a2, "same (session, dataset) must return the SAME cached frame")
     assert(b1 eq b2)
     assert(!(a1 eq b1), "different datasets must not share a cache entry")
@@ -61,9 +95,13 @@ class CachedFramesSpec extends SparkSpec {
 
   test("evict past MaxEntries unpersists the stale frame") {
     val base = spark.range(5).toDF("x")
-    val frames = (0 to CachedFrames.MaxEntries).map { i =>
-      CachedFrames.getOrBuild(s"evict_test|$i")(base.select((col("x") + i).as("y")))
+    val (frames, events) = cacheEvents {
+      (0 to CachedFrames.MaxEntries).map { i =>
+        CachedFrames.getOrBuild(s"evict_test|$i")(base.select((col("x") + i).as("y")))
+      }
     }
+    assert(events.contains(("cache_evict", "evict_test|0")),
+      s"the eldest key's eviction must log: ${events.filter(_._1 == "cache_evict")}")
     assert(frames.head.storageLevel == StorageLevel.NONE,
       "the eldest entry must be unpersisted on evict")
     assert(frames.last.storageLevel != StorageLevel.NONE)

@@ -23,22 +23,26 @@ class LintSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"System.err in: ${hits.mkString(", ")}; log through a named logger")
   }
 
-  test("stateful streaming twins without a timeout fold through the one keyed fold") {
+  test("stateful streaming twins fold through the one keyed fold") {
     // a hand-written groupByKey + *GroupsWithState twin decides its fold
-    // order again; only StreamingOps.foldSorted's body may name NoTimeout
-    val hits = scalaFiles("src/main/scala/graft/streaming").flatMap { f =>
+    // order, its timeout mode and its timeout clamp again; only
+    // StreamingOps.foldSorted's body may name them
+    val owned = Seq("flatMapGroupsWithState", "GroupStateTimeout.", "setTimeoutTimestamp")
+    val body = scalaFiles("src/main/scala/graft/streaming").map { f =>
       val lines = Files.readAllLines(f).asScala.toIndexedSeq
       val start = lines.indexWhere(_.contains("def foldSorted["))
       // the primitive ends at the next member of the object
       val end = if (start < 0) -1 else lines.indexWhere(l =>
         l.startsWith("  ") && !l.startsWith("   ") && l.trim.nonEmpty, start + 1)
-      lines.indices.filter { i =>
-        lines(i).contains("mapGroupsWithState") ||
-          lines(i).contains("GroupStateTimeout.NoTimeout") && !(i > start && i < end)
-      }.map(i => s"$f:${i + 1}")
+      f -> (start, end)
+    }.toMap
+    val hits = codeHits("src/main/scala/graft/streaming") { (f, i, t) =>
+      val (start, end) = body(f)
+      t.contains("mapGroupsWithState") || owned.exists(t.contains) && !(i > start && i < end)
     }
-    assert(hits.isEmpty, s"mapGroupsWithState, or NoTimeout outside StreamingOps.foldSorted, " +
-      s"in: ${hits.mkString(", ")}; state the twin's key, order, mode and fold through foldSorted")
+    assert(hits.isEmpty, s"mapGroupsWithState, or ${owned.mkString(", ")} outside " +
+      s"StreamingOps.foldSorted, in: ${hits.mkString(", ")}; state the twin's key, order, " +
+      "mode, fold and expiry through foldSorted")
   }
 
   test("layout dirs and small commit files are replaced only through the swap and replace helpers") {
@@ -103,12 +107,14 @@ class LintSpec extends AnyFunSuite {
       s"line above: ${hits.mkString(", ")}")
   }
 
-  /** `file:line` of each code line (not a comment) under `dir` that `hit` matches. */
-  private def codeHits(dir: String)(hit: (java.nio.file.Path, String) => Boolean): Seq[String] =
+  /** `file:line` of each code line (not a comment) under `dir` that `hit`
+    * matches; `hit` gets the file, the 0-based line index and the trimmed line. */
+  private def codeHits(dir: String)(
+      hit: (java.nio.file.Path, Int, String) => Boolean): Seq[String] =
     scalaFiles(dir).flatMap { f =>
-      Files.readAllLines(f).asScala.zipWithIndex.filter { case (l, _) =>
+      Files.readAllLines(f).asScala.zipWithIndex.filter { case (l, i) =>
         val t = l.trim
-        !t.startsWith("*") && !t.startsWith("//") && !t.startsWith("/*") && hit(f, t)
+        !t.startsWith("*") && !t.startsWith("//") && !t.startsWith("/*") && hit(f, i, t)
       }.map { case (_, i) => s"$f:${i + 1}" }
     }
 
@@ -117,7 +123,7 @@ class LintSpec extends AnyFunSuite {
     // static call that NativeCall states once per kernel row; Haversine
     // stays its own class because HaversineBoxRule matches its type
     val owners = Seq("graft/functions/Kernels.scala", "graft/functions/Haversine.scala")
-    val hits = codeHits("src/main/scala/graft") { (f, t) =>
+    val hits = codeHits("src/main/scala/graft") { (f, _, t) =>
       (t.contains("doGenCode") || t.contains("defineCodeGen")) && !owners.exists(f.toString.endsWith)
     }
     assert(hits.isEmpty, s"Catalyst codegen in: ${hits.mkString(", ")}; " +
@@ -127,7 +133,7 @@ class LintSpec extends AnyFunSuite {
   test("SQL functions are registered only by the loops over GraftExtensions.functions") {
     // the session extension and install register the same list, so a
     // function reachable one way is reachable the other
-    val hits = codeHits("src/main/scala") { (_, t) =>
+    val hits = codeHits("src/main/scala") { (_, _, t) =>
       Seq("injectFunction", "createOrReplaceTempFunction", "registerFunction").exists(t.contains) &&
         !t.contains("functions.foreach")
     }

@@ -1105,9 +1105,9 @@ class StatefulStreamingSpec extends SparkSpec {
   }
 
   /** The rows `twin` emits when `feed` arrives as ONE micro-batch of a
-    * fresh query. */
+    * fresh query, followed by `flush` as a second one when it is given. */
   private def emittedOnce[A: org.apache.spark.sql.Encoder](
-      feed: Seq[A], cols: Seq[String], mode: String,
+      feed: Seq[A], flush: Seq[A], cols: Seq[String], mode: String,
       twin: org.apache.spark.sql.DataFrame => org.apache.spark.sql.Dataset[_]): Seq[String] = {
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[A]
@@ -1117,13 +1117,19 @@ class StatefulStreamingSpec extends SparkSpec {
     try {
       ms.addData(feed)
       q.processAllAvailable()
+      if (flush.nonEmpty) {
+        ms.addData(flush)
+        q.processAllAvailable()
+      }
     } finally q.stop()
     spark.table(name).collect().map(_.toString).sorted.toSeq
   }
 
   test("order-invariance: each keyed-fold twin emits the same rows for a batch fed forward or reversed") {
     // one micro-batch is one MemoryStream partition, and each key's rows
-    // reach its fold in feed order, so reversing the feed reverses them
+    // reach its fold in feed order, so reversing the feed reverses them.
+    // A timed twin then gets one far-future row in a second batch: the
+    // watermark passes every deadline, so every held key's timeout fires
     def at(s: String) = ts(s"2024-01-01 $s")
     val ltss = Seq(
       (at("10:00:00"), "sensor.1", "5.00"),
@@ -1165,11 +1171,47 @@ class StatefulStreamingSpec extends SparkSpec {
     val text = "the quick brown fox jumps over the lazy dog by the river bank"
     val docs = Seq((1L, text), (2L, text), (3L, text + " again"), (4L, text))
     val zones = graft.operators.Queries.ZoneDefs.map { case (id, _, vs) => (id, vs) }
+    // nearby trackers (lat from the user, lon from the event) for the
+    // contact and contact-cell twins
+    def near(eid: Long, t: String, uid: Long) =
+      (ts(t), uid, eid, (uid % 180 - 90).toDouble + 0.5, (eid % 360 - 180).toDouble + 0.5)
+    val nearFixes = Seq(
+      near(182L, "2024-01-01 11:30:00", 12L), near(180L, "2024-01-01 10:30:00", 120L),
+      near(180L, "2024-01-01 10:00:00", 10L),
+      near(181L, "2024-01-01 10:00:00", 11L), // same µs as user 10
+      near(184L, "2024-01-01 13:00:00", 12L), near(186L, "2024-01-01 14:00:00", 10L),
+      near(188L, "2024-01-01 16:00:00", 12L))
+    val farFix = Seq(near(900L, "2024-03-01 00:00:00", 500L))
+    def ce(ta: String, ua: Long, ea: Long, tb: String, ub: Long, eb: Long) =
+      StreamingOps.ContactEvent(ts(ta), ua, ea, ts(tb), ub, eb, 8.0,
+        (ts(tb).getTime - ts(ta).getTime) * 1000L)
+    // pair (10,12) meets over hours 10..12 (two rows tie on both times),
+    // (10,11) once at hour 15; (12,14) over hours 10..12 and (14,16) at
+    // hour 11 chain them into hourly groups
+    val contacts = Seq(
+      ce("2024-01-01 10:15:00", 10L, 180L, "2024-01-01 10:15:00", 12L, 182L),
+      ce("2024-01-01 10:15:00", 10L, 180L, "2024-01-01 11:20:00", 12L, 186L),
+      ce("2024-01-01 10:15:00", 12L, 182L, "2024-01-01 11:20:00", 10L, 184L),
+      ce("2024-01-01 10:15:00", 12L, 182L, "2024-01-01 12:05:00", 10L, 188L),
+      ce("2024-01-01 12:05:00", 10L, 188L, "2024-01-01 12:05:00", 12L, 190L),
+      ce("2024-01-01 11:20:00", 10L, 184L, "2024-01-01 11:20:00", 12L, 186L),
+      ce("2024-01-01 11:20:00", 10L, 184L, "2024-01-01 12:05:00", 12L, 190L),
+      ce("2024-01-01 11:20:00", 12L, 186L, "2024-01-01 12:05:00", 10L, 188L),
+      ce("2024-01-01 15:00:00", 10L, 196L, "2024-01-01 15:00:00", 11L, 194L),
+      ce("2024-01-01 10:10:00", 12L, 183L, "2024-01-01 10:20:00", 14L, 185L),
+      ce("2024-01-01 11:10:00", 12L, 187L, "2024-01-01 11:20:00", 14L, 189L),
+      ce("2024-01-01 12:10:00", 12L, 191L, "2024-01-01 12:20:00", 14L, 193L),
+      ce("2024-01-01 11:20:00", 14L, 189L, "2024-01-01 11:25:00", 16L, 195L))
+    val farContact = Seq(ce("2024-03-01 00:00:00", 50L, 300L, "2024-03-01 00:00:00", 51L, 302L))
+    val contactCols = Seq("time_a", "user_a", "event_a", "time_b", "user_b", "event_b", "d2", "dt_us")
+    val timedDocs = docs.zipWithIndex.map { case ((id, t), i) =>
+      (id, t, ts(f"2024-01-01 10:${5 * (i / 2)}%02d:00")) } // two docs per instant
+    val farDoc = Seq((99L, "unrelated words far in the future", ts("2024-03-01 00:00:00")))
     val H = 3600000000L
     type Twin = org.apache.spark.sql.DataFrame => org.apache.spark.sql.Dataset[_]
     def run[A: org.apache.spark.sql.Encoder](feed: Seq[A], cols: String*)(
-        mode: String)(twin: Twin): Boolean => Seq[String] =
-      rev => emittedOnce(if (rev) feed.reverse else feed, cols, mode, twin)
+        mode: String, flush: Seq[A] = Nil)(twin: Twin): Boolean => Seq[String] =
+      rev => emittedOnce(if (rev) feed.reverse else feed, flush, cols, mode, twin)
     def onLtss(mode: String)(twin: Twin) = run(ltss, "time", "entity_id", "state")(mode)(twin)
     def onFixes(mode: String)(twin: Twin) =
       run(fixes, "time", "user_id", "event_id", "lat", "lon")(mode)(twin)
@@ -1208,7 +1250,20 @@ class StatefulStreamingSpec extends SparkSpec {
       "convoyGroupsCoreStream" -> run(groups, "hr", "gid", "n_members", "members")(
         "append")(g => StreamingOps.convoyGroupsCoreStream(g.as[StreamingOps.HourGroupRow])),
       "nearDupStream (unbounded)" -> run(docs, "doc_id", "text")("append")(
-        StreamingOps.nearDupStream(_, unboundedRetention = true)))
+        StreamingOps.nearDupStream(_, unboundedRetention = true)),
+      "nearDupStream" -> run(timedDocs, "doc_id", "text", "ingest_time")("append", farDoc)(
+        StreamingOps.nearDupStream(_)),
+      "contactsStream" -> run(nearFixes, "time", "user_id", "event_id", "lat", "lon")(
+        "append", farFix)(StreamingOps.contactsStream(_)),
+      "contactCellsStreamLive" -> run(nearFixes, "time", "user_id", "event_id", "lat", "lon")(
+        "append", farFix)(StreamingOps.contactCellsStreamLive(_)),
+      "convoysStream" -> run(contacts, contactCols: _*)("append", farContact)(
+        c => StreamingOps.convoysStream(c.as[StreamingOps.ContactEvent])),
+      "convoyHourGroupsStream" -> run(contacts, contactCols: _*)("append", farContact)(
+        c => StreamingOps.convoyHourGroupsStream(c.as[StreamingOps.ContactEvent])),
+      "convoyGroupsStream" -> run(groups, "hr", "gid", "n_members", "members")(
+        "append", Seq(StreamingOps.HourGroupRow(1000L, 50L, 3L, "50,51,52")))(
+        g => StreamingOps.convoyGroupsStream(g.as[StreamingOps.HourGroupRow])))
     val differ = table.flatMap { case (name, emitted) =>
       val fwd = emitted(false)
       assert(fwd.nonEmpty, s"$name emits nothing on the fixture: the row shows nothing")
